@@ -58,6 +58,7 @@ import zlib
 from dataclasses import dataclass
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -485,6 +486,21 @@ def _merge_encode_partials(cfg: EngineConfig):
     return merge
 
 
+def _encoded_bytes():
+    """A block row's encoded posting payload (its three varint
+    columns) — the byte measure warm budgets are stated in."""
+    return (F.octet_length("doc_bytes") + F.octet_length("tf_bytes")
+            + F.octet_length("dl_bytes"))
+
+
+@dataclass(frozen=True)
+class _DriverServing:
+    table: "pa.Table"  # noqa: F821 — serving rows sorted by term
+    terms: np.ndarray  # the distinct terms, ascending
+    bounds: np.ndarray  # term i's rows are [bounds[i], bounds[i + 1])
+    nbytes: int  # encoded posting bytes (``_encoded_bytes`` summed)
+
+
 @dataclass
 class InvertedIndex:
     io: TableIO
@@ -513,10 +529,18 @@ class InvertedIndex:
 
         Also builds the low-latency serving state:
           * ``_serving`` — the postings re-sharded by ``range_id`` (doc
-            ranges), the document-sharded layout search engines serve from:
-            every doc's complete postings live in ONE shard, so a query is
-            a single map stage (each shard computes its exact local top-k)
-            plus a k×shards merge — no shuffle, no join.
+            ranges) into ``serving_shards`` shards (default: one per
+            executor slot, ``defaultParallelism``), the document-sharded
+            layout search engines serve from: every doc's complete
+            postings live in ONE shard, so a query is a single map stage
+            (each shard computes its exact local top-k) plus a k×shards
+            merge — no shuffle, no join.
+          * ``_driver_serving`` — on a FULL warm whose encoded posting
+            bytes fit ``query.bm25._DRIVER_SERVING_BYTES_MAX``, a driver
+            copy of that layout (one Arrow table sorted by term):
+            ``bm25_topk_served`` then slices the query terms' rows and
+            runs the same kernel in-process — zero Spark jobs. Partial
+            warms never keep one; ``unwarm`` releases it.
           * ``_idf`` — driver-side {term: idf} when the vocabulary is
             driver-sized (≤ idf_cache_max), so per-query weights cost zero
             Spark jobs. Larger vocabularies fall back to a bucket-pruned
@@ -582,10 +606,7 @@ class InvertedIndex:
                 raise ValueError("warm(): max_bytes must be >= 0")
             sizes = (self.io.read(spark, POSTINGS)
                      .groupBy("range_id")
-                     .agg(F.sum(F.octet_length("doc_bytes")
-                                + F.octet_length("tf_bytes")
-                                + F.octet_length("dl_bytes"))
-                          .alias("bytes"))
+                     .agg(F.sum(_encoded_bytes()).alias("bytes"))
                      .collect())
             picked, spent = [], 0
             for row in sorted(sizes,
@@ -611,12 +632,11 @@ class InvertedIndex:
             posts_src = posts_src.cache()
             cached[POSTINGS] = posts_src
         if serving_shards is None:
-            # fewer shards than shuffle width: a served query's per-shard
-            # work is tiny, so task-launch overhead dominates — but keep
-            # ≥8 so one straggler shard can't serialize the stage. A real
-            # serving fleet sets this to its executor-slot count.
-            serving_shards = max(
-                8, int(spark.conf.get("spark.sql.shuffle.partitions")) // 2)
+            # one shard per executor slot: a served query's per-shard work
+            # is tiny, so every extra wave of Python tasks is pure
+            # scheduling cost (~0.35 s a wave at local[4]); top-k is
+            # bitwise-identical at any shard count
+            serving_shards = spark.sparkContext.defaultParallelism
         serving = (posts_src.repartition(serving_shards, "range_id")
                    .select("term", "range_id", "n", "first_doc_id",
                            "last_doc_id", "max_tf", "min_dl",
@@ -627,6 +647,8 @@ class InvertedIndex:
         for df in cached.values():
             if hasattr(df, "count"):
                 df.count()
+        if ranges is None:
+            self._keep_driver_serving(serving)
         if self.vocab_size <= idf_cache_max:
             idf = {r["term"]: r["idf"]
                    for r in term_stats.select("term", "idf").collect()}
@@ -655,6 +677,42 @@ class InvertedIndex:
         if not (self._cached and "_serving" in self._cached):
             self.warm(spark)
         return self._cached["_serving"]
+
+    def _keep_driver_serving(self, serving: DataFrame) -> None:
+        """Hold a driver copy of a FULL serving layout when its encoded
+        bytes fit ``query.bm25._DRIVER_SERVING_BYTES_MAX``: one Arrow
+        table sorted by term, plus the term run boundaries
+        ``serving_rows`` searches. Costs two JVM-only jobs over the
+        cached layout (the byte sum, then the Arrow collect)."""
+        from ..query.bm25 import _DRIVER_SERVING_BYTES_MAX
+        nbytes = serving.agg(F.sum(_encoded_bytes())).first()[0] or 0
+        if nbytes > _DRIVER_SERVING_BYTES_MAX:
+            return
+        import pyarrow.compute as pc
+        table = serving.toArrow().sort_by(
+            [("term", "ascending"), ("range_id", "ascending"),
+             ("first_doc_id", "ascending")])
+        runs = pc.run_end_encode(table.column("term").combine_chunks())
+        self._cached["_driver_serving"] = _DriverServing(
+            table, runs.values.to_numpy(zero_copy_only=False),
+            np.concatenate([[0], runs.run_ends.to_numpy()]), nbytes)
+
+    def serving_rows(self, terms: list[str],
+                     max_bytes: int) -> pd.DataFrame | None:
+        """The serving-layout block rows of ``terms`` (sorted, unique)
+        as ONE pandas frame, sliced from the driver copy a full ``warm``
+        keeps — or None when no driver copy is resident or its encoded
+        bytes exceed ``max_bytes`` (the executor layout then serves)."""
+        ds = self._cached.get("_driver_serving") if self._cached else None
+        if ds is None or ds.nbytes > max_bytes:
+            return None
+        pos = np.searchsorted(ds.terms, terms)
+        rows = [np.arange(ds.bounds[p], ds.bounds[p + 1])
+                for p, t in zip(pos, terms)
+                if p < len(ds.terms) and ds.terms[p] == t]
+        return ds.table.take(
+            np.concatenate(rows) if rows else np.empty(0, np.int64)
+        ).to_pandas()
 
     def idf_lookup(self) -> dict | None:
         """Driver-side idf map from warm state (None if not cached)."""

@@ -558,8 +558,8 @@ def warm_positions(spark: SparkSession, index: InvertedIndex,
     (warm postings ranges first; phrase traffic is typically a small
     fraction of query volume)."""
     if serving_shards is None:
-        serving_shards = max(
-            8, int(spark.conf.get("spark.sql.shuffle.partitions")) // 2)
+        # one shard per executor slot, as for the postings layout
+        serving_shards = spark.sparkContext.defaultParallelism
     df = (index.io.read(spark, POSITIONS)
           .select("term", "range_id", "n", "doc_bytes", "cnt_bytes",
                   "pos_bytes")

@@ -59,6 +59,13 @@ _PRUNED_DRIVER_RANGES_MAX = 1_000_000
 # ≈ 16 MB encoded + ~150 MB of transient decode arrays worst-case —
 # driver-envelope class). Head terms above the cap stay distributed.
 _PRUNED_LOCAL_BLOCKS_MAX = 50_000
+# A FULL warm keeps a driver copy of the serving layout while its encoded
+# posting bytes stay within this budget (~26M postings at the measured
+# 2.41 B/posting, plus ~30 B/block row of term and metadata), and
+# bm25_topk_served then answers in-process with zero Spark jobs. The
+# envelope class of the warm idf cache (~120 MB at its 2M-term cap).
+# Over budget, the executor serving layout answers.
+_DRIVER_SERVING_BYTES_MAX = 64 << 20
 
 # Every public query entry point accepts QueryLike: a search string (run
 # through the K2 query tokenizer, the reference's asymmetric-stoplist
@@ -68,6 +75,19 @@ _PRUNED_LOCAL_BLOCKS_MAX = 50_000
 # queries produce derived term lists that must NOT round-trip through
 # the K2 stoplist, query/expand.py).
 QueryLike = "str | list[str] | tuple[str, ...]"
+
+
+def local_result(spark: SparkSession, doc_ids=(), scores=()) -> DataFrame:
+    """A driver-side top-k (≤ k rows, or none) as a (doc_id, score)
+    DataFrame planned as a LocalRelation: an Arrow table becomes one even
+    when empty, so collecting the result runs no Spark job.
+    ``createDataFrame`` from a list or an empty pandas frame plans a
+    LogicalRDD instead, whose collect runs a Python stage (~0.3 s, plus
+    a second Python worker pool on first use)."""
+    import pyarrow as pa
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array(doc_ids, pa.int64()),
+        "score": pa.array(scores, pa.float64())}))
 
 
 def _tokens(query) -> list[str]:
@@ -632,8 +652,8 @@ def bm25_topk_exact(spark: SparkSession, index: InvertedIndex, query,
     pagination — see ``_apply_after``. Page 2 = the previous page's
     last (UNROUNDED score, doc_id)."""
     qtf = _qtf(query)
-    if not qtf:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    if not qtf or k == 0:
+        return local_result(spark)
     token_seq = _tokens(query)
     # weights ride the task closure (warm: driver idf cache, zero jobs;
     # cold: one bucket-pruned lookup) — the r6 plan broadcast-joined a
@@ -643,7 +663,7 @@ def bm25_topk_exact(spark: SparkSession, index: InvertedIndex, query,
     if not idf:
         # no query term is in the index vocabulary → empty result, same
         # as the joined plan would produce without running a job
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_result(spark)
     blocks = _query_blocks(spark, index, sorted(idf))
     acc = _mk_decode_acc(spark, stats)
     partials = _score_blocks_closure(blocks, index, idf, acc_blocks=acc)
@@ -971,6 +991,16 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
     return local_topk
 
 
+def _run_local(spark: SparkSession, kernel, pdf: pd.DataFrame) -> DataFrame:
+    """Run a single-query ``_served_local_topk`` kernel in-process over
+    one frame of block rows; its ≤ k rows (already in score DESC,
+    doc_id ASC order) come back as a LocalRelation."""
+    out = next(kernel(iter([pdf])), None)
+    if out is None:
+        return local_result(spark)
+    return local_result(spark, out["doc_id"], out["score"])
+
+
 def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
                      k: int = 10, block_skip: bool = True,
                      stats: dict | None = None,
@@ -980,26 +1010,37 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
                      exclude_docs: DataFrame | None = None,
                      after: tuple[float, int] | None = None) -> DataFrame:
     """Low-latency exact BM25 top-k over the warm DOC-SHARDED serving
-    layout (``InvertedIndex.warm``): postings are resident in executor
-    memory re-sharded by ``range_id``, so every document's complete
-    postings live in one shard. The query is then a single map stage —
-    each shard decodes only the query terms' blocks, sums full per-doc
-    scores locally (sorted reduceat, deterministic), and emits its exact
-    local top-k — followed by a k×shards TakeOrderedAndProject merge.
-    No shuffle, no join; weights come from the warm idf cache
-    (zero extra jobs).
+    layout (``InvertedIndex.warm``), in one of two tiers:
 
-    This is the scatter-gather layout real search clusters serve from
-    (per-shard top-k + merge); rank-identical to ``bm25_topk_exact`` —
-    every doc's full score is computed in exactly one shard, so the global
-    top-k is a subset of the union of local top-ks, and per-doc scores are
-    accumulated in QUERY TOKEN ORDER (bit-identical to the exact path's
-    fold and to BM25Okapi — see ``_fold_scores``).
+    * DRIVER tier — a full warm whose encoded posting bytes fit
+      ``_DRIVER_SERVING_BYTES_MAX`` keeps a driver copy of the layout
+      (one Arrow table sorted by term). The query terms' rows are sliced
+      out by binary search and the block-max kernel
+      (``_served_local_topk``) runs in-process over them, as the
+      gathered pruned tier does; the ≤ k rows come back as a
+      LocalRelation (``local_result``). Zero Spark jobs unless
+      ``filter_docs``/``exclude_docs`` are given (one JVM-only collect
+      each). Measured at local[4], 10k docs: ~20 ms a query.
+    * EXECUTOR tier — over budget, or under a partial warm: postings
+      are resident in executor memory re-sharded by ``range_id``, so
+      every document's complete postings live in one shard. The query
+      is then a single map stage — each shard decodes only the query
+      terms' blocks and emits its exact local top-k — followed by a
+      k×shards TakeOrderedAndProject merge. No shuffle, no join;
+      weights come from the warm idf cache (zero extra jobs).
+
+    Both tiers are rank- AND bitwise-identical to ``bm25_topk_exact``:
+    every doc's full score is computed in exactly one range, so the
+    global top-k is a subset of the union of local top-ks (a single
+    global θ only skips more), and per-doc scores are accumulated in
+    QUERY TOKEN ORDER (bit-identical to the exact path's fold and to
+    BM25Okapi — see ``_fold_scores``). ``k=0`` returns no rows.
 
     ``block_skip`` enables per-shard block-max skipping (default on; see
     ``_served_local_topk`` — bitwise-identical either way). Pass a dict
     as ``stats`` to receive ``decoded_blocks``/``total_blocks``
-    accumulators, readable after the action completes.
+    accumulators, readable after the action completes (on the driver
+    tier, as soon as the call returns).
 
     ``filter_docs`` (optional DataFrame with a ``doc_id`` column):
     FILTERED retrieval — rank only those documents, applied before top-k
@@ -1018,8 +1059,8 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
     while driver-sized (serving stays zero-shuffle), falls back to the
     exact anti-join beyond the cap."""
     idf = query_term_idf(spark, index, query)
-    if not idf:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    if not idf or k == 0:
+        return local_result(spark)
     token_seq = _tokens(query)
     mm = _resolve_min_match(token_seq, min_match)
     allowed, too_big = _collect_filter_ids(filter_docs,
@@ -1033,7 +1074,7 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
                                exclude_docs=exclude_docs,
                                after=after)
     if allowed is not None and not len(allowed):
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_result(spark)
     acc_d = acc_t = None
     if stats is not None:
         acc_d = spark.sparkContext.accumulator(0)
@@ -1047,10 +1088,14 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
         min_matches=[mm], blocked=blocked,
         after=((float(after[0]), int(after[1]))
                if after is not None else None))
-    blocks = index.serving_df(spark).filter(
-        F.col("term").isin(sorted(idf)))
-    local = blocks.mapInPandas(kernel, schema=RESULT_SCHEMA)
+    serving = index.serving_df(spark)  # warms on first use
     wr = index.warm_ranges()
+    rows = (index.serving_rows(sorted(idf), _DRIVER_SERVING_BYTES_MAX)
+            if wr is None else None)
+    if rows is not None:
+        return _run_local(spark, kernel, rows)
+    local = serving.filter(F.col("term").isin(sorted(idf))) \
+        .mapInPandas(kernel, schema=RESULT_SCHEMA)
     if wr is not None:
         # partial warm: exact-score the cold (non-resident) ranges on
         # disk and merge — result-identical to a fully-warm serve
@@ -1270,8 +1315,8 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     k-th best POST-CURSOR score (same rank-safety argument as the
     other before-top-k constraints)."""
     idf = query_term_idf(spark, index, query)
-    if not idf:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    if not idf or k == 0:
+        return local_result(spark)
     qtf = _qtf(query)
     token_seq = _tokens(query)
     mm = _resolve_min_match(token_seq, min_match)
@@ -1312,7 +1357,7 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
             filter_docs), exclude_docs), token_seq, k, min_match=mm,
             after=after)
     if allowed is not None and not len(allowed):
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_result(spark)
 
     # Per-range upper bound: Σ_t max over t's blocks in the range (+ the
     # range's candidate-block count, which picks the execution tier).
@@ -1331,10 +1376,12 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     #     tail/torso query at scale): ONE metadata job (per-range bounds
     #     + block counts) + ONE Arrow fetch of the still-encoded blocks,
     #     then the SAME block-max kernel the warm serving path runs
-    #     executes on the driver — global WAND: ranges visited in
-    #     descending bound order, θ from the best ranges' exact scores,
-    #     block-level BMW refinement (``fine_rows_map``), remaining
-    #     ranges skipped. This is what a search engine's query
+    #     executes on the driver (``_run_local``, shared with the served
+    #     driver tier) — global WAND: ranges visited in descending bound
+    #     order, θ from the best ranges' exact scores, block-level BMW
+    #     refinement (``fine_rows_map``), remaining ranges skipped. The
+    #     ≤ k rows return as a LocalRelation, so the caller's collect
+    #     runs no further job. This is what a search engine's query
     #     coordinator does once candidates are pruned to driver size.
     #   DISTRIBUTED — candidate blocks too big to gather (head terms):
     #     driver-side bounds (still ≤ _PRUNED_DRIVER_RANGES_MAX rows of
@@ -1356,7 +1403,7 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     if n_ranges <= _PRUNED_DRIVER_RANGES_MAX:
         rb_rows = range_bounds.collect()
         if not rb_rows:
-            return spark.createDataFrame([], RESULT_SCHEMA)
+            return local_result(spark)
         if stats is not None:
             stats["touched_ranges"] = len(rb_rows)
         total_blocks = sum(r["n_blocks"] for r in rb_rows)
@@ -1366,12 +1413,7 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
             kernel = _served_local_topk([token_seq], idf,
                                         fine_prune=fine_prune,
                                         **kernel_kwargs)
-            frames = list(kernel(iter([pdf])))
-            merged = sorted(
-                [(int(d), float(s)) for f in frames
-                 for d, s in zip(f["doc_id"], f["score"])],
-                key=lambda t: (-t[1], t[0]))[:k]
-            return spark.createDataFrame(merged, RESULT_SCHEMA)
+            return _run_local(spark, kernel, pdf)
         # ---- DISTRIBUTED tier: seed job → θ → survivors via kernel
         order = sorted(rb_rows,
                        key=lambda r: (-r["range_ub"], r["range_id"]))
@@ -1416,7 +1458,8 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
             [(r["doc_id"], r["score"]) for r in seed_scored]
             + [(r["doc_id"], r["score"]) for r in rest_rows],
             key=lambda t: (-t[1], t[0]))[:k]
-        return spark.createDataFrame(merged, RESULT_SCHEMA)
+        return local_result(spark, [d for d, _ in merged],
+                            [s for _, s in merged])
 
     # ---- LAZY tier (range metadata beyond the driver envelope) ----
     range_bounds = range_bounds.cache()
@@ -1425,7 +1468,7 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
                 range_bounds.orderBy(F.desc("range_ub"), F.asc("range_id"))
                 .limit(seed_ranges).collect()]
         if not seed:
-            return spark.createDataFrame([], RESULT_SCHEMA)
+            return local_result(spark)
         seed_blocks = blocks.filter(F.col("range_id").isin(seed)) \
             .drop("ub")
         seed_scored = _topk(
@@ -1451,9 +1494,8 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
                 .select(*kcols)
                 .repartition("range_id")
                 .mapInPandas(kernel, schema=RESULT_SCHEMA))
-        seed_df = spark.createDataFrame(
-            [(r["doc_id"], r["score"]) for r in seed_scored],
-            RESULT_SCHEMA)
+        seed_df = local_result(spark, [r["doc_id"] for r in seed_scored],
+                               [r["score"] for r in seed_scored])
         return (seed_df.unionByName(rest)
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
     finally:

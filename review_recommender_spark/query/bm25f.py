@@ -46,7 +46,8 @@ from ..index.build import (LOCAL_TF, InvertedIndex, term_bucket_col,
                            term_bucket_py)
 from ..index.codec import decode_block
 from ..index.tableio import TableIO
-from .bm25 import RESULT_SCHEMA, _fold_scores, _qtf, _query_blocks
+from .bm25 import (RESULT_SCHEMA, _fold_scores, _qtf, _query_blocks,
+                   local_result)
 
 BM25F_STATS = "bm25f_stats"
 
@@ -153,7 +154,7 @@ def bm25f_topk(spark: SparkSession, fields: list[Bm25fField],
         k1 = fields[0].index.cfg.bm25.k1
     qtf = _qtf(query)
     if not qtf:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_result(spark)
     token_seq = tokenize_k2_py(query)
     terms = sorted(qtf)
     cfg0 = fields[0].index.cfg
@@ -214,7 +215,7 @@ def dismax_topk(spark: SparkSession, fields: list[Bm25fField],
     from .bm25 import _score_blocks_closure, query_term_idf
     token_seq = tokenize_k2_py(query)
     if not token_seq:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_result(spark)
     per_field = None
     for fid, fld in enumerate(fields):
         idf = query_term_idf(spark, fld.index, query)

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize_k1_py
 from ..index.build import TERM_STATS, InvertedIndex
-from .bm25 import RESULT_SCHEMA, _term_stats_pruned, bm25_topk_exact
+from .bm25 import _term_stats_pruned, bm25_topk_exact, local_result
 
 TERM_DICT = "term_dict"
 # upper bound for a term-range prefix predicate: no indexed term contains
@@ -163,10 +163,13 @@ def more_like_this(spark: SparkSession, index: InvertedIndex, text: str,
     the retrieval cost is that of a ``max_terms``-word query."""
     terms = mlt_terms(spark, index, text, max_terms=max_terms)
     if not terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_result(spark)
     ex = None
     if exclude_doc_id is not None:
-        ex = spark.createDataFrame([(int(exclude_doc_id),)], "doc_id long")
+        # a JVM range, not a one-row Python list: its collect in
+        # bm25_topk_served's mask fetch then starts no Python stage
+        ex = spark.range(int(exclude_doc_id), int(exclude_doc_id) + 1) \
+            .withColumnRenamed("id", "doc_id")
     if index.is_warm():
         # similar-pages at serving latency: the expanded term list rides
         # the zero-shuffle shard kernel, exclusion as a blocked mask
@@ -188,7 +191,7 @@ def more_like_this_doc(spark: SparkSession, index: InvertedIndex,
     rows = (docs.filter(F.col(doc_id_col) == int(doc_id))
             .select(F.col(text_col).alias("text")).limit(2).collect())
     if not rows:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_result(spark)
     if len(rows) > 1:
         raise ValueError(f"doc_id {doc_id} is not unique in docs")
     return more_like_this(spark, index, rows[0]["text"] or "",

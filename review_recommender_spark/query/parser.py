@@ -42,7 +42,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..index.build import InvertedIndex
-from .bm25 import RESULT_SCHEMA, bm25_topk_exact, term_docs
+from .bm25 import bm25_topk_exact, local_result, term_docs
 
 _PHRASE_RE = re.compile(r'"([^"]*)"(~(\d+))?')
 
@@ -192,7 +192,7 @@ def dsl_search(spark: SparkSession, index: InvertedIndex, query: str,
     exp = query_expansions(spark, index, pq)
     ranking = ranking_tokens(spark, index, pq, expansions=exp)
     if not ranking:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_result(spark)
 
     from ..functions.tokenize import tokenize_k1_py
     pre, _fuz = exp
@@ -210,7 +210,7 @@ def dsl_search(spark: SparkSession, index: InvertedIndex, query: str,
             td = term_docs(spark, index, t)
             grp = td if grp is None else grp.unionByName(td)
         if grp is None:            # no vocabulary term matches → ∅
-            return spark.createDataFrame([], RESULT_SCHEMA)
+            return local_result(spark)
         grp = grp.distinct()
         fd = grp if fd is None else fd.join(grp, "doc_id", "left_semi")
     if pq.phrases:

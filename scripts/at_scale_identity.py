@@ -2,12 +2,14 @@
 query path on one large corpus, asserting BITWISE-identical top-k.
 
 Paths: exact (single-action posting join), pruned (forced block-max),
-served with per-shard block-max skipping (the round-5 default), served
-WITHOUT skipping, and served-batch (the zero-shuffle batch stage hybrid
-uses — new in round 3). The r2 evidence tied exact ≡ the
-BM25Okapi-formula numpy oracle at 800k docs; this script ties every
-engine path to exact at the same scale, so the whole family stays
-anchored to the oracle.
+served on its driver tier (the in-process kernel over the driver copy
+of the serving layout, held here whatever its size) with and WITHOUT
+block-max skipping, served on its executor tier (per-shard kernel over
+the cached shards, driver budget forced to 0), and served-batch (the
+zero-shuffle batch stage hybrid uses — new in round 3). The r2 evidence
+tied exact ≡ the BM25Okapi-formula numpy oracle at 800k docs; this
+script ties every engine path to exact at the same scale, so the whole
+family stays anchored to the oracle.
 
 Usage: python scripts/at_scale_identity.py [n_docs] (default 800000)
 Prints one JSON line: {"n_docs":..., "paths":..., "bitwise_ok":...}
@@ -15,6 +17,7 @@ Prints one JSON line: {"n_docs":..., "paths":..., "bitwise_ok":...}
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -39,12 +42,25 @@ def main() -> None:
     from review_recommender_spark.corpus.pages import GOLDEN_PHRASES, pages_df
     from review_recommender_spark.index.build import build_index
     from review_recommender_spark.index.tableio import TableIO
+    from review_recommender_spark.query import bm25
     from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                      bm25_topk_pruned,
                                                      bm25_topk_served)
     from review_recommender_spark.query.search import bm25_scores_batch_served
     from review_recommender_spark.session import get_spark
 
+    @contextlib.contextmanager
+    def driver_budget(nbytes):
+        old = bm25._DRIVER_SERVING_BYTES_MAX
+        bm25._DRIVER_SERVING_BYTES_MAX = nbytes
+        try:
+            yield
+        finally:
+            bm25._DRIVER_SERVING_BYTES_MAX = old
+
+    # every full warm below keeps the driver copy, so the served driver
+    # tier is checked at this scale too; executor-tier calls force 0
+    bm25._DRIVER_SERVING_BYTES_MAX = 1 << 62
     spark = get_spark("at-scale-id", cores=cpus,
                       shuffle_partitions=max(cpus, 8))
     tmp = tempfile.mkdtemp(prefix="rrs_id_", dir=shm)
@@ -82,7 +98,10 @@ def main() -> None:
             served_ns = [(r["doc_id"], r["score"]) for r in
                          bm25_topk_served(spark, idx, q, k=k,
                                           block_skip=False).collect()]
-            same = (exact == pruned == served == served_ns
+            with driver_budget(0):
+                served_ex = [(r["doc_id"], r["score"]) for r in
+                             bm25_topk_served(spark, idx, q, k=k).collect()]
+            same = (exact == pruned == served == served_ns == served_ex
                     == batch_top[qi])
             per_query.append(same)
             ok &= same
@@ -92,6 +111,7 @@ def main() -> None:
                 print("  exact :", exact)
                 print("  pruned:", pruned)
                 print("  served:", served)
+                print("  served(executor):", served_ex)
                 print("  batch :", batch_top[qi])
 
         # sixth path (round 6): PARTIAL warm — every other doc-range
@@ -167,7 +187,7 @@ def main() -> None:
         print(json.dumps({
             "n_docs": n_docs,
             "paths": ["exact", "pruned", "served(block-skip)",
-                      "served(no-skip)", "served_batch",
+                      "served(no-skip)", "served(executor)", "served_batch",
                       "served(partial-warm)", "boolean(served-vs-exact)",
                       "paging(cursor-vs-slice)"],
             "queries": len(GOLDEN_PHRASES),

@@ -1,11 +1,12 @@
 """Degenerate top-k requests get ONE defined answer on every BM25 route.
 
 Routes: exact, served on both tiers (driver copy, and executor shards
-with the driver budget forced to 0), pruned in its gathered and
-distributed tiers, and pruned below ``min_ranges_to_prune`` (the exact
-fall-through). Requests: an empty query, an all-stopword query, a query
-of unknown terms only, a duplicated term, ``k=0``, ``k`` above the
-corpus size, and a search-after cursor at the last result. Every route
+with the driver budget forced to 0), pruned in its gathered,
+distributed and lazy tiers, and pruned below ``min_ranges_to_prune``
+(the exact fall-through). Requests: an empty query, an all-stopword
+query, a query of unknown terms only, a duplicated term, a 1,000-term
+query drawn from the index vocabulary, ``k=0``, ``k`` above the corpus
+size, and a search-after cursor at the last result. Every route
 must return the same rows, bit for bit, and none may raise."""
 
 import pytest
@@ -16,11 +17,14 @@ from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                  bm25_topk_served)
 
 Q = "yellow cat socks"
+# stands for 1,000 index terms, distinct while the vocabulary lasts
+VOCAB_1000 = "<1,000 vocabulary terms>"
 CASES = {
     "empty": ("", 10, None),
     "all_stopword": ("the and of", 10, None),
     "unknown_only": ("zzznope qqqmissing", 10, None),
     "duplicate_term": ("cat cat socks", 10, None),
+    "terms_1000": (VOCAB_1000, 10, None),
     "k_zero": (Q, 0, None),
     "k_over_n_docs": (Q, 5000, None),
     "after_last_result": (Q, 10, "last"),
@@ -41,15 +45,24 @@ def warm_index(spark, small_index):
 
 
 @pytest.fixture(scope="module")
+def vocab_1000(spark, warm_index):
+    vocab = sorted(r["term"] for r in
+                   warm_index.term_stats(spark).select("term").collect())
+    return [vocab[i % len(vocab)] for i in range(1000)]
+
+
+@pytest.fixture(scope="module")
 def full_ranking(spark, warm_index):
     return _pairs(bm25_topk_exact(spark, warm_index, Q, k=10 ** 6))
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_degenerate_request_same_on_every_route(spark, warm_index,
-                                                full_ranking, monkeypatch,
-                                                case):
+                                                full_ranking, vocab_1000,
+                                                monkeypatch, case):
     query, k, after = CASES[case]
+    if query == VOCAB_1000:
+        query = vocab_1000
     if after == "last":
         d, s = full_ranking[-1]
         after = (s, d)
@@ -72,6 +85,9 @@ def test_degenerate_request_same_on_every_route(spark, warm_index,
         "pruned_gathered": lambda: _pairs(pruned(min_ranges_to_prune=1)),
         "pruned_distributed": lambda: forced(
             "_PRUNED_LOCAL_BLOCKS_MAX", 0,
+            lambda: pruned(min_ranges_to_prune=1)),
+        "pruned_lazy": lambda: forced(
+            "_PRUNED_DRIVER_RANGES_MAX", 0,
             lambda: pruned(min_ranges_to_prune=1)),
         "pruned_fall_through": lambda: _pairs(pruned()),
     }

@@ -694,7 +694,7 @@ def q_ft_bm25_boosted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Function-score retrieval: BM25 × a static per-doc boost column
     (recency/quality-prior shape), applied after the fold and BEFORE
     top-k so the boost genuinely reorders the ranking
-    (query/bm25.py::_topk boost_docs). Boost derives deterministically
+    (query/bm25.py::_exact_topk boost_docs). Boost derives deterministically
     from doc_id so the DuckDB twin multiplies the same factor."""
     idx = _doc_index(spark, sf_dir)
     docs = _load(spark, sf_dir, "documents")

@@ -242,89 +242,16 @@ PARTIAL_SCHEMA = ("term string, range_id long, n int, doc_arr binary, "
                   "tf_arr binary, dl_arr binary")
 
 
-def _pack_partials(cfg: EngineConfig, chunk_rows: int = 2_000_000):
-    """MAP-SIDE COMBINE for Stage C — the north rule's "build
-    per-partition inverted indexes ... merge them shuffle-side" stated
-    literally: each scan task locally sorts its occurrence rows by
-    (term, range_id, doc_id), run-length-collapses them into postings,
-    and emits ONE row per (term, range_id) carrying packed int arrays
-    (doc_ids int64, tfs/dls int32 — both ≤ token_cap by construction).
-
-    Vs shuffling raw occurrences this cuts exchanged ROWS by ~avg
-    postings-per-partial (~50-100×) and bytes by ~2-3× (no per-row
-    Tungsten header / term string per occurrence), and moves the big
-    sort from the reducer's 37M-row string-keyed JVM sort to perfectly
-    parallel numpy lexsorts over factorized int codes. A (doc, term) run
-    split across Arrow batches (or a doc split across... impossible —
-    a doc is one input row, but a chunk flush can split its runs) just
-    yields two partials for the same doc; the merge kernel re-sums.
-    """
-
-    def pack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def flush(frames: list[pd.DataFrame]) -> pd.DataFrame:
-            pdf = (pd.concat(frames, ignore_index=True)
-                   if len(frames) > 1 else frames[0])
-            codes, uniq = pd.factorize(pdf["term"].to_numpy())
-            r = pdf["range_id"].to_numpy()
-            d = pdf["doc_id"].to_numpy()
-            order = np.lexsort((d, r, codes))
-            codes, r, d = codes[order], r[order], d[order]
-            dl = pdf["dl"].to_numpy(dtype=np.int32)[order]
-            m = len(d)
-            change = np.empty(m, dtype=bool)
-            change[0] = True
-            change[1:] = ((codes[1:] != codes[:-1]) | (r[1:] != r[:-1])
-                          | (d[1:] != d[:-1]))
-            runs = np.flatnonzero(change)
-            doc_ids = d[runs]
-            tfs = np.diff(np.append(runs, m)).astype(np.int32)
-            dls = dl[runs]
-            gcodes, granges = codes[runs], r[runs]
-            gchange = np.empty(len(runs), dtype=bool)
-            gchange[0] = True
-            gchange[1:] = ((gcodes[1:] != gcodes[:-1])
-                           | (granges[1:] != granges[:-1]))
-            gs = np.flatnonzero(gchange)
-            ge = np.append(gs[1:], len(runs))
-            return pd.DataFrame({
-                "term": uniq[gcodes[gs]],
-                "range_id": granges[gs],
-                "n": (ge - gs).astype(np.int32),
-                "doc_arr": [doc_ids[a:b].tobytes()
-                            for a, b in zip(gs, ge)],
-                "tf_arr": [tfs[a:b].tobytes() for a, b in zip(gs, ge)],
-                "dl_arr": [dls[a:b].tobytes() for a, b in zip(gs, ge)],
-            })
-
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
-        for pdf in it:
-            if not len(pdf):
-                continue
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                yield flush(buf)
-                buf, nbuf = [], 0
-        if buf:
-            yield flush(buf)
-
-    return pack
-
-
 def _pack_partials_arrow(cfg: EngineConfig, chunk_tokens: int = 2_000_000):
     """Map-side combine for Stage C reading the PACKED checkpoint rows
-    directly (``mapInArrow`` over (doc_id, dl, toks)) — r7 form of
-    ``_pack_partials``. The r1-r6 path exploded to occurrence rows in
-    the JVM first, which duplicated doc_id/dl per token across the
-    Arrow boundary and paid a 5.6M-row transfer at bench scale; reading
-    the packed rows moves the same string payload with ~50× fewer rows
-    and replaces ``pd.factorize`` with Arrow's C++
-    ``dictionary_encode``. Measured 3.7× on the map stage; the partial
-    CONTENT is identical (same lexsort + run-length collapse), so the
-    merged postings stay byte-identical
+    directly (``mapInArrow`` over (doc_id, dl, toks)). The r1-r6 path
+    exploded to occurrence rows in the JVM first, which duplicated
+    doc_id/dl per token across the Arrow boundary and paid a 5.6M-row
+    transfer at bench scale; reading the packed rows moves the same
+    string payload with ~50× fewer rows and replaces ``pd.factorize``
+    with Arrow's C++ ``dictionary_encode``. Measured 3.7× on the map
+    stage; the partial CONTENT is identical (same lexsort + run-length
+    collapse), so the merged postings stay byte-identical
     (tests/test_determinism.py::test_stage_c_modes_byte_identical)."""
     shift = cfg.index.range_shift
 
@@ -1023,23 +950,14 @@ def _blocks_to_partials(purge_ids=None):
                     yield out
 
     def _unpack_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        from .codec import varint_decode
+        from .codec import decode_blocks_bulk
 
         if not len(pdf):
             return None
         ns = pdf["n"].to_numpy(dtype=np.int64)
-        total = int(ns.sum())
-        deltas = varint_decode(
-            b"".join(pdf["doc_bytes"]), total).astype(np.int64)
-        starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-        c = np.cumsum(deltas)
-        base = np.zeros(len(ns), dtype=np.int64)
-        base[1:] = c[starts[1:] - 1]
-        docs = c - np.repeat(base, ns)
-        tfs = varint_decode(
-            b"".join(pdf["tf_bytes"]), total).astype(np.int32)
-        dls = varint_decode(
-            b"".join(pdf["dl_bytes"]), total).astype(np.int32)
+        docs, tfs, dls = decode_blocks_bulk(
+            ns, pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"])
+        tfs, dls = tfs.astype(np.int32), dls.astype(np.int32)
         if purge is not None and len(purge):
             gid = np.repeat(np.arange(len(ns)), ns)
             keep = ~np.isin(docs, purge)
@@ -1087,8 +1005,8 @@ def delta_merge_index(spark: SparkSession, main: InvertedIndex,
 
     Cost model — O(delta + touched groups), not O(corpus):
       1. Stage A runs over the DELTA only (tokenize → occurrence rows →
-         map-side packed partials, the same ``_pack_partials`` kernel as
-         a full build).
+         map-side packed partials, the same ``_pack_partials_arrow``
+         kernel as a full build).
       2. The delta's distinct (term, range_id) keys mark the TOUCHED
          posting groups. With monotonically increasing doc_ids an
          epoch's ranges are almost entirely new, so the touched set is

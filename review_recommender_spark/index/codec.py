@@ -134,6 +134,29 @@ def encode_blocks_bulk(doc_ids: np.ndarray, tfs: np.ndarray,
     return doc_parts, tf_parts, dl_parts
 
 
+def decode_blocks_bulk(ns, doc_bytes, tf_bytes=None, dl_bytes=None):
+    """Decode MANY blocks in one varint pass per column — the inverse of
+    ``encode_blocks_bulk``. ``ns`` holds each block's posting count and
+    the byte columns each block's encoded buffer, in block order.
+
+    Returns every block's doc ids concatenated (int64), or the triple
+    (doc_ids, tfs, dls) when the tf and dl buffers are given. Each
+    block's first delta is its absolute doc id, so one cumsum over the
+    whole batch is reset per block by subtracting the running sum the
+    block starts from: per block, bitwise-identical to ``decode_block``."""
+    ns = np.asarray(ns, dtype=np.int64)
+    total = int(ns.sum())
+    c = np.cumsum(varint_decode(b"".join(doc_bytes), total).astype(np.int64))
+    base = np.zeros(len(ns), dtype=np.int64)
+    base[1:] = c[np.cumsum(ns)[:-1] - 1]
+    docs = c - np.repeat(base, ns)
+    if tf_bytes is None:
+        return docs
+    return (docs,
+            varint_decode(b"".join(tf_bytes), total).astype(np.int64),
+            varint_decode(b"".join(dl_bytes), total).astype(np.int64))
+
+
 def decode_block(doc_bytes: bytes, tf_bytes: bytes, dl_bytes: bytes,
                  n: int | None = None
                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

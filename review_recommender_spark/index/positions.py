@@ -52,7 +52,8 @@ from pyspark.sql import functions as F
 from ..config import EngineConfig
 from ..functions.tokenize import tokenize_k1_py
 from .build import LOCAL_TF, InvertedIndex, term_bucket_col, term_bucket_py
-from .codec import varint_decode, varint_encode, varint_nbytes
+from .codec import (decode_blocks_bulk, varint_decode, varint_encode,
+                    varint_nbytes)
 from .tableio import TableIO
 
 POSITIONS = "positions"
@@ -138,6 +139,29 @@ def decode_pos_block(doc_bytes: bytes, cnt_bytes: bytes, pos_bytes: bytes,
     return docs, counts, c - base
 
 
+def _decode_pos_blocks(pdf: pd.DataFrame):
+    """Decode a frame of position-block rows in ONE varint pass per column
+    → (ns docs per block, doc_ids, counts, positions flat), the bulk form
+    of ``decode_pos_block``: integer cumsums reset per block/doc via base
+    subtraction, so values are identical to the per-row decode."""
+    ns = pdf["n"].to_numpy(dtype=np.int64)            # docs per block
+    docs = decode_blocks_bulk(ns, pdf["doc_bytes"])
+    counts = varint_decode(b"".join(pdf["cnt_bytes"]),
+                           len(docs)).astype(np.int64)
+    totpos = int(counts.sum())
+    pdeltas = varint_decode(b"".join(pdf["pos_bytes"]),
+                           totpos).astype(np.int64)
+    # positions: grouped cumsum resetting at each DOC start
+    dstarts = np.zeros(len(docs), dtype=np.int64)
+    np.cumsum(counts[:-1], out=dstarts[1:])
+    pc = np.cumsum(pdeltas)
+    pbase = np.zeros(totpos, dtype=np.int64)
+    s = dstarts[counts > 0]
+    pbase[s] = pc[s] - pdeltas[s]
+    np.maximum.accumulate(pbase, out=pbase)
+    return ns, docs, counts, pc - pbase
+
+
 def _pos_blocks_to_partials(purge_ids=None):
     """Inverse of the positions encode for merge purposes: decode
     persisted position-block rows back into ``POS_PARTIAL_SCHEMA`` rows
@@ -161,29 +185,8 @@ def _pos_blocks_to_partials(purge_ids=None):
     def _unpack_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
         if not len(pdf):
             return None
-        ns = pdf["n"].to_numpy(dtype=np.int64)           # docs per block
-        total = int(ns.sum())
-        deltas = varint_decode(
-            b"".join(pdf["doc_bytes"]), total).astype(np.int64)
-        bstarts0 = np.concatenate([[0], np.cumsum(ns)[:-1]])
-        c = np.cumsum(deltas)
-        base = np.zeros(len(ns), dtype=np.int64)
-        base[1:] = c[bstarts0[1:] - 1]
-        docs = c - np.repeat(base, ns)
-        counts = varint_decode(
-            b"".join(pdf["cnt_bytes"]), total).astype(np.int64)
-        totpos = int(counts.sum())
-        pdeltas = varint_decode(
-            b"".join(pdf["pos_bytes"]), totpos).astype(np.int64)
-        # positions: grouped cumsum resetting at each DOC start
-        dstarts = np.zeros(total, dtype=np.int64)
-        np.cumsum(counts[:-1], out=dstarts[1:])
-        pc = np.cumsum(pdeltas)
-        pbase = np.zeros(totpos, dtype=np.int64)
-        s = dstarts[counts > 0]
-        pbase[s] = pc[s] - pdeltas[s]
-        np.maximum.accumulate(pbase, out=pbase)
-        pos = (pc - pbase).astype(np.int32)
+        ns, docs, counts, pos = _decode_pos_blocks(pdf)
+        pos = pos.astype(np.int32)
         if purge is not None and len(purge):
             keep_doc = ~np.isin(docs, purge)
             pos = pos[np.repeat(keep_doc, counts)]
@@ -215,74 +218,12 @@ def _pos_blocks_to_partials(purge_ids=None):
 
 # --------------------------------------------------------------- build
 
-def _pack_pos_partials(chunk_rows: int = 2_000_000):
-    """Map-side combine: (doc_id, range_id, pos, term) occurrence rows →
-    one partial per (term, range_id) with packed ragged arrays
-    (doc_arr int64 per doc, cnt_arr int32 per doc, pos_arr int32 flat).
-    A doc split across chunk flushes yields two partials for the same
-    (group, doc); the merge kernel re-sorts and re-concatenates."""
-
-    def pack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-
-        def flush(frames: list[pd.DataFrame]) -> pd.DataFrame:
-            pdf = (pd.concat(frames, ignore_index=True)
-                   if len(frames) > 1 else frames[0])
-            codes, uniq = pd.factorize(pdf["term"].to_numpy())
-            r = pdf["range_id"].to_numpy()
-            d = pdf["doc_id"].to_numpy()
-            p = pdf["pos"].to_numpy(dtype=np.int32)
-            order = np.lexsort((p, d, r, codes))
-            codes, r, d, p = codes[order], r[order], d[order], p[order]
-            m = len(d)
-            dchange = np.empty(m, dtype=bool)
-            dchange[0] = True
-            dchange[1:] = ((codes[1:] != codes[:-1]) | (r[1:] != r[:-1])
-                           | (d[1:] != d[:-1]))
-            druns = np.flatnonzero(dchange)
-            doc_ids = d[druns]
-            counts = np.diff(np.append(druns, m)).astype(np.int32)
-            gcodes, granges = codes[druns], r[druns]
-            gchange = np.empty(len(druns), dtype=bool)
-            gchange[0] = True
-            gchange[1:] = ((gcodes[1:] != gcodes[:-1])
-                           | (granges[1:] != granges[:-1]))
-            gs = np.flatnonzero(gchange)
-            ge = np.append(gs[1:], len(druns))
-            flat = np.zeros(len(druns) + 1, dtype=np.int64)
-            np.cumsum(counts, out=flat[1:])
-            return pd.DataFrame({
-                "term": uniq[gcodes[gs]],
-                "range_id": granges[gs],
-                "n": (ge - gs).astype(np.int32),
-                "doc_arr": [doc_ids[a:b].tobytes() for a, b in zip(gs, ge)],
-                "cnt_arr": [counts[a:b].tobytes() for a, b in zip(gs, ge)],
-                "pos_arr": [p[flat[a]:flat[b]].tobytes()
-                            for a, b in zip(gs, ge)],
-            })
-
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
-        for pdf in it:
-            if not len(pdf):
-                continue
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                yield flush(buf)
-                buf, nbuf = [], 0
-        if buf:
-            yield flush(buf)
-
-    return pack
-
-
 def _pack_pos_partials_arrow(shift: int, chunk_tokens: int = 2_000_000):
     """Map-side combine reading the PACKED checkpoint rows directly
-    (``mapInArrow`` over (doc_id, toks)) — r7 form of
-    ``_pack_pos_partials``, mirroring ``build._pack_partials_arrow``:
-    no JVM posexplode, no occurrence-row Arrow transfer; positions are
-    each token's offset inside its doc's kept-token list (the same
-    coordinate posexplode produced). Partial content is identical, so
+    (``mapInArrow`` over (doc_id, toks)), mirroring
+    ``build._pack_partials_arrow``: no JVM posexplode, no occurrence-row
+    Arrow transfer; positions are each token's offset inside its doc's
+    kept-token list (the same coordinate posexplode produced). Partial content is identical, so
     the merged positional blocks stay byte-identical
     (tests/test_positions.py gates vs the delta-merge rebuild)."""
 
@@ -477,8 +418,7 @@ def build_positions(spark: SparkSession, io: TableIO,
             spark.conf.get("spark.sql.shuffle.partitions"))
     local_tf = io.read(spark, LOCAL_TF)
     # r7: pack directly from the packed checkpoint rows — no JVM
-    # posexplode, no occurrence-row Arrow transfer (_pack_pos_partials
-    # remains for occurrence-row inputs, e.g. tests)
+    # posexplode, no occurrence-row Arrow transfer
     partials = (local_tf.select("doc_id", "toks")
                 .mapInArrow(
                     _pack_pos_partials_arrow(cfg.index.range_shift),
@@ -501,8 +441,9 @@ def build_positions(spark: SparkSession, io: TableIO,
 
 def _decode_pos_rows_bulk(it):
     """Gather a kernel's position-block rows and decode them in ONE
-    varint pass per column (the ``_pos_blocks_to_partials`` pattern,
-    r7: replaces the per-row ``decode_pos_block`` loop). Returns
+    varint pass per column (``_decode_pos_blocks``, shared with
+    ``_pos_blocks_to_partials``; r7: replaces the per-row
+    ``decode_pos_block`` loop). Returns
     ``(keys, code_per_pos, uniq_terms)`` — packed ``doc·2^13 + pos``
     int64 keys for every position, each position's term code, and the
     factorized term list — or None when the partition is empty.
@@ -513,29 +454,7 @@ def _decode_pos_rows_bulk(it):
         return None
     pdf = frames[0] if len(frames) == 1 \
         else pd.concat(frames, ignore_index=True)
-    ns = pdf["n"].to_numpy(dtype=np.int64)            # docs per block
-    total = int(ns.sum())
-    deltas = varint_decode(b"".join(pdf["doc_bytes"]),
-                           total).astype(np.int64)
-    bstarts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-    c = np.cumsum(deltas)
-    base = np.zeros(len(ns), dtype=np.int64)
-    base[1:] = c[bstarts[1:] - 1]
-    docs = c - np.repeat(base, ns)
-    counts = varint_decode(b"".join(pdf["cnt_bytes"]),
-                           total).astype(np.int64)
-    totpos = int(counts.sum())
-    pdeltas = varint_decode(b"".join(pdf["pos_bytes"]),
-                           totpos).astype(np.int64)
-    # positions: grouped cumsum resetting at each DOC start
-    dstarts = np.zeros(total, dtype=np.int64)
-    np.cumsum(counts[:-1], out=dstarts[1:])
-    pc = np.cumsum(pdeltas)
-    pbase = np.zeros(totpos, dtype=np.int64)
-    s = dstarts[counts > 0]
-    pbase[s] = pc[s] - pdeltas[s]
-    np.maximum.accumulate(pbase, out=pbase)
-    pos = pc - pbase
+    ns, docs, counts, pos = _decode_pos_blocks(pdf)
     keys = np.repeat(docs, counts) * _POS_MULT + pos
     codes, uniq_terms = pd.factorize(pdf["term"].to_numpy())
     code_per_pos = np.repeat(

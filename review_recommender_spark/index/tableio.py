@@ -35,6 +35,21 @@ def _config_hash(obj: Any) -> str:
         json.dumps(obj, sort_keys=True, default=str).encode()).hexdigest()[:16]
 
 
+def _write_json_atomic(path: str, obj: Any) -> None:
+    """Write ``obj`` as JSON to ``path`` through a hidden temp file in the
+    same directory and ``os.replace``: readers see the old file or the
+    new one, never torn JSON, even if the writer dies mid-write."""
+    tmp = os.path.join(os.path.dirname(path),
+                       f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, indent=2)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 def parquet_row_count_strict(path: str) -> int:
     """Row count from parquet footers — metadata-only, no data scan, any
     scale. RAISES on unreadable/missing paths: callers that feed the count
@@ -96,10 +111,9 @@ class TableIO:
             "lineage": lineage or {},
             "metrics": metrics or {},
         }
-        with open(os.path.join(snap_dir, f"{snap_id}.json"), "w") as f:
-            json.dump(manifest, f, indent=2)
-        with open(os.path.join(snap_dir, "_current.json"), "w") as f:
-            json.dump(manifest, f, indent=2)
+        _write_json_atomic(os.path.join(snap_dir, f"{snap_id}.json"),
+                           manifest)
+        _write_json_atomic(os.path.join(snap_dir, "_current.json"), manifest)
         return snap_id
 
     def current_snapshot(self, name: str) -> dict[str, Any] | None:
@@ -181,10 +195,8 @@ class TableIO:
             oldest = chain[-keep_last:][0]
             if oldest.get("parent_snapshot_id") is not None:
                 oldest = {**oldest, "parent_snapshot_id": None}
-                with open(os.path.join(snap_dir,
-                                       f"{oldest['snapshot_id']}.json"),
-                          "w") as f:
-                    json.dump(oldest, f, indent=2)
+                _write_json_atomic(os.path.join(
+                    snap_dir, f"{oldest['snapshot_id']}.json"), oldest)
         return removed
 
 
@@ -220,12 +232,11 @@ class ChunkedWriter:
         writer.parquet(self.chunk_dir(i))
         m = dict(metrics or {})
         m.setdefault("rows", parquet_row_count(self.chunk_dir(i)))
-        with open(self.chunk_manifest_path(i), "w") as f:
-            json.dump({
-                "chunk": i,
-                "input_fingerprint": self.input_fingerprint,
-                "metrics": m,
-            }, f, indent=2)
+        _write_json_atomic(self.chunk_manifest_path(i), {
+            "chunk": i,
+            "input_fingerprint": self.input_fingerprint,
+            "metrics": m,
+        })
 
     def pending_chunks(self) -> list[int]:
         return [i for i in range(self.n_chunks) if not self.chunk_done(i)]

@@ -3,31 +3,50 @@
 Replaces the reference's full-corpus scan (``bm25.get_scores`` computes a
 dense score for every document on every query — app/test.py:168-173, a scan
 the comment at :169 wrongly claims is candidates-only; SURVEY.md quirk Q2)
-with:
+with ONE exact top-k, answered by whichever route fits the index state.
+Every route returns the same rows, bit for bit (tests/test_wand.py,
+tests/test_degenerate.py):
 
-  exact path   : ONE Spark action. The query's (term, weight=idf) rows
-                 are resolved by a broadcast join against the
-                 bucket-partitioned term_stats table inside the same plan,
-                 joined onto the partition-pruned posting blocks
-                 (directory pruning on term_bucket, row-group pruning on
-                 term), decoded+scored in Arrow batches, folded per doc in
-                 QUERY TOKEN ORDER (bit-deterministic — `_fold_scores`),
-                 and TakeOrderedAndProject'ed. No separate metadata
-                 round-trip per query.
+  exact   : ``bm25_topk_exact`` — one Spark action over the bucket- and
+            term-pruned posting blocks: the exact plan below, kept as the
+            engine's independent JVM reference.
+  served  : ``bm25_topk_served`` over a warm index — the DRIVER tier (the
+            kernel in-process over a driver copy of the serving layout,
+            zero Spark jobs) or the EXECUTOR tier (one map stage over the
+            doc-sharded serving layout, a k×shards merge); a partial warm
+            unions the cold ranges' exact scores (``_with_cold_ranges``).
+            ``bm25_topk_served_batch`` answers many queries in one stage.
+  pruned  : ``bm25_topk_pruned`` — block-max pruning at doc-range
+            granularity. Per-block upper bounds come from (max_tf, min_dl)
+            metadata — valid for any (k1, b). Ranges whose summed per-term
+            bounds cannot beat the k-th score are never decoded. Three
+            tiers, picked by measured candidate size: GATHERED (the kernel
+            on the driver over the fetched encoded blocks), DISTRIBUTED and
+            LAZY (an exact seed pass sets θ, then the kernel runs over the
+            surviving ranges — picked by an ``isin`` list or by a broadcast
+            join). Below ``min_ranges_to_prune`` ranges it runs the exact
+            plan (the pruning machinery costs jobs that only pay at scale).
 
-  pruned path  : block-max pruning at doc-range granularity for corpora
-                 whose query terms touch many ranges. Per-block upper
-                 bounds come from (max_tf, min_dl) metadata — valid for any
-                 (k1, b). Ranges whose summed per-term bounds cannot beat
-                 the current k-th score are skipped (their blocks never
-                 decoded); the threshold is seeded by exactly scoring the
-                 most promising ranges. Rank-safe: skipping a range drops
-                 whole documents, never a single term's contribution, and
-                 survivors are scored exactly — so results are
-                 rank-identical to the exact path (tests/test_wand.py).
-                 Below ``min_ranges_to_prune`` ranges it falls through to
-                 the exact path (the pruning machinery costs extra Spark
-                 jobs that only pay off at scale).
+Shared by every route:
+
+  request : ``_request`` resolves tokens, idf and ``min_match`` once, and
+            its ``_Request`` carries the rest of what each route used to
+            thread by hand — the filter/exclude masks with the too-big
+            fallback and the empty-filter short-circuit, the ``stats=``
+            accumulators and the normalized ``after`` cursor.
+  plan    : ``_exact_topk``, the exact plan — blocks → closure scorer →
+            filter/exclude → fold in QUERY TOKEN ORDER (bit-deterministic,
+            ``_fold_scores``) → boost → after → top-k. The exact route,
+            and the fallback and seed pass of the served and pruned
+            routes.
+  kernel  : ``_served_local_topk`` — bulk decode, block-max skipping, the
+            request's masks and a running top-k; every served and pruned
+            tier runs it (and hybrid's served scores, unskipped and
+            unbounded).
+
+Rank-safety: skipping a range drops whole documents, never a single
+term's contribution, and survivors are scored exactly with the same float
+expression (``_bm25_unit``) and addition order as the exact plan.
 
 Scoring formula per SURVEY.md §2.12 (BM25Okapi semantics): repeated query
 tokens weight a term by its query multiplicity; unknown terms contribute 0.
@@ -36,15 +55,16 @@ tokens weight a term by its query multiplicity; unknown terms contribute 0.
 from __future__ import annotations
 
 from collections import Counter
+from dataclasses import dataclass
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize_k2_py
 from ..index.build import InvertedIndex, term_bucket_py
-from ..index.codec import decode_block, varint_decode
+from ..index.codec import decode_blocks_bulk
 
 RESULT_SCHEMA = "doc_id long, score double"
 
@@ -131,38 +151,6 @@ def _term_stats_pruned(spark: SparkSession, index: InvertedIndex,
                     & F.col("term").isin(terms)))
 
 
-def weights_df(spark: SparkSession, index: InvertedIndex,
-               queries: list[str]) -> DataFrame:
-    """(query_id, term, weight=idf) for a batch of queries, resolved by
-    one join against the bucket-pruned term_stats scan (no collect).
-
-    NOTE the weight is the SINGLE-occurrence idf, not idf·qtf: per-doc
-    scores are assembled by folding over the query token SEQUENCE
-    (repeats included) in the exact float-addition order BM25Okapi uses —
-    see ``_fold_scores``. Multiplying by qtf up front is mathematically
-    equal but floating-point different, and last-ulp differences reorder
-    score-tied documents between execution paths (caught at 800k docs)."""
-    rows = []
-    for qi, q in enumerate(queries):
-        for term in _qtf(q):
-            rows.append((qi, term))
-    if not rows:
-        return spark.createDataFrame(
-            [], "query_id int, term string, weight double")
-    idf_map = index.idf_lookup()
-    if idf_map is not None:
-        # warm driver idf cache (built from the same term_stats floats):
-        # resolve weights as a local relation — no term_stats scan, no
-        # join in the query plan (values identical either way)
-        return spark.createDataFrame(
-            [(qi, t, float(idf_map[t])) for qi, t in rows if t in idf_map],
-            "query_id int, term string, weight double")
-    qdf = spark.createDataFrame(rows, "query_id int, term string")
-    stats = _term_stats_pruned(spark, index, sorted({t for _, t in rows}))
-    return (F.broadcast(qdf).join(stats, "term")
-            .select("query_id", "term", F.col("idf").alias("weight")))
-
-
 def query_term_idf(spark: SparkSession, index: InvertedIndex,
                    query: str) -> dict[str, float]:
     """Driver-side {term: idf} for the query's unique known terms (warm
@@ -179,21 +167,21 @@ def query_term_idf(spark: SparkSession, index: InvertedIndex,
 
 
 def _fold_scores(partials: DataFrame, token_seq: list[str],
-                 keys: list[str], min_match: int = 1) -> DataFrame:
-    """Per-key score = LEFT FOLD over the query token sequence (repeats
-    included) of the per-(key, term) partials — the bit-exact float
+                 min_match: int = 1) -> DataFrame:
+    """Per-doc score = LEFT FOLD over the query token sequence (repeats
+    included) of the per-(doc, term) partials — the bit-exact float
     addition order of BM25Okapi's ``get_scores`` (score += per token).
     Spark's sum() aggregate adds in partition-arrival order, which is
     nondeterministic; with mathematically-tied scores that noise reorders
     the tie-break between runs and between execution paths. The fold is
     pure JVM (map_from_entries + higher-order aggregate).
 
-    ``min_match`` > 1: minimum-should-match — keys whose per-term map
+    ``min_match`` > 1: minimum-should-match — docs whose per-term map
     holds fewer than m distinct matched terms are dropped BEFORE the
     fold (the map's size IS the distinct matched-term count: partials
-    arrive one row per (key, term)). Zero extra passes over the data."""
+    arrive one row per (doc, term)). Zero extra passes over the data."""
     toks = F.array(*[F.lit(t) for t in token_seq])
-    g = partials.groupBy(*keys).agg(
+    g = partials.groupBy("doc_id").agg(
         F.map_from_entries(F.collect_list(F.struct("term", "score")))
         .alias("__pm"))
     if min_match > 1:
@@ -202,23 +190,7 @@ def _fold_scores(partials: DataFrame, token_seq: list[str],
         toks, F.lit(0.0),
         lambda acc, t: acc + F.coalesce(F.element_at(F.col("__pm"), t),
                                         F.lit(0.0)))
-    return g.select(*keys, folded.alias("score"))
-
-
-def query_term_weights(spark: SparkSession, index: InvertedIndex,
-                       query: str) -> dict[str, float]:
-    """Driver-side weights dict (used by the pruned path, which needs the
-    values for its bound expressions). Served from the warm idf cache when
-    available (zero Spark jobs), else a bucket-pruned lookup job."""
-    qtf = _qtf(query)
-    if not qtf:
-        return {}
-    idf_map = index.idf_lookup()
-    if idf_map is not None:
-        return {t: idf_map[t] * n for t, n in qtf.items() if t in idf_map}
-    rows = _term_stats_pruned(spark, index, sorted(qtf)) \
-        .select("term", "idf").collect()
-    return {r["term"]: r["idf"] * qtf[r["term"]] for r in rows}
+    return g.select("doc_id", folded.alias("score"))
 
 
 def _query_blocks(spark: SparkSession, index: InvertedIndex,
@@ -230,64 +202,35 @@ def _query_blocks(spark: SparkSession, index: InvertedIndex,
                     & F.col("term").isin(sorted(terms))))
 
 
-def _score_blocks_closure(blocks: DataFrame, index: InvertedIndex,
-                          weights: dict, acc_blocks=None) -> DataFrame:
-    """Decode + score posting blocks → per-posting partial scores, one
-    row per (doc, term), with the per-term weights CLOSURE-CAPTURED
-    instead of broadcast-joined: the
-    join's BroadcastExchange cost ~1.4 s per query at bench scale
-    (measured r7 — the dominant term of the exact path), while a
-    few-entry dict rides the task closure for free. Same bulk decode,
-    same elementwise float expressions → bitwise-identical partials;
-    row order differs (irrelevant: the fold's map is keyed).
-
-    ``blocks`` must already be filtered to the weights' terms."""
-    k1, b = index.cfg.bm25.k1, index.cfg.bm25.b
-    avgdl = index.avgdl
-    w = dict(weights)
-
-    def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in it:
-            if not len(pdf):
-                continue
-            if acc_blocks is not None:
-                acc_blocks.add(len(pdf))
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            total = int(ns.sum())
-            deltas = varint_decode(b"".join(pdf["doc_bytes"]),
-                                   total).astype(np.int64)
-            starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-            c = np.cumsum(deltas)
-            base = np.zeros(len(ns), dtype=np.int64)
-            base[1:] = c[starts[1:] - 1]
-            docs = c - np.repeat(base, ns)
-            tf = varint_decode(b"".join(pdf["tf_bytes"]),
-                               total).astype(np.float64)
-            ln = varint_decode(b"".join(pdf["dl_bytes"]),
-                               total).astype(np.float64)
-            denom = tf + k1 * (1 - b + b * ln / avgdl)
-            terms = pdf["term"].to_numpy()
-            wgt = np.repeat(np.array([w[t] for t in terms]), ns)
-            yield pd.DataFrame({
-                "term": np.repeat(terms, ns),
-                "doc_id": docs,
-                "score": wgt * (tf * (k1 + 1) / denom)})
-
-    return (blocks.select("term", "n", "doc_bytes", "tf_bytes",
-                          "dl_bytes")
-            .mapInPandas(score, schema="term string, " + RESULT_SCHEMA))
+def _bm25_unit(tf, dl, k1: float, b: float, avgdl: float):
+    """The idf-free per-posting BM25 factor tf·(k1+1) / (tf +
+    k1·(1 − b + b·dl/avgdl)), elementwise over numpy arrays. Every
+    scorer multiplies it by the term weight in this exact float order,
+    so partials are bitwise-identical across routes."""
+    tf = tf.astype("float64")
+    return tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl.astype("float64")
+                                      / avgdl))
 
 
 def _score_blocks_closure_batch(blocks: DataFrame, index: InvertedIndex,
                                 qweights: list[dict],
                                 acc_blocks=None) -> DataFrame:
-    """Batch (query_id) variant of ``_score_blocks_closure``: one decode
-    of the union of the batch's terms' blocks, then per query emit rows
-    for ITS terms — the same output multiset the per-query broadcast
-    join produced, without duplicating block rows through an exchange.
-    ``qweights[qi]`` is query qi's {term: single-idf weight} map (empty
-    dict → the query emits nothing)."""
+    """Decode + score posting blocks → per-posting partial scores, one
+    row per (query_id, doc, term), with each query's {term: weight} map
+    CLOSURE-CAPTURED instead of broadcast-joined: the join's
+    BroadcastExchange cost ~1.4 s per query at bench scale (measured r7
+    — the dominant term of the exact path), while a few-entry dict rides
+    the task closure for free. One bulk decode per Arrow batch serves
+    every query: each query keeps the postings of ITS terms through one
+    vectorized row mask. ``qweights[qi]`` is query qi's map (empty dict →
+    the query emits nothing); ``blocks`` must be filtered to their terms.
+
+    NOTE the weight is the SINGLE-occurrence idf, not idf·qtf: per-doc
+    scores are assembled by folding over the query token SEQUENCE
+    (repeats included) in the exact float-addition order BM25Okapi uses —
+    see ``_fold_scores``. Multiplying by qtf up front is mathematically
+    equal but floating-point different, and last-ulp differences reorder
+    score-tied documents between execution paths (caught at 800k docs)."""
     k1, b = index.cfg.bm25.k1, index.cfg.bm25.b
     avgdl = index.avgdl
     qws = [dict(w) for w in qweights]
@@ -300,43 +243,21 @@ def _score_blocks_closure_batch(blocks: DataFrame, index: InvertedIndex,
             if acc_blocks is not None:
                 acc_blocks.add(len(pdf))
             ns = pdf["n"].to_numpy(dtype=np.int64)
-            total = int(ns.sum())
-            deltas = varint_decode(b"".join(pdf["doc_bytes"]),
-                                   total).astype(np.int64)
-            starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-            c = np.cumsum(deltas)
-            base = np.zeros(len(ns), dtype=np.int64)
-            base[1:] = c[starts[1:] - 1]
-            docs = c - np.repeat(base, ns)
-            tf = varint_decode(b"".join(pdf["tf_bytes"]),
-                               total).astype(np.float64)
-            ln = varint_decode(b"".join(pdf["dl_bytes"]),
-                               total).astype(np.float64)
-            unit = tf * (k1 + 1) / (tf + k1 * (1 - b + b * ln / avgdl))
-            terms = pdf["term"].to_numpy()
-            tcodes, tuniq = pd.factorize(terms)
-            # per-term posting slices (row order preserved)
-            pos_starts = starts
-            by_term: dict[str, list] = {}
-            for j, t in enumerate(tuniq):
-                rows = np.flatnonzero(tcodes == j)
-                by_term[t] = [(pos_starts[r], pos_starts[r] + ns[r])
-                              for r in rows]
+            docs, tf, dl = decode_blocks_bulk(
+                ns, pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"])
+            unit = _bm25_unit(tf, dl, k1, b, avgdl)
+            tcodes, tuniq = pd.factorize(pdf["term"].to_numpy())
+            codes = np.repeat(tcodes, ns)
             for qi, w in enumerate(qws):
-                d_parts, s_parts, t_parts = [], [], []
-                for t in w:
-                    for a, e in by_term.get(t, ()):
-                        d_parts.append(docs[a:e])
-                        s_parts.append(w[t] * unit[a:e])
-                        t_parts.append(np.full(e - a, t, dtype=object))
-                if not d_parts:
+                rows = np.array([t in w for t in tuniq], dtype=bool)[codes]
+                if not rows.any():
                     continue
-                d_cat = np.concatenate(d_parts)
+                wts = np.array([w.get(t, 0.0) for t in tuniq])
                 yield pd.DataFrame({
-                    "query_id": np.full(len(d_cat), qi, dtype=np.int32),
-                    "term": np.concatenate(t_parts),
-                    "doc_id": d_cat,
-                    "score": np.concatenate(s_parts)})
+                    "query_id": np.full(int(rows.sum()), qi, dtype=np.int32),
+                    "term": tuniq[codes[rows]],
+                    "doc_id": docs[rows],
+                    "score": wts[codes[rows]] * unit[rows]})
 
     return (blocks.select("term", "n", "doc_bytes", "tf_bytes",
                           "dl_bytes")
@@ -362,31 +283,6 @@ def _apply_after(scored: DataFrame, after) -> DataFrame:
     return scored.filter(
         (F.col("score") < F.lit(s_a))
         | ((F.col("score") == F.lit(s_a)) & (F.col("doc_id") > F.lit(d_a))))
-
-
-def _topk(partials: DataFrame, token_seq: list[str], k: int,
-          min_match: int = 1,
-          boost_docs: DataFrame | None = None,
-          after=None) -> DataFrame:
-    scored = _fold_scores(partials, token_seq, ["doc_id"],
-                          min_match=min_match)
-    if boost_docs is not None:
-        # static per-doc score multiplier (function-score / Lucene doc
-        # boost): applied AFTER the fold, BEFORE top-k selection, so the
-        # boost reorders the ranking, missing docs boost 1.0. The left
-        # side is the candidate set (bounded by the query terms' dfs),
-        # the right a column-pruned (doc_id, boost) scan — a plain hash
-        # join, no corpus materialization.
-        scored = (scored
-                  .join(boost_docs.select("doc_id", "boost"),
-                        "doc_id", "left")
-                  .select("doc_id",
-                          (F.col("score")
-                           * F.coalesce(F.col("boost"), F.lit(1.0)))
-                          .alias("score")))
-    return (_apply_after(scored, after)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k))
 
 
 def _fold_scores_batch(partials: DataFrame,
@@ -415,45 +311,6 @@ def _fold_scores_batch(partials: DataFrame,
         lambda acc, t: acc + F.coalesce(F.element_at(F.col("__pm"), t),
                                         F.lit(0.0)))
     return g.select("query_id", "doc_id", folded.alias("score"))
-
-
-def _cold_scores_batch(spark: SparkSession, index: InvertedIndex,
-                       idf_map: dict, token_seqs: list[list[str]],
-                       warm_ranges: frozenset,
-                       min_matches: list[int] | None = None) -> DataFrame:
-    """Exact per-(query_id, doc_id) scores over posting blocks whose
-    range_id is NOT resident in a PARTIAL warm serving subset
-    (``InvertedIndex.warm(ranges=...)``) — the on-disk half every served
-    path unions in so partial warm stays result-identical to full warm.
-    Scores use the same per-block float expression and query-token fold
-    as every other path (bitwise contract). The resident set is excluded
-    with an isin literal — fine for the head-shard warming the memory
-    envelope prescribes (10-10^4 hot ranges); a fleet warming millions of
-    ranges would swap this for a broadcast anti-join."""
-    qweights = [{t: float(idf_map[t])
-                 for t in sorted({x for x in seq if x in idf_map})}
-                for seq in token_seqs]
-    known = sorted({t for w in qweights for t in w})
-    if not known:
-        return spark.createDataFrame([], "query_id int, " + RESULT_SCHEMA)
-    blocks = _query_blocks(spark, index, known)
-    blocks = blocks.filter(
-        ~F.col("range_id").isin([int(r) for r in warm_ranges])
-        if warm_ranges else F.lit(True))
-    partials = _score_blocks_closure_batch(blocks, index, qweights)
-    # min_match stays correct under the warm/cold split: a doc's complete
-    # postings live in ONE range, and a range is entirely warm or cold,
-    # so each side's per-doc distinct-matched-term count is total
-    return _fold_scores_batch(partials, token_seqs,
-                              min_matches=min_matches)
-
-
-def _mk_decode_acc(spark: SparkSession, stats: dict | None):
-    if stats is None:
-        return None
-    acc = spark.sparkContext.accumulator(0)
-    stats["decoded_blocks"] = acc
-    return acc
 
 
 def _apply_doc_exclude(partials: DataFrame,
@@ -512,6 +369,171 @@ def _collect_filter_ids(filter_docs: DataFrame | None, cap: int):
     return ids, False
 
 
+@dataclass
+class _Request:
+    """One top-k request as every route sees it (built by ``_request``).
+    ``token_seqs`` holds one scoring sequence per query — ``[]`` for a
+    query with no term in the vocabulary; the single-query routes read
+    ``token_seq`` and ``min_matches[0]``. ``idf`` maps every known term of
+    every query to its single-occurrence idf."""
+    token_seqs: list
+    idf: dict
+    min_matches: list
+    k: int | None
+    filter_docs: DataFrame | None = None
+    exclude_docs: DataFrame | None = None
+    boost_docs: DataFrame | None = None
+    after: tuple | None = None
+    stats: dict | None = None
+    allowed: object = None        # sorted filter ids, see collect_masks
+    blocked: object = None        # sorted exclude ids
+    acc_decoded: object = None    # stats= accumulators, see track
+    acc_total: object = None
+
+    @property
+    def token_seq(self) -> list[str]:
+        return self.token_seqs[0]
+
+    @property
+    def empty(self) -> bool:
+        """No known query term, or k=0: every route returns no rows."""
+        return not self.idf or self.k == 0
+
+    def collect_masks(self, cap: int) -> bool:
+        """Collect ``filter_docs``/``exclude_docs`` as the kernel's sorted
+        id masks (one JVM-only job each). False when either survivor set
+        exceeds ``cap``: the caller then runs the join-based exact plan."""
+        self.allowed, too_big = _collect_filter_ids(self.filter_docs, cap)
+        self.blocked, ex_too_big = _collect_filter_ids(self.exclude_docs,
+                                                       cap)
+        return not (too_big or ex_too_big)
+
+    @property
+    def filtered_out(self) -> bool:
+        """The filter admits no document: the answer is empty."""
+        return self.allowed is not None and not len(self.allowed)
+
+    def track(self, spark: SparkSession, total: bool = False) -> None:
+        """Register the ``stats=`` accumulators: ``decoded_blocks``, plus
+        ``total_blocks`` (resident block rows) on the served routes."""
+        if self.stats is None:
+            return
+        sc = spark.sparkContext
+        self.acc_decoded = self.stats["decoded_blocks"] = sc.accumulator(0)
+        if total:
+            self.acc_total = self.stats["total_blocks"] = sc.accumulator(0)
+
+    def kernel(self, index: InvertedIndex, block_skip: bool = True,
+               with_query_id: bool = False, **kw):
+        """This request's ``_served_local_topk`` kernel."""
+        return _served_local_topk(
+            self.token_seqs, self.idf, index.cfg.bm25.k1, index.cfg.bm25.b,
+            index.avgdl, self.k, block_skip, with_query_id,
+            acc_decoded=self.acc_decoded, acc_total=self.acc_total,
+            allowed=self.allowed, min_matches=self.min_matches,
+            blocked=self.blocked, after=self.after, **kw)
+
+
+def _request(spark: SparkSession, index: InvertedIndex, queries: list,
+             k: int | None, min_match: int | str | None = None,
+             filter_docs: DataFrame | None = None,
+             exclude_docs: DataFrame | None = None,
+             boost_docs: DataFrame | None = None,
+             after=None, stats: dict | None = None) -> _Request:
+    """Resolve a request once for every route: each query's scoring
+    tokens, the idf of their known terms (the warm driver cache, else one
+    bucket-pruned lookup job for the whole batch; none when k=0), each
+    query's min_match (``_resolve_min_match``, only for queries with a
+    known term) and the (float, int) cursor. ``k=None``: unbounded."""
+    seqs = [_tokens(q) for q in queries]
+    idf = {} if k == 0 else query_term_idf(
+        spark, index, [t for s in seqs for t in s])
+    seqs = [s if any(t in idf for t in s) else [] for s in seqs]
+    return _Request(
+        seqs, idf, [_resolve_min_match(s, min_match) if s else 1
+                    for s in seqs], k, filter_docs, exclude_docs,
+        boost_docs, None if after is None
+        else (float(after[0]), int(after[1])), stats)
+
+
+def _exact_topk(index: InvertedIndex, req: _Request,
+                blocks: DataFrame) -> DataFrame:
+    """The exact plan of a single-query request over posting ``blocks``
+    (already filtered to its terms): closure scorer → filter/exclude
+    joins → token-order fold with min_match → boost → after → top-k, as
+    one lazy plan ending in TakeOrderedAndProject."""
+    partials = _score_blocks_closure_batch(
+        blocks, index, [req.idf], acc_blocks=req.acc_decoded) \
+        .drop("query_id")
+    partials = _apply_doc_exclude(
+        _apply_doc_filter(partials, req.filter_docs), req.exclude_docs)
+    scored = _fold_scores(partials, req.token_seq,
+                          min_match=req.min_matches[0])
+    if req.boost_docs is not None:
+        # static per-doc score multiplier (function-score / Lucene doc
+        # boost): applied AFTER the fold, BEFORE top-k selection, so the
+        # boost reorders the ranking, missing docs boost 1.0. The left
+        # side is the candidate set (bounded by the query terms' dfs),
+        # the right a column-pruned (doc_id, boost) scan — a plain hash
+        # join, no corpus materialization.
+        scored = (scored
+                  .join(req.boost_docs.select("doc_id", "boost"),
+                        "doc_id", "left")
+                  .select("doc_id",
+                          (F.col("score")
+                           * F.coalesce(F.col("boost"), F.lit(1.0)))
+                          .alias("score")))
+    return (_apply_after(scored, req.after)
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(req.k))
+
+
+def _cold_scores_batch(spark: SparkSession, index: InvertedIndex,
+                       req: _Request, warm_ranges: frozenset) -> DataFrame:
+    """Exact per-(query_id, doc_id) scores of ``req`` over posting blocks
+    whose range_id is NOT in ``warm_ranges`` (a PARTIAL warm serving
+    subset, ``InvertedIndex.warm(ranges=...)``; empty → every range),
+    with the request's filter, exclude and cursor applied — the on-disk
+    half every served path unions in so partial warm stays
+    result-identical to full warm. Scores use the same per-block float
+    expression and query-token fold as every other path (bitwise
+    contract). The resident set is excluded with an isin literal — fine
+    for the head-shard warming the memory envelope prescribes (10-10^4
+    hot ranges); a fleet warming millions of ranges would swap this for
+    a broadcast anti-join."""
+    qweights = [{t: float(req.idf[t])
+                 for t in sorted({x for x in seq if x in req.idf})}
+                for seq in req.token_seqs]
+    known = sorted({t for w in qweights for t in w})
+    if not known:
+        return spark.createDataFrame([], "query_id int, " + RESULT_SCHEMA)
+    blocks = _query_blocks(spark, index, known)
+    blocks = blocks.filter(
+        ~F.col("range_id").isin([int(r) for r in warm_ranges])
+        if warm_ranges else F.lit(True))
+    partials = _score_blocks_closure_batch(blocks, index, qweights)
+    # min_match stays correct under the warm/cold split: a doc's complete
+    # postings live in ONE range, and a range is entirely warm or cold,
+    # so each side's per-doc distinct-matched-term count is total
+    scores = _fold_scores_batch(partials, req.token_seqs,
+                                min_matches=req.min_matches)
+    return _apply_after(_apply_doc_exclude(
+        _apply_doc_filter(scores, req.filter_docs), req.exclude_docs),
+        req.after)
+
+
+def _with_cold_ranges(spark: SparkSession, index: InvertedIndex,
+                      req: _Request, local: DataFrame) -> DataFrame:
+    """``local`` (the served kernel's rows) plus, under a PARTIAL warm,
+    the exact scores of the cold (non-resident) ranges on disk —
+    result-identical to a fully-warm serve."""
+    wr = index.warm_ranges()
+    if wr is None:
+        return local
+    return local.unionByName(
+        _cold_scores_batch(spark, index, req, wr).select(*local.columns))
+
+
 def term_docs(spark: SparkSession, index: InvertedIndex,
               term: str) -> DataFrame:
     """All doc_ids whose postings contain ``term`` (one bucket+term-pruned
@@ -523,20 +545,12 @@ def term_docs(spark: SparkSession, index: InvertedIndex,
     blocks = _query_blocks(spark, index, [term]).select("n", "doc_bytes")
 
     def explode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
         for pdf in it:
-            if not len(pdf):
-                continue
-            # one varint pass over the batch's doc buffers (per-block
-            # cumsum reset via base subtraction); tf/dl never decoded
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            deltas = varint_decode(b"".join(pdf["doc_bytes"]),
-                                   int(ns.sum())).astype(np.int64)
-            starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-            c = np.cumsum(deltas)
-            base = np.zeros(len(ns), dtype=np.int64)
-            base[1:] = c[starts[1:] - 1]
-            yield pd.DataFrame({"doc_id": c - np.repeat(base, ns)})
+            if len(pdf):
+                # one varint pass over the batch's doc buffers; tf/dl
+                # never decoded
+                yield pd.DataFrame({"doc_id": decode_blocks_bulk(
+                    pdf["n"], pdf["doc_bytes"])})
 
     return blocks.mapInPandas(explode, schema="doc_id long")
 
@@ -592,20 +606,14 @@ def explain_score(spark: SparkSession, index: InvertedIndex, query,
     def pick(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
         for pdf in it:
-            terms, tfs, dls = [], [], []
-            for term, n, db, tb, lb in zip(pdf["term"], pdf["n"],
-                                           pdf["doc_bytes"],
-                                           pdf["tf_bytes"],
-                                           pdf["dl_bytes"]):
-                d, t, ln = decode_block(bytes(db), bytes(tb), bytes(lb),
-                                        int(n))
-                i = np.searchsorted(d, did)
-                if i < len(d) and d[i] == did:
-                    terms.append(term)
-                    tfs.append(int(t[i]))
-                    dls.append(int(ln[i]))
-            if terms:
-                yield pd.DataFrame({"term": terms, "tf": tfs, "dl": dls})
+            ns = pdf["n"].to_numpy(dtype=np.int64)
+            d, tf, dl = decode_blocks_bulk(ns, pdf["doc_bytes"],
+                                           pdf["tf_bytes"], pdf["dl_bytes"])
+            hit = d == did       # a doc occurs at most once per term
+            if hit.any():
+                yield pd.DataFrame({
+                    "term": np.repeat(pdf["term"].to_numpy(), ns)[hit],
+                    "tf": tf[hit], "dl": dl[hit]})
 
     hits = blocks.mapInPandas(pick, schema="term string, tf long, dl long")
     k1, b = index.cfg.bm25.k1, index.cfg.bm25.b
@@ -646,36 +654,28 @@ def bm25_topk_exact(spark: SparkSession, index: InvertedIndex, query,
 
     ``boost_docs`` (optional DataFrame with (doc_id, boost)): static
     per-doc score multiplier applied after the fold, before top-k (see
-    ``_topk``) — function-score ranking (recency, quality priors).
+    ``_exact_topk``) — function-score ranking (recency, quality priors).
 
     ``after`` (optional (score, doc_id) cursor): search-after
     pagination — see ``_apply_after``. Page 2 = the previous page's
     last (UNROUNDED score, doc_id)."""
-    qtf = _qtf(query)
-    if not qtf or k == 0:
-        return local_result(spark)
-    token_seq = _tokens(query)
     # weights ride the task closure (warm: driver idf cache, zero jobs;
     # cold: one bucket-pruned lookup) — the r6 plan broadcast-joined a
     # weights relation instead, whose BroadcastExchange alone cost ~1.4 s
     # per query at bench scale (measured r7)
-    idf = query_term_idf(spark, index, query)
-    if not idf:
+    req = _request(spark, index, [query], k, min_match, filter_docs,
+                   exclude_docs, boost_docs, after, stats)
+    if req.empty:
         # no query term is in the index vocabulary → empty result, same
         # as the joined plan would produce without running a job
         return local_result(spark)
-    blocks = _query_blocks(spark, index, sorted(idf))
-    acc = _mk_decode_acc(spark, stats)
-    partials = _score_blocks_closure(blocks, index, idf, acc_blocks=acc)
-    partials = _apply_doc_exclude(_apply_doc_filter(partials, filter_docs),
-                                  exclude_docs)
-    return _topk(partials, token_seq, k,
-                 min_match=_resolve_min_match(token_seq, min_match),
-                 boost_docs=boost_docs, after=after)
+    req.track(spark)
+    return _exact_topk(index, req, _query_blocks(spark, index,
+                                                 sorted(req.idf)))
 
 
 def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
-                       k1: float, b: float, avgdl: float, k: int,
+                       k1: float, b: float, avgdl: float, k: int | None,
                        block_skip: bool, with_query_id: bool,
                        acc_decoded=None, acc_total=None,
                        allowed=None, min_matches=None, blocked=None,
@@ -699,6 +699,9 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
     term's contribution — and every surviving doc's score is accumulated
     in QUERY TOKEN order over exactly the same per-block float partials
     as the unskipped kernel.
+
+    ``k=None`` (with ``block_skip=False`` only): every matching doc, no
+    top-k cut — hybrid's served per-(query, doc) scores.
 
     ``min_matches`` (optional list aligned with ``token_seqs``):
     per-query minimum-should-match. A doc's distinct-matched-term count
@@ -748,8 +751,8 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
     Rank-safe under partial scoring because every kept contribution is
     bounded by its term's CLAMPED (≥ 0) bound, so a partially-scored
     doc's total never exceeds its interval bound < θ — and hot-interval
-    docs keep every block, hence exact scores (the
-    ``_fine_prune_keep`` argument, applied locally with a rising θ)."""
+    docs keep every block, hence exact scores (the ``_hot_block_mask``
+    argument, applied locally with a rising θ)."""
 
     def local_topk(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -775,9 +778,8 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
         # same float expression as the per-row form: (k1+1)·mtf /
         # (mtf + k1·(1 − b + b·mdl/avgdl))); per (range, term) the bound
         # is the max over that term's blocks in the range
-        mtf = pdf["max_tf"].to_numpy(dtype=np.float64)
-        mdl = pdf["min_dl"].to_numpy(dtype=np.float64)
-        unit_ub = (k1 + 1) * mtf / (mtf + k1 * (1 - b + b * mdl / avgdl))
+        unit_ub = _bm25_unit(pdf["max_tf"].to_numpy(),
+                             pdf["min_dl"].to_numpy(), k1, b, avgdl)
         # group rows by (range, term): stable lexsort keeps each group's
         # row indices in original (ascending) order — the accumulation
         # order the bitwise contract fixes
@@ -804,27 +806,14 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
         def decode_bulk(sel: np.ndarray) -> None:
             """Decode MANY block rows in one varint pass per column —
             bitwise-identical per row to decode_block + the per-block
-            score expression (integer cumsum resets per block via the
-            base-subtraction trick; float ops are elementwise)."""
+            score expression."""
             nsel = ns_col[sel]
-            total = int(nsel.sum())
-            deltas = varint_decode(b"".join(dbs[sel]),
-                                   total).astype(np.int64)
-            starts = np.concatenate([[0], np.cumsum(nsel)[:-1]])
-            c = np.cumsum(deltas)
-            base = np.zeros(len(sel), dtype=np.int64)
-            base[1:] = c[starts[1:] - 1]
-            d_all = c - np.repeat(base, nsel)
-            tf = varint_decode(b"".join(tbs[sel]),
-                               total).astype(np.float64)
-            ln = varint_decode(b"".join(lbs[sel]),
-                               total).astype(np.float64)
-            denom = tf + k1 * (1 - b + b * ln / avgdl)
+            d_all, tf, ln = decode_blocks_bulk(nsel, dbs[sel], tbs[sel],
+                                               lbs[sel])
             s_all = np.repeat(_row_w[sel], nsel) \
-                * (tf * (k1 + 1) / denom)
-            for j, i in enumerate(sel):
-                a = starts[j]
-                e = a + nsel[j]
+                * _bm25_unit(tf, ln, k1, b, avgdl)
+            ends = np.cumsum(nsel)
+            for i, a, e in zip(sel, ends - nsel, ends):
                 decoded[int(i)] = (d_all[a:e], s_all[a:e])
             if acc_decoded is not None:
                 acc_decoded.add(len(sel))
@@ -890,24 +879,24 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
                 first_col[rows_cat], last_col[rows_cat],
                 w_cat * unit_ub[rows_cat],
                 theta - 1e-9 * abs(theta) - 1e-12)
-            out: dict = {}
-            off = 0
-            for t, ix in parts:
-                out[t] = ix[keep[off:off + len(ix)]]
-                off += len(ix)
-            return out
+            cuts = np.cumsum([len(ix) for _, ix in parts])[:-1]
+            return {t: ix[kp] for (t, ix), kp in zip(parts,
+                                                     np.split(keep, cuts))}
+
+        def member(ids, uniq):
+            """uniq's membership in the sorted unique id array ``ids``."""
+            if not len(ids):
+                return np.zeros(len(uniq), dtype=bool)
+            pos = np.searchsorted(ids, uniq)
+            pos[pos >= len(ids)] = 0
+            return ids[pos] == uniq
 
         def apply_masks(uniq, totals):
             if allowed is not None:
-                pos = np.searchsorted(allowed, uniq)
-                pos[pos >= len(allowed)] = 0
-                keep = (allowed[pos] == uniq) if len(allowed) \
-                    else np.zeros(len(uniq), dtype=bool)
+                keep = member(allowed, uniq)
                 uniq, totals = uniq[keep], totals[keep]
-            if blocked is not None and len(blocked) and len(uniq):
-                pos = np.searchsorted(blocked, uniq)
-                pos[pos >= len(blocked)] = 0
-                keep = blocked[pos] != uniq
+            if blocked is not None:
+                keep = ~member(blocked, uniq)
                 uniq, totals = uniq[keep], totals[keep]
             if after is not None and len(uniq):
                 s_a, d_a = after
@@ -917,10 +906,7 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
             return uniq, totals
 
         for qi, seq in enumerate(token_seqs):
-            qtf: dict[str, int] = {}
-            for t in seq:
-                if t in idf_map:
-                    qtf[t] = qtf.get(t, 0) + 1
+            qtf = Counter(t for t in seq if t in idf_map)
             # per-range summed bound for THIS query (weight = idf·qtf:
             # a term's max total contribution incl. query multiplicity).
             # NEGATIVE idf (the ε-fixup ε·avg_idf is negative when the
@@ -1058,56 +1044,27 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
     ``exclude_docs``: must-NOT filter — ships as a sorted blocked mask
     while driver-sized (serving stays zero-shuffle), falls back to the
     exact anti-join beyond the cap."""
-    idf = query_term_idf(spark, index, query)
-    if not idf or k == 0:
+    req = _request(spark, index, [query], k, min_match, filter_docs,
+                   exclude_docs, after=after, stats=stats)
+    if req.empty:
         return local_result(spark)
-    token_seq = _tokens(query)
-    mm = _resolve_min_match(token_seq, min_match)
-    allowed, too_big = _collect_filter_ids(filter_docs,
-                                           filter_broadcast_max)
-    blocked, ex_too_big = _collect_filter_ids(exclude_docs,
-                                              filter_broadcast_max)
-    if too_big or ex_too_big:
-        return bm25_topk_exact(spark, index, query, k=k, stats=stats,
-                               filter_docs=filter_docs,
-                               min_match=min_match,
-                               exclude_docs=exclude_docs,
-                               after=after)
-    if allowed is not None and not len(allowed):
+    if not req.collect_masks(filter_broadcast_max):
+        req.track(spark)
+        return _exact_topk(index, req, _query_blocks(spark, index,
+                                                     sorted(req.idf)))
+    if req.filtered_out:
         return local_result(spark)
-    acc_d = acc_t = None
-    if stats is not None:
-        acc_d = spark.sparkContext.accumulator(0)
-        acc_t = spark.sparkContext.accumulator(0)
-        stats["decoded_blocks"] = acc_d
-        stats["total_blocks"] = acc_t
-    kernel = _served_local_topk(
-        [token_seq], idf, index.cfg.bm25.k1, index.cfg.bm25.b,
-        index.avgdl, k, block_skip, with_query_id=False,
-        acc_decoded=acc_d, acc_total=acc_t, allowed=allowed,
-        min_matches=[mm], blocked=blocked,
-        after=((float(after[0]), int(after[1]))
-               if after is not None else None))
+    req.track(spark, total=True)
+    kernel = req.kernel(index, block_skip)
     serving = index.serving_df(spark)  # warms on first use
-    wr = index.warm_ranges()
-    rows = (index.serving_rows(sorted(idf), _DRIVER_SERVING_BYTES_MAX)
-            if wr is None else None)
+    # a partial warm never keeps the driver copy (rows is then None)
+    rows = index.serving_rows(sorted(req.idf), _DRIVER_SERVING_BYTES_MAX)
     if rows is not None:
         return _run_local(spark, kernel, rows)
-    local = serving.filter(F.col("term").isin(sorted(idf))) \
+    local = serving.filter(F.col("term").isin(sorted(req.idf))) \
         .mapInPandas(kernel, schema=RESULT_SCHEMA)
-    if wr is not None:
-        # partial warm: exact-score the cold (non-resident) ranges on
-        # disk and merge — result-identical to a fully-warm serve
-        cold = _cold_scores_batch(spark, index, idf,
-                                  [token_seq], wr,
-                                  min_matches=[mm]) \
-            .drop("query_id")
-        cold = _apply_after(
-            _apply_doc_exclude(_apply_doc_filter(cold, filter_docs),
-                               exclude_docs), after)
-        local = local.unionByName(cold)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return (_with_cold_ranges(spark, index, req, local)
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 def bm25_topk_served_batch(spark: SparkSession, index: InvertedIndex,
@@ -1142,59 +1099,25 @@ def bm25_topk_served_batch(spark: SparkSession, index: InvertedIndex,
     ``min_match``: minimum-should-match applied to EVERY query in the
     batch; ``"all"`` resolves per query against its own distinct token
     count (conjunctive AND per query)."""
-    idf_map = {}
-    token_seqs = []
-    min_matches = []
-    for q in queries:
-        idf = query_term_idf(spark, index, q)
-        idf_map.update(idf)
-        seq = _tokens(q) if idf else []
-        token_seqs.append(seq)
-        min_matches.append(_resolve_min_match(_tokens(q), min_match)
-                           if idf else 1)
-    known = sorted(idf_map)
-    if not known:
+    req = _request(spark, index, queries, k, min_match, filter_docs,
+                   exclude_docs, stats=stats)
+    fits = not req.empty and req.collect_masks(filter_broadcast_max)
+    if req.empty or req.filtered_out:
         return spark.createDataFrame([], "query_id int, " + RESULT_SCHEMA)
-    allowed, too_big = _collect_filter_ids(filter_docs,
-                                           filter_broadcast_max)
-    blocked, ex_too_big = _collect_filter_ids(exclude_docs,
-                                              filter_broadcast_max)
-    if allowed is not None and not len(allowed):
-        return spark.createDataFrame([], "query_id int, " + RESULT_SCHEMA)
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("doc_id"))
-    if too_big or ex_too_big:
+    if not fits:
         # non-selective filter: exact per-(query, doc) scores over the
         # on-disk blocks (warm_ranges=∅ ⇒ all ranges), semi-joined with
         # the filter, then the same per-query window top-k
-        scores = _apply_doc_exclude(_apply_doc_filter(
-            _cold_scores_batch(spark, index, idf_map, token_seqs,
-                               frozenset(), min_matches=min_matches),
-            filter_docs), exclude_docs)
-        return (scores.withColumn("__r", F.row_number().over(w))
-                .filter(F.col("__r") <= k).drop("__r")
-                .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
-    acc_d = acc_t = None
-    if stats is not None:
-        acc_d = spark.sparkContext.accumulator(0)
-        acc_t = spark.sparkContext.accumulator(0)
-        stats["decoded_blocks"] = acc_d
-        stats["total_blocks"] = acc_t
-    kernel = _served_local_topk(
-        token_seqs, idf_map, index.cfg.bm25.k1, index.cfg.bm25.b,
-        index.avgdl, k, block_skip, with_query_id=True,
-        acc_decoded=acc_d, acc_total=acc_t, allowed=allowed,
-        min_matches=min_matches, blocked=blocked)
-    blocks = index.serving_df(spark).filter(F.col("term").isin(known))
-    local = blocks.mapInPandas(kernel,
-                               schema="query_id int, " + RESULT_SCHEMA)
-    wr = index.warm_ranges()
-    if wr is not None:
-        local = local.unionByName(_apply_doc_exclude(_apply_doc_filter(
-            _cold_scores_batch(spark, index, idf_map, token_seqs, wr,
-                               min_matches=min_matches),
-            filter_docs), exclude_docs))
+        local = _cold_scores_batch(spark, index, req, frozenset())
+    else:
+        req.track(spark, total=True)
+        blocks = index.serving_df(spark).filter(
+            F.col("term").isin(sorted(req.idf)))
+        local = _with_cold_ranges(spark, index, req, blocks.mapInPandas(
+            req.kernel(index, block_skip, with_query_id=True),
+            schema="query_id int, " + RESULT_SCHEMA))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
+                                               F.asc("doc_id"))
     return (local.withColumn("__r", F.row_number().over(w))
             .filter(F.col("__r") <= k).drop("__r")
             .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
@@ -1222,42 +1145,20 @@ def _block_upper_bound_col(weights: dict[str, float], index: InvertedIndex):
     return wcol * (k1 + 1) * mt / denom
 
 
-def _fine_prune_keep(meta: DataFrame, theta: float) -> DataFrame:
-    """Block-level BMW refinement inside surviving ranges.
-
-    Input: block metadata rows (range_id, term, block_id, first_doc_id,
-    last_doc_id, ub) of the query's terms in surviving ranges. Per range,
-    the per-term upper bound as a function of doc id is piecewise constant
-    over that term's block intervals; summing the piecewise functions over
-    the merged breakpoints gives every doc's total upper bound. A block is
-    decoded only if SOME interval it overlaps has total bound > θ.
-
-    Rank-safe: any doc whose total bound exceeds θ lies in an interval with
-    total > θ, so every block containing it survives and its score is
-    exact; docs whose bound never exceeds θ cannot displace the k seed
-    results that established θ (their partial scores ≤ true ≤ θ).
-    """
-
-    def prune(grp):
-        import numpy as np
-        keep = _hot_block_mask(grp["first_doc_id"].to_numpy(),
-                               grp["last_doc_id"].to_numpy(),
-                               grp["ub"].to_numpy(), theta)
-        return grp.iloc[np.flatnonzero(keep)][["range_id", "term",
-                                               "block_id"]]
-
-    return meta.groupBy("range_id").applyInPandas(
-        prune, schema="range_id long, term string, block_id int")
-
-
 def _hot_block_mask(firsts, lasts, ubs, theta):
-    """One range's block-level BMW keep-mask (the numpy core of
-    ``_fine_prune_keep``, shared with the fused pruned kernel): block i
-    survives iff it overlaps a doc interval whose summed per-term upper
-    bound is ≥ θ. ``>=`` not ``>``: a doc whose exact score TIES the
-    k-th seed score can still win the (score desc, doc_id asc)
-    tie-break, so any interval whose bound equals θ must survive for
-    strict rank-identity."""
+    """One range's block-level BMW keep-mask (the kernel's
+    ``fine_prune``): per range, each term's upper bound as a function of
+    doc id is piecewise constant over its block intervals; summing them
+    over the merged breakpoints gives every doc's total bound, and block
+    i survives iff it overlaps a doc interval whose total is ≥ θ.
+
+    Rank-safe: any doc whose total bound reaches θ lies in such an
+    interval, so every block containing it survives and its score is
+    exact; docs whose bound stays below θ cannot displace the k results
+    that established θ. ``>=`` not ``>``: a doc whose exact score TIES
+    the k-th score can still win the (score desc, doc_id asc) tie-break,
+    so any interval whose bound equals θ must survive for strict
+    rank-identity."""
     import numpy as np
 
     # merged breakpoints: interval j = [pts[j], pts[j+1])
@@ -1274,6 +1175,35 @@ def _hot_block_mask(firsts, lasts, ubs, theta):
     hot = total >= theta
     hot_cum = np.concatenate([[0], np.cumsum(hot)])
     return (hot_cum[hi] - hot_cum[lo]) > 0
+
+
+def _seed_then_survivors(index: InvertedIndex, req: _Request,
+                         kblocks: DataFrame, seed: list, survivors,
+                         fine_prune: bool):
+    """The distributed and lazy pruned tiers' shared core: exact-score
+    the ``seed`` ranges (``_exact_topk``, collected), take θ as their
+    k-th score, and run the θ-seeded kernel re-sharded by range_id
+    (doc-complete tasks) over the blocks ``survivors(theta_eff)`` picks —
+    None when no range survives. Returns (seed rows, survivor kernel
+    rows as a lazy DataFrame or None)."""
+    seed_rows = _exact_topk(
+        index, req, kblocks.filter(F.col("range_id").isin(seed))).collect()
+    theta = (seed_rows[req.k - 1]["score"]
+             if len(seed_rows) >= req.k else float("-inf"))
+    # ≥ with an ulp-scale slack, not >: a range/interval whose bound
+    # TIES θ can hold a doc that ties the k-th seed score and wins
+    # the doc_id asc tie-break — and the bound arithmetic rounds in
+    # a different order than the θ computation, so an exact tie can
+    # evaluate to θ−ε. Caught at 800k docs. Keeping ε-border ranges
+    # costs pruning, never correctness.
+    rest = survivors(theta - 1e-9 * abs(theta) - 1e-12)
+    if rest is None:
+        return seed_rows, None
+    seeded = theta > float("-inf")
+    kernel = req.kernel(index, init_theta=theta if seeded else None,
+                        fine_prune=fine_prune and seeded)
+    return seed_rows, (rest.repartition("range_id")
+                       .mapInPandas(kernel, schema=RESULT_SCHEMA))
 
 
 def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
@@ -1314,54 +1244,39 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     applied inside the θ seeding and both scoring passes, so θ is the
     k-th best POST-CURSOR score (same rank-safety argument as the
     other before-top-k constraints)."""
-    idf = query_term_idf(spark, index, query)
-    if not idf or k == 0:
+    req = _request(spark, index, [query], k, min_match, filter_docs,
+                   exclude_docs, after=after, stats=stats)
+    if req.empty:
         return local_result(spark)
-    qtf = _qtf(query)
-    token_seq = _tokens(query)
-    mm = _resolve_min_match(token_seq, min_match)
+    qtf = _qtf(req.token_seq)
     # bounds use the FULL per-term weight (idf·qtf: a term's maximum total
     # contribution incl. query multiplicity); scoring uses single-idf
     # partials folded in query-token order (see _fold_scores)
-    weights = {t: idf[t] * qtf[t] for t in idf}
-    blocks = _query_blocks(spark, index, sorted(weights)).withColumn(
-        "ub", _block_upper_bound_col(weights, index))
+    weights = {t: req.idf[t] * qtf[t] for t in req.idf}
+    blocks = _query_blocks(spark, index, sorted(weights))
     # corpus-level range count — a driver-side constant, no Spark action.
     # (A query's terms can only touch a subset of these; if the corpus
     # itself has few ranges, pruning machinery can't win.)
     n_ranges = max(1, index.n_docs >> index.cfg.index.range_shift)
-    acc = _mk_decode_acc(spark, stats)
-    if n_ranges < min_ranges_to_prune:
-        if stats is not None:
-            stats["pruning_engaged"] = False
-        return _topk(_apply_doc_exclude(_apply_doc_filter(
-            _score_blocks_closure(blocks.drop("ub"), index, idf,
-                                  acc_blocks=acc),
-            filter_docs), exclude_docs), token_seq, k, min_match=mm,
-            after=after)
-    if stats is not None:
-        stats["pruning_engaged"] = True
-
+    req.track(spark)
     # Constraint masks for the fused rest-pass kernel: driver-sized sets
     # ship as sorted id arrays (the served-path mechanics); beyond the
     # cap the honest fallback is the exact path's join-based plan (the
     # same degradation rule as bm25_topk_served).
-    allowed, too_big = _collect_filter_ids(filter_docs, 5_000_000)
-    blocked, ex_too_big = _collect_filter_ids(exclude_docs, 5_000_000)
-    if too_big or ex_too_big:
-        if stats is not None:
-            stats["pruning_engaged"] = False
-        return _topk(_apply_doc_exclude(_apply_doc_filter(
-            _score_blocks_closure(blocks.drop("ub"), index, idf,
-                                  acc_blocks=acc),
-            filter_docs), exclude_docs), token_seq, k, min_match=mm,
-            after=after)
-    if allowed is not None and not len(allowed):
+    engaged = (n_ranges >= min_ranges_to_prune
+               and req.collect_masks(5_000_000))
+    if stats is not None:
+        stats["pruning_engaged"] = engaged
+    if not engaged:
+        return _exact_topk(index, req, blocks)
+    if req.filtered_out:
         return local_result(spark)
 
     # Per-range upper bound: Σ_t max over t's blocks in the range (+ the
     # range's candidate-block count, which picks the execution tier).
-    range_bounds = (blocks.groupBy("range_id", "term")
+    range_bounds = (blocks.withColumn("ub",
+                                      _block_upper_bound_col(weights, index))
+                    .groupBy("range_id", "term")
                     .agg(F.max("ub").alias("tub"),
                          F.count("*").alias("nb"))
                     .groupBy("range_id")
@@ -1391,77 +1306,46 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     #   LAZY — even the range metadata exceeds the driver envelope
     #     (10^8 ranges at 10^12 docs): the fully-lazy broadcast-join
     #     plan, no driver materialization anywhere.
-    kernel_kwargs = dict(
-        k1=index.cfg.bm25.k1, b=index.cfg.bm25.b,
-        avgdl=index.avgdl, k=k, block_skip=True, with_query_id=False,
-        acc_decoded=acc, allowed=allowed, min_matches=[mm],
-        blocked=blocked,
-        after=((float(after[0]), int(after[1]))
-               if after is not None else None))
-    kcols = ["term", "range_id", "n", "first_doc_id", "last_doc_id",
-             "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
+    kblocks = blocks.select("term", "range_id", "n", "first_doc_id",
+                            "last_doc_id", "max_tf", "min_dl", "doc_bytes",
+                            "tf_bytes", "dl_bytes")
     if n_ranges <= _PRUNED_DRIVER_RANGES_MAX:
         rb_rows = range_bounds.collect()
         if not rb_rows:
             return local_result(spark)
         if stats is not None:
             stats["touched_ranges"] = len(rb_rows)
-        total_blocks = sum(r["n_blocks"] for r in rb_rows)
-        if total_blocks <= _PRUNED_LOCAL_BLOCKS_MAX:
+        if sum(r["n_blocks"] for r in rb_rows) <= _PRUNED_LOCAL_BLOCKS_MAX:
             # ---- GATHERED tier: fetch encoded blocks, prune locally
-            pdf = blocks.select(*kcols).toPandas()
-            kernel = _served_local_topk([token_seq], idf,
-                                        fine_prune=fine_prune,
-                                        **kernel_kwargs)
-            return _run_local(spark, kernel, pdf)
-        # ---- DISTRIBUTED tier: seed job → θ → survivors via kernel
+            return _run_local(spark, req.kernel(index, fine_prune=fine_prune),
+                              kblocks.toPandas())
+        # ---- DISTRIBUTED tier: survivors picked by an isin list
         order = sorted(rb_rows,
                        key=lambda r: (-r["range_ub"], r["range_id"]))
         seed = [r["range_id"] for r in order[:seed_ranges]]
-        seed_blocks = blocks.filter(F.col("range_id").isin(seed)) \
-            .drop("ub")
-        seed_scored = _topk(
-            _apply_doc_exclude(_apply_doc_filter(
-                _score_blocks_closure(seed_blocks, index, idf,
-                                      acc_blocks=acc), filter_docs),
-                exclude_docs),
-            token_seq, k, min_match=mm, after=after).collect()
-        theta = (seed_scored[k - 1]["score"]
-                 if len(seed_scored) >= k else float("-inf"))
-        # ≥ with an ulp-scale slack, not >: a range/interval whose bound
-        # TIES θ can hold a doc that ties the k-th seed score and wins
-        # the doc_id asc tie-break — and the bound arithmetic rounds in
-        # a different order than the θ computation, so an exact tie can
-        # evaluate to θ−ε. Caught at 800k docs. Keeping ε-border ranges
-        # costs pruning, never correctness.
-        theta_eff = theta - 1e-9 * abs(theta) - 1e-12
         seed_set = set(seed)
-        survivors = [r["range_id"] for r in rb_rows
-                     if r["range_ub"] >= theta_eff
-                     and r["range_id"] not in seed_set]
-        rest_rows: list = []
-        if survivors:
-            kernel = _served_local_topk(
-                [token_seq], idf,
-                init_theta=(theta if theta > float("-inf") else None),
-                fine_prune=fine_prune and theta > float("-inf"),
-                **kernel_kwargs)
-            rest_rows = (blocks.filter(F.col("range_id").isin(survivors))
-                         .select(*kcols)
-                         .repartition("range_id")
-                         .mapInPandas(kernel, schema=RESULT_SCHEMA)
-                         .collect())
+
+        def survivors(theta_eff):
+            ids = [r["range_id"] for r in rb_rows
+                   if r["range_ub"] >= theta_eff
+                   and r["range_id"] not in seed_set]
+            return kblocks.filter(F.col("range_id").isin(ids)) \
+                if ids else None
+
+        seed_rows, rest = _seed_then_survivors(index, req, kblocks, seed,
+                                               survivors, fine_prune)
         # driver-side merge in the engine's exact total order
         # (score DESC, doc_id ASC) — ≤ k·(tasks+1) rows, the same
         # selection TakeOrderedAndProject performed
         merged = sorted(
-            [(r["doc_id"], r["score"]) for r in seed_scored]
-            + [(r["doc_id"], r["score"]) for r in rest_rows],
+            [(r["doc_id"], r["score"]) for r in
+             seed_rows + (rest.collect() if rest is not None else [])],
             key=lambda t: (-t[1], t[0]))[:k]
         return local_result(spark, [d for d, _ in merged],
                             [s for _, s in merged])
 
-    # ---- LAZY tier (range metadata beyond the driver envelope) ----
+    # ---- LAZY tier (range metadata beyond the driver envelope):
+    # survivors picked by a broadcast join
     range_bounds = range_bounds.cache()
     try:
         seed = [r["range_id"] for r in
@@ -1469,33 +1353,15 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
                 .limit(seed_ranges).collect()]
         if not seed:
             return local_result(spark)
-        seed_blocks = blocks.filter(F.col("range_id").isin(seed)) \
-            .drop("ub")
-        seed_scored = _topk(
-            _apply_doc_exclude(_apply_doc_filter(
-                _score_blocks_closure(seed_blocks, index, idf,
-                                      acc_blocks=acc), filter_docs),
-                exclude_docs),
-            token_seq, k, min_match=mm, after=after).collect()
-        theta = (seed_scored[k - 1]["score"]
-                 if len(seed_scored) >= k else float("-inf"))
-        theta_eff = theta - 1e-9 * abs(theta) - 1e-12
-        survivor_ranges = (range_bounds
-                           .filter((F.col("range_ub") >= theta_eff)
-                                   & ~F.col("range_id").isin(seed)))
-        kernel = _served_local_topk(
-            [token_seq], idf,
-            init_theta=(theta if theta > float("-inf") else None),
-            fine_prune=fine_prune and theta > float("-inf"),
-            **kernel_kwargs)
-        rest = (blocks
-                .join(F.broadcast(survivor_ranges.select("range_id")),
-                      "range_id")
-                .select(*kcols)
-                .repartition("range_id")
-                .mapInPandas(kernel, schema=RESULT_SCHEMA))
-        seed_df = local_result(spark, [r["doc_id"] for r in seed_scored],
-                               [r["score"] for r in seed_scored])
+        seed_rows, rest = _seed_then_survivors(
+            index, req, kblocks, seed,
+            lambda theta_eff: kblocks.join(F.broadcast(
+                range_bounds.filter((F.col("range_ub") >= theta_eff)
+                                    & ~F.col("range_id").isin(seed))
+                .select("range_id")), "range_id"),
+            fine_prune)
+        seed_df = local_result(spark, [r["doc_id"] for r in seed_rows],
+                               [r["score"] for r in seed_rows])
         return (seed_df.unionByName(rest)
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
     finally:

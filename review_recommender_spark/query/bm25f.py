@@ -44,7 +44,7 @@ from ..config import EngineConfig
 from ..functions.tokenize import tokenize_k2_py
 from ..index.build import (LOCAL_TF, InvertedIndex, term_bucket_col,
                            term_bucket_py)
-from ..index.codec import decode_block
+from ..index.codec import decode_blocks_bulk
 from ..index.tableio import TableIO
 from .bm25 import (RESULT_SCHEMA, _fold_scores, _qtf, _query_blocks,
                    local_result)
@@ -120,23 +120,15 @@ def _field_tfn_partials(spark: SparkSession, field: Bm25fField, fid: int,
         for pdf in it:
             if not len(pdf):
                 continue
-            ts, docs, tfns = [], [], []
-            for term, n, db, tb, lb in zip(pdf["term"], pdf["n"],
-                                           pdf["doc_bytes"],
-                                           pdf["tf_bytes"],
-                                           pdf["dl_bytes"]):
-                d, t, ln = decode_block(bytes(db), bytes(tb), bytes(lb),
-                                        int(n))
-                tf = t.astype(np.float64)
-                tfn = tf / (1 - b + b * ln.astype(np.float64) / avgdl)
-                ts.extend([term] * len(d))
-                docs.append(d)
-                tfns.append(tfn)
-            yield pd.DataFrame({"term": ts,
-                                "doc_id": np.concatenate(docs),
-                                "fid": np.full(sum(map(len, docs)), fid,
-                                               dtype=np.int32),
-                                "tfn": np.concatenate(tfns)})
+            ns = pdf["n"].to_numpy(dtype=np.int64)
+            d, t, ln = decode_blocks_bulk(ns, pdf["doc_bytes"],
+                                          pdf["tf_bytes"], pdf["dl_bytes"])
+            tfn = t.astype(np.float64) \
+                / (1 - b + b * ln.astype(np.float64) / avgdl)
+            yield pd.DataFrame({
+                "term": np.repeat(pdf["term"].to_numpy(), ns),
+                "doc_id": d, "fid": np.full(len(d), fid, dtype=np.int32),
+                "tfn": tfn})
 
     return blocks.mapInPandas(
         kernel, schema="term string, doc_id long, fid int, tfn double")
@@ -183,7 +175,7 @@ def bm25f_topk(spark: SparkSession, fields: list[Bm25fField],
                 .select("doc_id", "term",
                         (F.col("idf") * F.col("__w") * (k1 + 1)
                          / (k1 + F.col("__w"))).alias("score")))
-    return (_fold_scores(partials, token_seq, ["doc_id"])
+    return (_fold_scores(partials, token_seq)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k))
 
@@ -212,7 +204,7 @@ def dismax_topk(spark: SparkSession, fields: list[Bm25fField],
         raise ValueError("dismax_topk needs at least one field")
     if not 0.0 <= tie_breaker <= 1.0:
         raise ValueError("tie_breaker must be in [0, 1]")
-    from .bm25 import _score_blocks_closure, query_term_idf
+    from .bm25 import _score_blocks_closure_batch, query_term_idf
     token_seq = tokenize_k2_py(query)
     if not token_seq:
         return local_result(spark)
@@ -220,8 +212,9 @@ def dismax_topk(spark: SparkSession, fields: list[Bm25fField],
     for fid, fld in enumerate(fields):
         idf = query_term_idf(spark, fld.index, query)
         blocks = _query_blocks(spark, fld.index, sorted(idf))
-        partials = _score_blocks_closure(blocks, fld.index, idf)
-        scored = _fold_scores(partials, token_seq, ["doc_id"]) \
+        partials = _score_blocks_closure_batch(blocks, fld.index, [idf]) \
+            .drop("query_id")
+        scored = _fold_scores(partials, token_seq) \
             .select("doc_id",
                     F.lit(fid).alias("fid"),
                     (F.col("score") * float(fld.weight)).alias("fs"))

@@ -8,11 +8,13 @@ Distributed shape (SURVEY.md §3.1 mapped to Spark):
      (per-partition top-k then merge — the distributed analogue of
      np.argpartition, O(pool) shuffle instead of O(N)).
   2. BM25 — corpus-global scores from the posting index for all queries in
-     one pass: (query, term, weight) rows broadcast-joined to the pruned
-     posting blocks, decoded once per block, partials summed by
-     (query, doc). A BM25 score depends only on the doc itself, so scoring
-     just the union of pools is value-identical to the reference's
-     full-corpus get_scores + subset (quirk Q2).
+     one pass: per-(query, term) weights closure-captured in the decode
+     kernel over the pruned posting blocks, partials folded per
+     (query, doc) in query-token order (over a warm index, the served
+     top-k kernel in one map stage, unbounded). A BM25 score depends
+     only on the doc itself, so scoring just the union of pools is
+     value-identical to the reference's full-corpus get_scores + subset
+     (quirk Q2).
   3. second pass — pool rows grouped by query and scored by the
      `secondpass.score_pool` kernel inside ``applyInPandas`` (the north
      rule's "second-pass pandas UDF over the BM25 candidate pool").
@@ -32,8 +34,8 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..index.build import InvertedIndex
-from .bm25 import (_query_blocks, _score_blocks_closure_batch,
-                   _term_stats_pruned)
+from .bm25 import (RESULT_SCHEMA, _cold_scores_batch, _request,
+                   _with_cold_ranges)
 from .encoder import cross_encoder_score, encode_text
 from .secondpass import score_pool
 
@@ -212,40 +214,12 @@ def bm25_scores_batch(spark: SparkSession, index: InvertedIndex,
     weights closure-captured in the decode kernel (r7: the former
     weights broadcast join cost ~1.4 s of BroadcastExchange per call;
     warm indexes resolve idf from the driver cache with zero jobs, cold
-    ones with one bucket-pruned lookup)."""
-    from ..functions.tokenize import tokenize_k2_py
-    terms = sorted({t for q in queries for t in set(tokenize_k2_py(q))})
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, _bm25_raw double")
-    idf_map = index.idf_lookup()
-    if idf_map is None:
-        idf_map = {r["term"]: r["idf"]
-                   for r in _term_stats_pruned(spark, index, terms)
-                   .select("term", "idf").collect()}
-    qweights = [{t: idf_map[t] for t in set(tokenize_k2_py(q))
-                 if t in idf_map} for q in queries]
-    known = sorted({t for w in qweights for t in w})
-    if not known:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, _bm25_raw double")
-    blocks = _query_blocks(spark, index, known)
-    partials = _score_blocks_closure_batch(blocks, index, qweights)
-    # per-(query, doc) score: fold the query's token SEQUENCE over the
-    # per-term partials — BM25Okapi's exact float addition order (shared
-    # tie-determinism contract with bm25.py::_fold_scores)
-    tok_map = F.create_map(*[
-        x for qi, q in enumerate(queries)
-        for x in (F.lit(qi),
-                  F.array(*[F.lit(t) for t in tokenize_k2_py(q)]))])
-    g = partials.groupBy("query_id", "doc_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("term", "score")))
-        .alias("__pm"))
-    folded = F.aggregate(
-        F.element_at(tok_map, F.col("query_id")), F.lit(0.0),
-        lambda acc, t: acc + F.coalesce(F.element_at(F.col("__pm"), t),
-                                        F.lit(0.0)))
-    return g.select("query_id", "doc_id", folded.alias("_bm25_raw"))
+    ones with one bucket-pruned lookup). Per-(query, doc) scores fold the
+    query's token SEQUENCE over the per-term partials — BM25Okapi's
+    exact float addition order (bm25.py::_fold_scores_batch)."""
+    req = _request(spark, index, queries, None)
+    return _cold_scores_batch(spark, index, req, frozenset()) \
+        .withColumnRenamed("score", "_bm25_raw")
 
 
 def bm25_scores_batch_served(spark: SparkSession, index: InvertedIndex,
@@ -256,99 +230,29 @@ def bm25_scores_batch_served(spark: SparkSession, index: InvertedIndex,
     in one serving shard (``InvertedIndex.warm``), so per-(query, doc)
     scores finish inside one map stage; idf comes from the driver cache
     (no term_stats join). Used by ``hybrid_search_batch`` automatically
-    when the index is warm. Bit-parity contract: per-term partials use
-    the same float expression as ``_score_blocks_closure`` and are
-    accumulated in QUERY TOKEN ORDER (``_fold_scores``' addition order),
-    so hybrid results are identical whichever path ran
-    (tests/test_ops.py::test_hybrid_served_bm25_parity)."""
-    from ..functions.tokenize import tokenize_k2_py
-    idf = index.idf_lookup()
-    if idf is None:
+    when the index is warm. The stage runs the served top-k kernel
+    (``bm25._served_local_topk``) without block skipping and without a
+    k cut: each doc's score is accumulated in its own range in QUERY
+    TOKEN ORDER over the same per-posting partials as the exact scorer
+    (``_fold_scores``' addition order), so hybrid results are identical
+    whichever path ran (tests/test_ops.py::test_hybrid_served_bm25_parity).
+    A partial warm unions the cold ranges' exact scores."""
+    if index.idf_lookup() is None:
         # cold index: degrade to the (slower, shuffle+join) cold path
         # rather than erroring — same values, same fold order, so the
         # answer is identical either way (test_cold_fallback)
         return bm25_scores_batch(spark, index, queries)
-    token_seqs = [tokenize_k2_py(q) for q in queries]
-    known = sorted({t for seq in token_seqs for t in seq if t in idf})
-    if not known:
+    req = _request(spark, index, queries, None)
+    if req.empty:
         return spark.createDataFrame(
             [], "query_id int, doc_id long, _bm25_raw double")
-    idf_q = {t: idf[t] for t in known}
-    k1, b = index.cfg.bm25.k1, index.cfg.bm25.b
-    avgdl = index.avgdl
-
-    def score_shard(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..index.codec import varint_decode
-        frames = [pdf for pdf in it if len(pdf)]
-        if not frames:
-            return
-        pdf = frames[0] if len(frames) == 1 \
-            else pd.concat(frames, ignore_index=True)
-        # bulk decode (one varint pass per column, per-block cumsum reset
-        # via base subtraction) — bitwise-identical per element to the
-        # per-block decode + score expression
-        ns = pdf["n"].to_numpy(dtype=np.int64)
-        total = int(ns.sum())
-        deltas = varint_decode(b"".join(pdf["doc_bytes"]),
-                               total).astype(np.int64)
-        starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-        c = np.cumsum(deltas)
-        base = np.zeros(len(ns), dtype=np.int64)
-        base[1:] = c[starts[1:] - 1]
-        d_all = c - np.repeat(base, ns)
-        tf = varint_decode(b"".join(pdf["tf_bytes"]),
-                           total).astype(np.float64)
-        ln = varint_decode(b"".join(pdf["dl_bytes"]),
-                           total).astype(np.float64)
-        denom = tf + k1 * (1 - b + b * ln / avgdl)
-        terms_col = pdf["term"].to_numpy()
-        w_row = np.array([idf_q[t] for t in terms_col])
-        s_all = np.repeat(w_row, ns) * (tf * (k1 + 1) / denom)
-        per_term: dict[str, list] = {}
-        for j, term in enumerate(terms_col):
-            a = starts[j]
-            e = a + ns[j]
-            per_term.setdefault(term, []).append((d_all[a:e], s_all[a:e]))
-        if not per_term:
-            return
-        # pre-concatenate each term's block slices once: a (term, doc)
-        # pair occurs in exactly one block, so one vectorized scatter-add
-        # per token is bitwise-equal to the per-block loop
-        per_term_cat = {
-            t: (np.concatenate([d for d, _ in parts]),
-                np.concatenate([s for _, s in parts]))
-            for t, parts in per_term.items()}
-        for qi, seq in enumerate(token_seqs):
-            qterms = {t for t in seq if t in per_term_cat}
-            if not qterms:
-                continue
-            uniq = np.unique(np.concatenate(
-                [per_term_cat[t][0] for t in qterms]))
-            totals = np.zeros(len(uniq))
-            # accumulate in QUERY TOKEN order (repeats included) — a doc a
-            # term doesn't match gets +0.0, bitwise equal to _fold_scores
-            for tok in seq:
-                got = per_term_cat.get(tok)
-                if got is not None:
-                    totals[np.searchsorted(uniq, got[0])] += got[1]
-            yield pd.DataFrame({"query_id": np.full(len(uniq), qi,
-                                                    dtype=np.int32),
-                                "doc_id": uniq,
-                                "_bm25_raw": totals})
-
-    blocks = index.serving_df(spark).filter(F.col("term").isin(known))
+    blocks = index.serving_df(spark).filter(
+        F.col("term").isin(sorted(req.idf)))
     out = blocks.mapInPandas(
-        score_shard, schema="query_id int, doc_id long, _bm25_raw double")
-    wr = index.warm_ranges()
-    if wr is not None:
-        # partial warm (warm(ranges=...)): exact-score the cold ranges on
-        # disk and union — bit-identical to the fully-warm path (the cold
-        # fold uses the same float expression and query-token order)
-        from .bm25 import _cold_scores_batch
-        cold = _cold_scores_batch(spark, index, idf_q, token_seqs, wr) \
-            .withColumnRenamed("score", "_bm25_raw")
-        out = out.unionByName(cold)
-    return out
+        req.kernel(index, block_skip=False, with_query_id=True),
+        schema="query_id int, " + RESULT_SCHEMA)
+    return _with_cold_ranges(spark, index, req, out) \
+        .withColumnRenamed("score", "_bm25_raw")
 
 
 def hybrid_search_batch(spark: SparkSession, index: InvertedIndex,

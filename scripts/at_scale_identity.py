@@ -1,7 +1,11 @@
 """At-scale rank-identity sweep: all golden queries through every BM25
 query path on one large corpus, asserting BITWISE-identical top-k.
 
-Paths: exact (single-action posting join), pruned (forced block-max),
+Paths: exact (single-action posting join), pruned (forced block-max) in
+each of its three tiers — gathered (the kernel on the driver over the
+fetched blocks), distributed (seed job + survivor kernel over an isin
+range list, gather budget forced to 0) and lazy (seed job + survivor
+kernel over a broadcast join, range-metadata budget forced to 0) —
 served on its driver tier (the in-process kernel over the driver copy
 of the serving layout, held here whatever its size) with and WITHOUT
 block-max skipping, served on its executor tier (per-shard kernel over
@@ -50,13 +54,14 @@ def main() -> None:
     from review_recommender_spark.session import get_spark
 
     @contextlib.contextmanager
-    def driver_budget(nbytes):
-        old = bm25._DRIVER_SERVING_BYTES_MAX
-        bm25._DRIVER_SERVING_BYTES_MAX = nbytes
+    def forced(name, value):
+        """Set one of query.bm25's tier budgets for the block's calls."""
+        old = getattr(bm25, name)
+        setattr(bm25, name, value)
         try:
             yield
         finally:
-            bm25._DRIVER_SERVING_BYTES_MAX = old
+            setattr(bm25, name, old)
 
     # every full warm below keeps the driver copy, so the served driver
     # tier is checked at this scale too; executor-tier calls force 0
@@ -90,19 +95,25 @@ def main() -> None:
         for qi, q in enumerate(GOLDEN_PHRASES):
             exact = [(r["doc_id"], r["score"]) for r in
                      bm25_topk_exact(spark, idx, q, k=k).collect()]
-            pruned = [(r["doc_id"], r["score"]) for r in
-                      bm25_topk_pruned(spark, idx, q, k=k,
-                                       min_ranges_to_prune=1).collect()]
+            def pruned_rows():
+                return [(r["doc_id"], r["score"]) for r in
+                        bm25_topk_pruned(spark, idx, q, k=k,
+                                         min_ranges_to_prune=1).collect()]
+            pruned = pruned_rows()
+            with forced("_PRUNED_LOCAL_BLOCKS_MAX", 0):
+                pruned_dist = pruned_rows()
+            with forced("_PRUNED_DRIVER_RANGES_MAX", 0):
+                pruned_lazy = pruned_rows()
             served = [(r["doc_id"], r["score"]) for r in
                       bm25_topk_served(spark, idx, q, k=k).collect()]
             served_ns = [(r["doc_id"], r["score"]) for r in
                          bm25_topk_served(spark, idx, q, k=k,
                                           block_skip=False).collect()]
-            with driver_budget(0):
+            with forced("_DRIVER_SERVING_BYTES_MAX", 0):
                 served_ex = [(r["doc_id"], r["score"]) for r in
                              bm25_topk_served(spark, idx, q, k=k).collect()]
-            same = (exact == pruned == served == served_ns == served_ex
-                    == batch_top[qi])
+            same = (exact == pruned == pruned_dist == pruned_lazy == served
+                    == served_ns == served_ex == batch_top[qi])
             per_query.append(same)
             ok &= same
             print(f"q{qi}: {'BITWISE-IDENTICAL' if same else 'MISMATCH'}",
@@ -110,6 +121,8 @@ def main() -> None:
             if not same:
                 print("  exact :", exact)
                 print("  pruned:", pruned)
+                print("  pruned(distributed):", pruned_dist)
+                print("  pruned(lazy):", pruned_lazy)
                 print("  served:", served)
                 print("  served(executor):", served_ex)
                 print("  batch :", batch_top[qi])
@@ -186,7 +199,8 @@ def main() -> None:
         ok &= page_ok
         print(json.dumps({
             "n_docs": n_docs,
-            "paths": ["exact", "pruned", "served(block-skip)",
+            "paths": ["exact", "pruned(gathered)", "pruned(distributed)",
+                      "pruned(lazy)", "served(block-skip)",
                       "served(no-skip)", "served(executor)", "served_batch",
                       "served(partial-warm)", "boolean(served-vs-exact)",
                       "paging(cursor-vs-slice)"],

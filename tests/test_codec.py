@@ -4,7 +4,9 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from review_recommender_spark.index.codec import (decode_block, encode_block,
+from review_recommender_spark.index.codec import (decode_block,
+                                                  decode_blocks_bulk,
+                                                  encode_block,
                                                   encode_blocks_bulk,
                                                   varint_decode,
                                                   varint_encode)
@@ -79,3 +81,5 @@ def test_bulk_encode_equals_per_block(doc_list, n_groups):
         d2, t2, l2 = decode_block(db[i], tb[i], lb[i], int(e - s))
         assert (d2 == docs[s:e]).all()
         assert (t2 == tfs[s:e]).all() and (l2 == dls[s:e]).all()
+    d3, t3, l3 = decode_blocks_bulk(ends - bs, db, tb, lb)
+    assert (d3 == docs).all() and (t3 == tfs).all() and (l3 == dls).all()

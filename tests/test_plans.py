@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from review_recommender_spark.query.bm25 import (_query_blocks,
-                                                 bm25_topk_exact, weights_df)
+                                                 bm25_topk_exact)
 
 
 def _plan(df, mode="formatted") -> str:
@@ -44,12 +44,6 @@ def test_postings_scan_reads_no_dead_columns(spark, small_index):
     plan = _plan(df)
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m and "doc_bytes" not in m.group(1), plan
-
-
-def test_weights_join_is_broadcast(spark, small_index):
-    plan = _plan(weights_df(spark, small_index,
-                            ["wireless sound", "yellow cat"]))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan, plan
 
 
 def test_topk_is_take_ordered(spark, small_index):

@@ -2,9 +2,13 @@
 (the Iceberg expireSnapshots analogue for the manifest layer — round-2
 VERDICT 'what's missing' #5)."""
 
-import pandas as pd
+import json
+import os
 
-from review_recommender_spark.index.tableio import TableIO
+import pandas as pd
+import pytest
+
+from review_recommender_spark.index.tableio import ChunkedWriter, TableIO
 
 
 def _write_n(spark, io, n):
@@ -54,3 +58,47 @@ def test_expire_snapshots_rejects_keep_last_zero(spark, tmp_path):
         io.expire_snapshots("t", keep_last=0)
     assert io.current_snapshot("t") is not None
     assert len(io.snapshots("t")) == 1
+
+
+def _torn_dump(real_dump, fail_at):
+    """A json.dump that writes the first ``fail_at`` documents whole, then
+    dies halfway through the next one — a crash mid-commit."""
+    calls = []
+
+    def dump(obj, f, **kw):
+        calls.append(obj)
+        if len(calls) > fail_at:
+            f.write(json.dumps(obj, **kw)[:10])
+            raise OSError("simulated crash mid-write")
+        real_dump(obj, f, **kw)
+    return dump
+
+
+@pytest.mark.parametrize("fail_at", [0, 1])
+def test_crash_mid_commit_keeps_previous_manifest(spark, tmp_path,
+                                                  monkeypatch, fail_at):
+    """Manifest writes are atomic: a commit that dies inside json.dump
+    (in the snapshot file, ``fail_at=0``, or in ``_current.json``,
+    ``fail_at=1``) leaves ``current_snapshot`` on the previous manifest
+    and the chain readable; a chunk rewrite that dies while writing its
+    manifest leaves ``chunk_done`` answering (not done: the rewrite
+    replaced the chunk directory, so resume rebuilds that chunk)."""
+    io = TableIO(str(tmp_path))
+    first = io.commit_snapshot("t", lineage={"rev": 0})
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", _torn_dump(json.dump, fail_at))
+        with pytest.raises(OSError):
+            io.commit_snapshot("t", lineage={"rev": 1})
+    assert io.current_snapshot("t")["snapshot_id"] == first
+    assert [s["snapshot_id"] for s in io.snapshots("t")] == [first]
+
+    cw = ChunkedWriter(io, "c", n_chunks=1, input_fingerprint="fp")
+    df = spark.createDataFrame(pd.DataFrame({"x": [1, 2, 3]}))
+    cw.write_chunk(df, 0)
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", _torn_dump(json.dump, 0))
+        with pytest.raises(OSError):
+            cw.write_chunk(df, 0)
+    assert not cw.chunk_done(0)
+    assert cw.pending_chunks() == [0]
+    assert not [f for f in os.listdir(cw.chunk_dir(0)) if f.endswith(".tmp")]

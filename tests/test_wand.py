@@ -421,13 +421,14 @@ def test_block_bounds_dominate_scores(spark, small_index):
         assert (contrib <= bound + 1e-12).all()
 
 
-def test_fine_prune_keeps_exactly_hot_blocks(spark):
-    """_fine_prune_keep must keep precisely the blocks overlapping a doc
-    interval whose summed per-term bound exceeds θ — verified against a
-    brute-force per-doc computation on synthetic metadata."""
+def test_fine_prune_keeps_exactly_hot_blocks():
+    """_hot_block_mask, run per range, must keep precisely the blocks
+    overlapping a doc interval whose summed per-term bound exceeds θ —
+    verified against a brute-force per-doc computation on synthetic
+    metadata."""
     import numpy as np
     import pandas as pd
-    from review_recommender_spark.query.bm25 import _fine_prune_keep
+    from review_recommender_spark.query.bm25 import _hot_block_mask
 
     rng = np.random.default_rng(7)
     rows = []
@@ -442,9 +443,13 @@ def test_fine_prune_keeps_exactly_hot_blocks(spark):
     meta = pd.DataFrame(rows, columns=["range_id", "term", "block_id",
                                        "first_doc_id", "last_doc_id", "ub"])
     theta = 2.2
-    got = {(r["range_id"], r["term"], r["block_id"]) for r in
-           _fine_prune_keep(
-               spark.createDataFrame(meta), theta).collect()}
+    got = set()
+    for range_id, grp in meta.groupby("range_id"):
+        keep = _hot_block_mask(grp["first_doc_id"].to_numpy(),
+                               grp["last_doc_id"].to_numpy(),
+                               grp["ub"].to_numpy(), theta)
+        got |= {(range_id, r.term, r.block_id)
+                for r in grp[keep].itertuples()}
 
     # brute force: per doc position, sum covering blocks' ubs
     expected = set()

@@ -121,14 +121,6 @@ class IndexConfig:
     # runs (tests/test_build_stats.py asserts both paths agree).
     driver_pull_max_docs: int = 10_000_000
     driver_pull_max_terms: int = 10_000_000
-    # Stage C shuffle representation. 'packed' (default) is the north
-    # rule's map-side combine: each scan task emits one row per
-    # (term, range_id) with packed posting arrays, merged shuffle-side —
-    # ~50-100× fewer exchanged rows and no per-occurrence row overhead.
-    # 'raw' shuffles one row per token occurrence and sorts reducer-side
-    # (the r1-r3 path). Both produce byte-identical postings tables
-    # (tests/test_determinism.py::test_stage_c_modes_byte_identical).
-    stage_c_mode: str = "packed"
 
 
 @dataclass(frozen=True)

@@ -94,8 +94,8 @@ def term_bucket_col(col, n_buckets: int):
 
 def _doc_rows(tokens_df: DataFrame) -> DataFrame:
     """(doc_id, toks) → ONE packed checkpoint row per doc
-    (doc_id, dl, toks). Format v4: the explode to occurrence rows
-    happens at Stage C read time (``_occurrence_rows``), not here, so
+    (doc_id, dl, toks). Format v4: the split into per-term postings
+    happens at Stage C read time (``_pack_partials_arrow``), not here, so
     the checkpoint stores doc_id/dl once per doc instead of once per
     token and Stage B's doc_stats read touches only the two scalar
     columns under parquet column pruning. A zero-token doc is a normal
@@ -110,16 +110,6 @@ def _doc_rows(tokens_df: DataFrame) -> DataFrame:
         F.size("toks").cast("int").alias("dl"),
         "toks",
     )
-
-
-def _occurrence_rows(local_tf: DataFrame) -> DataFrame:
-    """Packed checkpoint rows → one row per token OCCURRENCE
-    (doc_id, dl, term), exploded JVM-side — the 'raw' Stage C mode's
-    input (the default 'packed' mode reads the packed rows directly via
-    ``_pack_partials_arrow``). Zero-token docs explode to no rows —
-    correct, they have no postings."""
-    return local_tf.select(
-        "doc_id", "dl", F.explode("toks").alias("term"))
 
 
 def _tokens_df(docs: DataFrame, cfg: EngineConfig, doc_id_col: str,
@@ -141,9 +131,10 @@ def _tokens_df(docs: DataFrame, cfg: EngineConfig, doc_id_col: str,
 def _blocks_from_postings(tcol, rcol, doc_ids, tfs, dls, change,
                           block_size: int) -> pd.DataFrame:
     """Sorted postings (+ ``change`` marking each (term, range) group
-    start) → encoded posting-block rows. Shared by the raw-occurrence
-    encode kernel and the packed merge kernel so both Stage C modes
-    build byte-identical blocks from identical posting streams."""
+    start) → encoded posting-block rows. Shared by the packed merge
+    kernel and the raw-occurrence oracle (``oracle/stage_c_raw.py``) so
+    both Stage C plans build byte-identical blocks from identical
+    posting streams."""
     import numpy as np
 
     from .codec import encode_blocks_bulk
@@ -174,68 +165,6 @@ def _blocks_from_postings(tcol, rcol, doc_ids, tfs, dls, change,
         "tf_bytes": tb,
         "dl_bytes": lb,
     }, columns=cols)
-
-
-def _encode_partitions(cfg: EngineConfig):
-    block_size = cfg.index.block_size
-
-    def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        pending: pd.DataFrame | None = None
-
-        def encode_groups(pdf: pd.DataFrame, flush_all: bool
-                          ) -> tuple[pd.DataFrame | None, pd.DataFrame | None]:
-            if len(pdf) == 0:
-                return None, None
-            # group-change detection on the raw columns (string-concat keys
-            # are unsafe: pandas strips NUL separators, creating collisions
-            # like 'tok205'+SEP+'14' == 'tok2051'+SEP+'4')
-            tcol = pdf["term"].to_numpy()
-            rcol = pdf["range_id"].to_numpy()
-            change = np.empty(len(pdf), dtype=bool)
-            change[0] = True
-            change[1:] = (tcol[1:] != tcol[:-1]) | (rcol[1:] != rcol[:-1])
-            remainder = None
-            if not flush_all:
-                # hold back the last (possibly batch-spanning) group
-                last_start = int(np.flatnonzero(change)[-1])
-                remainder = pdf.iloc[last_start:]
-                pdf = pdf.iloc[:last_start]
-                if len(pdf) == 0:
-                    return remainder, None
-                tcol, rcol, change = (tcol[:last_start], rcol[:last_start],
-                                      change[:last_start])
-            # collapse raw occurrence rows into postings: a run of equal
-            # (term, range, doc) rows becomes one posting with tf = run
-            # length (rows arrive sorted by term, range_id, doc_id)
-            raw_docs = pdf["doc_id"].to_numpy()
-            run_change = change.copy()
-            run_change[1:] |= raw_docs[1:] != raw_docs[:-1]
-            runs = np.flatnonzero(run_change)
-            doc_ids = raw_docs[runs]
-            tfs = np.diff(np.append(runs, len(pdf))).astype(np.int64)
-            dls = pdf["dl"].to_numpy(dtype=np.int64)[runs]
-            tcol = tcol[runs]
-            rcol = rcol[runs]
-            change = change[runs]
-            out = _blocks_from_postings(tcol, rcol, doc_ids, tfs, dls,
-                                        change, block_size)
-            return remainder, out
-
-        for pdf in it:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            pending, out = encode_groups(pdf, flush_all=False)
-            if out is not None and len(out):
-                yield out
-        if pending is not None and len(pending):
-            _, out = encode_groups(pending, flush_all=True)
-            if out is not None and len(out):
-                yield out
-
-    return encode
 
 
 PARTIAL_SCHEMA = ("term string, range_id long, n int, doc_arr binary, "
@@ -334,8 +263,8 @@ def _merge_encode_partials(cfg: EngineConfig):
     partitioned by (term, range_id) and JVM-sorted on those keys; each
     group's partials are unpacked, globally doc-sorted, duplicate docs
     (runs split at map-side chunk flushes) tf-summed, and block-encoded
-    via the SAME ``_blocks_from_postings`` as the raw path. Output is
-    byte-identical to the raw path (pytest-gated): doc_ids are unique
+    via the SAME ``_blocks_from_postings`` as the raw oracle. Output is
+    byte-identical to the raw oracle (pytest-gated): doc_ids are unique
     per group after the re-sum, so the merged posting stream is fully
     determined by content, independent of partial arrival order. The
     whole merge is vectorized across ALL groups of a batch (one
@@ -411,6 +340,28 @@ def _merge_encode_partials(cfg: EngineConfig):
                 yield out
 
     return merge
+
+
+def _stage_c_blocks(local_tf: DataFrame, cfg: EngineConfig,
+                    shuffle_partitions: int) -> DataFrame:
+    """Stage C's plan: the packed checkpoint rows → encoded posting
+    blocks (``BLOCK_SCHEMA``), through one (term, range_id) shuffle.
+
+    Map-side combine: pack per-(term, range) posting arrays BEFORE the
+    exchange (north rule: per-partition indexes merged shuffle-side); the
+    shuffle then moves ~50-100× fewer rows and the reducer merges
+    pre-sorted partials instead of sorting raw occurrences. r7: the pack
+    kernel reads the PACKED checkpoint rows via mapInArrow (no JVM
+    explode, no occurrence-row Arrow transfer — see
+    ``_pack_partials_arrow``). ``oracle/stage_c_raw.py`` holds the
+    raw-occurrence plan with the same signature, which builds
+    byte-identical blocks (tests/test_determinism.py)."""
+    partials = (local_tf.select("doc_id", "dl", "toks")
+                .mapInArrow(_pack_partials_arrow(cfg),
+                            schema=PARTIAL_SCHEMA))
+    return (partials.repartition(shuffle_partitions, "term", "range_id")
+            .sortWithinPartitions("term", "range_id")
+            .mapInPandas(_merge_encode_partials(cfg), schema=BLOCK_SCHEMA))
 
 
 def _encoded_bytes():
@@ -772,31 +723,7 @@ def build_index(spark: SparkSession, docs: DataFrame | str, io: TableIO,
     # ---- Stage C: the (term, range) shuffle → encoded posting blocks ----
     if shuffle_partitions is None:
         shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if cfg.index.stage_c_mode == "packed":
-        # map-side combine: pack per-(term, range) posting arrays BEFORE
-        # the exchange (north rule: per-partition indexes merged
-        # shuffle-side); the shuffle then moves ~50-100× fewer rows and
-        # the reducer merges pre-sorted partials instead of sorting raw
-        # occurrences. r7: the pack kernel reads the PACKED checkpoint
-        # rows via mapInArrow (no JVM explode, no occurrence-row Arrow
-        # transfer — see _pack_partials_arrow).
-        partials = (local_tf.select("doc_id", "dl", "toks")
-                    .mapInArrow(_pack_partials_arrow(cfg),
-                                schema=PARTIAL_SCHEMA))
-        encoded = (partials.repartition(shuffle_partitions,
-                                        "term", "range_id")
-                   .sortWithinPartitions("term", "range_id")
-                   .mapInPandas(_merge_encode_partials(cfg),
-                                schema=BLOCK_SCHEMA))
-    else:
-        tfp = (_occurrence_rows(local_tf)
-               .withColumn("range_id",
-                           F.shiftright(F.col("doc_id"),
-                                        cfg.index.range_shift)))
-        encoded = (tfp.repartition(shuffle_partitions, "term", "range_id")
-                   .sortWithinPartitions("term", "range_id", "doc_id")
-                   .mapInPandas(_encode_partitions(cfg),
-                                schema=BLOCK_SCHEMA))
+    encoded = _stage_c_blocks(local_tf, cfg, shuffle_partitions)
     encoded = encoded.withColumn(
         "term_bucket", term_bucket_col(F.col("term"),
                                        cfg.index.term_buckets))

@@ -20,7 +20,7 @@ Design:
     (doc_id, dl, toks) row per doc), so positions are token-for-token
     consistent with the postings the index scores, and a positions build
     re-reads the tokenize output instead of re-tokenizing 100 TB.
-  * MAP-SIDE COMBINE like Stage C 'packed': scan tasks locally sort
+  * MAP-SIDE COMBINE like Stage C: scan tasks locally sort
     their (term, range, doc, pos) occurrences and emit ONE partial row
     per (term, range) with packed ragged arrays; the shuffle moves
     ~postings-sized rows (plus the position payload, which is the data),

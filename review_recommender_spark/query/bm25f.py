@@ -46,7 +46,7 @@ from ..index.build import (LOCAL_TF, InvertedIndex, term_bucket_col,
                            term_bucket_py)
 from ..index.codec import decode_blocks_bulk
 from ..index.tableio import TableIO
-from .bm25 import (RESULT_SCHEMA, _fold_scores, _qtf, _query_blocks,
+from .bm25 import (RESULT_SCHEMA, _fold_scores_batch, _qtf, _query_blocks,
                    local_result)
 
 BM25F_STATS = "bm25f_stats"
@@ -172,10 +172,10 @@ def bm25f_topk(spark: SparkSession, fields: list[Bm25fField],
             F.element_at(F.col("__fm"), F.lit(fid)), F.lit(0.0))
     combined = g.select("doc_id", "term", w.alias("__w"))
     partials = (combined.join(F.broadcast(idf), "term")
-                .select("doc_id", "term",
+                .select(F.lit(0).alias("query_id"), "doc_id", "term",
                         (F.col("idf") * F.col("__w") * (k1 + 1)
                          / (k1 + F.col("__w"))).alias("score")))
-    return (_fold_scores(partials, token_seq)
+    return (_fold_scores_batch(partials, [token_seq]).drop("query_id")
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k))
 
@@ -212,9 +212,8 @@ def dismax_topk(spark: SparkSession, fields: list[Bm25fField],
     for fid, fld in enumerate(fields):
         idf = query_term_idf(spark, fld.index, query)
         blocks = _query_blocks(spark, fld.index, sorted(idf))
-        partials = _score_blocks_closure_batch(blocks, fld.index, [idf]) \
-            .drop("query_id")
-        scored = _fold_scores(partials, token_seq) \
+        partials = _score_blocks_closure_batch(blocks, fld.index, [idf])
+        scored = _fold_scores_batch(partials, [token_seq]) \
             .select("doc_id",
                     F.lit(fid).alias("fid"),
                     (F.col("score") * float(fld.weight)).alias("fs"))

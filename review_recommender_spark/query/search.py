@@ -34,8 +34,7 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..index.build import InvertedIndex
-from .bm25 import (RESULT_SCHEMA, _cold_scores_batch, _request,
-                   _with_cold_ranges)
+from .bm25 import _cold_scores_batch, _request, _served_scores
 from .encoder import cross_encoder_score, encode_text
 from .secondpass import score_pool
 
@@ -229,29 +228,25 @@ def bm25_scores_batch_served(spark: SparkSession, index: InvertedIndex,
     zero shuffle and zero joins: every document's complete postings live
     in one serving shard (``InvertedIndex.warm``), so per-(query, doc)
     scores finish inside one map stage; idf comes from the driver cache
-    (no term_stats join). Used by ``hybrid_search_batch`` automatically
-    when the index is warm. The stage runs the served top-k kernel
-    (``bm25._served_local_topk``) without block skipping and without a
-    k cut: each doc's score is accumulated in its own range in QUERY
-    TOKEN ORDER over the same per-posting partials as the exact scorer
-    (``_fold_scores``' addition order), so hybrid results are identical
-    whichever path ran (tests/test_ops.py::test_hybrid_served_bm25_parity).
-    A partial warm unions the cold ranges' exact scores."""
+    (no term_stats join). ``hybrid_search_batch`` always calls it. The
+    stage is the served executor stage (``bm25._served_scores``) with
+    the kernel unskipped and without a k cut: each doc's score is
+    accumulated in its own range in QUERY TOKEN ORDER over the same
+    per-posting partials as the exact scorer (``_fold_scores_batch``'
+    addition order), so hybrid results are identical whichever path ran
+    (tests/test_ops.py::test_hybrid_served_bm25_parity). A partial warm
+    unions the cold ranges' exact scores."""
     if index.idf_lookup() is None:
-        # cold index: degrade to the (slower, shuffle+join) cold path
-        # rather than erroring — same values, same fold order, so the
+        # not warm (``warm`` keeps the driver idf cache whenever the
+        # serving layout is resident and the vocabulary fits it): the
+        # shuffle+join scorer — same values, same fold order, so the
         # answer is identical either way (test_cold_fallback)
         return bm25_scores_batch(spark, index, queries)
     req = _request(spark, index, queries, None)
     if req.empty:
         return spark.createDataFrame(
             [], "query_id int, doc_id long, _bm25_raw double")
-    blocks = index.serving_df(spark).filter(
-        F.col("term").isin(sorted(req.idf)))
-    out = blocks.mapInPandas(
-        req.kernel(index, block_skip=False, with_query_id=True),
-        schema="query_id int, " + RESULT_SCHEMA)
-    return _with_cold_ranges(spark, index, req, out) \
+    return _served_scores(spark, index, req, block_skip=False) \
         .withColumnRenamed("score", "_bm25_raw")
 
 
@@ -299,12 +294,9 @@ def hybrid_search_batch(spark: SparkSession, index: InvertedIndex,
     else:
         dense = dense_topk_batch(spark, embeddings, queries, pool,
                                  query_encoder=query_encoder)
-    if index.is_warm():
-        # warm serving layout available → zero-shuffle BM25 stage with
-        # driver-cached idf (bit-identical results, lower latency)
-        bm25 = bm25_scores_batch_served(spark, index, queries)
-    else:
-        bm25 = bm25_scores_batch(spark, index, queries)
+    # warm → zero-shuffle BM25 stage with driver-cached idf; cold → the
+    # join scorer (bit-identical results either way)
+    bm25 = bm25_scores_batch_served(spark, index, queries)
     if reviews_emb is not None:
         # the pool feeds two consumers (cand + the bestrev semi-join);
         # cache it so the embeddings scan underneath runs once. The cached

@@ -62,24 +62,10 @@ def main() -> None:
                           cfg, n_chunks=1)
 
         dump("bm25_exact_cold", bm25_topk_exact(spark, idx, q, k=10))
+        # every pruned tier executes eagerly, so this plan is a local
+        # relation holding the ≤ k result rows
         dump("bm25_pruned", bm25_topk_pruned(spark, idx, q, k=10,
                                              min_ranges_to_prune=1))
-        # r7: the gathered/distributed pruned tiers execute eagerly (the
-        # plan above is then a local relation); capture the LAZY tier's
-        # distributed plan too by forcing the driver caps to 0
-        try:
-            from review_recommender_spark.query import bm25 as _b
-            old = (_b._PRUNED_DRIVER_RANGES_MAX,
-                   _b._PRUNED_LOCAL_BLOCKS_MAX)
-            _b._PRUNED_DRIVER_RANGES_MAX = 0
-            _b._PRUNED_LOCAL_BLOCKS_MAX = 0
-            dump("bm25_pruned_lazy_tier",
-                 bm25_topk_pruned(spark, idx, q, k=10,
-                                  min_ranges_to_prune=1))
-        except AttributeError:
-            pass  # round-start tree has no tier caps
-        else:
-            _b._PRUNED_DRIVER_RANGES_MAX, _b._PRUNED_LOCAL_BLOCKS_MAX = old
         idx.warm(spark)
         dump("bm25_exact_warm", bm25_topk_exact(spark, idx, q, k=10))
         dump("bm25_served", bm25_topk_served(spark, idx, q, k=10))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from review_recommender_spark.functions.tokenize import (tokenize_k1_py,
                                                          tokenize_k2_py)
+from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                  bm25_topk_pruned,
                                                  bm25_topk_served,
@@ -81,7 +82,9 @@ def test_min_match_validation(spark, small_index):
         bm25_topk_exact(spark, small_index, Q, k=10, min_match=0)
 
 
-def test_served_and_pruned_bitwise_equal_exact(spark, small_index):
+def test_served_and_pruned_bitwise_equal_exact(spark, small_index,
+                                               monkeypatch):
+    monkeypatch.setattr(bm25, "_SEED_RANGES", 2)
     small_index.warm(spark, serving_shards=5)
     try:
         for q in (Q, Q2):
@@ -93,12 +96,10 @@ def test_served_and_pruned_bitwise_equal_exact(spark, small_index):
                         spark, small_index, q, k=10, min_match=m,
                         block_skip=skip).collect())
                     assert served == exact, (q, m, skip)
-                for fine in (True, False):
-                    pruned = _pairs(bm25_topk_pruned(
-                        spark, small_index, q, k=10, seed_ranges=2,
-                        min_ranges_to_prune=1, fine_prune=fine,
-                        min_match=m).collect())
-                    assert pruned == exact, (q, m, fine)
+                pruned = _pairs(bm25_topk_pruned(
+                    spark, small_index, q, k=10, min_ranges_to_prune=1,
+                    min_match=m).collect())
+                assert pruned == exact, (q, m)
     finally:
         small_index.unwarm()
 
@@ -145,7 +146,7 @@ def test_partial_warm_min_match_bitwise(spark, small_index):
 
 
 def test_min_match_composes_with_filter(spark, small_pages, small_index,
-                                        toksets):
+                                        toksets, monkeypatch):
     """min_match AND a metadata filter: both applied before top-k."""
     qt = set(tokenize_k2_py(Q))
     fd = small_pages.filter(F.col("lang") == "en").select("doc_id")
@@ -163,9 +164,10 @@ def test_min_match_composes_with_filter(spark, small_pages, small_index,
             filter_docs=fd).collect())
         assert served == want
         # forced semi-join fallback route too
+        monkeypatch.setattr(bm25, "_MASK_IDS_MAX", 0)
         fb = _pairs(bm25_topk_served(
-            spark, small_index, Q, k=10, min_match=2, filter_docs=fd,
-            filter_broadcast_max=0).collect())
+            spark, small_index, Q, k=10, min_match=2,
+            filter_docs=fd).collect())
         assert fb == want
     finally:
         small_index.unwarm()

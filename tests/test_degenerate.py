@@ -56,6 +56,22 @@ def full_ranking(spark, warm_index):
     return _pairs(bm25_topk_exact(spark, warm_index, Q, k=10 ** 6))
 
 
+@pytest.mark.parametrize("case", sorted(EMPTY - {"after_last_result"}))
+def test_empty_request_takes_the_empty_tier(spark, warm_index, case):
+    """A request with no known term, or k=0, is answered by the planner's
+    ``empty`` tier on every route, before any tier-specific work."""
+    query, k, _ = CASES[case]
+    for name, run, kw in (
+            ("exact", bm25_topk_exact, {}),
+            ("served", bm25_topk_served, {}),
+            ("pruned", bm25_topk_pruned, {"min_ranges_to_prune": 1}),
+            ("pruned_fall_through", bm25_topk_pruned, {})):
+        stats: dict = {}
+        assert _pairs(run(spark, warm_index, query, k=k, stats=stats,
+                          **kw)) == [], (case, name)
+        assert stats["tier"] == "empty", (case, name)
+
+
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_degenerate_request_same_on_every_route(spark, warm_index,
                                                 full_ranking, vocab_1000,

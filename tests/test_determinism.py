@@ -49,22 +49,23 @@ def test_index_identical_across_partitioning(spark, small_pages, tmp_path):
 def test_stage_c_modes_byte_identical(spark, small_pages, tmp_path):
     """The packed Stage C (map-side partial posting arrays merged
     shuffle-side) must produce byte-identical postings + term stats to
-    the raw-occurrence path, including across different partitioning —
-    and with a tiny pack chunk size so map-side chunk flushes SPLIT
-    (doc, term) runs and exercise the merge kernel's tf re-sum."""
+    the raw-occurrence oracle plan, including across different
+    partitioning — and with a tiny pack chunk size so map-side chunk
+    flushes SPLIT (doc, term) runs and exercise the merge kernel's tf
+    re-sum."""
     from unittest import mock
 
     from review_recommender_spark.index import build as B
+    from review_recommender_spark.oracle import stage_c_raw
 
-    cfg = _cfg()  # stage_c_mode defaults to 'packed'
-    raw_cfg = dataclasses.replace(
-        cfg, index=dataclasses.replace(cfg.index, stage_c_mode="raw"))
+    cfg = _cfg()
     a = build_index(spark, small_pages.repartition(7),
                     TableIO(str(tmp_path / "p")), cfg, n_chunks=1,
                     shuffle_partitions=5)
-    b = build_index(spark, small_pages.repartition(3),
-                    TableIO(str(tmp_path / "r")), raw_cfg, n_chunks=1,
-                    shuffle_partitions=11)
+    with mock.patch.object(B, "_stage_c_blocks", stage_c_raw.stage_c_blocks):
+        b = build_index(spark, small_pages.repartition(3),
+                        TableIO(str(tmp_path / "r")), cfg, n_chunks=1,
+                        shuffle_partitions=11)
     assert _fingerprint_index(spark, a) == _fingerprint_index(spark, b)
     orig = B._pack_partials_arrow
     with mock.patch.object(
@@ -142,12 +143,15 @@ def test_hybrid_stable_across_partitioning(spark, small_pages, small_index):
 def test_packed_build_edge_corpora(spark, tmp_path):
     """Packed Stage C on degenerate corpora: a single doc, a doc with no
     tokens (all stopwords), and all-identical texts (one giant posting
-    group) — build must succeed and agree with the raw path."""
+    group) — build must succeed and agree with the raw oracle plan."""
+    from unittest import mock
+
     import pandas as pd
 
+    from review_recommender_spark.index import build as B
+    from review_recommender_spark.oracle import stage_c_raw
+
     cfg = _cfg()
-    raw_cfg = dataclasses.replace(
-        cfg, index=dataclasses.replace(cfg.index, stage_c_mode="raw"))
     corpora = {
         "single": pd.DataFrame({"doc_id": [0],
                                 "text": ["lonely document text"]}),
@@ -160,7 +164,10 @@ def test_packed_build_edge_corpora(spark, tmp_path):
         docs = spark.createDataFrame(pdf, "doc_id long, text string")
         a = build_index(spark, docs, TableIO(str(tmp_path / (name + "p"))),
                         cfg, n_chunks=1, shuffle_partitions=3)
-        b = build_index(spark, docs, TableIO(str(tmp_path / (name + "r"))),
-                        raw_cfg, n_chunks=1, shuffle_partitions=3)
+        with mock.patch.object(B, "_stage_c_blocks",
+                               stage_c_raw.stage_c_blocks):
+            b = build_index(spark, docs,
+                            TableIO(str(tmp_path / (name + "r"))),
+                            cfg, n_chunks=1, shuffle_partitions=3)
         assert _fingerprint_index(spark, a) == _fingerprint_index(spark, b), name
         assert a.n_docs == len(pdf), name

@@ -10,7 +10,7 @@ Routes gated here:
   * exact path:   LEFT SEMI join of score partials against the filter scan
   * served path:  sorted-id mask inside the zero-shuffle shard kernel
                   (block-max skipping stays rank-safe under the mask)
-  * fallback:     survivor set over ``filter_broadcast_max`` → the exact
+  * fallback:     survivor set over ``_MASK_IDS_MAX`` → the exact
                   semi-join route (forced here with a cap of 0)
   * partial warm: the cold on-disk union is filtered too
 """
@@ -19,6 +19,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                  bm25_topk_served,
                                                  bm25_topk_served_batch)
@@ -69,8 +70,8 @@ def test_served_filtered_bitwise_equals_exact(spark, small_pages,
 
 
 def test_served_filtered_fallback_route_identical(spark, small_pages,
-                                                  small_index):
-    """filter_broadcast_max=0 forces the semi-join fallback; results must
+                                                  small_index, monkeypatch):
+    """_MASK_IDS_MAX=0 forces the semi-join fallback; results must
     match the mask route bitwise (single + batch)."""
     small_index.warm(spark, serving_shards=5)
     try:
@@ -78,16 +79,19 @@ def test_served_filtered_fallback_route_identical(spark, small_pages,
         q = QUERIES[0]
         mask = _pairs(bm25_topk_served(spark, small_index, q, k=10,
                                        filter_docs=fd).collect())
-        fb = _pairs(bm25_topk_served(spark, small_index, q, k=10,
-                                     filter_docs=fd,
-                                     filter_broadcast_max=0).collect())
+        with monkeypatch.context() as m:
+            m.setattr(bm25, "_MASK_IDS_MAX", 0)
+            fb = _pairs(bm25_topk_served(spark, small_index, q, k=10,
+                                         filter_docs=fd).collect())
         assert fb == mask
         key = lambda r: (r["query_id"], r["doc_id"], r["score"])  # noqa: E731
         bmask = sorted(map(key, bm25_topk_served_batch(
             spark, small_index, QUERIES, k=10, filter_docs=fd).collect()))
-        bfb = sorted(map(key, bm25_topk_served_batch(
-            spark, small_index, QUERIES, k=10, filter_docs=fd,
-            filter_broadcast_max=0).collect()))
+        with monkeypatch.context() as m:
+            m.setattr(bm25, "_MASK_IDS_MAX", 0)
+            bfb = sorted(map(key, bm25_topk_served_batch(
+                spark, small_index, QUERIES, k=10,
+                filter_docs=fd).collect()))
         assert bfb == bmask
     finally:
         small_index.unwarm()
@@ -146,23 +150,22 @@ def test_empty_filter_returns_empty(spark, small_pages, small_index):
         small_index.unwarm()
 
 
-def test_pruned_filtered(spark, small_pages, small_index):
+def test_pruned_filtered(spark, small_pages, small_index, monkeypatch):
     """The pruned path with a filter must seed θ from FILTERED scores: the
     'es' slice (~2%) scores far below the unfiltered seeds, so an
     unfiltered θ would prune ranges holding the true filtered top-k.
-    Bitwise identity with the exact filtered path, with and without the
-    fine block-level prune."""
+    Bitwise identity with the exact filtered path, with the fine
+    block-level prune on (it always is)."""
     from review_recommender_spark.query.bm25 import bm25_topk_pruned
+    monkeypatch.setattr(bm25, "_SEED_RANGES", 2)
     fd = _es_filter(small_pages)
     for q in QUERIES:
         exact = _pairs(bm25_topk_exact(spark, small_index, q, k=10,
                                        filter_docs=fd).collect())
-        for fine in (True, False):
-            pruned = _pairs(bm25_topk_pruned(
-                spark, small_index, q, k=10, seed_ranges=2,
-                min_ranges_to_prune=1, fine_prune=fine,
-                filter_docs=fd).collect())
-            assert pruned == exact, (q, fine)
+        pruned = _pairs(bm25_topk_pruned(
+            spark, small_index, q, k=10, min_ranges_to_prune=1,
+            filter_docs=fd).collect())
+        assert pruned == exact, q
     # fall-through branch (few ranges → exact path) also filters
     ft = _pairs(bm25_topk_pruned(spark, small_index, QUERIES[0], k=10,
                                  min_ranges_to_prune=10**9,

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from review_recommender_spark.functions.tokenize import tokenize_k1_py
 from review_recommender_spark.index.positions import build_positions
+from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import bm25_topk_exact, term_docs
 from review_recommender_spark.query.parser import dsl_search, parse_query
 
@@ -99,7 +100,8 @@ def test_composes_with_metadata_filter(spark, small_pages, small_index,
         assert "bluetooth" in tokenize_k1_py(page_texts[r["doc_id"]])
 
 
-def test_served_exclusion_bitwise_equals_exact(spark, small_index):
+def test_served_exclusion_bitwise_equals_exact(spark, small_index,
+                                               monkeypatch):
     """exclude_docs on the served path (sorted blocked mask in the shard
     kernel) must equal the exact anti-join route bitwise, with block-max
     skipping on and off, and via the forced fallback."""
@@ -117,9 +119,10 @@ def test_served_exclusion_bitwise_equals_exact(spark, small_index):
                 spark, small_index, q, k=10, exclude_docs=ex,
                 block_skip=skip).collect()]
             assert served == exact, skip
-        fb = [(r["doc_id"], r["score"]) for r in bm25_topk_served(
-            spark, small_index, q, k=10, exclude_docs=ex,
-            filter_broadcast_max=0).collect()]
+        with monkeypatch.context() as m:
+            m.setattr(bm25, "_MASK_IDS_MAX", 0)
+            fb = [(r["doc_id"], r["score"]) for r in bm25_topk_served(
+                spark, small_index, q, k=10, exclude_docs=ex).collect()]
         assert fb == exact
         batch = [(r["doc_id"], r["score"])
                  for r in bm25_topk_served_batch(
@@ -130,18 +133,18 @@ def test_served_exclusion_bitwise_equals_exact(spark, small_index):
         small_index.unwarm()
 
 
-def test_pruned_exclusion_bitwise_equals_exact(spark, small_index):
+def test_pruned_exclusion_bitwise_equals_exact(spark, small_index,
+                                               monkeypatch):
     from review_recommender_spark.query.bm25 import bm25_topk_pruned
+    monkeypatch.setattr(bm25, "_SEED_RANGES", 2)
     ex = term_docs(spark, small_index, "socks")
     q = "wireless bluetooth headphones"
     exact = [(r["doc_id"], r["score"]) for r in bm25_topk_exact(
         spark, small_index, q, k=10, exclude_docs=ex).collect()]
-    for fine in (True, False):
-        pruned = [(r["doc_id"], r["score"]) for r in bm25_topk_pruned(
-            spark, small_index, q, k=10, seed_ranges=2,
-            min_ranges_to_prune=1, fine_prune=fine,
-            exclude_docs=ex).collect()]
-        assert pruned == exact, fine
+    pruned = [(r["doc_id"], r["score"]) for r in bm25_topk_pruned(
+        spark, small_index, q, k=10, min_ranges_to_prune=1,
+        exclude_docs=ex).collect()]
+    assert pruned == exact
 
 
 def test_dsl_warm_route_bitwise(spark, pos_index, page_texts):

@@ -85,9 +85,8 @@ def test_head_term_skew_bounded(spark):
     import numpy as np
     import pandas as pd
     from review_recommender_spark.config import EngineConfig
-    from review_recommender_spark.index.build import (_doc_rows,
-                                                      _occurrence_rows,
-                                                      _tokens_df)
+    from review_recommender_spark.index.build import _doc_rows, _tokens_df
+    from review_recommender_spark.oracle.stage_c_raw import _occurrence_rows
 
     n = 4096
     texts = ["hot" if i % 2 == 0 else f"cold{i} filler{i}"

@@ -140,3 +140,44 @@ def test_unwarm_and_partial_warm_drop_driver_copy(spark, small_index,
         assert small_index.is_warm() and not resident()
     finally:
         small_index.unwarm()
+
+
+def test_planner_names_the_tier_taken(spark, small_index, small_pages,
+                                      monkeypatch):
+    """``stats["tier"]`` names the tier the planner took, and each forced
+    path reaches the tier it claims: the served driver tier; the
+    executor tier with ``_DRIVER_SERVING_BYTES_MAX`` at 0; the exact
+    tier for a filtered served request with ``_MASK_IDS_MAX`` at 0; the
+    gathered pruned tier; and the exact tier for the exact route and a
+    pruned request below ``min_ranges_to_prune``. The rows are the
+    exact rows on every tier."""
+    q = QUERIES[0]
+    fd = small_pages.filter(F.col("lang") == "en").select("doc_id")
+
+    def tier_of(run, **kw):
+        stats: dict = {}
+        got = _pairs(run(spark, small_index, q, k=10, stats=stats, **kw))
+        assert got == _pairs(bm25_topk_exact(spark, small_index, q, k=10,
+                                             filter_docs=kw.get(
+                                                 "filter_docs")))
+        return stats["tier"]
+
+    small_index.warm(spark)
+    try:
+        assert tier_of(bm25_topk_served) == "driver"
+        assert tier_of(bm25_topk_served, filter_docs=fd) == "driver"
+        with monkeypatch.context() as m:
+            m.setattr(bm25, "_DRIVER_SERVING_BYTES_MAX", 0)
+            assert tier_of(bm25_topk_served) == "executor"
+        with monkeypatch.context() as m:
+            m.setattr(bm25, "_MASK_IDS_MAX", 0)
+            assert tier_of(bm25_topk_served, filter_docs=fd) == "exact"
+            assert tier_of(bm25_topk_pruned, filter_docs=fd,
+                           min_ranges_to_prune=1) == "exact"
+    finally:
+        small_index.unwarm()
+    assert tier_of(bm25_topk_pruned, min_ranges_to_prune=1) == "gathered"
+    assert tier_of(bm25_topk_pruned, filter_docs=fd,
+                   min_ranges_to_prune=1) == "gathered"
+    assert tier_of(bm25_topk_pruned) == "exact"
+    assert tier_of(bm25_topk_exact) == "exact"

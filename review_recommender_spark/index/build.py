@@ -22,29 +22,42 @@ built in ONE large shuffle:
   Stage B (map-only): doc_stats (doc_id, doc_len) + corpus_stats
       (n_docs, avgdl, total_tokens) from the (doc_id, dl) columns only.
 
-  Stage C (THE shuffle): packed checkpoint rows go STRAIGHT into the
-      map-side combine (``_pack_partials_arrow`` via mapInArrow — r7: no
-      JVM explode, no occurrence-row Arrow transfer); each scan task
-      sorts its occurrences by (term, range_id, doc_id) in numpy,
-      run-length-collapses them into postings and emits ONE partial row
-      per (term, range_id) — range_id = doc_id >> range_shift. Partials
-      are hash-partitioned by the *pair* (term, range_id): the skew
-      treatment the north rule calls "salting head terms" — a head
-      term's postings are split across reducers by doc-range, so no
-      reducer ever holds more than one range (≤ 2^range_shift docs) of
-      any term, while each (term, range) group stays whole on one
-      reducer. The reduce side merges pre-sorted partials and
-      bulk-encodes 128-posting delta+varint blocks with block-max
-      metadata (index/codec.py) — three varint passes per batch, no
-      per-block Python calls. Blocks are written partitioned by
-      ``term_bucket = crc32(term) % term_buckets`` for directory-level
-      pruning of query terms (crc32 is computable identically
-      driver-side).
+  Stage C (THE shuffle): the (term, range_id) BLOCK PIPELINE turns the
+      packed checkpoint rows into encoded block rows; range_id = doc_id
+      >> range_shift. It is one pipeline with two payload specs
+      (``BlockSpec``): POSTINGS (per doc: tf + dl) and the optional
+      POSITIONS table (per doc: a position count + the positions;
+      index/positions.py). Its parts:
+        * pack (map side, ``_pack_partials`` via mapInArrow — no JVM
+          explode, no occurrence-row Arrow transfer): each scan task
+          sorts its occurrences by (term, range_id, doc_id) in numpy,
+          run-length-collapses them to one entry per doc and emits ONE
+          partial row per (term, range_id);
+        * shuffle: partials are hash-partitioned by the *pair* (term,
+          range_id) — the skew treatment the north rule calls "salting
+          head terms": a head term is split across reducers by
+          doc-range, so no reducer holds more than one range (≤
+          2^range_shift docs) of any term, while each group stays whole;
+        * merge (reduce side, ``_merge_encode``): pre-sorted partials
+          are merged per group (split docs re-merged) and bulk-encoded
+          into ≤ 128-doc delta+varint blocks (index/codec.py, three
+          varint passes per batch, no per-block Python calls) — postings
+          blocks also carry the block-max bounds max_tf / min_dl;
+        * write (``_write_blocks``): blocks partitioned by ``term_bucket
+          = crc32(term) % term_buckets`` for directory-level pruning of
+          query terms (crc32 is computable identically driver-side);
+        * unpack (``_blocks_to_partials``): encoded blocks back into
+          partials, purging deleted docs — the delta merge's way into
+          the same merge kernel.
 
   Stage D (tiny): term_stats (term, df, idf) from block metadata — df is
-      the sum of block posting counts, so no second pass over tf rows; the
-      BM25Okapi negative-idf fixup (ε·mean raw idf over the vocabulary,
-      SURVEY.md §2.12) is one scalar aggregate.
+      the sum of block posting counts, so no second pass over tf rows;
+      ``okapi_idf`` (shared with the BM25F stats) applies the BM25Okapi
+      negative-idf fixup (ε·mean raw idf over the vocabulary, SURVEY.md
+      §2.12) as one scalar aggregate.
+
+``delta_merge_index`` runs the same pipeline incrementally: pack over
+the delta only, then one merge loop over the block tables.
 
 Every table commit carries lineage + row/term-count metrics in its snapshot
 manifest (index/tableio.py).
@@ -66,6 +79,7 @@ from pyspark.sql import functions as F
 from ..config import EngineConfig
 from ..functions.tokenize import (STOP_INDEX, TOKEN_RE, make_tokenize_k1_udf,
                                   tokenize_k1_col)
+from .codec import decode_blocks_bulk, encode_blocks_bulk
 from .tableio import ChunkedWriter, TableIO, config_fingerprint
 
 LOCAL_TF = "local_tf"
@@ -78,10 +92,7 @@ DOC_STATS = "doc_stats"
 CORPUS_STATS = "corpus_stats"
 TERM_STATS = "term_stats"
 POSTINGS = "postings"
-
-BLOCK_SCHEMA = ("term string, range_id long, block_id int, n int, "
-                "first_doc_id long, last_doc_id long, max_tf int, min_dl int, "
-                "doc_bytes binary, tf_bytes binary, dl_bytes binary")
+POSITIONS = "positions"
 
 
 def term_bucket_py(term: str, n_buckets: int) -> int:
@@ -92,10 +103,38 @@ def term_bucket_col(col, n_buckets: int):
     return F.crc32(col) % n_buckets
 
 
+def term_bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
+    """``df`` with its ``term_bucket`` column, one partition per bucket
+    (a partitioned write then leaves one file per bucket directory)."""
+    return (df.withColumn("term_bucket", term_bucket_col(F.col("term"),
+                                                         n_buckets))
+            .repartition(n_buckets, "term_bucket"))
+
+
+def okapi_idf(df_per_term: DataFrame, n_docs: int,
+              epsilon: float) -> DataFrame:
+    """(term, df) → (term, df, idf_raw, idf) exactly as BM25Okapi computes
+    them: idf_raw = log(N - df + 0.5) - log(df + 0.5), kept a difference
+    of logs (not the log of a ratio) to match its floating-point path,
+    and a negative idf_raw replaced by ε · the vocabulary's mean idf_raw
+    (SURVEY.md §2.12). The mean is a broadcast scalar subquery, so it
+    rides the same action as the caller's write (no separate job)."""
+    raw = df_per_term.withColumn(
+        "idf_raw",
+        F.log(F.lit(float(n_docs)) - F.col("df") + 0.5)
+        - F.log(F.col("df") + 0.5))
+    avg = F.broadcast(raw.agg(F.avg("idf_raw").alias("__avg_idf")))
+    return (raw.crossJoin(avg)
+            .withColumn("idf", F.when(F.col("idf_raw") < 0,
+                                      F.lit(epsilon) * F.col("__avg_idf"))
+                        .otherwise(F.col("idf_raw")))
+            .drop("__avg_idf"))
+
+
 def _doc_rows(tokens_df: DataFrame) -> DataFrame:
     """(doc_id, toks) → ONE packed checkpoint row per doc
     (doc_id, dl, toks). Format v4: the split into per-term postings
-    happens at Stage C read time (``_pack_partials_arrow``), not here, so
+    happens at Stage C read time (``_pack_partials``), not here, so
     the checkpoint stores doc_id/dl once per doc instead of once per
     token and Stage B's doc_stats read touches only the two scalar
     columns under parquet column pruning. A zero-token doc is a normal
@@ -128,72 +167,96 @@ def _tokens_df(docs: DataFrame, cfg: EngineConfig, doc_id_col: str,
     return base.select("doc_id", tokenize_k1_col(F.col("text"), cap).alias("toks"))
 
 
-def _blocks_from_postings(tcol, rcol, doc_ids, tfs, dls, change,
-                          block_size: int) -> pd.DataFrame:
-    """Sorted postings (+ ``change`` marking each (term, range) group
-    start) → encoded posting-block rows. Shared by the packed merge
-    kernel and the raw-occurrence oracle (``oracle/stage_c_raw.py``) so
-    both Stage C plans build byte-identical blocks from identical
-    posting streams."""
-    import numpy as np
+@dataclass(frozen=True)
+class BlockSpec:
+    """The per-doc payload of one (term, range_id) block table — the only
+    thing the POSTINGS and POSITIONS tables differ in. Every doc of a
+    group carries an occurrence ``count`` (a posting's tf, a doc's
+    position count) plus a ``payload``: one value per doc (``dl``), or,
+    when ``positional``, one per occurrence (``pos``, the token offsets).
+    Postings blocks also keep the block-max bounds max_tf and min_dl."""
+    table: str
+    count: str
+    payload: str
+    positional: bool
 
-    from .codec import encode_blocks_bulk
+    @property
+    def bytes_cols(self) -> list[str]:
+        return ["doc_bytes", f"{self.count}_bytes", f"{self.payload}_bytes"]
 
-    cols = ["term", "range_id", "block_id", "n", "first_doc_id",
-            "last_doc_id", "max_tf", "min_dl", "doc_bytes", "tf_bytes",
-            "dl_bytes"]
-    # per-posting index within its group → block starts, vectorized
+    @property
+    def partial_schema(self) -> str:
+        return (f"term string, range_id long, n int, doc_arr binary, "
+                f"{self.count}_arr binary, {self.payload}_arr binary")
+
+    @property
+    def block_schema(self) -> str:
+        bounds = "" if self.positional else "max_tf int, min_dl int, "
+        return ("term string, range_id long, block_id int, n int, "
+                "first_doc_id long, last_doc_id long, " + bounds
+                + ", ".join(f"{c} binary" for c in self.bytes_cols))
+
+    @property
+    def block_cols(self) -> list[str]:
+        return [c.split(" ")[0] for c in self.block_schema.split(", ")]
+
+
+POSTINGS_BLOCKS = BlockSpec(POSTINGS, "tf", "dl", positional=False)
+POSITIONS_BLOCKS = BlockSpec(POSITIONS, "cnt", "pos", positional=True)
+BLOCK_SCHEMA = POSTINGS_BLOCKS.block_schema
+
+
+def _slices(arr: np.ndarray, lo, hi) -> list[bytes]:
+    return [arr[a:b].tobytes() for a, b in zip(lo, hi)]
+
+
+def _encode_groups(spec: BlockSpec, block_size: int, tcol, rcol, doc_ids,
+                   counts, payload, change) -> pd.DataFrame:
+    """Doc-sorted per-doc entries (+ ``change`` marking each (term, range)
+    group start) → encoded block rows of ``spec.block_schema``, ≤
+    ``block_size`` docs a block, no block spanning two groups. Shared by
+    the merge kernel and the raw-occurrence oracle
+    (``oracle/stage_c_raw.py``), so both Stage C plans build
+    byte-identical blocks from identical posting streams."""
     n = len(doc_ids)
     idx = np.arange(n, dtype=np.int64)
-    group_id = np.cumsum(change) - 1
-    group_start = idx[change][group_id]
-    rel = idx - group_start
-    is_block_start = (rel % block_size) == 0
-    bs = np.flatnonzero(is_block_start)
+    rel = idx - idx[change][np.cumsum(change) - 1]   # offset in group
+    bs = np.flatnonzero((rel % block_size) == 0)
     bend = np.append(bs[1:], n)
-    db, tb, lb = encode_blocks_bulk(doc_ids, tfs, dls, bs)
-    return pd.DataFrame({
-        "term": tcol[bs],
-        "range_id": rcol[bs],
-        "block_id": (rel[bs] // block_size).astype(np.int32),
-        "n": (bend - bs).astype(np.int32),
-        "first_doc_id": doc_ids[bs],
-        "last_doc_id": doc_ids[bend - 1],
-        "max_tf": np.maximum.reduceat(tfs, bs).astype(np.int32),
-        "min_dl": np.minimum.reduceat(dls, bs).astype(np.int32),
-        "doc_bytes": db,
-        "tf_bytes": tb,
-        "dl_bytes": lb,
-    }, columns=cols)
+    cols = {"term": tcol[bs], "range_id": rcol[bs],
+            "block_id": (rel[bs] // block_size).astype(np.int32),
+            "n": (bend - bs).astype(np.int32),
+            "first_doc_id": doc_ids[bs], "last_doc_id": doc_ids[bend - 1]}
+    if not spec.positional:
+        cols["max_tf"] = np.maximum.reduceat(counts, bs).astype(np.int32)
+        cols["min_dl"] = np.minimum.reduceat(payload, bs).astype(np.int32)
+    cols.update(zip(spec.bytes_cols, encode_blocks_bulk(
+        doc_ids, counts, payload, bs, spec.positional)))
+    return pd.DataFrame(cols)
 
 
-PARTIAL_SCHEMA = ("term string, range_id long, n int, doc_arr binary, "
-                  "tf_arr binary, dl_arr binary")
-
-
-def _pack_partials_arrow(cfg: EngineConfig, chunk_tokens: int = 2_000_000):
-    """Map-side combine for Stage C reading the PACKED checkpoint rows
-    directly (``mapInArrow`` over (doc_id, dl, toks)). The r1-r6 path
-    exploded to occurrence rows in the JVM first, which duplicated
-    doc_id/dl per token across the Arrow boundary and paid a 5.6M-row
-    transfer at bench scale; reading the packed rows moves the same
-    string payload with ~50× fewer rows and replaces ``pd.factorize``
-    with Arrow's C++ ``dictionary_encode``. Measured 3.7× on the map
-    stage; the partial CONTENT is identical (same lexsort + run-length
-    collapse), so the merged postings stay byte-identical
-    (tests/test_determinism.py::test_stage_c_modes_byte_identical)."""
+def _pack_partials(spec: BlockSpec, cfg: EngineConfig,
+                   chunk_tokens: int = 2_000_000):
+    """Map side of every block-table build: ``mapInArrow`` over packed
+    checkpoint rows (doc_id, dl, toks) → ONE partial row per (term,
+    range_id) for each chunk of ~``chunk_tokens`` tokens. A chunk's
+    occurrences are dictionary-encoded (Arrow C++), sorted in numpy by
+    (term, range_id, doc_id), positional specs also by position, and
+    run-length-collapsed to one entry per doc: its occurrence count plus
+    the payload (the doc's dl, or its offsets into its kept-token list).
+    Reading the packed rows moves ~50× fewer rows across the Arrow
+    boundary than the exploded r1-r6 plan (measured 3.7× on the map
+    stage). A doc never spans two chunks, and the merge kernel does not
+    depend on partial granularity anyway."""
     shift = cfg.index.range_shift
 
     def pack(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         def flush(batches: list) -> "pa.RecordBatch | None":
             doc = np.concatenate([b.column(0).to_numpy(
                 zero_copy_only=False) for b in batches])
-            dl_doc = np.concatenate([b.column(1).to_numpy(
-                zero_copy_only=False) for b in batches]).astype(np.int32)
             toks = pa.chunked_array([b.column(2) for b in batches]) \
                 .combine_chunks()
             offs = toks.offsets.to_numpy(zero_copy_only=False)
@@ -207,17 +270,22 @@ def _pack_partials_arrow(cfg: EngineConfig, chunk_tokens: int = 2_000_000):
             uniq = np.asarray(dic.dictionary.to_pandas(), dtype=object)
             d = np.repeat(doc, counts)
             r = d >> shift
-            dl = np.repeat(dl_doc, counts)
-            order = np.lexsort((d, r, codes))
-            codes, r, d, dl = codes[order], r[order], d[order], dl[order]
+            if spec.positional:
+                x = (np.arange(m, dtype=np.int64)
+                     - np.repeat(offs[:-1], counts)).astype(np.int32)
+                order = np.lexsort((x, d, r, codes))
+            else:
+                x = np.repeat(np.concatenate([b.column(1).to_numpy(
+                    zero_copy_only=False) for b in batches])
+                    .astype(np.int32), counts)
+                order = np.lexsort((d, r, codes))
+            codes, r, d, x = codes[order], r[order], d[order], x[order]
             change = np.empty(m, dtype=bool)
             change[0] = True
             change[1:] = ((codes[1:] != codes[:-1]) | (r[1:] != r[:-1])
                           | (d[1:] != d[:-1]))
             runs = np.flatnonzero(change)
-            doc_ids = d[runs]
-            tfs = np.diff(np.append(runs, m)).astype(np.int32)
-            dls = dl[runs]
+            run_end = np.append(runs, m)
             gcodes, granges = codes[runs], r[runs]
             gchange = np.empty(len(runs), dtype=bool)
             gchange[0] = True
@@ -225,18 +293,18 @@ def _pack_partials_arrow(cfg: EngineConfig, chunk_tokens: int = 2_000_000):
                            | (granges[1:] != granges[:-1]))
             gs = np.flatnonzero(gchange)
             ge = np.append(gs[1:], len(runs))
+            payload, plo, phi = ((x, run_end[gs], run_end[ge])
+                                 if spec.positional else (x[runs], gs, ge))
             return pa.record_batch([
                 pa.array(uniq[gcodes[gs]], type=pa.string()),
                 pa.array(granges[gs], type=pa.int64()),
                 pa.array((ge - gs).astype(np.int32), type=pa.int32()),
-                pa.array([doc_ids[a:b].tobytes() for a, b in zip(gs, ge)],
+                pa.array(_slices(d[runs], gs, ge), type=pa.binary()),
+                pa.array(_slices(np.diff(run_end).astype(np.int32), gs, ge),
                          type=pa.binary()),
-                pa.array([tfs[a:b].tobytes() for a, b in zip(gs, ge)],
-                         type=pa.binary()),
-                pa.array([dls[a:b].tobytes() for a, b in zip(gs, ge)],
-                         type=pa.binary()),
-            ], names=["term", "range_id", "n",
-                      "doc_arr", "tf_arr", "dl_arr"])
+                pa.array(_slices(payload, plo, phi), type=pa.binary()),
+            ], names=["term", "range_id", "n", "doc_arr",
+                      f"{spec.count}_arr", f"{spec.payload}_arr"])
 
         bufs: list = []
         ntok = 0
@@ -258,79 +326,75 @@ def _pack_partials_arrow(cfg: EngineConfig, chunk_tokens: int = 2_000_000):
     return pack
 
 
-def _merge_encode_partials(cfg: EngineConfig):
-    """REDUCE side of the packed Stage C: partial rows arrive hash-
-    partitioned by (term, range_id) and JVM-sorted on those keys; each
-    group's partials are unpacked, globally doc-sorted, duplicate docs
-    (runs split at map-side chunk flushes) tf-summed, and block-encoded
-    via the SAME ``_blocks_from_postings`` as the raw oracle. Output is
-    byte-identical to the raw oracle (pytest-gated): doc_ids are unique
-    per group after the re-sum, so the merged posting stream is fully
-    determined by content, independent of partial arrival order. The
-    whole merge is vectorized across ALL groups of a batch (one
-    frombuffer per column + one lexsort) — no per-group Python loop."""
+def _merge_encode(spec: BlockSpec, cfg: EngineConfig):
+    """Shuffle side of every block-table build: partial rows arrive hash-
+    partitioned by (term, range_id) and JVM-sorted on those keys. Each
+    batch's complete groups (the last one is held back, it may continue
+    in the next batch) are merged at once — one frombuffer per column,
+    one lexsort, no per-group Python loop: entries are sorted by (group,
+    doc), a doc split across partials is re-merged (tf summed; its
+    positions re-sorted — the positional sort runs per occurrence), and
+    the groups are block-encoded by ``_encode_groups``. doc_ids are
+    unique per group after the merge, so the output is fully determined
+    by content, independent of partial granularity and arrival order."""
     block_size = cfg.index.block_size
 
-    def merge(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        pending: pd.DataFrame | None = None
-
-        def merge_groups(pdf: pd.DataFrame, flush_all: bool
-                         ) -> tuple[pd.DataFrame | None, pd.DataFrame | None]:
+    def merge_groups(pdf: pd.DataFrame, flush_all: bool
+                     ) -> tuple[pd.DataFrame | None, pd.DataFrame | None]:
+        if len(pdf) == 0:
+            return None, None
+        tcol = pdf["term"].to_numpy()
+        rcol = pdf["range_id"].to_numpy()
+        change = np.empty(len(pdf), dtype=bool)
+        change[0] = True
+        change[1:] = (tcol[1:] != tcol[:-1]) | (rcol[1:] != rcol[:-1])
+        remainder = None
+        if not flush_all:
+            last_start = int(np.flatnonzero(change)[-1])
+            remainder = pdf.iloc[last_start:]
+            pdf = pdf.iloc[:last_start]
             if len(pdf) == 0:
-                return None, None
-            tcol = pdf["term"].to_numpy()
-            rcol = pdf["range_id"].to_numpy()
-            change = np.empty(len(pdf), dtype=bool)
-            change[0] = True
-            change[1:] = (tcol[1:] != tcol[:-1]) | (rcol[1:] != rcol[:-1])
-            remainder = None
-            if not flush_all:
-                last_start = int(np.flatnonzero(change)[-1])
-                remainder = pdf.iloc[last_start:]
-                pdf = pdf.iloc[:last_start]
-                if len(pdf) == 0:
-                    return remainder, None
-                tcol, rcol, change = (tcol[:last_start], rcol[:last_start],
-                                      change[:last_start])
-            counts = pdf["n"].to_numpy(dtype=np.int64)
-            docs = np.frombuffer(b"".join(pdf["doc_arr"]), dtype=np.int64)
-            tfs = np.frombuffer(b"".join(pdf["tf_arr"]),
-                                dtype=np.int32).astype(np.int64)
-            dls = np.frombuffer(b"".join(pdf["dl_arr"]),
-                                dtype=np.int32).astype(np.int64)
-            row_gid = np.cumsum(change) - 1          # group id per partial
-            gid = np.repeat(row_gid, counts)          # ... per posting
+                return remainder, None
+            tcol, rcol, change = (tcol[:last_start], rcol[:last_start],
+                                  change[:last_start])
+        gid = np.repeat(np.cumsum(change) - 1,       # group id per doc
+                        pdf["n"].to_numpy(dtype=np.int64))
+        docs = np.frombuffer(b"".join(pdf["doc_arr"]), dtype=np.int64)
+        cnt, x = (np.frombuffer(b"".join(pdf[c]), dtype=np.int32)
+                  .astype(np.int64)
+                  for c in (f"{spec.count}_arr", f"{spec.payload}_arr"))
+        if spec.positional:
+            gid, docs = np.repeat(gid, cnt), np.repeat(docs, cnt)
+            order = np.lexsort((x, docs, gid))
+        else:
             order = np.lexsort((docs, gid))
-            gid, docs = gid[order], docs[order]
-            tfs, dls = tfs[order], dls[order]
-            # re-sum tf of duplicate (group, doc) postings (map-side chunk
-            # splits); dl is per-doc so any duplicate carries the same dl
-            pchange = np.empty(len(docs), dtype=bool)
-            pchange[0] = True
-            pchange[1:] = (gid[1:] != gid[:-1]) | (docs[1:] != docs[:-1])
-            runs = np.flatnonzero(pchange)
-            doc_ids = docs[runs]
-            tf_sum = np.add.reduceat(tfs, runs)
-            dl_first = dls[runs]
-            post_gid = gid[runs]
-            gchange = np.empty(len(runs), dtype=bool)
-            gchange[0] = True
-            gchange[1:] = post_gid[1:] != post_gid[:-1]
-            # per-posting term/range via the group-leading partial row
-            # (group order within the batch follows the JVM (term, range)
-            # sort, so block output order is deterministic)
-            lead = np.flatnonzero(change)
-            out = _blocks_from_postings(
-                tcol[lead][post_gid], rcol[lead][post_gid],
-                doc_ids, tf_sum, dl_first, gchange, block_size)
-            return remainder, out
+            cnt = cnt[order]
+        gid, docs, x = gid[order], docs[order], x[order]
+        dchange = np.empty(len(docs), dtype=bool)
+        dchange[0] = True
+        dchange[1:] = (gid[1:] != gid[:-1]) | (docs[1:] != docs[:-1])
+        runs = np.flatnonzero(dchange)
+        if spec.positional:
+            cnt = np.diff(np.append(runs, len(docs)))
+        else:
+            # dl is per doc: any duplicate of a split doc carries it
+            cnt, x = np.add.reduceat(cnt, runs), x[runs]
+        post_gid = gid[runs]
+        gchange = np.empty(len(runs), dtype=bool)
+        gchange[0] = True
+        gchange[1:] = post_gid[1:] != post_gid[:-1]
+        # term/range per doc via the group-leading partial row (group order
+        # follows the JVM (term, range) sort: deterministic block order)
+        lead = np.flatnonzero(change)
+        return remainder, _encode_groups(
+            spec, block_size, tcol[lead][post_gid], rcol[lead][post_gid],
+            docs[runs], cnt, x, gchange)
 
+    def merge(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pending: pd.DataFrame | None = None
         for pdf in it:
             if pending is not None:
                 pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
             pending, out = merge_groups(pdf, flush_all=False)
             if out is not None and len(out):
                 yield out
@@ -342,26 +406,97 @@ def _merge_encode_partials(cfg: EngineConfig):
     return merge
 
 
-def _stage_c_blocks(local_tf: DataFrame, cfg: EngineConfig,
-                    shuffle_partitions: int) -> DataFrame:
-    """Stage C's plan: the packed checkpoint rows → encoded posting
-    blocks (``BLOCK_SCHEMA``), through one (term, range_id) shuffle.
+def _blocks_to_partials(spec: BlockSpec, purge_ids=None):
+    """Encoded block rows → partial rows (one per block; the merge kernel
+    takes any partial granularity), for the delta merge. One varint pass
+    per column per chunk of ~2k block rows: the decode's intermediates
+    stay ~1-2 MB, in cache-hot, already-faulted pages (one whole-batch
+    decode measured SLOWER than per-block, dominated by first-touch page
+    faults, not compute).
 
-    Map-side combine: pack per-(term, range) posting arrays BEFORE the
-    exchange (north rule: per-partition indexes merged shuffle-side); the
-    shuffle then moves ~50-100× fewer rows and the reducer merges
-    pre-sorted partials instead of sorting raw occurrences. r7: the pack
-    kernel reads the PACKED checkpoint rows via mapInArrow (no JVM
-    explode, no occurrence-row Arrow transfer — see
-    ``_pack_partials_arrow``). ``oracle/stage_c_raw.py`` holds the
-    raw-occurrence plan with the same signature, which builds
-    byte-identical blocks (tests/test_determinism.py)."""
-    partials = (local_tf.select("doc_id", "dl", "toks")
-                .mapInArrow(_pack_partials_arrow(cfg),
-                            schema=PARTIAL_SCHEMA))
+    ``purge_ids`` (optional sorted int64 array): these docs' entries are
+    DROPPED during the decode — the delete/upsert half of incremental
+    maintenance. Ships in the task closure; bounded by the epoch-size
+    cost model (a purge too big to broadcast should be a rebuild)."""
+    purge = (np.asarray(purge_ids, dtype=np.int64)
+             if purge_ids is not None else None)
+    chunk_rows = 2048
+
+    def unpack_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        ns = pdf["n"].to_numpy(dtype=np.int64)
+        docs, cnt, x = decode_blocks_bulk(
+            ns, *(pdf[c] for c in spec.bytes_cols), spec.positional)
+        cnt, x = cnt.astype(np.int32), x.astype(np.int32)
+        if purge is not None and len(purge):
+            keep = ~np.isin(docs, purge)
+            x = x[np.repeat(keep, cnt) if spec.positional else keep]
+            ns = np.bincount(np.repeat(np.arange(len(ns)), ns)[keep],
+                             minlength=len(ns)).astype(np.int64)
+            docs, cnt = docs[keep], cnt[keep]
+        ends = np.cumsum(ns)
+        starts = ends - ns
+        sel = np.flatnonzero(ns > 0)
+        if not len(sel):
+            return None
+        # each doc's payload offset: one value a doc, or its cnt positions
+        xoff = np.arange(len(docs) + 1)
+        if spec.positional:
+            xoff = np.append(0, np.cumsum(cnt))
+        return pd.DataFrame({
+            "term": pdf["term"].to_numpy()[sel],
+            "range_id": pdf["range_id"].to_numpy()[sel],
+            "n": ns[sel].astype(np.int32),
+            "doc_arr": _slices(docs, starts[sel], ends[sel]),
+            f"{spec.count}_arr": _slices(cnt, starts[sel], ends[sel]),
+            f"{spec.payload}_arr": _slices(x, xoff[starts[sel]],
+                                           xoff[ends[sel]]),
+        })
+
+    def unpack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for big in it:
+            for lo in range(0, len(big), chunk_rows):
+                out = unpack_chunk(big.iloc[lo:lo + chunk_rows])
+                if out is not None:
+                    yield out
+
+    return unpack
+
+
+def _pack(local_tf: DataFrame, spec: BlockSpec, cfg: EngineConfig
+          ) -> DataFrame:
+    return (local_tf.select("doc_id", "dl", "toks")
+            .mapInArrow(_pack_partials(spec, cfg),
+                        schema=spec.partial_schema))
+
+
+def _merge_blocks(partials: DataFrame, spec: BlockSpec, cfg: EngineConfig,
+                  shuffle_partitions: int) -> DataFrame:
+    """Partial rows → encoded block rows through the one (term, range_id)
+    shuffle: hashing on the PAIR splits a head term's entries across
+    reducers by doc-range, while each group stays whole on one reducer."""
     return (partials.repartition(shuffle_partitions, "term", "range_id")
             .sortWithinPartitions("term", "range_id")
-            .mapInPandas(_merge_encode_partials(cfg), schema=BLOCK_SCHEMA))
+            .mapInPandas(_merge_encode(spec, cfg),
+                         schema=spec.block_schema))
+
+
+def _stage_c_blocks(local_tf: DataFrame, cfg: EngineConfig,
+                    shuffle_partitions: int,
+                    spec: BlockSpec = POSTINGS_BLOCKS) -> DataFrame:
+    """Stage C's plan: packed checkpoint rows → encoded blocks of
+    ``spec``. ``oracle/stage_c_raw.py`` holds the raw-occurrence postings
+    plan with the same signature, which builds byte-identical blocks
+    (tests/test_determinism.py)."""
+    return _merge_blocks(_pack(local_tf, spec, cfg), spec, cfg,
+                         shuffle_partitions)
+
+
+def _write_blocks(io: TableIO, spec: BlockSpec, blocks: DataFrame,
+                  cfg: EngineConfig, lineage: dict) -> None:
+    """Commit a block table partitioned by ``term_bucket``, one writer
+    task (one file) per bucket directory."""
+    io.write(term_bucketed(blocks, cfg.index.term_buckets), spec.table,
+             partition_by=["term_bucket"], lineage=lineage, metrics={})
 
 
 def _encoded_bytes():
@@ -723,18 +858,10 @@ def build_index(spark: SparkSession, docs: DataFrame | str, io: TableIO,
     # ---- Stage C: the (term, range) shuffle → encoded posting blocks ----
     if shuffle_partitions is None:
         shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    encoded = _stage_c_blocks(local_tf, cfg, shuffle_partitions)
-    encoded = encoded.withColumn(
-        "term_bucket", term_bucket_col(F.col("term"),
-                                       cfg.index.term_buckets))
-    # co-locate each bucket on one writer task (second shuffle, but of the
-    # already-encoded compact blocks): 1 file per bucket dir instead of
-    # tasks × buckets small files
-    encoded = encoded.repartition(cfg.index.term_buckets, "term_bucket")
-    io.write(encoded, POSTINGS, partition_by=["term_bucket"],
-             lineage={"parent": io.current_snapshot(LOCAL_TF)["snapshot_id"],
-                      "shuffle_partitions": shuffle_partitions},
-             metrics={})
+    _write_blocks(io, POSTINGS_BLOCKS,
+                  _stage_c_blocks(local_tf, cfg, shuffle_partitions), cfg,
+                  {"parent": io.current_snapshot(LOCAL_TF)["snapshot_id"],
+                   "shuffle_partitions": shuffle_partitions})
     _mark("stage_c")
 
     out = _write_stats_tables(spark, io, cfg, n_docs, avgdl, total_tokens)
@@ -772,37 +899,16 @@ def _write_stats_tables(spark: SparkSession, io: TableIO, cfg: EngineConfig,
     recomputed globally — df changes for touched terms and idf depends on
     the NEW n_docs for every term, but the input is block METADATA, so
     this stays tiny at any corpus size)."""
-    blocks = io.read(spark, POSTINGS)
-    df_per_term = blocks.groupBy("term").agg(F.sum("n").alias("df"))
-    # log(N - df + 0.5) - log(df + 0.5), kept as a difference of logs (not a
-    # log of ratio) to match BM25Okapi's floating-point path exactly.
-    raw_idf = df_per_term.withColumn(
-        "idf_raw",
-        F.log(F.lit(float(n_docs)) - F.col("df") + 0.5)
-        - F.log(F.col("df") + 0.5))
-    # BM25Okapi's ε-fixup needs the vocabulary-wide mean raw idf; the
-    # aggregate rides the SAME action as the write (broadcast scalar
-    # subquery), avoiding a separate collect job.
-    vocab_scalars = F.broadcast(raw_idf.agg(
-        F.avg("idf_raw").alias("__avg_idf"),
-        F.count("*").alias("__vocab")))
-    term_stats = (raw_idf.crossJoin(vocab_scalars)
-                  .withColumn(
-                      "idf",
-                      F.when(F.col("idf_raw") < 0,
-                             F.lit(cfg.bm25.epsilon) * F.col("__avg_idf"))
-                      .otherwise(F.col("idf_raw")))
-                  .withColumn("term_bucket",
-                              term_bucket_col(F.col("term"),
-                                              cfg.index.term_buckets))
-                  .drop("__avg_idf", "__vocab"))
-    term_stats = term_stats.repartition(cfg.index.term_buckets, "term_bucket")
+    df_per_term = (io.read(spark, POSTINGS)
+                   .groupBy("term").agg(F.sum("n").alias("df")))
+    term_stats = term_bucketed(
+        okapi_idf(df_per_term, n_docs, cfg.bm25.epsilon),
+        cfg.index.term_buckets)
     (term_stats.write.mode("overwrite").partitionBy("term_bucket")
      .parquet(io.path(TERM_STATS)))
     # vocab scalars for corpus_stats: parquet footer row counts are free at
     # any scale; the mean raw idf is read driver-side while the vocabulary
     # is driver-sized, else via one Spark aggregate
-    import numpy as np
     import pyarrow.dataset as pa_ds
     ts_ds = pa_ds.dataset(io.path(TERM_STATS), format="parquet",
                           partitioning="hive")
@@ -840,77 +946,6 @@ def _write_stats_tables(spark: SparkSession, io: TableIO, cfg: EngineConfig,
                          avgdl=float(avgdl), vocab_size=int(vocab_size))
 
 
-def _blocks_to_partials(purge_ids=None):
-    """Inverse of the Stage C encode for merge purposes: decode persisted
-    posting-block rows back into ``PARTIAL_SCHEMA`` rows (one partial per
-    block — ``_merge_encode_partials`` accepts any partial granularity
-    and re-sorts/re-encodes per (term, range) group).
-
-    BULK-vectorized like the encode side: ONE varint decode over each
-    concatenated column buffer per chunk, with per-block doc-id
-    reconstruction as a group-wise cumsum (each block's first delta is
-    its absolute doc id) — no per-block Python decode calls, so a delta
-    merge touching millions of groups stays numpy-bound. Chunked at
-    ~2k block rows: the vectorized decode's intermediates are sized by
-    the chunk's posting count, and keeping them ~1-2 MB keeps every pass
-    in cache-hot, already-faulted pages (one whole-batch decode was
-    measured SLOWER than per-block here — dominated by first-touch page
-    faults on tens of MB of fresh intermediates, not by compute).
-
-    ``purge_ids`` (optional sorted int64 np.ndarray): postings of these
-    doc_ids are DROPPED during the decode — the delete/upsert half of
-    incremental maintenance. Ships in the task closure; bounded by the
-    operator's epoch-size cost model (a purge too big to broadcast
-    should be a rebuild)."""
-    import numpy as np
-
-    purge = (np.asarray(purge_ids, dtype=np.int64)
-             if purge_ids is not None else None)
-    chunk_rows = 2048
-
-    def unpack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for big in it:
-            for lo in range(0, len(big), chunk_rows):
-                pdf = big.iloc[lo:lo + chunk_rows]
-                out = _unpack_chunk(pdf)
-                if out is not None:
-                    yield out
-
-    def _unpack_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        from .codec import decode_blocks_bulk
-
-        if not len(pdf):
-            return None
-        ns = pdf["n"].to_numpy(dtype=np.int64)
-        docs, tfs, dls = decode_blocks_bulk(
-            ns, pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"])
-        tfs, dls = tfs.astype(np.int32), dls.astype(np.int32)
-        if purge is not None and len(purge):
-            gid = np.repeat(np.arange(len(ns)), ns)
-            keep = ~np.isin(docs, purge)
-            docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-            ns = np.bincount(gid[keep], minlength=len(ns)) \
-                .astype(np.int64)
-        ends = np.cumsum(ns)
-        bstarts = ends - ns
-        sel = np.flatnonzero(ns > 0)
-        if not len(sel):
-            return None
-        return pd.DataFrame({
-            "term": pdf["term"].to_numpy()[sel],
-            "range_id": pdf["range_id"].to_numpy()[sel],
-            "n": ns[sel].astype(np.int32),
-            "doc_arr": [docs[bstarts[i]:ends[i]].tobytes()
-                        for i in sel],
-            "tf_arr": [tfs[bstarts[i]:ends[i]].tobytes()
-                       for i in sel],
-            "dl_arr": [dls[bstarts[i]:ends[i]].tobytes()
-                       for i in sel],
-        })
-
-    return unpack
-
-
 DELTA_LOCAL_TF = "delta_local_tf"
 DELTA_PARTIALS = "delta_partials"
 
@@ -919,11 +954,8 @@ def delta_merge_index(spark: SparkSession, main: InvertedIndex,
                       delta_docs: DataFrame | str, out_io: TableIO, *,
                       doc_id_col: str = "doc_id", text_col: str = "text",
                       shuffle_partitions: int | None = None,
-                      assert_new_docs: bool = True,
                       mode: str = "insert",
-                      delete_doc_ids=None,
-                      keep_staging: bool = False,
-                      positions: bool | str = "auto") -> InvertedIndex:
+                      delete_doc_ids=None) -> InvertedIndex:
     """Incremental index maintenance: merge an epoch of NEW documents
     (e.g. the staging table ``streaming.ingest.stage_for_indexing``
     appends to — the Spark-native analogue of the reference's resume
@@ -931,70 +963,57 @@ def delta_merge_index(spark: SparkSession, main: InvertedIndex,
     existing index WITHOUT re-running Stage A/C over the main corpus.
 
     Cost model — O(delta + touched groups), not O(corpus):
-      1. Stage A runs over the DELTA only (tokenize → occurrence rows →
-         map-side packed partials, the same ``_pack_partials_arrow``
-         kernel as a full build).
-      2. The delta's distinct (term, range_id) keys mark the TOUCHED
-         posting groups. With monotonically increasing doc_ids an
-         epoch's ranges are almost entirely new, so the touched set is
-         ~|delta vocab| keys — broadcastable for epoch-sized deltas
-         (a backfill that rewrites most ranges should rebuild instead).
-      3. Touched main blocks are decoded back into partials
-         (``_blocks_to_partials``) and merged with the delta partials by
-         the SAME shuffle-side kernel as the packed build
-         (``_merge_encode_partials``) — so a touched group's blocks are
-         byte-identical to a from-scratch build over corpus+delta
-         (encoding is content-determined per group).
-      4. Untouched blocks pass through unchanged. (This plain-parquet
-         layer rewrites their bytes into the new snapshot's directory;
-         an Iceberg runtime would re-reference the untouched data files
+      1. Stage A runs over the DELTA only; its postings partials (the
+         build's pack kernel) are staged, and their (term, range_id)
+         keys mark the TOUCHED groups. With monotonically increasing
+         doc_ids an epoch's ranges are almost entirely new, so the
+         touched set is ~|delta vocab| keys — broadcastable for
+         epoch-sized deltas (a backfill that rewrites most ranges should
+         rebuild instead).
+      2. ONE loop over the block tables — POSTINGS always, POSITIONS
+         when the main root has them: a block whose [first_doc_id,
+         last_doc_id] interval covers a purged doc touches its group too
+         (a purged doc's old terms are unknown, its entries can only
+         live there); touched main blocks are decoded back into partials
+         with the purge applied and merged with the delta's partials by
+         the build's shuffle-side kernel — so every touched group is
+         byte-identical to a from-scratch build over the merged corpus
+         (encoding is content-determined per group); untouched blocks
+         pass through unchanged. (This plain-parquet layer rewrites
+         their bytes into the new snapshot's directory; an Iceberg
+         runtime would re-reference the untouched data files
          metadata-only. The COMPUTE saved — tokenizing and shuffling the
          main corpus — is the scale win either way.)
-      5. term_stats + corpus scalars are recomputed globally from block
+      3. term_stats + corpus scalars are recomputed globally from block
          metadata (idf depends on the new n_docs for EVERY term) — tiny
          at any scale, shared ``_write_stats_tables``.
 
-    Byte-identity with a from-scratch rebuild over corpus+delta is
-    pytest-gated (tests/test_streaming.py::test_delta_merge_*). The new
-    index is written to ``out_io`` with lineage pointing at the parent
-    index's snapshot ids (the child-snapshot contract).
+    Byte-identity with a from-scratch rebuild (and ``build_positions``)
+    over corpus+delta is pytest-gated (tests/test_streaming.py,
+    tests/test_positions.py). The new index is written to ``out_io``
+    with lineage pointing at the parent index's snapshot ids (the
+    child-snapshot contract); the staging tables are dropped.
 
     ``mode``:
-      * ``"insert"`` (default) — every delta doc_id must be NEW. The
+      * ``"insert"`` (default) — every delta doc_id must be NEW: the
         merge kernel SUMS tf of duplicate (term, range, doc) postings,
-        which is only correct for disjoint doc_ids; ``assert_new_docs``
-        keeps the guard (one broadcast-semi-join count over doc_stats).
+        which is only correct for disjoint doc_ids, so an overlap raises
+        (one broadcast-semi-join count over doc_stats).
       * ``"upsert"`` — delta doc_ids may already exist in the main index
-        (a re-crawled url with new text): the old version's postings are
+        (a re-crawled url with new text): the old version's entries are
         PURGED from the touched groups during the main-block decode and
         its doc_stats row replaced, i.e. re-index = delete + insert —
         the Spark analogue of the reference re-running a shard for
         changed inputs (nlp/11_build_product_embeddings.py:127-167).
 
     ``delete_doc_ids`` (iterable of ints or a 1-column DataFrame):
-    tombstones — removed from postings and doc_stats with NO
+    tombstones — removed from every block table and doc_stats with NO
     replacement (corpus stats shrink; idf/avgdl recompute globally).
     Combinable with either mode; deleting a doc that is also in the
     delta is rejected as ambiguous. The purge set (upsert replacements +
     deletes) is collected driver-side and shipped in the decode task
     closure — epoch-sized by the same cost model as the touched-group
-    broadcast (a purge too large for that should be a rebuild).
-
-    ``keep_staging``: the DELTA_LOCAL_TF / DELTA_PARTIALS staging tables
-    are dropped after the merged POSTINGS commit (they are not part of
-    the index table contract); pass True to keep them for debugging.
-
-    ``positions``: incremental maintenance of the OPTIONAL positional
-    table (index/positions.py). ``"auto"`` (default) merges it when the
-    main root has one; ``True`` requires it; ``False`` skips. The merge
-    mirrors the postings path exactly — delta-only posexplode + packed
-    partials, touched groups (delta keys ∪ purge-covering block
-    intervals) decoded with the purge applied, shuffle-side re-encode,
-    untouched blocks passed through — and is byte-identical to
-    ``build_positions`` over the merged corpus
-    (tests/test_positions.py::test_delta_merge_positions_byte_identical)."""
-    import numpy as np
-
+    broadcast (a purge too large for that should be a rebuild)."""
     if mode not in ("insert", "upsert"):
         raise ValueError(f"delta_merge_index: unknown mode {mode!r}")
     cfg = main.cfg
@@ -1057,15 +1076,14 @@ def delta_merge_index(spark: SparkSession, main: InvertedIndex,
                                   dtype=np.int64)
     else:
         replaced_ids = np.zeros(0, dtype=np.int64)
-        if assert_new_docs:
-            overlap = (main_ds.join(
-                F.broadcast(d_ds.select("doc_id")), "doc_id", "left_semi")
-                .limit(1).count())
-            if overlap:
-                raise ValueError(
-                    "delta_merge_index: delta contains doc_ids already in "
-                    "the main index — tf would be double-counted; "
-                    "re-index existing docs with mode='upsert'")
+        overlap = (main_ds.join(
+            F.broadcast(d_ds.select("doc_id")), "doc_id", "left_semi")
+            .limit(1).count())
+        if overlap:
+            raise ValueError(
+                "delta_merge_index: delta contains doc_ids already in "
+                "the main index — tf would be double-counted; "
+                "re-index existing docs with mode='upsert'")
     purge_ids = np.union1d(replaced_ids, delete_ids)
 
     # ---- merged doc_stats (+ corpus scalars from its footers) ----
@@ -1083,136 +1101,47 @@ def delta_merge_index(spark: SparkSession, main: InvertedIndex,
                  metrics={"purged": int(len(purge_ids))})
     n_docs, total_tokens, avgdl = _doc_scalars(spark, out_io, cfg)
 
-    # ---- Stage C (delta only): map-side packed partials, staged ----
-    out_io.write(dtf.select("doc_id", "dl", "toks")
-                 .mapInArrow(_pack_partials_arrow(cfg),
-                             schema=PARTIAL_SCHEMA),
-                 DELTA_PARTIALS,
+    # ---- Stage C (delta only): postings partials, staged ----
+    out_io.write(_pack(dtf, POSTINGS_BLOCKS, cfg), DELTA_PARTIALS,
                  lineage={"stage": "C-delta"}, metrics={})
     dp = out_io.read(spark, DELTA_PARTIALS)
-
-    # ---- split main postings by touched (term, range) keys ----
-    # touched = delta groups ∪ every group whose block INTERVAL contains
-    # a purged doc (we cannot know a purged doc's terms without its old
-    # text, but its postings can only live in blocks whose
-    # [first_doc_id, last_doc_id] covers it within its range)
-    mp = main.postings(spark)
-    touched_keys = dp.select("term", "range_id")
+    tables = [(POSTINGS_BLOCKS, dp)]
+    if main.io.exists(POSITIONS):
+        tables.append((POSITIONS_BLOCKS, _pack(dtf, POSITIONS_BLOCKS, cfg)))
+    purged = None
     if len(purge_ids):
-        pr = spark.createDataFrame(
+        purged = F.broadcast(spark.createDataFrame(
             [(int(x), int(x) >> cfg.index.range_shift) for x in purge_ids],
-            "p_doc long, p_range long")
-        purge_touched = (mp.join(
-            F.broadcast(pr),
-            (F.col("range_id") == F.col("p_range"))
-            & (F.col("p_doc") >= F.col("first_doc_id"))
-            & (F.col("p_doc") <= F.col("last_doc_id")),
-            "left_semi").select("term", "range_id"))
-        touched_keys = touched_keys.unionByName(purge_touched)
-    touched = F.broadcast(touched_keys.distinct())
-    untouched = mp.join(touched, ["term", "range_id"], "left_anti")
-    touched_main = mp.join(touched, ["term", "range_id"], "left_semi")
+            "p_doc long, p_range long"))
 
-    # ---- merge touched groups through the shared shuffle-side kernel ----
-    main_parts = (touched_main
-                  .select("term", "range_id", "n", "doc_bytes", "tf_bytes",
-                          "dl_bytes")
-                  .mapInPandas(
-                      _blocks_to_partials(
-                          purge_ids if len(purge_ids) else None),
-                      schema=PARTIAL_SCHEMA))
-    merged_blocks = (main_parts.unionByName(dp)
-                     .repartition(shuffle_partitions, "term", "range_id")
-                     .sortWithinPartitions("term", "range_id")
-                     .mapInPandas(_merge_encode_partials(cfg),
-                                  schema=BLOCK_SCHEMA))
-    block_cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-    new_posts = (untouched.select(*block_cols)
-                 .unionByName(merged_blocks)
-                 .withColumn("term_bucket",
-                             term_bucket_col(F.col("term"),
-                                             cfg.index.term_buckets))
-                 .repartition(cfg.index.term_buckets, "term_bucket"))
-    out_io.write(new_posts, POSTINGS, partition_by=["term_bucket"],
-                 lineage={"parent": parent_posts.get("snapshot_id"),
-                          "mode": "delta_merge",
-                          "purged": int(len(purge_ids)),
-                          "shuffle_partitions": shuffle_partitions},
-                 metrics={})
+    # ---- one merge loop over the block tables ----
+    for spec, delta_parts in tables:
+        blocks = main.io.read(spark, spec.table)
+        touched = dp.select("term", "range_id")
+        if purged is not None:
+            touched = touched.unionByName(blocks.join(
+                purged, (F.col("range_id") == F.col("p_range"))
+                & (F.col("p_doc") >= F.col("first_doc_id"))
+                & (F.col("p_doc") <= F.col("last_doc_id")),
+                "left_semi").select("term", "range_id"))
+        touched = F.broadcast(touched.distinct())
+        main_parts = (blocks.join(touched, ["term", "range_id"], "left_semi")
+                      .select("term", "range_id", "n", *spec.bytes_cols)
+                      .mapInPandas(_blocks_to_partials(
+                          spec, purge_ids if len(purge_ids) else None),
+                          schema=spec.partial_schema))
+        merged = _merge_blocks(main_parts.unionByName(delta_parts), spec,
+                               cfg, shuffle_partitions)
+        untouched = blocks.join(touched, ["term", "range_id"], "left_anti")
+        _write_blocks(
+            out_io, spec,
+            untouched.select(*spec.block_cols).unionByName(merged), cfg,
+            {"parent": (main.io.current_snapshot(spec.table) or {})
+             .get("snapshot_id"),
+             "mode": "delta_merge", "purged": int(len(purge_ids)),
+             "shuffle_partitions": shuffle_partitions})
 
-    # ---- optional: merge the positional table the same way ----
-    from .positions import POSITIONS as POS_TABLE
-    if positions == "auto":
-        do_pos = main.io.exists(POS_TABLE)
-    elif positions:
-        if not main.io.exists(POS_TABLE):
-            raise FileNotFoundError(
-                f"delta_merge_index(positions=True): main root has no "
-                f"{POS_TABLE} table; run build_positions first")
-        do_pos = True
-    else:
-        do_pos = False
-    if do_pos:
-        from .positions import (POS_BLOCK_SCHEMA, POS_PARTIAL_SCHEMA,
-                                _merge_encode_pos_partials,
-                                _pack_pos_partials_arrow,
-                                _pos_blocks_to_partials)
-        parent_pos = main.io.current_snapshot(POS_TABLE) or {}
-        d_pos = (dtf.select("doc_id", "toks")
-                 .mapInArrow(
-                     _pack_pos_partials_arrow(cfg.index.range_shift),
-                     schema=POS_PARTIAL_SCHEMA))
-        mpos = main.io.read(spark, POS_TABLE)
-        # touched keys: the delta's (term, range) groups are identical to
-        # the postings merge's (same occurrence rows); the purge cover is
-        # recomputed against THIS table's block intervals (block sizing
-        # differs between the two tables)
-        touched_pos = dp.select("term", "range_id")
-        if len(purge_ids):
-            prp = spark.createDataFrame(
-                [(int(x), int(x) >> cfg.index.range_shift)
-                 for x in purge_ids],
-                "p_doc long, p_range long")
-            touched_pos = touched_pos.unionByName(
-                mpos.join(F.broadcast(prp),
-                          (F.col("range_id") == F.col("p_range"))
-                          & (F.col("p_doc") >= F.col("first_doc_id"))
-                          & (F.col("p_doc") <= F.col("last_doc_id")),
-                          "left_semi").select("term", "range_id"))
-        touched_pos_b = F.broadcast(touched_pos.distinct())
-        unt_pos = mpos.join(touched_pos_b, ["term", "range_id"],
-                            "left_anti")
-        m_parts = (mpos.join(touched_pos_b, ["term", "range_id"],
-                             "left_semi")
-                   .select("term", "range_id", "n", "doc_bytes",
-                           "cnt_bytes", "pos_bytes")
-                   .mapInPandas(
-                       _pos_blocks_to_partials(
-                           purge_ids if len(purge_ids) else None),
-                       schema=POS_PARTIAL_SCHEMA))
-        merged_pos = (m_parts.unionByName(d_pos)
-                      .repartition(shuffle_partitions, "term", "range_id")
-                      .sortWithinPartitions("term", "range_id")
-                      .mapInPandas(
-                          _merge_encode_pos_partials(cfg.index.block_size),
-                          schema=POS_BLOCK_SCHEMA))
-        pos_cols = [c.split(" ")[0] for c in POS_BLOCK_SCHEMA.split(", ")]
-        new_pos = (unt_pos.select(*pos_cols)
-                   .unionByName(merged_pos)
-                   .withColumn("term_bucket",
-                               term_bucket_col(F.col("term"),
-                                               cfg.index.term_buckets))
-                   .repartition(cfg.index.term_buckets, "term_bucket"))
-        out_io.write(new_pos, POS_TABLE, partition_by=["term_bucket"],
-                     lineage={"parent": parent_pos.get("snapshot_id"),
-                              "mode": "delta_merge",
-                              "purged": int(len(purge_ids)),
-                              "shuffle_partitions": shuffle_partitions},
-                     metrics={})
-
-    if not keep_staging:
-        out_io.drop(DELTA_LOCAL_TF)
-        out_io.drop(DELTA_PARTIALS)
-
+    out_io.drop(DELTA_LOCAL_TF)
+    out_io.drop(DELTA_PARTIALS)
     return _write_stats_tables(spark, out_io, cfg, n_docs, avgdl,
                                total_tokens)

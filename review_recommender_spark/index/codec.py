@@ -15,6 +15,12 @@ of one (term, range) group:
     score upper bounds for block-max pruning that stay valid for *any*
     (k1, b), since tf/(tf + K(dl)) is increasing in tf and decreasing in dl.
 
+Positional blocks (index/positions.py) share the layout: doc ids as
+above, one occurrence count per doc, then every doc's positions as
+deltas with the doc's first position absolute. ``encode_blocks_bulk`` /
+``decode_blocks_bulk`` handle both with a ``positional`` switch;
+``decode_block`` and ``decode_pos_block`` are the per-block references.
+
 Both encode and decode are vectorized numpy (no per-value Python loops);
 decode handles a whole concatenated buffer of varints at once.
 """
@@ -102,59 +108,92 @@ def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray
             varint_encode(np.asarray(dls, dtype=np.uint64)))
 
 
-def encode_blocks_bulk(doc_ids: np.ndarray, tfs: np.ndarray,
-                       dls: np.ndarray, block_starts: np.ndarray
+
+
+def _block_deltas(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Consecutive differences of ``values``, with the value itself kept
+    at every offset in ``starts`` (so each run decodes on its own)."""
+    out = np.empty(len(values), dtype=np.uint64)
+    out[1:] = (values[1:] - values[:-1]).astype(np.uint64)
+    out[starts] = values[starts].astype(np.uint64)
+    return out
+
+
+def _encode_cut(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
+    """One varint encode of ``values``, cut into one buffer per run that
+    begins at each offset in ``starts`` (ascending, the first 0)."""
+    vals = np.asarray(values, dtype=np.uint64)
+    buf = varint_encode(vals)
+    off = np.zeros(len(vals) + 1, dtype=np.int64)
+    np.cumsum(varint_nbytes(vals), out=off[1:])
+    cut = np.append(off[starts], len(buf))
+    return [buf[a:b] for a, b in zip(cut[:-1], cut[1:])]
+
+
+def _run_cumsum(deltas: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Cumulative sum of ``deltas`` restarted at every run of ``lens``
+    (each run non-empty): one cumsum over the whole batch, minus the
+    running sum each run starts from."""
+    c = np.cumsum(deltas)
+    base = np.zeros(len(lens), dtype=np.int64)
+    base[1:] = c[np.cumsum(lens)[:-1] - 1]
+    return c - np.repeat(base, lens)
+
+
+def encode_blocks_bulk(doc_ids: np.ndarray, counts: np.ndarray,
+                       payload: np.ndarray, block_starts: np.ndarray,
+                       positional: bool = False
                        ) -> tuple[list[bytes], list[bytes], list[bytes]]:
     """Encode MANY blocks in three vectorized passes (one varint encode per
-    column for the whole batch + exclusive-cumsum slicing), instead of one
-    Python call per block — the hot path of the index build.
+    column for the whole batch, then byte slicing), instead of one Python
+    call per block — the hot path of every block-table build.
 
-    ``block_starts`` are row offsets of block beginnings (ascending,
-    starting at 0); rows within a block must be doc_id-sorted. The first
-    delta of each block is the absolute doc_id, so each block decodes
-    independently (identical to per-block ``encode_block``)."""
-    n = len(doc_ids)
+    ``doc_ids`` and ``counts`` hold one entry per doc, doc_id-sorted
+    within each block; ``block_starts`` are the doc offsets of block
+    beginnings (ascending, starting at 0). Each block's first doc-id
+    delta is the absolute doc id, so every block decodes independently.
+    ``payload`` is one entry per doc (a posting's dl: per block,
+    byte-identical to ``encode_block``), or with ``positional`` each
+    doc's ``counts`` positions, ascending, concatenated — encoded as
+    deltas with each doc's first position absolute."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    deltas = np.empty(n, dtype=np.uint64)
-    deltas[1:] = (doc_ids[1:] - doc_ids[:-1]).astype(np.uint64)
-    deltas[block_starts] = doc_ids[block_starts].astype(np.uint64)
-
-    def split(buf: bytes, nbytes: np.ndarray) -> list[bytes]:
-        ends = np.cumsum(nbytes)
-        bstart_bytes = ends[block_starts] - nbytes[block_starts]
-        bend_bytes = np.append(bstart_bytes[1:], len(buf))
-        return [buf[int(s):int(e)]
-                for s, e in zip(bstart_bytes, bend_bytes)]
-
-    tf_u = np.asarray(tfs, dtype=np.uint64)
-    dl_u = np.asarray(dls, dtype=np.uint64)
-    doc_parts = split(varint_encode(deltas), varint_nbytes(deltas))
-    tf_parts = split(varint_encode(tf_u), varint_nbytes(tf_u))
-    dl_parts = split(varint_encode(dl_u), varint_nbytes(dl_u))
-    return doc_parts, tf_parts, dl_parts
+    bs = np.asarray(block_starts, dtype=np.int64)
+    docs = _encode_cut(_block_deltas(doc_ids, bs), bs)
+    cnts = _encode_cut(counts, bs)
+    if not positional:
+        return docs, cnts, _encode_cut(payload, bs)
+    counts = np.asarray(counts, dtype=np.int64)
+    first = np.zeros(len(counts), dtype=np.int64)   # each doc's first pos
+    np.cumsum(counts[:-1], out=first[1:])
+    pos = np.asarray(payload, dtype=np.int64)
+    return docs, cnts, _encode_cut(_block_deltas(pos, first[counts > 0]),
+                                   first[bs])
 
 
-def decode_blocks_bulk(ns, doc_bytes, tf_bytes=None, dl_bytes=None):
+def decode_blocks_bulk(ns, doc_bytes, count_bytes=None, payload_bytes=None,
+                       positional: bool = False):
     """Decode MANY blocks in one varint pass per column — the inverse of
-    ``encode_blocks_bulk``. ``ns`` holds each block's posting count and
-    the byte columns each block's encoded buffer, in block order.
+    ``encode_blocks_bulk``. ``ns`` holds each block's doc count and the
+    byte columns each block's encoded buffers, in block order.
 
     Returns every block's doc ids concatenated (int64), or the triple
-    (doc_ids, tfs, dls) when the tf and dl buffers are given. Each
-    block's first delta is its absolute doc id, so one cumsum over the
-    whole batch is reset per block by subtracting the running sum the
-    block starts from: per block, bitwise-identical to ``decode_block``."""
+    (doc_ids, counts, payload) when the other two columns are given;
+    with ``positional`` the payload is every doc's positions. Integer
+    cumsums restart per block (doc ids) and per doc (positions), so the
+    values are bitwise those of ``decode_block`` / ``decode_pos_block``."""
     ns = np.asarray(ns, dtype=np.int64)
     total = int(ns.sum())
-    c = np.cumsum(varint_decode(b"".join(doc_bytes), total).astype(np.int64))
-    base = np.zeros(len(ns), dtype=np.int64)
-    base[1:] = c[np.cumsum(ns)[:-1] - 1]
-    docs = c - np.repeat(base, ns)
-    if tf_bytes is None:
+    docs = _run_cumsum(
+        varint_decode(b"".join(doc_bytes), total).astype(np.int64), ns)
+    if count_bytes is None:
         return docs
-    return (docs,
-            varint_decode(b"".join(tf_bytes), total).astype(np.int64),
-            varint_decode(b"".join(dl_bytes), total).astype(np.int64))
+    counts = varint_decode(b"".join(count_bytes), total).astype(np.int64)
+    if not positional:
+        return docs, counts, varint_decode(b"".join(payload_bytes),
+                                           total).astype(np.int64)
+    pdeltas = varint_decode(b"".join(payload_bytes),
+                            int(counts.sum())).astype(np.int64)
+    return docs, counts, _run_cumsum(pdeltas, counts)
 
 
 def decode_block(doc_bytes: bytes, tf_bytes: bytes, dl_bytes: bytes,
@@ -166,3 +205,24 @@ def decode_block(doc_bytes: bytes, tf_bytes: bytes, dl_bytes: bytes,
     tfs = varint_decode(tf_bytes, n).astype(np.int64)
     dls = varint_decode(dl_bytes, n).astype(np.int64)
     return doc_ids, tfs, dls
+
+
+def decode_pos_block(doc_bytes: bytes, cnt_bytes: bytes, pos_bytes: bytes,
+                     n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode one positional block → (doc_ids int64 ascending, counts
+    int64, positions int64 flat — each doc's positions ascending): the
+    per-block reference the bulk codec is tested against."""
+    docs = np.cumsum(varint_decode(doc_bytes, n).astype(np.int64))
+    counts = varint_decode(cnt_bytes, n).astype(np.int64)
+    pdeltas = varint_decode(pos_bytes, int(counts.sum())).astype(np.int64)
+    if not len(pdeltas):
+        return docs, counts, pdeltas
+    starts = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=starts[1:])
+    starts = starts[counts > 0]
+    c = np.cumsum(pdeltas)
+    # grouped cumsum: subtract each doc-run's incoming prefix
+    base = np.zeros(len(pdeltas), dtype=np.int64)
+    base[starts] = c[starts] - pdeltas[starts]
+    np.maximum.accumulate(base, out=base)
+    return docs, counts, c - base

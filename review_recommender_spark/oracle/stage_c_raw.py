@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
-from ..index.build import BLOCK_SCHEMA, _blocks_from_postings
+from ..index.build import BLOCK_SCHEMA, POSTINGS_BLOCKS, _encode_groups
 
 
 def stage_c_blocks(local_tf: DataFrame, cfg: EngineConfig,
@@ -42,7 +42,7 @@ def _occurrence_rows(local_tf: DataFrame) -> DataFrame:
     """Packed checkpoint rows → one row per token OCCURRENCE
     (doc_id, dl, term), exploded JVM-side — the raw plan's input (the
     build's packed plan reads the packed rows directly via
-    ``_pack_partials_arrow``). Zero-token docs explode to no rows —
+    ``_pack_partials``). Zero-token docs explode to no rows —
     correct, they have no postings."""
     return local_tf.select(
         "doc_id", "dl", F.explode("toks").alias("term"))
@@ -53,7 +53,7 @@ def _encode_partitions(cfg: EngineConfig):
     partitioned by (term, range_id) and JVM-sorted by (term, range_id,
     doc_id); runs of equal (term, range, doc) rows collapse to one
     posting with tf = run length, and each (term, range) group is
-    block-encoded by the build's ``_blocks_from_postings``. A group that
+    block-encoded by the build's ``_encode_groups``. A group that
     spans an Arrow batch boundary is held back and finished with the
     next batch."""
     block_size = cfg.index.block_size
@@ -98,8 +98,8 @@ def _encode_partitions(cfg: EngineConfig):
             tcol = tcol[runs]
             rcol = rcol[runs]
             change = change[runs]
-            out = _blocks_from_postings(tcol, rcol, doc_ids, tfs, dls,
-                                        change, block_size)
+            out = _encode_groups(POSTINGS_BLOCKS, block_size, tcol, rcol,
+                                 doc_ids, tfs, dls, change)
             return remainder, out
 
         for pdf in it:

@@ -69,6 +69,7 @@ from __future__ import annotations
 
 from collections import Counter
 from dataclasses import dataclass
+from functools import lru_cache
 from typing import Iterator
 
 import pandas as pd
@@ -120,17 +121,27 @@ _DRIVER_SERVING_BYTES_MAX = 64 << 20
 QueryLike = "str | list[str] | tuple[str, ...]"
 
 
-def local_result(spark: SparkSession, doc_ids=(), scores=()) -> DataFrame:
-    """A driver-side top-k (≤ k rows, or none) as a (doc_id, score)
-    DataFrame planned as a LocalRelation: an Arrow table becomes one even
-    when empty, so collecting the result runs no Spark job.
+def local_result(spark: SparkSession, *columns,
+                 schema: str = RESULT_SCHEMA) -> DataFrame:
+    """A driver-side result — one sequence per field of the DDL
+    ``schema`` (default (doc_id, score)), or none for an empty result —
+    as a DataFrame planned as a LocalRelation: an Arrow table becomes one
+    even when empty, so collecting the result runs no Spark job.
     ``createDataFrame`` from a list or an empty pandas frame plans a
     LogicalRDD instead, whose collect runs a Python stage (~0.3 s, plus
     a second Python worker pool on first use)."""
     import pyarrow as pa
-    return spark.createDataFrame(pa.table({
-        "doc_id": pa.array(doc_ids, pa.int64()),
-        "score": pa.array(scores, pa.float64())}))
+    arrow = _arrow_schema(schema)
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, f.type) for c, f in
+         zip(columns or [()] * len(arrow), arrow)], schema=arrow))
+
+
+@lru_cache(maxsize=None)
+def _arrow_schema(ddl: str) -> "pa.Schema":  # noqa: F821
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+    return to_arrow_schema(StructType.fromDDL(ddl))
 
 
 def _tokens(query) -> list[str]:
@@ -521,7 +532,7 @@ def _cold_scores_batch(spark: SparkSession, index: InvertedIndex,
                 for seq in req.token_seqs]
     known = sorted({t for w in qweights for t in w})
     if not known:
-        return spark.createDataFrame([], _BATCH_SCHEMA)
+        return local_result(spark, schema=_BATCH_SCHEMA)
     blocks = _query_blocks(spark, index, known)
     blocks = blocks.filter(
         ~F.col("range_id").isin([int(r) for r in warm_ranges])
@@ -1171,7 +1182,7 @@ def bm25_topk_served_batch(spark: SparkSession, index: InvertedIndex,
                    exclude_docs, stats=stats)
     fits = not req.empty and req.collect_masks()
     if req.empty or req.filtered_out:
-        return spark.createDataFrame([], _BATCH_SCHEMA)
+        return local_result(spark, schema=_BATCH_SCHEMA)
     if not fits:
         # non-selective filter: exact per-(query, doc) scores over the
         # on-disk blocks (warm_ranges=∅ ⇒ all ranges), semi-joined with

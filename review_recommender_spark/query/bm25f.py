@@ -42,8 +42,8 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..functions.tokenize import tokenize_k2_py
-from ..index.build import (LOCAL_TF, InvertedIndex, term_bucket_col,
-                           term_bucket_py)
+from ..index.build import (LOCAL_TF, InvertedIndex, okapi_idf,
+                           term_bucket_py, term_bucketed)
 from ..index.codec import decode_blocks_bulk
 from ..index.tableio import TableIO
 from .bm25 import (RESULT_SCHEMA, _fold_scores_batch, _qtf, _query_blocks,
@@ -69,7 +69,8 @@ def build_fielded_stats(spark: SparkSession, field_ios: list[TableIO],
     the term occurs in ANY field (≠ Σ per-field dfs — overlap), from the
     field indexes' LOCAL_TF checkpoints (already tokenized; one
     explode + union + distinct + count shuffle, no corpus re-read).
-    idf replicates the main build's BM25Okapi ε-fixup float path.
+    idf is the main build's (``okapi_idf``: BM25Okapi's ε-fixup float
+    path).
     N = the first field's doc count (fields are built over the SAME doc
     set; a fielded build that drops docs per field would bias idf)."""
     cfg = cfg or EngineConfig()
@@ -84,23 +85,8 @@ def build_fielded_stats(spark: SparkSession, field_ios: list[TableIO],
         occ = part if occ is None else occ.unionByName(part)
     df_per_term = (occ.distinct()
                    .groupBy("term").agg(F.count("*").alias("df")))
-    raw_idf = df_per_term.withColumn(
-        "idf_raw",
-        F.log(F.lit(float(n_docs)) - F.col("df") + 0.5)
-        - F.log(F.col("df") + 0.5))
-    vocab_scalars = F.broadcast(raw_idf.agg(
-        F.avg("idf_raw").alias("__avg_idf")))
-    stats = (raw_idf.crossJoin(vocab_scalars)
-             .withColumn(
-                 "idf",
-                 F.when(F.col("idf_raw") < 0,
-                        F.lit(cfg.bm25.epsilon) * F.col("__avg_idf"))
-                 .otherwise(F.col("idf_raw")))
-             .withColumn("term_bucket",
-                         term_bucket_col(F.col("term"),
-                                         cfg.index.term_buckets))
-             .drop("__avg_idf")
-             .repartition(cfg.index.term_buckets, "term_bucket"))
+    stats = term_bucketed(okapi_idf(df_per_term, n_docs, cfg.bm25.epsilon),
+                          cfg.index.term_buckets)
     out_io.write(stats, BM25F_STATS, partition_by=["term_bucket"],
                  lineage={"fields": [io.root for io in field_ios],
                           "epsilon": cfg.bm25.epsilon},

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize_k1_py, tokenize_k2_py
 from ..index.build import InvertedIndex
-from .bm25 import term_docs
+from .bm25 import local_result, term_docs
 from .parser import parse_query
 
 
@@ -37,7 +37,7 @@ def dsl_match_docs(spark: SparkSession, index: InvertedIndex,
         td = term_docs(spark, index, t)
         base = td if base is None else base.unionByName(td)
     if base is None:
-        return spark.createDataFrame([], "doc_id long")
+        return local_result(spark, schema="doc_id long")
     base = base.distinct()
     for t in [tok for w in pq.required for tok in tokenize_k1_py(w)]:
         base = base.join(term_docs(spark, index, t), "doc_id", "left_semi")
@@ -47,7 +47,7 @@ def dsl_match_docs(spark: SparkSession, index: InvertedIndex,
             td = term_docs(spark, index, t)
             grp = td if grp is None else grp.unionByName(td)
         if grp is None:
-            return spark.createDataFrame([], "doc_id long")
+            return local_result(spark, schema="doc_id long")
         base = base.join(grp.distinct(), "doc_id", "left_semi")
     if pq.phrases:
         from ..index.positions import phrase_match

@@ -34,7 +34,8 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..index.build import InvertedIndex
-from .bm25 import _cold_scores_batch, _request, _served_scores
+from .bm25 import (_cold_scores_batch, _request, _served_scores,
+                   local_result)
 from .encoder import cross_encoder_score, encode_text
 from .secondpass import score_pool
 
@@ -244,8 +245,8 @@ def bm25_scores_batch_served(spark: SparkSession, index: InvertedIndex,
         return bm25_scores_batch(spark, index, queries)
     req = _request(spark, index, queries, None)
     if req.empty:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, _bm25_raw double")
+        return local_result(
+            spark, schema="query_id int, doc_id long, _bm25_raw double")
     return _served_scores(spark, index, req, block_skip=False) \
         .withColumnRenamed("score", "_bm25_raw")
 

@@ -47,8 +47,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize_k2_py
-from ..index.build import InvertedIndex, term_bucket_py
-from ..index.positions import POSITIONS, decode_pos_block
+from ..index.build import InvertedIndex
+from ..index.positions import _POS_MULT, decode_positions, positions_blocks
+from .bm25 import local_result
 
 SNIPPET_SCHEMA = ("doc_id long, snippet_start long, n_distinct long, "
                   "n_hits long, hit_pos string")
@@ -96,56 +97,26 @@ def snippet_spans(spark: SparkSession, index: InvertedIndex, query: str,
     targets = _collect_doc_ids(doc_ids, cap)
     qterms = sorted(set(tokenize_k2_py(query)))
     if not len(targets) or not qterms:
-        return spark.createDataFrame([], SNIPPET_SCHEMA)
+        return local_result(spark, schema=SNIPPET_SCHEMA)
     tid_of = {t: i for i, t in enumerate(qterms)}
     shift = index.cfg.index.range_shift
-    ranges = [int(r) for r in np.unique(targets >> shift)]
-
-    warm = (index._cached or {}).get("_positions")
-    if warm is not None:
-        blocks = warm.filter(F.col("term").isin(qterms)
-                             & F.col("range_id").isin(ranges))
-        # resident layout is already range-sharded: one map stage
-        shuffled = blocks
-    else:
-        buckets = sorted({term_bucket_py(t, index.cfg.index.term_buckets)
-                          for t in qterms})
-        blocks = (index.io.read(spark, POSITIONS)
-                  .filter(F.col("term_bucket").isin(buckets)
-                          & F.col("term").isin(qterms)
-                          & F.col("range_id").isin(ranges)
-                          & (F.col("first_doc_id") <= int(targets[-1]))
-                          & (F.col("last_doc_id") >= int(targets[0]))))
-        shuffled = (blocks.select("term", "range_id", "n", "doc_bytes",
-                                  "cnt_bytes", "pos_bytes")
-                    .repartition("range_id"))
+    blocks = positions_blocks(
+        spark, index, "snippet_spans", qterms,
+        ranges=[int(r) for r in np.unique(targets >> shift)],
+        doc_span=(int(targets[0]), int(targets[-1])))
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        d_all, p_all, t_all = [], [], []
-        for pdf in it:
-            for term, n, db, cb, pb in zip(pdf["term"], pdf["n"],
-                                           pdf["doc_bytes"],
-                                           pdf["cnt_bytes"],
-                                           pdf["pos_bytes"]):
-                docs, counts, pos = decode_pos_block(
-                    bytes(db), bytes(cb), bytes(pb), int(n))
-                idx = np.searchsorted(targets, docs)
-                idx[idx >= len(targets)] = 0
-                keep = targets[idx] == docs
-                if not keep.any():
-                    continue
-                kp = np.repeat(keep, counts)
-                d_all.append(np.repeat(docs, counts)[kp])
-                p_all.append(pos[kp])
-                t_all.append(np.full(int(kp.sum()), tid_of[term],
-                                     dtype=np.int32))
-        if not d_all:
+        got = decode_positions(it)
+        if got is None:
             return
-        d = np.concatenate(d_all)
-        p = np.concatenate(p_all)
-        t = np.concatenate(t_all)
-        order = np.lexsort((p, d))
-        d, p, t = d[order], p[order], t[order]
+        keys, codes, uniq_terms = got
+        tids = np.array([tid_of[t] for t in uniq_terms], dtype=np.int32)
+        keep = np.isin(keys // _POS_MULT, targets)
+        if not keep.any():
+            return
+        order = np.argsort(keys[keep], kind="stable")   # by (doc, pos)
+        keys, t = keys[keep][order], tids[codes[keep][order]]
+        d, p = keys // _POS_MULT, keys % _POS_MULT
         starts = np.concatenate(
             [[0], np.flatnonzero(d[1:] != d[:-1]) + 1, [len(d)]])
         rows = {"doc_id": [], "snippet_start": [], "n_distinct": [],
@@ -159,7 +130,7 @@ def snippet_spans(spark: SparkSession, index: InvertedIndex, query: str,
             rows["hit_pos"].append(",".join(str(int(x)) for x in hp))
         yield pd.DataFrame(rows)
 
-    return shuffled.mapInPandas(kernel, schema=SNIPPET_SCHEMA)
+    return blocks.mapInPandas(kernel, schema=SNIPPET_SCHEMA)
 
 
 def proximity_rerank(spark: SparkSession, index: InvertedIndex, query: str,

@@ -17,6 +17,9 @@ family stays anchored to the oracle.
 
 Usage: python scripts/at_scale_identity.py [n_docs] (default 800000)
 Prints one JSON line: {"n_docs":..., "paths":..., "bitwise_ok":...}
+The corpus and index go to a fresh ``tempfile.mkdtemp()`` directory
+(set ``TMPDIR`` to move it); Spark's scratch space follows the caller's
+``SPARK_LOCAL_DIRS``.
 """
 
 from __future__ import annotations
@@ -35,10 +38,6 @@ sys.path.insert(0, REPO)
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 800_000
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    if shm:
-        os.environ.setdefault("SPARK_LOCAL_DIRS",
-                              os.path.join(shm, "rrs_id_local"))
 
     from pyspark.sql import functions as F
 
@@ -68,7 +67,7 @@ def main() -> None:
     bm25._DRIVER_SERVING_BYTES_MAX = 1 << 62
     spark = get_spark("at-scale-id", cores=cpus,
                       shuffle_partitions=max(cpus, 8))
-    tmp = tempfile.mkdtemp(prefix="rrs_id_", dir=shm)
+    tmp = tempfile.mkdtemp(prefix="rrs_id_")
     k = 10
     try:
         corpus = os.path.join(tmp, "corpus")
@@ -215,9 +214,6 @@ def main() -> None:
     finally:
         spark.stop()
         shutil.rmtree(tmp, ignore_errors=True)
-        local_dirs = os.environ.get("SPARK_LOCAL_DIRS", "")
-        if local_dirs.startswith("/dev/shm/"):
-            shutil.rmtree(local_dirs, ignore_errors=True)
 
 
 if __name__ == "__main__":

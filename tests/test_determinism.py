@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from review_recommender_spark.config import EngineConfig, bm25_north
-from review_recommender_spark.index.build import build_index
+from review_recommender_spark.index.build import POSITIONS, build_index
+from review_recommender_spark.index.positions import build_positions
 from review_recommender_spark.index.tableio import TableIO
 from review_recommender_spark.query.bm25 import bm25_topk_exact
 
@@ -46,13 +47,22 @@ def test_index_identical_across_partitioning(spark, small_pages, tmp_path):
                                                  b.vocab_size)
 
 
+def _positions_rows(spark, io):
+    return sorted(
+        (r["term"], r["range_id"], r["block_id"], r["n"], r["first_doc_id"],
+         r["last_doc_id"], bytes(r["doc_bytes"]), bytes(r["cnt_bytes"]),
+         bytes(r["pos_bytes"]))
+        for r in io.read(spark, POSITIONS).collect())
+
+
 def test_stage_c_modes_byte_identical(spark, small_pages, tmp_path):
     """The packed Stage C (map-side partial posting arrays merged
     shuffle-side) must produce byte-identical postings + term stats to
     the raw-occurrence oracle plan, including across different
-    partitioning — and with a tiny pack chunk size so map-side chunk
-    flushes SPLIT (doc, term) runs and exercise the merge kernel's tf
-    re-sum."""
+    partitioning — and with a tiny pack chunk size, so each scan task
+    flushes many partials per (term, range) group for the merge kernel
+    to combine. The positions table, built through the same pack kernel
+    at both chunk sizes, must be byte-identical too."""
     from unittest import mock
 
     from review_recommender_spark.index import build as B
@@ -67,45 +77,65 @@ def test_stage_c_modes_byte_identical(spark, small_pages, tmp_path):
                         TableIO(str(tmp_path / "r")), cfg, n_chunks=1,
                         shuffle_partitions=11)
     assert _fingerprint_index(spark, a) == _fingerprint_index(spark, b)
-    orig = B._pack_partials_arrow
+    orig = B._pack_partials
     with mock.patch.object(
-            B, "_pack_partials_arrow",
-            lambda c, chunk_tokens=2_000_000: orig(c, chunk_tokens=64)):
+            B, "_pack_partials",
+            lambda spec, c, chunk_tokens=2_000_000: orig(spec, c,
+                                                         chunk_tokens=64)):
         c = build_index(spark, small_pages.repartition(4),
                         TableIO(str(tmp_path / "s")), cfg, n_chunks=1,
                         shuffle_partitions=7)
+        # the positions spec through the same pack kernel, flushed
+        # every 64 tokens
+        build_positions(spark, c.io, cfg)
     assert _fingerprint_index(spark, c) == _fingerprint_index(spark, b)
+    build_positions(spark, a.io, cfg)
+    assert _positions_rows(spark, c.io) == _positions_rows(spark, a.io)
 
 
-def test_merge_kernel_resums_split_runs(spark):
-    """The shuffle-side merge kernel must tf-SUM duplicate (group, doc)
-    postings — the contract that makes partial granularity irrelevant.
-    (The r7 arrow pack never splits a doc across flushes, so this is
+@pytest.mark.parametrize("positional", [False, True],
+                         ids=["postings", "positions"])
+def test_merge_kernel_resums_split_runs(spark, positional):
+    """The shuffle-side merge kernel must re-merge a doc split across
+    partials — tf SUMMED for postings, positions merged in order for
+    positions — the contract that makes partial granularity irrelevant.
+    (The arrow pack never splits a doc across flushes, so this is
     exercised directly at the kernel level rather than via a build.)"""
     import numpy as np
     import pandas as pd
     from review_recommender_spark.index import build as B
-    from review_recommender_spark.index.codec import decode_block
+    from review_recommender_spark.index.codec import (decode_block,
+                                                      decode_pos_block)
 
-    def part(docs, tfs, dls):
-        return (np.asarray(docs, np.int64).tobytes(),
-                np.asarray(tfs, np.int32).tobytes(),
-                np.asarray(dls, np.int32).tobytes())
+    def arr(values, dtype):
+        return np.asarray(values, dtype).tobytes()
 
-    d1, t1, l1 = part([5, 9], [2, 1], [40, 50])
-    d2, t2, l2 = part([9, 11], [3, 4], [50, 60])   # doc 9 split across partials
+    spec = B.POSITIONS_BLOCKS if positional else B.POSTINGS_BLOCKS
+    # doc 9 is split across the two partials
+    if positional:
+        counts = ([1, 1], [2, 1])
+        payload = ([2, 3], [1, 7, 4])     # doc 5: [2]; doc 9: [3] + [1, 7]
+    else:
+        counts = ([2, 1], [3, 4])         # tfs
+        payload = ([40, 50], [50, 60])    # dls
     pdf = pd.DataFrame({
         "term": ["alpha", "alpha"], "range_id": [0, 0], "n": [2, 2],
-        "doc_arr": [d1, d2], "tf_arr": [t1, t2], "dl_arr": [l1, l2]})
-    out = list(B._merge_encode_partials(B.EngineConfig())([pdf]))
+        "doc_arr": [arr([5, 9], np.int64), arr([9, 11], np.int64)],
+        f"{spec.count}_arr": [arr(c, np.int32) for c in counts],
+        f"{spec.payload}_arr": [arr(p, np.int32) for p in payload]})
+    out = list(B._merge_encode(spec, B.EngineConfig())([pdf]))
     assert len(out) == 1 and len(out[0]) == 1
     row = out[0].iloc[0]
-    docs, tfs, dls = decode_block(bytes(row["doc_bytes"]),
-                                  bytes(row["tf_bytes"]),
-                                  bytes(row["dl_bytes"]), int(row["n"]))
+    decode = decode_pos_block if positional else decode_block
+    docs, cnts, pay = decode(*(bytes(row[c]) for c in spec.bytes_cols),
+                             int(row["n"]))
     assert list(docs) == [5, 9, 11]
-    assert list(tfs) == [2, 4, 4]      # doc 9: 1 + 3 re-summed
-    assert list(dls) == [40, 50, 60]
+    if positional:
+        assert list(cnts) == [1, 3, 1]         # doc 9: 1 + 2 positions
+        assert list(pay) == [2, 1, 3, 7, 4]    # doc 9: [1, 3, 7]
+    else:
+        assert list(cnts) == [2, 4, 4]      # doc 9: 1 + 3 re-summed
+        assert list(pay) == [40, 50, 60]
 
 
 def test_topk_stable_across_runs(spark, small_index):

@@ -9,10 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from review_recommender_spark.functions.tokenize import tokenize_k1_py
+from review_recommender_spark.index.codec import (decode_pos_block,
+                                                  encode_blocks_bulk)
 from review_recommender_spark.index.positions import (POSITIONS,
                                                       build_positions,
-                                                      decode_pos_block,
-                                                      encode_pos_blocks_bulk,
                                                       phrase_match)
 
 
@@ -47,7 +47,8 @@ def test_pos_codec_roundtrip():
             for c in counts]).astype(np.int64)
         bs = np.unique(np.concatenate(
             [[0], rng.integers(0, n, max(n // 50, 1))])).astype(np.int64)
-        db, cb, pb = encode_pos_blocks_bulk(docs, counts, pos, bs)
+        db, cb, pb = encode_blocks_bulk(docs, counts, pos, bs,
+                                        positional=True)
         be = np.append(bs[1:], n)
         flat = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(counts, out=flat[1:])
@@ -240,7 +241,7 @@ def test_warm_phrase_serving_bitwise(spark, pos_index, page_texts):
 
 
 def test_delta_merge_positions_byte_identical(spark, tmp_path):
-    """delta_merge_index(positions='auto') must maintain the positional
+    """delta_merge_index must maintain the positional
     table incrementally — upsert (re-crawled text, positions shifted by a
     prepend) + tombstones + new docs — BYTE-identical to build_positions
     over a from-scratch index of the merged corpus."""
@@ -308,8 +309,9 @@ def test_delta_merge_positions_byte_identical(spark, tmp_path):
 
 
 def test_delta_merge_positions_flag_validation(spark, tmp_path):
-    """positions=True without a positions table must raise; False skips
-    the merge even when the table exists."""
+    """Merging into a root without a positions table gives a merged root
+    without one (the positions merge runs only when the main root has
+    the table)."""
     import dataclasses
 
     from review_recommender_spark.config import EngineConfig, bm25_north
@@ -327,15 +329,12 @@ def test_delta_merge_positions_flag_validation(spark, tmp_path):
                                     schema=PAGES_SCHEMA)
     delta_df = spark.createDataFrame(pages_pdf(np.arange(100, 120)),
                                      schema=PAGES_SCHEMA)
-    io_main = TableIO(str(tmp_path / "vmain"))
-    idx_main = build_index(spark, main_df, io_main, cfg)
-    with pytest.raises(FileNotFoundError):
-        delta_merge_index(spark, idx_main, delta_df,
-                          TableIO(str(tmp_path / "vout1")), positions=True)
-    build_positions(spark, io_main, cfg)
-    out2 = TableIO(str(tmp_path / "vout2"))
-    delta_merge_index(spark, idx_main, delta_df, out2, positions=False)
-    assert not out2.exists(POSITIONS)
+    idx_main = build_index(spark, main_df,
+                           TableIO(str(tmp_path / "vmain")), cfg)
+    out = TableIO(str(tmp_path / "vout"))
+    delta_merge_index(spark, idx_main, delta_df, out)
+    assert out.exists("postings")
+    assert not out.exists(POSITIONS)
 
 
 def test_positions_build_leaves_postings_untouched(spark, pos_index):

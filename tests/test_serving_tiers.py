@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                  bm25_topk_pruned,
-                                                 bm25_topk_served)
+                                                 bm25_topk_served,
+                                                 bm25_topk_served_batch)
+from review_recommender_spark.query.search import bm25_scores_batch_served
 
 QUERIES = ["wireless bluetooth headphones", "yellow cat socks",
            "usb charging cable long"]
@@ -46,8 +48,10 @@ def _is_local_relation(df) -> bool:
 def test_driver_tier_runs_no_spark_job(spark, small_index, monkeypatch):
     """Without filters, a driver-tier served query — hit, miss, or a
     conjunctive request with no qualifying doc — runs 0 Spark jobs from
-    the call through the collect. The executor tier, read the same way,
-    runs at least one (the probe is not vacuous)."""
+    the call through the collect, and so does an unknown-term batch
+    through ``bm25_topk_served_batch`` or ``bm25_scores_batch_served``.
+    The executor tier, read the same way, runs at least one (the probe
+    is not vacuous)."""
     small_index.warm(spark)
     try:
         requests = [(q, None, True) for q in QUERIES + ["zzznope"]] + [
@@ -62,6 +66,15 @@ def test_driver_tier_runs_no_spark_job(spark, small_index, monkeypatch):
                                                 block_skip=skip)))
             assert n_jobs == 0, (q, mm, n_jobs)
             assert got == want, (q, mm)
+        # an unknown-term batch is answered empty on the driver too
+        for name, fn in [
+                ("served-batch", lambda: bm25_topk_served_batch(
+                    spark, small_index, ["zzznope"], k=10)),
+                ("scores-batch", lambda: bm25_scores_batch_served(
+                    spark, small_index, ["zzznope"]))]:
+            rows, n_jobs = _jobs_in_group(
+                spark, f"driver-tier-{name}", lambda: fn().collect())
+            assert n_jobs == 0 and rows == [], (name, n_jobs)
         monkeypatch.setattr(bm25, "_DRIVER_SERVING_BYTES_MAX", 0)
         _, n_jobs = _jobs_in_group(
             spark, "executor-tier",

@@ -204,6 +204,30 @@ class BlockSpec:
 POSTINGS_BLOCKS = BlockSpec(POSTINGS, "tf", "dl", positional=False)
 POSITIONS_BLOCKS = BlockSpec(POSITIONS, "cnt", "pos", positional=True)
 BLOCK_SCHEMA = POSTINGS_BLOCKS.block_schema
+# term_stats rows as ``okapi_idf`` writes them
+TERM_STATS_SCHEMA = "term string, df long, idf_raw double, idf double"
+# the read schema of each term-bucketed table: its data columns, then the
+# term_bucket partition column, as ``spark.read.parquet`` infers them.
+# Passing it skips Spark's schema-inference job on every read.
+_READ_SCHEMAS = {POSTINGS: BLOCK_SCHEMA + ", term_bucket int",
+                 TERM_STATS: TERM_STATS_SCHEMA + ", term_bucket int"}
+
+
+def read_bucketed(spark: SparkSession, io: TableIO, name: str) -> DataFrame:
+    """The term-bucketed table ``name`` (POSTINGS or TERM_STATS) as a
+    DataFrame read with its known schema — no inference job."""
+    return spark.read.schema(_READ_SCHEMAS[name]).parquet(io.path(name))
+
+
+def term_filter(terms, n_buckets: int):
+    """The pyarrow filter selecting the rows of ``terms`` in a
+    term-bucketed table: their ``term_bucket`` partitions, then the
+    terms themselves."""
+    import pyarrow.dataset as pa_ds
+    terms = sorted(set(terms))
+    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
+    return (pa_ds.field("term_bucket").isin(buckets)
+            & pa_ds.field("term").isin(terms))
 
 
 def _slices(arr: np.ndarray, lo, hi) -> list[bytes]:
@@ -526,12 +550,27 @@ class InvertedIndex:
     def postings(self, spark: SparkSession) -> DataFrame:
         if self._cached and POSTINGS in self._cached:
             return self._cached[POSTINGS]
-        return self.io.read(spark, POSTINGS)
+        return read_bucketed(spark, self.io, POSTINGS)
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
         if self._cached and TERM_STATS in self._cached:
             return self._cached[TERM_STATS]
-        return self.io.read(spark, TERM_STATS)
+        return read_bucketed(spark, self.io, TERM_STATS)
+
+    def scan(self, name: str, terms=None,
+             columns: list[str] | None = None) -> "pa_ds.Scanner":  # noqa: F821
+        """The driver-side reader of the on-disk POSTINGS or TERM_STATS
+        table: a pyarrow scanner over its hive ``term_bucket`` partitions,
+        restricted to the rows of ``terms`` (``term_filter``; every row
+        when None) and to ``columns``. Zero Spark jobs. The dataset is
+        opened afresh on every call, so a rebuilt or merged root is never
+        read stale."""
+        import pyarrow.dataset as pa_ds
+        ds = pa_ds.dataset(self.io.path(name), format="parquet",
+                           partitioning="hive")
+        return ds.scanner(columns=columns, filter=None if terms is None
+                          else term_filter(terms,
+                                           self.cfg.index.term_buckets))
 
     def warm(self, spark: SparkSession, serving_shards: int | None = None,
              idf_cache_max: int = 2_000_000,
@@ -555,9 +594,10 @@ class InvertedIndex:
             runs the same kernel in-process — zero Spark jobs. Partial
             warms never keep one; ``unwarm`` releases it.
           * ``_idf`` — driver-side {term: idf} when the vocabulary is
-            driver-sized (≤ idf_cache_max), so per-query weights cost zero
-            Spark jobs. Larger vocabularies fall back to a bucket-pruned
-            lookup job per query batch.
+            driver-sized (≤ idf_cache_max), read straight from the
+            term_stats Parquet (``scan``), so per-query weights cost no
+            lookup at all. Larger vocabularies fall back to a per-batch
+            bucket-pruned read of the query terms' rows (also no job).
 
         MEMORY ENVELOPE (what "warm at 10^12 docs" costs, arithmetic a
         reader can check): the serving layout caches the ENCODED posting
@@ -580,7 +620,7 @@ class InvertedIndex:
           term's whole resident posting list.
         The driver idf cache is ~60 B/term (str + float in a dict): the
         default ``idf_cache_max`` = 2M terms ≈ 120 MB driver RSS; larger
-        vocabularies auto-fall-back to per-batch lookup jobs.
+        vocabularies auto-fall-back to per-batch term reads.
 
         ``ranges`` (optional iterable of range_ids): PARTIAL warm — pin
         only those doc-ranges' postings in the serving layout (the
@@ -617,7 +657,7 @@ class InvertedIndex:
         if max_bytes is not None:
             if max_bytes < 0:
                 raise ValueError("warm(): max_bytes must be >= 0")
-            sizes = (self.io.read(spark, POSTINGS)
+            sizes = (read_bucketed(spark, self.io, POSTINGS)
                      .groupBy("range_id")
                      .agg(F.sum(_encoded_bytes()).alias("bytes"))
                      .collect())
@@ -632,9 +672,9 @@ class InvertedIndex:
             for df in self._cached.values():
                 if hasattr(df, "unpersist"):
                     df.unpersist()
-        term_stats = self.io.read(spark, TERM_STATS).cache()
+        term_stats = read_bucketed(spark, self.io, TERM_STATS).cache()
         cached: dict = {TERM_STATS: term_stats}
-        posts_src = self.io.read(spark, POSTINGS)
+        posts_src = read_bucketed(spark, self.io, POSTINGS)
         if ranges is not None:
             warm_ranges = frozenset(int(r) for r in ranges)
             cached["_warm_ranges"] = warm_ranges
@@ -663,9 +703,9 @@ class InvertedIndex:
         if ranges is None:
             self._keep_driver_serving(serving)
         if self.vocab_size <= idf_cache_max:
-            idf = {r["term"]: r["idf"]
-                   for r in term_stats.select("term", "idf").collect()}
-            cached["_idf"] = idf
+            tbl = self.scan(TERM_STATS, columns=["term", "idf"]).to_table()
+            cached["_idf"] = dict(zip(tbl["term"].to_pylist(),
+                                      tbl["idf"].to_pylist()))
         return self
 
     def is_warm(self) -> bool:
@@ -899,7 +939,7 @@ def _write_stats_tables(spark: SparkSession, io: TableIO, cfg: EngineConfig,
     recomputed globally — df changes for touched terms and idf depends on
     the NEW n_docs for every term, but the input is block METADATA, so
     this stays tiny at any corpus size)."""
-    df_per_term = (io.read(spark, POSTINGS)
+    df_per_term = (read_bucketed(spark, io, POSTINGS)
                    .groupBy("term").agg(F.sum("n").alias("df")))
     term_stats = term_bucketed(
         okapi_idf(df_per_term, n_docs, cfg.bm25.epsilon),

@@ -25,12 +25,14 @@ tests/test_degenerate.py), and the planner names the tier it took in
                 serving layout and a k×shards merge; a partial warm
                 unions the cold ranges' exact scores (``_with_cold_ranges``).
   gathered    : pruned, candidate blocks within ``_PRUNED_LOCAL_BLOCKS_MAX``
-                rows — one metadata job, one fetch of the encoded blocks,
-                then the kernel on the driver.
-  distributed : pruned, range metadata within ``_PRUNED_DRIVER_RANGES_MAX``
-                — an exact pass over the ``_SEED_RANGES`` best-bounded
-                ranges sets θ, and the kernel runs over the surviving
-                ranges (an ``isin`` list).
+                rows and ``_PRUNED_LOCAL_BYTES_MAX`` encoded bytes — the
+                blocks are read straight from the postings Parquet on the
+                driver and the kernel runs there: zero Spark jobs.
+  distributed : pruned, over a gather budget but with range metadata
+                within ``_PRUNED_DRIVER_RANGES_MAX`` — a range-bounds
+                aggregate, then an exact pass over the ``_SEED_RANGES``
+                best-bounded ranges sets θ, and the kernel runs over the
+                surviving ranges (an ``isin`` list).
   lazy        : pruned beyond that — the same seed → θ → survivors, with
                 the survivors picked by a broadcast join.
 
@@ -44,10 +46,11 @@ answers many queries in one executor stage.
 
 Shared by every tier:
 
-  request : ``_request`` resolves tokens, idf and ``min_match`` once, and
-            its ``_Request`` carries the rest — the filter/exclude masks,
-            the ``stats=`` accumulators and the normalized ``after``
-            cursor.
+  request : ``_request`` resolves tokens, idf (the warm cache, else a
+            driver-side Parquet read — no job) and ``min_match`` once,
+            and its ``_Request`` carries the rest — the filter/exclude
+            masks, the ``stats=`` accumulators and the normalized
+            ``after`` cursor.
   plan    : ``_exact_topk`` — blocks → closure scorer → filter/exclude →
             fold in QUERY TOKEN ORDER (bit-deterministic,
             ``_fold_scores_batch``) → boost → after → top-k. The exact
@@ -77,7 +80,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize_k2_py
-from ..index.build import InvertedIndex, term_bucket_py
+from ..index.build import POSTINGS, TERM_STATS, InvertedIndex, term_bucket_py
 from ..index.codec import decode_blocks_bulk
 
 RESULT_SCHEMA = "doc_id long, score double"
@@ -90,11 +93,18 @@ _BATCH_SCHEMA = "query_id int, " + RESULT_SCHEMA
 # broadcast-join plan runs instead (a head term at 10^12 docs touches
 # ~10^8 ranges — that regime must never collect).
 _PRUNED_DRIVER_RANGES_MAX = 1_000_000
-# ... and gathers the still-encoded candidate blocks to the coordinator
-# when they number at most this many rows (~50k blocks ≈ 6.4M postings
-# ≈ 16 MB encoded + ~150 MB of transient decode arrays worst-case —
-# driver-envelope class). Head terms above the cap stay distributed.
+# ... and reads the still-encoded candidate blocks straight from the
+# postings Parquet on the coordinator while they number at most this
+# many rows (~50k blocks ≈ 6.4M postings ≈ 16 MB encoded + ~150 MB of
+# transient decode arrays worst-case — driver-envelope class) ...
 _PRUNED_LOCAL_BLOCKS_MAX = 50_000
+# ... and their encoded posting bytes (doc_bytes + tf_bytes + dl_bytes)
+# stay within this budget, the ~16 MB the row cap stands for. A query
+# over either budget (head terms) stays distributed.
+_PRUNED_LOCAL_BYTES_MAX = 16 << 20
+# the block columns the kernel reads with fine_prune (the pruned tiers)
+_KERNEL_COLS = ["term", "range_id", "n", "first_doc_id", "last_doc_id",
+                "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
 # The distributed and lazy tiers exact-score this many best-bounded
 # ranges to seed θ before the survivor pass.
 _SEED_RANGES = 8
@@ -176,28 +186,20 @@ def _resolve_min_match(token_seq: list[str],
     return m
 
 
-def _term_stats_pruned(spark: SparkSession, index: InvertedIndex,
-                       terms: list[str]) -> DataFrame:
-    buckets = sorted({term_bucket_py(t, index.cfg.index.term_buckets)
-                      for t in terms})
-    return (index.term_stats(spark)
-            .filter(F.col("term_bucket").isin(buckets)
-                    & F.col("term").isin(terms)))
-
-
 def query_term_idf(spark: SparkSession, index: InvertedIndex,
-                   query: str) -> dict[str, float]:
-    """Driver-side {term: idf} for the query's unique known terms (warm
-    idf cache when available, else a bucket-pruned lookup job)."""
+                   query) -> dict[str, float]:
+    """Driver-side {term: idf} for the query's unique known terms: the
+    warm idf cache when resident, else the terms' term_stats rows read
+    straight from Parquet (``InvertedIndex.scan``, bucket- and
+    term-pruned). No Spark job either way."""
     qtf = _qtf(query)
     if not qtf:
         return {}
     idf_map = index.idf_lookup()
     if idf_map is not None:
         return {t: idf_map[t] for t in qtf if t in idf_map}
-    rows = _term_stats_pruned(spark, index, sorted(qtf)) \
-        .select("term", "idf").collect()
-    return {r["term"]: r["idf"] for r in rows}
+    tbl = index.scan(TERM_STATS, sorted(qtf), ["term", "idf"]).to_table()
+    return dict(zip(tbl["term"].to_pylist(), tbl["idf"].to_pylist()))
 
 
 def _query_blocks(spark: SparkSession, index: InvertedIndex,
@@ -468,10 +470,10 @@ def _request(spark: SparkSession, index: InvertedIndex, queries: list,
              boost_docs: DataFrame | None = None,
              after=None, stats: dict | None = None) -> _Request:
     """Resolve a request once for every route: each query's scoring
-    tokens, the idf of their known terms (the warm driver cache, else one
-    bucket-pruned lookup job for the whole batch; none when k=0), each
-    query's min_match (``_resolve_min_match``, only for queries with a
-    known term) and the (float, int) cursor. ``k=None``: unbounded."""
+    tokens, the idf of their known terms (``query_term_idf`` — the warm
+    driver cache, else one driver-side read for the whole batch; none
+    when k=0), each query's min_match (``_resolve_min_match``, only for
+    queries with a known term) and the (float, int) cursor. ``k=None``: unbounded."""
     seqs = [_tokens(q) for q in queries]
     idf = {} if k == 0 else query_term_idf(
         spark, index, [t for s in seqs for t in s])
@@ -687,10 +689,11 @@ def bm25_topk_exact(spark: SparkSession, index: InvertedIndex, query,
 
     Pass a dict as ``stats`` to receive the ``decoded_blocks``
     accumulator and the ``tier`` taken (``exact`` or ``empty``)."""
-    # weights ride the task closure (warm: driver idf cache, zero jobs;
-    # cold: one bucket-pruned lookup) — the r6 plan broadcast-joined a
-    # weights relation instead, whose BroadcastExchange alone cost ~1.4 s
-    # per query at bench scale (measured r7)
+    # weights ride the task closure (warm: driver idf cache; cold: a
+    # driver-side term_stats read — zero jobs either way) — the r6 plan
+    # broadcast-joined a weights relation instead, whose
+    # BroadcastExchange alone cost ~1.4 s per query at bench scale
+    # (measured r7)
     return _topk(spark, index, _request(
         spark, index, [query], k, min_match, filter_docs, exclude_docs,
         boost_docs, after, stats), "exact")
@@ -1285,6 +1288,37 @@ def _seed_then_survivors(spark: SparkSession, index: InvertedIndex,
     return local_result(spark, [d for d, _ in top], [s for _, s in top])
 
 
+def _gather_blocks(index: InvertedIndex, terms: list[str],
+                   stats: dict | None) -> pd.DataFrame | None:
+    """The gathered tier's input: the block rows of ``terms`` (the
+    ``_KERNEL_COLS``) read straight from the postings Parquet on the
+    driver (``InvertedIndex.scan``) — zero Spark jobs. Batches stream in
+    until the rows exceed ``_PRUNED_LOCAL_BLOCKS_MAX`` or their encoded
+    bytes exceed ``_PRUNED_LOCAL_BYTES_MAX``; then the read stops and
+    None says the candidates are not driver-sized. ``stats`` receives the
+    rows and bytes read as ``gathered_rows`` and ``gathered_bytes``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    scanner = index.scan(POSTINGS, terms, _KERNEL_COLS)
+    batches, rows, nbytes = [], 0, 0
+    fits = True
+    for batch in scanner.to_batches():
+        batches.append(batch)
+        rows += batch.num_rows
+        nbytes += sum(pc.sum(pc.binary_length(batch.column(c))).as_py() or 0
+                      for c in ("doc_bytes", "tf_bytes", "dl_bytes"))
+        fits = (rows <= _PRUNED_LOCAL_BLOCKS_MAX
+                and nbytes <= _PRUNED_LOCAL_BYTES_MAX)
+        if not fits:
+            break
+    if stats is not None:
+        stats["gathered_rows"], stats["gathered_bytes"] = rows, nbytes
+    if not fits:
+        return None
+    return pa.Table.from_batches(batches, scanner.projected_schema) \
+        .to_pandas()
+
+
 def _pruned_topk(spark: SparkSession, index: InvertedIndex, req: _Request,
                  n_ranges: int) -> DataFrame:
     """The pruned tiers of an engaged request (the planner's step 5).
@@ -1294,21 +1328,24 @@ def _pruned_topk(spark: SparkSession, index: InvertedIndex, req: _Request,
     VERDICT weak #1). Three tiers, picked by measured candidate size:
 
       GATHERED — the query's candidate blocks are coordinator-sized
-        (≤ ``_PRUNED_LOCAL_BLOCKS_MAX`` rows; both bench tiers, and any
-        tail/torso query at scale): ONE metadata job (per-range bounds +
-        block counts) + ONE Arrow fetch of the still-encoded blocks, then
-        the SAME block-max kernel the warm serving path runs executes on
-        the driver (``_run_local``, shared with the served driver tier) —
-        global WAND: ranges visited in descending bound order, θ from the
-        best ranges' exact scores, block-level BMW refinement
-        (``fine_rows_map``), remaining ranges skipped. This is what a
-        search engine's query coordinator does once candidates are pruned
-        to driver size.
-      DISTRIBUTED — candidate blocks too big to gather (head terms):
-        driver-side bounds (still ≤ ``_PRUNED_DRIVER_RANGES_MAX`` rows of
-        metadata) pick ``_SEED_RANGES`` seed ranges; a distributed seed
-        job sets θ; the survivors run the kernel re-sharded by range_id
-        (doc-complete tasks), survivor ids pushed down as plain filters.
+        (≤ ``_PRUNED_LOCAL_BLOCKS_MAX`` rows and
+        ``_PRUNED_LOCAL_BYTES_MAX`` encoded bytes; both bench tiers, and
+        any tail/torso query at scale): the still-encoded blocks are read
+        straight from the postings Parquet on the driver
+        (``_gather_blocks``, bucket- and term-pruned, stopping as soon as
+        a budget is exceeded), then the SAME block-max kernel the warm
+        serving path runs executes there (``_run_local``, shared with the
+        served driver tier) — global WAND: ranges visited in descending
+        bound order, θ from the best ranges' exact scores, block-level
+        BMW refinement (``fine_rows_map``), remaining ranges skipped.
+        Zero Spark jobs. This is what a search engine's query coordinator
+        does once candidates are pruned to driver size.
+      DISTRIBUTED — candidate blocks over a gather budget (head terms):
+        a range-bounds aggregate collects driver-side bounds (still ≤
+        ``_PRUNED_DRIVER_RANGES_MAX`` rows of metadata) that pick
+        ``_SEED_RANGES`` seed ranges; a distributed seed job sets θ; the
+        survivors run the kernel re-sharded by range_id (doc-complete
+        tasks), survivor ids pushed down as plain filters.
       LAZY — even the range metadata exceeds the driver envelope (10^8
         ranges at 10^12 docs): the range bounds stay cached on the
         executors, the seed ranges are their top ``_SEED_RANGES`` and
@@ -1334,28 +1371,30 @@ def _pruned_topk(spark: SparkSession, index: InvertedIndex, req: _Request,
     # contribution incl. query multiplicity); scoring uses single-idf
     # partials folded in query-token order (see _fold_scores_batch)
     weights = {t: req.idf[t] * qtf[t] for t in req.idf}
+    if n_ranges <= _PRUNED_DRIVER_RANGES_MAX:
+        pdf = _gather_blocks(index, sorted(weights), req.stats)
+        if pdf is not None:
+            if not len(pdf):
+                return req.answer("empty", local_result(spark))
+            if req.stats is not None:
+                req.stats["touched_ranges"] = int(pdf["range_id"].nunique())
+            return req.answer("gathered", _run_local(
+                spark, req.kernel(index, fine_prune=True), pdf))
     blocks = _query_blocks(spark, index, sorted(weights)).select(
-        "term", "range_id", "n", "first_doc_id", "last_doc_id", "max_tf",
-        "min_dl", "doc_bytes", "tf_bytes", "dl_bytes")
-    # Per-range upper bound: Σ_t max over t's blocks in the range (+ the
-    # range's candidate-block count, which picks the tier).
+        *_KERNEL_COLS)
+    # Per-range upper bound: Σ_t max over t's blocks in the range.
     range_bounds = (blocks.withColumn("ub",
                                       _block_upper_bound_col(weights, index))
                     .groupBy("range_id", "term")
-                    .agg(F.max("ub").alias("tub"),
-                         F.count("*").alias("nb"))
+                    .agg(F.max("ub").alias("tub"))
                     .groupBy("range_id")
-                    .agg(F.sum("tub").alias("range_ub"),
-                         F.sum("nb").alias("n_blocks")))
+                    .agg(F.sum("tub").alias("range_ub")))
     if n_ranges <= _PRUNED_DRIVER_RANGES_MAX:
         rb_rows = range_bounds.collect()
         if not rb_rows:
             return req.answer("empty", local_result(spark))
         if req.stats is not None:
             req.stats["touched_ranges"] = len(rb_rows)
-        if sum(r["n_blocks"] for r in rb_rows) <= _PRUNED_LOCAL_BLOCKS_MAX:
-            return req.answer("gathered", _run_local(
-                spark, req.kernel(index, fine_prune=True), blocks.toPandas()))
         order = sorted(rb_rows, key=lambda r: (-r["range_ub"], r["range_id"]))
         seed = [r["range_id"] for r in order[:_SEED_RANGES]]
 
@@ -1399,7 +1438,9 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     tier instead when the corpus has fewer than ``min_ranges_to_prune``
     doc-ranges (pruning's extra jobs only pay off at scale — a head term
     at 10^12 docs touches ~10^8 ranges) or a filter/exclude set exceeds
-    ``_MASK_IDS_MAX`` ids.
+    ``_MASK_IDS_MAX`` ids. On a never-warmed index, a request the
+    gathered tier answers runs no Spark job: idf and the candidate
+    blocks are read straight from Parquet on the driver.
 
     ``filter_docs``, ``min_match``, ``exclude_docs`` and ``after`` have
     the exact route's contract; they are applied inside the θ seeding
@@ -1407,8 +1448,10 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     ``_pruned_topk`` for the rank-safety argument).
 
     Pass a dict as ``stats`` to receive the ``tier`` taken,
-    ``pruning_engaged``, the ``decoded_blocks`` accumulator and, on the
-    gathered and distributed tiers, ``touched_ranges``."""
+    ``pruning_engaged``, the ``decoded_blocks`` accumulator, on the
+    gathered and distributed tiers ``touched_ranges``, and, whenever the
+    gather was tried, ``gathered_rows`` and ``gathered_bytes`` (the block
+    rows and encoded bytes read before it finished or stopped)."""
     return _topk(spark, index, _request(
         spark, index, [query], k, min_match, filter_docs, exclude_docs,
         after=after, stats=stats), "pruned",

@@ -31,7 +31,8 @@ Scale analysis (the part that matters at 10^12 docs):
     caller hands the document TEXT (a doc_id point-read with parquet
     predicate pushdown — O(1) row groups); term selection is a
     driver-side tf·idf top-m over the doc's own K1 tokens with idf from
-    the warm cache or one bucket-pruned lookup.
+    the warm cache or a driver-side term_stats read (``query_term_idf``,
+    no Spark job).
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize_k1_py
 from ..index.build import TERM_STATS, InvertedIndex
-from .bm25 import _term_stats_pruned, bm25_topk_exact, local_result
+from .bm25 import bm25_topk_exact, local_result, query_term_idf
 
 TERM_DICT = "term_dict"
 # upper bound for a term-range prefix predicate: no indexed term contains
@@ -141,11 +142,7 @@ def mlt_terms(spark: SparkSession, index: InvertedIndex, text: str,
     tf = Counter(tokenize_k1_py(text))
     if not tf:
         return []
-    idf_map = index.idf_lookup()
-    if idf_map is None:
-        rows = _term_stats_pruned(spark, index, sorted(tf)) \
-            .select("term", "idf").collect()
-        idf_map = {r["term"]: r["idf"] for r in rows}
+    idf_map = query_term_idf(spark, index, sorted(tf))
     scored = [(t, tf[t] * idf_map[t]) for t in tf if t in idf_map]
     scored.sort(key=lambda x: (-x[1], x[0]))
     return [t for t, _ in scored[:max_terms]]
@@ -208,20 +205,15 @@ def suggest_corrections(spark: SparkSession, index: InvertedIndex,
     "corrected" (the Elasticsearch `suggest` missing-mode contract).
     Returns [{pos, token, suggestion}] in query order.
 
-    Cost: one driver idf-cache lookup (or one bucket-pruned stats job)
-    to split known/unknown, then ONE bounded dictionary scan per
+    Cost: one driver-side term lookup (``query_term_idf``: the warm idf
+    cache or a term_stats read, no job) to split known/unknown, then ONE
+    bounded dictionary scan per
     distinct unknown token — query-sized, never corpus-sized."""
     from ..functions.tokenize import tokenize_k2_py
     toks = tokenize_k2_py(query)
     if not toks:
         return []
-    idf_map = index.idf_lookup()
-    if idf_map is not None:
-        known = {t for t in set(toks) if t in idf_map}
-    else:
-        rows = _term_stats_pruned(spark, index, sorted(set(toks))) \
-            .select("term").collect()
-        known = {r["term"] for r in rows}
+    known = set(query_term_idf(spark, index, sorted(set(toks))))
     cache: dict[str, str | None] = {}
     out = []
     for pos, tok in enumerate(toks):

@@ -213,10 +213,11 @@ def bm25_scores_batch(spark: SparkSession, index: InvertedIndex,
     a single plan over the pruned posting blocks, per-(query, term)
     weights closure-captured in the decode kernel (r7: the former
     weights broadcast join cost ~1.4 s of BroadcastExchange per call;
-    warm indexes resolve idf from the driver cache with zero jobs, cold
-    ones with one bucket-pruned lookup). Per-(query, doc) scores fold the
-    query's token SEQUENCE over the per-term partials — BM25Okapi's
-    exact float addition order (bm25.py::_fold_scores_batch)."""
+    idf comes from the warm driver cache or, cold, from a driver-side
+    term_stats read — zero jobs either way). Per-(query, doc) scores
+    fold the query's token SEQUENCE over the per-term partials —
+    BM25Okapi's exact float addition order
+    (bm25.py::_fold_scores_batch)."""
     req = _request(spark, index, queries, None)
     return _cold_scores_batch(spark, index, req, frozenset()) \
         .withColumnRenamed("score", "_bm25_raw")

@@ -15,6 +15,12 @@ tied exact ≡ the BM25Okapi-formula numpy oracle at 800k docs; this
 script ties every engine path to exact at the same scale, so the whole
 family stays anchored to the oracle.
 
+For each golden query it also prints what the gathered tier read on the
+driver: the block rows and encoded bytes it gathered (``stats``
+``gathered_rows`` / ``gathered_bytes``), and the postings Parquet row
+groups its bucket + term filter keeps, with their compressed bytes in
+the columns read.
+
 Usage: python scripts/at_scale_identity.py [n_docs] (default 800000)
 Prints one JSON line: {"n_docs":..., "paths":..., "bitwise_ok":...}
 The corpus and index go to a fresh ``tempfile.mkdtemp()`` directory
@@ -43,12 +49,14 @@ def main() -> None:
 
     from review_recommender_spark.config import EngineConfig, bm25_north
     from review_recommender_spark.corpus.pages import GOLDEN_PHRASES, pages_df
-    from review_recommender_spark.index.build import build_index
+    from review_recommender_spark.index.build import (POSTINGS, build_index,
+                                                      term_filter)
     from review_recommender_spark.index.tableio import TableIO
     from review_recommender_spark.query import bm25
     from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                      bm25_topk_pruned,
-                                                     bm25_topk_served)
+                                                     bm25_topk_served,
+                                                     query_term_idf)
     from review_recommender_spark.query.search import bm25_scores_batch_served
     from review_recommender_spark.session import get_spark
 
@@ -61,6 +69,25 @@ def main() -> None:
             yield
         finally:
             setattr(bm25, name, old)
+
+    def row_groups_read(idx, terms):
+        """(row groups, compressed bytes of the gathered columns) that
+        the gathered tier's filter keeps in the postings Parquet."""
+        import pyarrow.dataset as pa_ds
+        flt = term_filter(terms, idx.cfg.index.term_buckets)
+        ds = pa_ds.dataset(idx.io.path(POSTINGS), format="parquet",
+                           partitioning="hive")
+        groups = nbytes = 0
+        for frag in ds.get_fragments(filter=flt):
+            md = frag.metadata
+            cols = [j for j in range(md.num_columns)
+                    if md.schema.column(j).name in bm25._KERNEL_COLS]
+            for part in frag.split_by_row_group(flt, schema=ds.schema):
+                for rg in part.row_groups:
+                    groups += 1
+                    nbytes += sum(md.row_group(rg.id).column(j)
+                                  .total_compressed_size for j in cols)
+        return groups, nbytes
 
     # every full warm below keeps the driver copy, so the served driver
     # tier is checked at this scale too; executor-tier calls force 0
@@ -94,11 +121,19 @@ def main() -> None:
         for qi, q in enumerate(GOLDEN_PHRASES):
             exact = [(r["doc_id"], r["score"]) for r in
                      bm25_topk_exact(spark, idx, q, k=k).collect()]
-            def pruned_rows():
+            def pruned_rows(stats=None):
                 return [(r["doc_id"], r["score"]) for r in
-                        bm25_topk_pruned(spark, idx, q, k=k,
+                        bm25_topk_pruned(spark, idx, q, k=k, stats=stats,
                                          min_ranges_to_prune=1).collect()]
-            pruned = pruned_rows()
+            gathered: dict = {}
+            pruned = pruned_rows(gathered)
+            groups, group_bytes = row_groups_read(
+                idx, sorted(query_term_idf(spark, idx, q)))
+            print(f"q{qi}: tier={gathered.get('tier')} "
+                  f"gathered_rows={gathered.get('gathered_rows')} "
+                  f"gathered_bytes={gathered.get('gathered_bytes')} "
+                  f"row_groups={groups} row_group_bytes={group_bytes}",
+                  flush=True)
             with forced("_PRUNED_LOCAL_BLOCKS_MAX", 0):
                 pruned_dist = pruned_rows()
             with forced("_PRUNED_DRIVER_RANGES_MAX", 0):

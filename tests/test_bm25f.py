@@ -196,3 +196,25 @@ def test_dismax_guards(spark, fielded):
         dismax_topk(spark, [Bm25fField(idxs[0])], Q, tie_breaker=1.5)
     with pytest.raises(ValueError, match="at least one"):
         dismax_topk(spark, [], Q)
+
+
+def test_index_tables_read_with_their_written_schema(spark, small_index,
+                                                     fielded, small_pages,
+                                                     tmp_path):
+    """``InvertedIndex.postings()`` and ``term_stats()`` read with a
+    known schema instead of inferring one; it must equal what Spark
+    infers from the files, column order included, for a built index, a
+    delta-merged index and each bm25f field index."""
+    from review_recommender_spark.index.build import (POSTINGS, TERM_STATS,
+                                                      delta_merge_index)
+    delta = small_pages.filter(F.col("doc_id") < 40) \
+        .withColumn("doc_id", F.col("doc_id") + 1000)
+    merged = delta_merge_index(spark, small_index, delta,
+                               TableIO(str(tmp_path / "merged")))
+    field_indexes, _ = fielded
+    for idx in [small_index, merged] + list(field_indexes):
+        for name, df in ((POSTINGS, idx.postings(spark)),
+                         (TERM_STATS, idx.term_stats(spark))):
+            inferred = spark.read.parquet(idx.io.path(name)).schema
+            assert df.schema == inferred, (idx.io.root, name)
+            assert df.columns == [f.name for f in inferred.fields]

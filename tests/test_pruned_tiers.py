@@ -1,8 +1,10 @@
 """The pruned tests, re-run on the DISTRIBUTED and LAZY tiers.
 
 Every test corpus is small enough that ``bm25_topk_pruned`` takes its
-gathered tier: the candidate blocks fit ``_PRUNED_LOCAL_BLOCKS_MAX`` and
-the touched ranges fit ``_PRUNED_DRIVER_RANGES_MAX``. Here one of the
+gathered tier: the candidate blocks fit ``_PRUNED_LOCAL_BLOCKS_MAX`` (and
+``_PRUNED_LOCAL_BYTES_MAX``, whose forced fallback
+tests/test_serving_tiers.py checks) and the touched ranges fit
+``_PRUNED_DRIVER_RANGES_MAX``. Here one of the
 two budgets is forced to 0 around each test, so the same assertions run
 on the distributed tier (driver-side range bounds, a seed job, then the
 survivor kernel over ``isin``-selected ranges) and on the lazy tier

@@ -8,8 +8,13 @@ back as a LocalRelation — zero Spark jobs. Partial warms and layouts
 over budget answer on the EXECUTOR tier (one map stage over the cached
 shards). Bitwise identity of the two tiers is gated by the served tests
 themselves, which run once per tier (tests/test_served_executor_tier.py
-re-runs them with the budget forced to 0)."""
+re-runs them with the budget forced to 0).
 
+The gathered pruned tier answers on the driver the same way: on a
+never-warmed index its idf and candidate blocks are read straight from
+Parquet, so it runs zero Spark jobs too."""
+
+import pytest
 from pyspark.sql import functions as F
 
 from review_recommender_spark.query import bm25
@@ -194,3 +199,74 @@ def test_planner_names_the_tier_taken(spark, small_index, small_pages,
                    min_ranges_to_prune=1) == "gathered"
     assert tier_of(bm25_topk_pruned) == "exact"
     assert tier_of(bm25_topk_exact) == "exact"
+
+
+def test_cold_gathered_request_runs_no_spark_job(spark, small_index):
+    """On a never-warmed handle, a pruned request the gathered tier
+    answers runs 0 Spark jobs from the call through the collect: idf and
+    the candidate blocks are read straight from Parquet on the driver.
+    ``query_term_idf`` runs 0 jobs too, and returns the term_stats
+    values. The rows are the exact rows."""
+    from review_recommender_spark.index.build import InvertedIndex
+    cold = InvertedIndex.load(spark, small_index.io, small_index.cfg)
+    idf_table = {r["term"]: r["idf"] for r in
+                 small_index.term_stats(spark).select("term", "idf")
+                 .collect()}
+    for i, q in enumerate(QUERIES + ["zzznope"]):
+        stats: dict = {}
+        got, n_jobs = _jobs_in_group(
+            spark, f"cold-gathered-{i}",
+            lambda: _pairs(bm25_topk_pruned(spark, cold, q, k=10,
+                                            stats=stats,
+                                            min_ranges_to_prune=1)))
+        assert n_jobs == 0, (q, n_jobs)
+        assert got == _pairs(bm25_topk_exact(spark, small_index, q, k=10))
+        idf, n_jobs = _jobs_in_group(
+            spark, f"cold-idf-{i}",
+            lambda: bm25.query_term_idf(spark, cold, q))
+        assert n_jobs == 0, (q, n_jobs)
+        assert idf == {t: idf_table[t] for t in bm25._qtf(q)
+                       if t in idf_table}, q
+        if idf:
+            assert stats["tier"] == "gathered", q
+            assert 0 < stats["gathered_rows"] <= bm25._PRUNED_LOCAL_BLOCKS_MAX
+            assert 0 < stats["gathered_bytes"] <= bm25._PRUNED_LOCAL_BYTES_MAX
+    assert cold.idf_lookup() is None
+
+
+@pytest.mark.parametrize("budget", ["_PRUNED_LOCAL_BLOCKS_MAX",
+                                    "_PRUNED_LOCAL_BYTES_MAX"])
+def test_each_gather_budget_falls_back_to_distributed(spark, small_index,
+                                                      monkeypatch, budget):
+    """Either gather budget alone — block rows or encoded bytes — sends a
+    pruned request over it to the distributed tier, with the exact rows;
+    the stats record what the gather read before it stopped."""
+    monkeypatch.setattr(bm25, budget, 0)
+    for q in QUERIES[:2]:
+        stats: dict = {}
+        got = _pairs(bm25_topk_pruned(spark, small_index, q, k=10,
+                                      stats=stats, min_ranges_to_prune=1))
+        assert stats["tier"] == "distributed", (q, stats["tier"])
+        assert stats["gathered_rows"] > 0 and stats["gathered_bytes"] > 0
+        assert got == _pairs(bm25_topk_exact(spark, small_index, q, k=10))
+
+
+def test_gathered_kernel_ignores_row_order(spark, small_index):
+    """The gathered tier's kernel gives bitwise-equal rows over the
+    gathered block frame and over seeded permutations of its rows (the
+    driver-side Parquet read fixes no row order)."""
+    for q in QUERIES:
+        req = bm25._request(spark, small_index, [q], 10)
+        pdf = bm25._gather_blocks(small_index, sorted(req.idf), None)
+        assert len(pdf)
+
+        def run(frame):
+            return _pairs(bm25._run_local(
+                spark, req.kernel(small_index, fine_prune=True), frame))
+
+        want = run(pdf)
+        assert want == _pairs(bm25_topk_exact(spark, small_index, q, k=10))
+        for seed in (0, 1, 2):
+            shuffled = pdf.sample(frac=1.0, random_state=seed) \
+                .reset_index(drop=True)
+            assert run(shuffled) == want, (q, seed)

@@ -93,6 +93,7 @@ CORPUS_STATS = "corpus_stats"
 TERM_STATS = "term_stats"
 POSTINGS = "postings"
 POSITIONS = "positions"
+BM25F_STATS = "bm25f_stats"   # query/bm25f.py's fielded idf table
 
 
 def term_bucket_py(term: str, n_buckets: int) -> int:
@@ -210,12 +211,17 @@ TERM_STATS_SCHEMA = "term string, df long, idf_raw double, idf double"
 # term_bucket partition column, as ``spark.read.parquet`` infers them.
 # Passing it skips Spark's schema-inference job on every read.
 _READ_SCHEMAS = {POSTINGS: BLOCK_SCHEMA + ", term_bucket int",
-                 TERM_STATS: TERM_STATS_SCHEMA + ", term_bucket int"}
+                 TERM_STATS: TERM_STATS_SCHEMA + ", term_bucket int",
+                 POSITIONS: POSITIONS_BLOCKS.block_schema
+                 + ", term_bucket int",
+                 # okapi_idf rows, bucketed like term_stats
+                 BM25F_STATS: TERM_STATS_SCHEMA + ", term_bucket int"}
 
 
 def read_bucketed(spark: SparkSession, io: TableIO, name: str) -> DataFrame:
-    """The term-bucketed table ``name`` (POSTINGS or TERM_STATS) as a
-    DataFrame read with its known schema — no inference job."""
+    """The term-bucketed table ``name`` (POSTINGS, TERM_STATS, POSITIONS
+    or BM25F_STATS) as a DataFrame read with its known schema — no
+    inference job."""
     return spark.read.schema(_READ_SCHEMAS[name]).parquet(io.path(name))
 
 
@@ -787,7 +793,10 @@ class InvertedIndex:
     @classmethod
     def load(cls, spark: SparkSession, io: TableIO,
              cfg: EngineConfig) -> "InvertedIndex":
-        row = io.read(spark, CORPUS_STATS).collect()[0]
+        # the one row _write_stats_tables wrote with pyarrow, read back
+        # the same way: no Spark job
+        import pyarrow.parquet as pq
+        row = pq.read_table(io.path(CORPUS_STATS)).to_pylist()[0]
         return cls(io=io, cfg=cfg, n_docs=row["n_docs"], avgdl=row["avgdl"],
                    vocab_size=row["vocab_size"])
 

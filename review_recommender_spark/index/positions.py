@@ -49,7 +49,8 @@ from ..config import EngineConfig
 from ..functions.tokenize import tokenize_k1_py
 from ..query.bm25 import local_result
 from .build import (LOCAL_TF, POSITIONS, POSITIONS_BLOCKS, InvertedIndex,
-                    _stage_c_blocks, _write_blocks, term_bucket_py)
+                    _stage_c_blocks, _write_blocks, read_bucketed,
+                    term_bucket_py)
 from .codec import decode_blocks_bulk
 from .tableio import TableIO
 
@@ -124,7 +125,7 @@ def positions_blocks(spark: SparkSession, index: InvertedIndex,
     if doc_span is not None:
         cond = (cond & (F.col("first_doc_id") <= int(doc_span[1]))
                 & (F.col("last_doc_id") >= int(doc_span[0])))
-    return (index.io.read(spark, POSITIONS).filter(cond)
+    return (read_bucketed(spark, index.io, POSITIONS).filter(cond)
             .select(*_KERNEL_COLS).repartition("range_id"))
 
 
@@ -167,7 +168,7 @@ def warm_positions(spark: SparkSession, index: InvertedIndex,
     if serving_shards is None:
         # one shard per executor slot, as for the postings layout
         serving_shards = spark.sparkContext.defaultParallelism
-    df = (index.io.read(spark, POSITIONS)
+    df = (read_bucketed(spark, index.io, POSITIONS)
           .select(*_KERNEL_COLS)
           .repartition(serving_shards, "range_id")
           .cache())

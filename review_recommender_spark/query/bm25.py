@@ -12,12 +12,21 @@ tests/test_degenerate.py), and the planner names the tier it took in
 
   empty       : no known query term, ``k=0``, or a filter that admits no
                 document — no rows, no scoring job.
+  exact_gathered : the ``exact`` route (and a pruned request on fewer
+                than ``min_ranges_to_prune`` ranges) when the query
+                terms' blocks fit the gather budgets below and no
+                ``boost_docs`` is given — the exact plan carried out on
+                the driver over the blocks read straight from the
+                postings Parquet (``_exact_gathered``): the plan's own
+                per-posting map, the token-order fold, min_match, masks,
+                cursor and top-k in numpy. Zero Spark jobs without
+                filter/exclude sets; no block is skipped.
   exact       : ``_exact_topk`` — one Spark action over the bucket- and
                 term-pruned posting blocks, kept as the engine's
-                independent JVM reference. The ``exact`` route; also a
-                pruned request on fewer than ``min_ranges_to_prune``
-                ranges, and any request whose filter/exclude set exceeds
-                ``_MASK_IDS_MAX`` ids (the kernel's masks would not fit).
+                independent JVM reference. Those requests over a gather
+                budget or with ``boost_docs``, and any request whose
+                filter/exclude set exceeds ``_MASK_IDS_MAX`` ids (the
+                masks would not fit).
   driver      : served, full warm within ``_DRIVER_SERVING_BYTES_MAX`` —
                 the kernel in-process over the driver copy of the serving
                 layout, zero Spark jobs.
@@ -54,11 +63,18 @@ Shared by every tier:
   plan    : ``_exact_topk`` — blocks → closure scorer → filter/exclude →
             fold in QUERY TOKEN ORDER (bit-deterministic,
             ``_fold_scores_batch``) → boost → after → top-k. The exact
-            tier and the seed pass of the distributed and lazy tiers.
+            tier and the seed pass of the distributed and lazy tiers;
+            ``exact_gathered`` runs the same steps on the driver, over
+            the same per-posting map (``_posting_partials``).
   kernel  : ``_served_local_topk`` — bulk decode, block-max skipping, the
             request's masks and a running top-k; every served and pruned
             tier runs it (and hybrid's served scores, unskipped and
-            unbounded).
+            unbounded). The exact tiers never do: they are the reference
+            the kernel is checked against.
+  result  : ``local_result`` — every driver-side answer is a
+            driver-resident DataFrame whose ``collect()``/``toPandas()``
+            read its Arrow table in-process (no Py4J round trip); its
+            LocalRelation is built only when something else needs it.
 
 Rank-safety: skipping a range drops whole documents, never a single
 term's contribution, and survivors are scored exactly with the same float
@@ -72,12 +88,15 @@ from __future__ import annotations
 
 from collections import Counter
 from dataclasses import dataclass
-from functools import lru_cache
+from functools import cached_property, lru_cache
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import StructType, _create_row
 
 from ..functions.tokenize import tokenize_k2_py
 from ..index.build import POSTINGS, TERM_STATS, InvertedIndex, term_bucket_py
@@ -131,26 +150,74 @@ _DRIVER_SERVING_BYTES_MAX = 64 << 20
 QueryLike = "str | list[str] | tuple[str, ...]"
 
 
+class _DriverResult(ClassicDataFrame):
+    """A driver-resident result (``local_result``): its rows live in an
+    Arrow table on the driver. ``collect()`` and ``toPandas()`` answer
+    from that table — the same Rows, Python values and pandas dtypes the
+    JVM relation gives — with no Py4J round trip. Everything else (joins,
+    unions, ``count``, ``explain``, plan inspection) goes through
+    ``_jdf``, which builds the LocalRelation (``spark.createDataFrame``
+    of the table) the first time something reads it."""
+
+    def __new__(cls, *args):
+        # the classic DataFrame's __new__ runs __init__(jdf, session)
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table):
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._table = table
+        self._relation = None
+
+    @cached_property
+    def schema(self) -> StructType:
+        # derived from the table as createDataFrame derives it
+        from pyspark.sql.pandas.types import from_arrow_schema
+        return from_arrow_schema(self._table.schema)
+
+    @property
+    def _jdf(self):
+        if self._relation is None:
+            self._relation = self._session.createDataFrame(self._table)._jdf
+        return self._relation
+
+    def collect(self) -> list[Row]:
+        names = self.schema.names
+        return [_create_row(names, values) for values in
+                zip(*(c.to_pylist() for c in self._table.columns))]
+
+    def _collect_as_arrow(self, split_batches: bool = False,
+                          empty_list_if_zero_records: bool = True) -> list:
+        # toPandas()/toArrow() convert these batches exactly as they
+        # convert the ones the JVM streams back (which never include an
+        # empty batch)
+        batches = [b for b in self._table.to_batches() if b.num_rows]
+        if batches or empty_list_if_zero_records:
+            return batches
+        return [pa.RecordBatch.from_pylist([], schema=self._table.schema)]
+
+
 def local_result(spark: SparkSession, *columns,
                  schema: str = RESULT_SCHEMA) -> DataFrame:
     """A driver-side result — one sequence per field of the DDL
     ``schema`` (default (doc_id, score)), or none for an empty result —
-    as a DataFrame planned as a LocalRelation: an Arrow table becomes one
-    even when empty, so collecting the result runs no Spark job.
-    ``createDataFrame`` from a list or an empty pandas frame plans a
-    LogicalRDD instead, whose collect runs a Python stage (~0.3 s, plus
-    a second Python worker pool on first use)."""
-    import pyarrow as pa
+    as a driver-resident DataFrame (``_DriverResult``): ``collect()`` and
+    ``toPandas()`` read its Arrow table in-process, and any other use
+    plans it as a LocalRelation, so no read of the result runs a Spark
+    job. ``createDataFrame`` from a list or an empty pandas frame plans
+    a LogicalRDD instead, whose collect runs a Python stage (~0.3 s,
+    plus a second Python worker pool on first use)."""
     arrow = _arrow_schema(schema)
-    return spark.createDataFrame(pa.table(
+    return _DriverResult(spark, pa.table(
         [pa.array(c, f.type) for c, f in
          zip(columns or [()] * len(arrow), arrow)], schema=arrow))
 
 
 @lru_cache(maxsize=None)
-def _arrow_schema(ddl: str) -> "pa.Schema":  # noqa: F821
+def _arrow_schema(ddl: str) -> pa.Schema:
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
     return to_arrow_schema(StructType.fromDDL(ddl))
 
 
@@ -252,28 +319,41 @@ def _score_blocks_closure_batch(blocks: DataFrame, index: InvertedIndex,
                 continue
             if acc_blocks is not None:
                 acc_blocks.add(len(pdf))
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            docs, tf, dl = decode_blocks_bulk(
-                ns, pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"])
-            unit = _bm25_unit(tf, dl, k1, b, avgdl)
-            tcodes, tuniq = pd.factorize(pdf["term"].to_numpy())
-            codes = np.repeat(tcodes, ns)
-            for qi, w in enumerate(qws):
-                rows = np.array([t in w for t in tuniq], dtype=bool)[codes]
-                if not rows.any():
-                    continue
-                wts = np.array([w.get(t, 0.0) for t in tuniq])
+            for qi, tuniq, codes, docs, scores in _posting_partials(
+                    pdf, qws, k1, b, avgdl):
                 yield pd.DataFrame({
-                    "query_id": np.full(int(rows.sum()), qi, dtype=np.int32),
-                    "term": tuniq[codes[rows]],
-                    "doc_id": docs[rows],
-                    "score": wts[codes[rows]] * unit[rows]})
+                    "query_id": np.full(len(docs), qi, dtype=np.int32),
+                    "term": tuniq[codes], "doc_id": docs, "score": scores})
 
     return (blocks.select("term", "n", "doc_bytes", "tf_bytes",
                           "dl_bytes")
             .mapInPandas(score,
                          schema="query_id int, term string, "
                                 + RESULT_SCHEMA))
+
+
+def _posting_partials(pdf: pd.DataFrame, qws: list[dict], k1: float,
+                      b: float, avgdl: float):
+    """The exact plan's per-posting map over one frame of block rows:
+    one bulk decode, then for each query qi with a posting here, yield
+    (qi, tuniq, codes, doc_ids, scores) — one entry per posting of one of
+    its terms, the term being ``tuniq[codes]`` and the score its
+    single-occurrence weight × ``_bm25_unit``. The Spark map of
+    ``_score_blocks_closure_batch`` and the driver's ``exact_gathered``
+    tier both run it, so their partials are the same floats."""
+    import numpy as np
+    ns = pdf["n"].to_numpy(dtype=np.int64)
+    docs, tf, dl = decode_blocks_bulk(
+        ns, pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"])
+    unit = _bm25_unit(tf, dl, k1, b, avgdl)
+    tcodes, tuniq = pd.factorize(pdf["term"].to_numpy())
+    codes = np.repeat(tcodes, ns)
+    for qi, w in enumerate(qws):
+        rows = np.array([t in w for t in tuniq], dtype=bool)[codes]
+        if not rows.any():
+            continue
+        wts = np.array([w.get(t, 0.0) for t in tuniq])
+        yield qi, tuniq, codes[rows], docs[rows], wts[codes[rows]] * unit[rows]
 
 
 def _apply_after(scored: DataFrame, after) -> DataFrame:
@@ -516,6 +596,43 @@ def _exact_topk(index: InvertedIndex, req: _Request,
             .limit(req.k))
 
 
+def _exact_gathered(spark: SparkSession, index: InvertedIndex,
+                    req: _Request, pdf: pd.DataFrame) -> DataFrame:
+    """The exact plan of a single-query request carried out on the driver
+    over its gathered block rows ``pdf`` (the ``exact_gathered`` tier):
+    every posting scored by the plan's own map (``_posting_partials``),
+    per-doc scores folded in query-token order — each doc gets one
+    addition per token it matches, in the order ``_fold_scores_batch``
+    adds them (an absent term's +0.0 leaves the float unchanged) — then
+    min_match, the filter/exclude masks and ``after``, and the top-k in
+    (score DESC, doc_id ASC) order. Zero Spark jobs; no block is
+    skipped."""
+    import numpy as np
+    if req.acc_decoded is not None:
+        req.acc_decoded.add(len(pdf))
+    part = next(_posting_partials(pdf, [req.idf], index.cfg.bm25.k1,
+                                  index.cfg.bm25.b, index.avgdl), None)
+    if part is None:
+        return local_result(spark)
+    _, tuniq, codes, docs, scores = part
+    uniq, slot = np.unique(docs, return_inverse=True)
+    totals = np.zeros(len(uniq))
+    code_of = {t: c for c, t in enumerate(tuniq)}
+    for tok in req.token_seq:
+        if tok in code_of:
+            # a doc holds a term at most once: no repeated slot here
+            hit = codes == code_of[tok]
+            totals[slot[hit]] += scores[hit]
+    if req.min_matches[0] > 1:
+        # one partial per (doc, term): the count is the distinct matches
+        keep = np.bincount(slot, minlength=len(uniq)) >= req.min_matches[0]
+        uniq, totals = uniq[keep], totals[keep]
+    uniq, totals = _apply_masks(uniq, totals, req.allowed, req.blocked,
+                                req.after)
+    top = np.lexsort((uniq, -totals))[:req.k]
+    return local_result(spark, uniq[top], totals[top])
+
+
 def _cold_scores_batch(spark: SparkSession, index: InvertedIndex,
                        req: _Request, warm_ranges: frozenset) -> DataFrame:
     """Exact per-(query_id, doc_id) scores of ``req`` over posting blocks
@@ -665,7 +782,15 @@ def bm25_topk_exact(spark: SparkSession, index: InvertedIndex, query,
                     exclude_docs: DataFrame | None = None,
                     boost_docs: DataFrame | None = None,
                     after: tuple[float, int] | None = None) -> DataFrame:
-    """Exact BM25 top-k in one action. ``filter_docs`` (optional DataFrame
+    """Exact BM25 top-k, with no block skipped. When the query terms'
+    blocks fit the gather budgets (``_PRUNED_LOCAL_BLOCKS_MAX`` rows,
+    ``_PRUNED_LOCAL_BYTES_MAX`` encoded bytes) and no ``boost_docs`` is
+    given, the ``exact_gathered`` tier reads them from Parquet and runs
+    the exact plan on the driver — zero Spark jobs without
+    ``filter_docs``/``exclude_docs`` (one JVM-only collect each) — and
+    returns a driver-resident result; otherwise the plan is one Spark
+    action (``_exact_topk``). Both tiers give the same rows, bit for
+    bit. ``filter_docs`` (optional DataFrame
     with a ``doc_id`` column) restricts ranking to those documents —
     applied BEFORE top-k selection (see ``_apply_doc_filter``), so the
     result is the true top-k of the filtered corpus, scored identically
@@ -688,7 +813,9 @@ def bm25_topk_exact(spark: SparkSession, index: InvertedIndex, query,
     last (UNROUNDED score, doc_id).
 
     Pass a dict as ``stats`` to receive the ``decoded_blocks``
-    accumulator and the ``tier`` taken (``exact`` or ``empty``)."""
+    accumulator, the ``tier`` taken (``exact_gathered``, ``exact`` or
+    ``empty``) and, whenever the gather was tried, ``gathered_rows`` and
+    ``gathered_bytes``."""
     # weights ride the task closure (warm: driver idf cache; cold: a
     # driver-side term_stats read — zero jobs either way) — the r6 plan
     # broadcast-joined a weights relation instead, whose
@@ -913,28 +1040,6 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
             return {t: ix[kp] for (t, ix), kp in zip(parts,
                                                      np.split(keep, cuts))}
 
-        def member(ids, uniq):
-            """uniq's membership in the sorted unique id array ``ids``."""
-            if not len(ids):
-                return np.zeros(len(uniq), dtype=bool)
-            pos = np.searchsorted(ids, uniq)
-            pos[pos >= len(ids)] = 0
-            return ids[pos] == uniq
-
-        def apply_masks(uniq, totals):
-            if allowed is not None:
-                keep = member(allowed, uniq)
-                uniq, totals = uniq[keep], totals[keep]
-            if blocked is not None:
-                keep = ~member(blocked, uniq)
-                uniq, totals = uniq[keep], totals[keep]
-            if after is not None and len(uniq):
-                s_a, d_a = after
-                keep = (totals < s_a) | ((totals == s_a)
-                                         & (uniq > d_a))
-                uniq, totals = uniq[keep], totals[keep]
-            return uniq, totals
-
         for qi, seq in enumerate(token_seqs):
             qtf = Counter(t for t in seq if t in idf_map)
             # per-range summed bound for THIS query (weight = idf·qtf:
@@ -962,7 +1067,8 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
                 # additions (its own range's blocks, query-token order)
                 # and the (score desc, doc_id asc) selection are
                 # identical to the incremental per-range merge
-                parts = [apply_masks(*accum_range(rid, seq, qtf, mm))
+                parts = [_apply_masks(*accum_range(rid, seq, qtf, mm),
+                                      allowed, blocked, after)
                          for rid in sorted(rb)]
                 run_d = np.concatenate([p[0] for p in parts])
                 run_s = np.concatenate([p[1] for p in parts])
@@ -985,8 +1091,9 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
                     rows_map = (fine_rows_map(rid, qtf, theta)
                                 if fine_prune and theta > float("-inf")
                                 else None)
-                    uniq, totals = apply_masks(
-                        *accum_range(rid, seq, qtf, mm, rows_map))
+                    uniq, totals = _apply_masks(
+                        *accum_range(rid, seq, qtf, mm, rows_map),
+                        allowed, blocked, after)
                     # each doc lives in exactly one range → concat never
                     # duplicates; keep only the running local top-k
                     run_d = np.concatenate([run_d, uniq])
@@ -1005,10 +1112,40 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
     return local_topk
 
 
+def _member(ids, uniq):
+    """``uniq``'s membership in the sorted unique id array ``ids``."""
+    import numpy as np
+    if not len(ids):
+        return np.zeros(len(uniq), dtype=bool)
+    pos = np.searchsorted(ids, uniq)
+    pos[pos >= len(ids)] = 0
+    return ids[pos] == uniq
+
+
+def _apply_masks(uniq, totals, allowed, blocked, after):
+    """Keep the scored docs (``uniq``, ``totals``) that the filter mask
+    ``allowed`` admits, the exclude mask ``blocked`` does not hold, and
+    that come strictly after the ``after`` cursor (each None: no
+    constraint) — the driver-side form of the exact plan's semi/anti
+    joins and ``_apply_after``."""
+    if allowed is not None:
+        keep = _member(allowed, uniq)
+        uniq, totals = uniq[keep], totals[keep]
+    if blocked is not None:
+        keep = ~_member(blocked, uniq)
+        uniq, totals = uniq[keep], totals[keep]
+    if after is not None and len(uniq):
+        s_a, d_a = after
+        keep = (totals < s_a) | ((totals == s_a) & (uniq > d_a))
+        uniq, totals = uniq[keep], totals[keep]
+    return uniq, totals
+
+
 def _run_local(spark: SparkSession, kernel, pdf: pd.DataFrame) -> DataFrame:
     """Run a single-query ``_served_local_topk`` kernel in-process over
     one frame of block rows; its ≤ k rows (already in score DESC,
-    doc_id ASC order) come back as a LocalRelation."""
+    doc_id ASC order) come back as a driver-resident result
+    (``local_result``)."""
     out = next(kernel(iter([pdf])), None)
     if out is None:
         return local_result(spark)
@@ -1039,19 +1176,21 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
     ``route`` (``exact``, ``served`` or ``pruned``) and the index state:
 
       1. no known query term, or k=0 → ``empty``;
-      2. the ``exact`` route; a ``pruned`` request on a corpus of fewer
-         than ``min_ranges_to_prune`` doc-ranges (pruning's extra jobs
-         only pay at scale — a head term at 10^12 docs touches ~10^8
-         ranges); or a filter/exclude set over ``_MASK_IDS_MAX`` ids,
-         which the kernel's sorted-id masks cannot carry → ``exact``,
-         the join-based plan — the honest cost of a non-selective filter
-         at scale;
+      2. a filter/exclude set over ``_MASK_IDS_MAX`` ids, which the
+         sorted-id masks cannot carry, or an ``exact`` request with
+         ``boost_docs`` → ``exact``, the join-based Spark plan — the
+         honest cost of a non-selective filter at scale;
       3. a filter that admits no document → ``empty``;
       4. ``served`` → ``driver`` when a driver copy of the serving
          layout is resident within ``_DRIVER_SERVING_BYTES_MAX``, else
          ``executor`` (warming the index on first use);
-      5. ``pruned`` → ``gathered``, ``distributed`` or ``lazy``, by
-         measured candidate size (``_pruned_topk``).
+      5. ``pruned`` on a corpus of at least ``min_ranges_to_prune``
+         doc-ranges → ``gathered``, ``distributed`` or ``lazy``, by
+         measured candidate size (``_pruned_topk``);
+      6. the ``exact`` route, and a ``pruned`` request on fewer ranges
+         (pruning only pays at scale — a head term at 10^12 docs touches
+         ~10^8 ranges) → ``exact_gathered`` when the query terms' blocks
+         fit the gather budgets (``_gather_blocks``), else ``exact``.
 
     With ``req.stats`` the planner records the ``tier`` taken and
     registers the ``decoded_blocks`` accumulator (plus ``total_blocks``
@@ -1060,27 +1199,33 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
     if req.empty:
         return req.answer("empty", local_result(spark))
     n_ranges = max(1, index.n_docs >> index.cfg.index.range_shift)
-    masked = (route == "served" or route == "pruned"
-              and n_ranges >= min_ranges_to_prune) and req.collect_masks()
+    pruning = route == "served" or (route == "pruned"
+                                    and n_ranges >= min_ranges_to_prune)
+    masked = (pruning or req.boost_docs is None) and req.collect_masks()
     if route == "pruned" and req.stats is not None:
-        req.stats["pruning_engaged"] = masked
+        req.stats["pruning_engaged"] = pruning and masked
     req.track(spark, total=masked and route == "served")
-    if not masked:
-        return req.answer("exact", _exact_topk(
-            index, req, _query_blocks(spark, index, sorted(req.idf))))
-    if req.filtered_out:
+    if masked and req.filtered_out:
         return req.answer("empty", local_result(spark))
-    if route == "pruned":
+    if masked and route == "served":
+        index.serving_df(spark)  # warms on first use
+        # a partial warm never keeps the driver copy (rows is then None)
+        rows = index.serving_rows(sorted(req.idf), _DRIVER_SERVING_BYTES_MAX)
+        if rows is not None:
+            return req.answer("driver", _run_local(
+                spark, req.kernel(index, block_skip), rows))
+        return req.answer("executor", _served_scores(
+            spark, index, req, block_skip).drop("query_id")
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(req.k))
+    if masked and pruning:
         return _pruned_topk(spark, index, req, n_ranges)
-    index.serving_df(spark)  # warms on first use
-    # a partial warm never keeps the driver copy (rows is then None)
-    rows = index.serving_rows(sorted(req.idf), _DRIVER_SERVING_BYTES_MAX)
-    if rows is not None:
-        return req.answer("driver", _run_local(
-            spark, req.kernel(index, block_skip), rows))
-    return req.answer("executor", _served_scores(
-        spark, index, req, block_skip).drop("query_id")
-        .orderBy(F.desc("score"), F.asc("doc_id")).limit(req.k))
+    pdf = _gather_blocks(index, sorted(req.idf), req.stats) if masked \
+        else None
+    if pdf is not None:
+        return req.answer("exact_gathered",
+                          _exact_gathered(spark, index, req, pdf))
+    return req.answer("exact", _exact_topk(
+        index, req, _query_blocks(spark, index, sorted(req.idf))))
 
 
 def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
@@ -1100,9 +1245,11 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
       out by binary search and the block-max kernel
       (``_served_local_topk``) runs in-process over them, as the
       gathered pruned tier does; the ≤ k rows come back as a
-      LocalRelation (``local_result``). Zero Spark jobs unless
+      driver-resident result (``local_result``), whose collect reads
+      them in-process. Zero Spark jobs unless
       ``filter_docs``/``exclude_docs`` are given (one JVM-only collect
-      each). Measured at local[4], 10k docs: ~20 ms a query.
+      each). Measured at local[4], 10k docs: ~5 ms a query, collect
+      included.
     * EXECUTOR tier — over budget, or under a partial warm: postings
       are resident in executor memory re-sharded by ``range_id``, so
       every document's complete postings live in one shard. The query
@@ -1265,7 +1412,7 @@ def _seed_then_survivors(spark: SparkSession, index: InvertedIndex,
     range survives), and merge both on the driver in the engine's exact
     total order (score DESC, doc_id ASC) — ≤ k·(tasks+1) rows, the
     selection TakeOrderedAndProject would make. The ≤ k rows return as a
-    LocalRelation."""
+    driver-resident result (``local_result``)."""
     rows = _exact_topk(
         index, req, blocks.filter(F.col("range_id").isin(seed))).collect()
     theta = (rows[req.k - 1]["score"]
@@ -1297,7 +1444,6 @@ def _gather_blocks(index: InvertedIndex, terms: list[str],
     bytes exceed ``_PRUNED_LOCAL_BYTES_MAX``; then the read stops and
     None says the candidates are not driver-sized. ``stats`` receives the
     rows and bytes read as ``gathered_rows`` and ``gathered_bytes``."""
-    import pyarrow as pa
     import pyarrow.compute as pc
     scanner = index.scan(POSTINGS, terms, _KERNEL_COLS)
     batches, rows, nbytes = [], 0, 0
@@ -1352,8 +1498,8 @@ def _pruned_topk(spark: SparkSession, index: InvertedIndex, req: _Request,
         the survivors a broadcast join — no driver materialization of
         the metadata anywhere.
 
-    Every tier returns its ≤ k rows as a LocalRelation, so the caller's
-    collect runs no further job.
+    Every tier returns its ≤ k rows as a driver-resident result
+    (``local_result``), so the caller's collect runs no further job.
 
     Rank-safety under ``filter_docs``/``exclude_docs``/``min_match``/
     ``after`` requires the constraints INSIDE the θ seeding, not just at

@@ -42,14 +42,12 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..functions.tokenize import tokenize_k2_py
-from ..index.build import (LOCAL_TF, InvertedIndex, okapi_idf,
-                           term_bucket_py, term_bucketed)
+from ..index.build import (BM25F_STATS, LOCAL_TF, InvertedIndex, okapi_idf,
+                           read_bucketed, term_bucket_py, term_bucketed)
 from ..index.codec import decode_blocks_bulk
 from ..index.tableio import TableIO
 from .bm25 import (RESULT_SCHEMA, _fold_scores_batch, _qtf, _query_blocks,
                    local_result)
-
-BM25F_STATS = "bm25f_stats"
 
 
 @dataclass(frozen=True)
@@ -138,7 +136,7 @@ def bm25f_topk(spark: SparkSession, fields: list[Bm25fField],
     cfg0 = fields[0].index.cfg
     buckets = sorted({term_bucket_py(t, cfg0.index.term_buckets)
                       for t in terms})
-    idf = (stats_io.read(spark, BM25F_STATS)
+    idf = (read_bucketed(spark, stats_io, BM25F_STATS)
            .filter(F.col("term_bucket").isin(buckets)
                    & F.col("term").isin(terms))
            .select("term", "idf"))

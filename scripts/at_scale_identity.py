@@ -1,7 +1,11 @@
 """At-scale rank-identity sweep: all golden queries through every BM25
 query path on one large corpus, asserting BITWISE-identical top-k.
 
-Paths: exact (single-action posting join), pruned (forced block-max) in
+Paths: exact on each of its two tiers — exact_gathered (the exact plan
+carried out on the driver over the gathered blocks; the route's tier is
+printed per query, as a query over the gather budgets takes the Spark
+plan) and exact(spark) (the single-action posting join, gather budget
+forced to 0) — pruned (forced block-max) in
 each of its three tiers — gathered (the kernel on the driver over the
 fetched blocks), distributed (seed job + survivor kernel over an isin
 range list, gather budget forced to 0) and lazy (seed job + survivor
@@ -119,8 +123,14 @@ def main() -> None:
         ok = True
         per_query = []
         for qi, q in enumerate(GOLDEN_PHRASES):
+            exact_stats: dict = {}
             exact = [(r["doc_id"], r["score"]) for r in
-                     bm25_topk_exact(spark, idx, q, k=k).collect()]
+                     bm25_topk_exact(spark, idx, q, k=k,
+                                     stats=exact_stats).collect()]
+            with forced("_PRUNED_LOCAL_BLOCKS_MAX", 0):
+                exact_spark = [(r["doc_id"], r["score"]) for r in
+                               bm25_topk_exact(spark, idx, q, k=k).collect()]
+
             def pruned_rows(stats=None):
                 return [(r["doc_id"], r["score"]) for r in
                         bm25_topk_pruned(spark, idx, q, k=k, stats=stats,
@@ -129,7 +139,8 @@ def main() -> None:
             pruned = pruned_rows(gathered)
             groups, group_bytes = row_groups_read(
                 idx, sorted(query_term_idf(spark, idx, q)))
-            print(f"q{qi}: tier={gathered.get('tier')} "
+            print(f"q{qi}: exact tier={exact_stats['tier']} "
+                  f"pruned tier={gathered.get('tier')} "
                   f"gathered_rows={gathered.get('gathered_rows')} "
                   f"gathered_bytes={gathered.get('gathered_bytes')} "
                   f"row_groups={groups} row_group_bytes={group_bytes}",
@@ -146,14 +157,16 @@ def main() -> None:
             with forced("_DRIVER_SERVING_BYTES_MAX", 0):
                 served_ex = [(r["doc_id"], r["score"]) for r in
                              bm25_topk_served(spark, idx, q, k=k).collect()]
-            same = (exact == pruned == pruned_dist == pruned_lazy == served
-                    == served_ns == served_ex == batch_top[qi])
+            same = (exact == exact_spark == pruned == pruned_dist
+                    == pruned_lazy == served == served_ns == served_ex
+                    == batch_top[qi])
             per_query.append(same)
             ok &= same
             print(f"q{qi}: {'BITWISE-IDENTICAL' if same else 'MISMATCH'}",
                   flush=True)
             if not same:
                 print("  exact :", exact)
+                print("  exact(spark):", exact_spark)
                 print("  pruned:", pruned)
                 print("  pruned(distributed):", pruned_dist)
                 print("  pruned(lazy):", pruned_lazy)
@@ -233,9 +246,10 @@ def main() -> None:
         ok &= page_ok
         print(json.dumps({
             "n_docs": n_docs,
-            "paths": ["exact", "pruned(gathered)", "pruned(distributed)",
-                      "pruned(lazy)", "served(block-skip)",
-                      "served(no-skip)", "served(executor)", "served_batch",
+            "paths": ["exact", "exact(spark)", "pruned(gathered)",
+                      "pruned(distributed)", "pruned(lazy)",
+                      "served(block-skip)", "served(no-skip)",
+                      "served(executor)", "served_batch",
                       "served(partial-warm)", "boolean(served-vs-exact)",
                       "paging(cursor-vs-slice)"],
             "queries": len(GOLDEN_PHRASES),

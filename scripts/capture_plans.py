@@ -10,6 +10,7 @@ claims in OPTIMIZATION_r07.md are checkable without running Spark.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import tempfile
@@ -26,6 +27,7 @@ def main() -> None:
                                                        pages_df)
     from review_recommender_spark.index.build import build_index
     from review_recommender_spark.index.tableio import TableIO
+    from review_recommender_spark.query import bm25
     from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                      bm25_topk_pruned,
                                                      bm25_topk_served,
@@ -41,7 +43,6 @@ def main() -> None:
     q = GOLDEN_PHRASES[0]
 
     def dump(name: str, df) -> None:
-        import contextlib
         import io
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -49,6 +50,16 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(buf.getvalue())
         print(f"wrote {name}")
+
+    @contextlib.contextmanager
+    def spark_exact():
+        """Force the exact route onto its Spark plan for the block."""
+        old = bm25._PRUNED_LOCAL_BLOCKS_MAX
+        bm25._PRUNED_LOCAL_BLOCKS_MAX = 0
+        try:
+            yield
+        finally:
+            bm25._PRUNED_LOCAL_BLOCKS_MAX = old
 
     try:
         cfg = EngineConfig(bm25=bm25_north())
@@ -61,13 +72,18 @@ def main() -> None:
         idx = build_index(spark, docs, TableIO(os.path.join(tmp, "idx")),
                           cfg, n_chunks=1)
 
-        dump("bm25_exact_cold", bm25_topk_exact(spark, idx, q, k=10))
+        # the exact route's Spark plan: with the gather budget at 0 it
+        # does not take the exact_gathered tier (a LocalTableScan of
+        # the ≤ k result rows)
+        with spark_exact():
+            dump("bm25_exact_cold", bm25_topk_exact(spark, idx, q, k=10))
         # every pruned tier executes eagerly, so this plan is a local
         # relation holding the ≤ k result rows
         dump("bm25_pruned", bm25_topk_pruned(spark, idx, q, k=10,
                                              min_ranges_to_prune=1))
         idx.warm(spark)
-        dump("bm25_exact_warm", bm25_topk_exact(spark, idx, q, k=10))
+        with spark_exact():
+            dump("bm25_exact_warm", bm25_topk_exact(spark, idx, q, k=10))
         dump("bm25_served", bm25_topk_served(spark, idx, q, k=10))
         dump("bm25_served_batch",
              bm25_topk_served_batch(spark, idx, list(GOLDEN_PHRASES),

@@ -201,20 +201,33 @@ def test_dismax_guards(spark, fielded):
 def test_index_tables_read_with_their_written_schema(spark, small_index,
                                                      fielded, small_pages,
                                                      tmp_path):
-    """``InvertedIndex.postings()`` and ``term_stats()`` read with a
-    known schema instead of inferring one; it must equal what Spark
-    infers from the files, column order included, for a built index, a
-    delta-merged index and each bm25f field index."""
-    from review_recommender_spark.index.build import (POSTINGS, TERM_STATS,
-                                                      delta_merge_index)
+    """``InvertedIndex.postings()`` and ``term_stats()``, and the
+    positions and bm25f stats reads (``read_bucketed``), use a known
+    schema instead of inferring one; it must equal what Spark infers
+    from the files, column order included, for a built index with
+    positions, its delta merge and each bm25f field index, and for the
+    fielded stats table."""
+    from review_recommender_spark.index.build import (BM25F_STATS,
+                                                      POSITIONS, POSTINGS,
+                                                      TERM_STATS,
+                                                      delta_merge_index,
+                                                      read_bucketed)
+    from review_recommender_spark.index.positions import build_positions
+    build_positions(spark, small_index.io, small_index.cfg)
     delta = small_pages.filter(F.col("doc_id") < 40) \
         .withColumn("doc_id", F.col("doc_id") + 1000)
     merged = delta_merge_index(spark, small_index, delta,
                                TableIO(str(tmp_path / "merged")))
-    field_indexes, _ = fielded
+    field_indexes, stats_io = fielded
+    reads = [(stats_io, BM25F_STATS,
+              read_bucketed(spark, stats_io, BM25F_STATS))]
     for idx in [small_index, merged] + list(field_indexes):
-        for name, df in ((POSTINGS, idx.postings(spark)),
-                         (TERM_STATS, idx.term_stats(spark))):
-            inferred = spark.read.parquet(idx.io.path(name)).schema
-            assert df.schema == inferred, (idx.io.root, name)
-            assert df.columns == [f.name for f in inferred.fields]
+        reads += [(idx.io, POSTINGS, idx.postings(spark)),
+                  (idx.io, TERM_STATS, idx.term_stats(spark))]
+    for idx in (small_index, merged):
+        reads.append((idx.io, POSITIONS,
+                      read_bucketed(spark, idx.io, POSITIONS)))
+    for io, name, df in reads:
+        inferred = spark.read.parquet(io.path(name)).schema
+        assert df.schema == inferred, (io.root, name)
+        assert df.columns == [f.name for f in inferred.fields]

@@ -8,6 +8,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import (_query_blocks,
                                                  bm25_topk_exact)
 
@@ -46,9 +47,11 @@ def test_postings_scan_reads_no_dead_columns(spark, small_index):
     assert m and "doc_bytes" not in m.group(1), plan
 
 
-def test_topk_is_take_ordered(spark, small_index):
+def test_topk_is_take_ordered(spark, small_index, monkeypatch):
     """orderBy + limit must plan TakeOrderedAndProject (distributed partial
-    top-k), never a global sort."""
+    top-k), never a global sort. The gather budget is forced to 0 so the
+    exact route runs its Spark plan rather than the exact_gathered tier."""
+    monkeypatch.setattr(bm25, "_PRUNED_LOCAL_BLOCKS_MAX", 0)
     df = bm25_topk_exact(spark, small_index, "wireless sound quality", k=10)
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan, plan

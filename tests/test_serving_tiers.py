@@ -166,8 +166,9 @@ def test_planner_names_the_tier_taken(spark, small_index, small_pages,
     path reaches the tier it claims: the served driver tier; the
     executor tier with ``_DRIVER_SERVING_BYTES_MAX`` at 0; the exact
     tier for a filtered served request with ``_MASK_IDS_MAX`` at 0; the
-    gathered pruned tier; and the exact tier for the exact route and a
-    pruned request below ``min_ranges_to_prune``. The rows are the
+    gathered pruned tier; the exact_gathered tier for the exact route and
+    a pruned request below ``min_ranges_to_prune``, and the exact tier
+    for both with ``_PRUNED_LOCAL_BLOCKS_MAX`` at 0. The rows are the
     exact rows on every tier."""
     q = QUERIES[0]
     fd = small_pages.filter(F.col("lang") == "en").select("doc_id")
@@ -197,8 +198,12 @@ def test_planner_names_the_tier_taken(spark, small_index, small_pages,
     assert tier_of(bm25_topk_pruned, min_ranges_to_prune=1) == "gathered"
     assert tier_of(bm25_topk_pruned, filter_docs=fd,
                    min_ranges_to_prune=1) == "gathered"
-    assert tier_of(bm25_topk_pruned) == "exact"
-    assert tier_of(bm25_topk_exact) == "exact"
+    assert tier_of(bm25_topk_pruned) == "exact_gathered"
+    assert tier_of(bm25_topk_exact) == "exact_gathered"
+    with monkeypatch.context() as m:
+        m.setattr(bm25, "_PRUNED_LOCAL_BLOCKS_MAX", 0)
+        assert tier_of(bm25_topk_pruned) == "exact"
+        assert tier_of(bm25_topk_exact) == "exact"
 
 
 def test_cold_gathered_request_runs_no_spark_job(spark, small_index):
@@ -270,3 +275,104 @@ def test_gathered_kernel_ignores_row_order(spark, small_index):
             shuffled = pdf.sample(frac=1.0, random_state=seed) \
                 .reset_index(drop=True)
             assert run(shuffled) == want, (q, seed)
+
+
+@pytest.fixture(scope="module")
+def negative_idf_index(spark, tmp_path_factory):
+    """test_wand.py's degenerate corpus: 4 terms, each in 3/4 of 960
+    docs with tf 1..3, so every term's fixed-up idf is negative."""
+    import dataclasses
+
+    from review_recommender_spark.config import EngineConfig, bm25_north
+    from review_recommender_spark.index.build import build_index
+    from review_recommender_spark.index.tableio import TableIO
+    rows = []
+    for i in range(960):
+        words = []
+        for j, t in enumerate(["alpha", "beta", "gamma", "delta"]):
+            if (i + j) % 4 != 0:
+                words.extend([t] * (1 + (i * 7 + j) % 3))
+        rows.append((i, " ".join(words)))
+    cfg = EngineConfig(bm25=bm25_north())
+    cfg = dataclasses.replace(cfg, index=dataclasses.replace(
+        cfg.index, range_shift=6, term_buckets=8))
+    idx = build_index(spark, spark.createDataFrame(
+        rows, "doc_id long, text string"),
+        TableIO(str(tmp_path_factory.mktemp("negidf_tiers"))), cfg)
+    assert bm25.query_term_idf(spark, idx, "alpha")["alpha"] < 0
+    return idx
+
+
+def test_exact_gathered_bitwise_equals_spark_exact(
+        spark, small_index, small_pages, negative_idf_index, monkeypatch):
+    """The exact route's two tiers give bitwise-equal rows: the driver's
+    ``exact_gathered`` and the Spark plan (``exact``, forced with
+    ``_PRUNED_LOCAL_BLOCKS_MAX`` at 0), for every query × min_match
+    {None, "all", 2} × {no modifier, filter_docs, exclude_docs, an
+    ``after`` cursor} — repeated query tokens and an index whose every
+    idf is negative included."""
+    docs = small_pages.select("doc_id")
+    neg_docs = spark.range(960).withColumnRenamed("id", "doc_id")
+    cases = [(small_index, docs, QUERIES + ["cable usb cable charging"]),
+             (negative_idf_index, neg_docs,
+              ["alpha beta", "gamma alpha gamma delta"])]
+
+    def rows_and_tier(idx, q, **kw):
+        stats: dict = {}
+        rows = _pairs(bm25_topk_exact(spark, idx, q, k=10, stats=stats, **kw))
+        return rows, stats["tier"]
+
+    n_cases = 0
+    for idx, ids, queries in cases:
+        mods = [{}, {"filter_docs": ids.filter(F.col("doc_id") % 2 == 0)},
+                {"exclude_docs": ids.filter(F.col("doc_id") % 3 == 0)},
+                "after"]
+        for q in queries:
+            for mm in (None, "all", 2):
+                for mod in mods:
+                    if mod == "after":
+                        page = _pairs(bm25_topk_exact(spark, idx, q, k=4,
+                                                      min_match=mm))
+                        if not page:
+                            continue
+                        mod = {"after": (page[-1][1], page[-1][0])}
+                    got, tier = rows_and_tier(idx, q, min_match=mm, **mod)
+                    assert tier == "exact_gathered", (q, mm, mod)
+                    with monkeypatch.context() as m:
+                        m.setattr(bm25, "_PRUNED_LOCAL_BLOCKS_MAX", 0)
+                        want, tier = rows_and_tier(idx, q, min_match=mm,
+                                                   **mod)
+                    assert tier == "exact", (q, mm, mod)
+                    assert got == want, (q, mm, mod)
+                    n_cases += bool(want)
+    assert n_cases >= 40   # most cases have rows: the check is not vacuous
+
+
+def test_exact_without_masks_runs_no_spark_job(spark, small_index):
+    """An exact request with no filter/exclude set — plain, conjunctive
+    or paged — runs 0 Spark jobs from the call through the collect, on
+    the built handle and on a freshly loaded one."""
+    from review_recommender_spark.index.build import InvertedIndex
+    cold = InvertedIndex.load(spark, small_index.io, small_index.cfg)
+    for idx in (small_index, cold):
+        for i, (q, kw) in enumerate(
+                [(q, {}) for q in QUERIES + ["zzznope"]]
+                + [(QUERIES[0], {"min_match": "all"}),
+                   (QUERIES[1], {"after": (1.0, 0)})]):
+            rows, n_jobs = _jobs_in_group(
+                spark, f"exact-no-job-{id(idx)}-{i}",
+                lambda: _pairs(bm25_topk_exact(spark, idx, q, k=10, **kw)))
+            assert n_jobs == 0, (q, kw, n_jobs)
+
+
+def test_load_runs_no_spark_job(spark, small_index):
+    """``InvertedIndex.load`` reads the one-row corpus_stats table on the
+    driver: 0 Spark jobs, and the built handle's corpus statistics."""
+    from review_recommender_spark.index.build import InvertedIndex
+    cold, n_jobs = _jobs_in_group(
+        spark, "load", lambda: InvertedIndex.load(spark, small_index.io,
+                                                  small_index.cfg))
+    assert n_jobs == 0
+    assert (cold.n_docs, cold.avgdl, cold.vocab_size) == \
+        (small_index.n_docs, small_index.avgdl, small_index.vocab_size)
+    assert type(cold.n_docs) is int and type(cold.vocab_size) is int

@@ -191,9 +191,9 @@ class _DriverResult(ClassicDataFrame):
     def _collect_as_arrow(self, split_batches: bool = False,
                           empty_list_if_zero_records: bool = True) -> list:
         # toPandas()/toArrow() convert these batches exactly as they
-        # convert the ones the JVM streams back (which never include an
-        # empty batch)
-        batches = [b for b in self._table.to_batches() if b.num_rows]
+        # convert the ones the JVM streams back; like those, an empty
+        # result has no batch unless toArrow() asks for one
+        batches = self._table.to_batches()
         if batches or empty_list_if_zero_records:
             return batches
         return [pa.RecordBatch.from_pylist([], schema=self._table.schema)]
@@ -1177,9 +1177,12 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
 
       1. no known query term, or k=0 → ``empty``;
       2. a filter/exclude set over ``_MASK_IDS_MAX`` ids, which the
-         sorted-id masks cannot carry, or an ``exact`` request with
-         ``boost_docs`` → ``exact``, the join-based Spark plan — the
-         honest cost of a non-selective filter at scale;
+         sorted-id masks cannot carry, an ``exact`` request with
+         ``boost_docs``, or one (or a pruned request on fewer than
+         ``min_ranges_to_prune`` ranges) whose blocks exceed the gather
+         budgets (``_gather_blocks``, read before any mask) →
+         ``exact``, the join-based Spark plan — the honest cost of a
+         non-selective filter at scale;
       3. a filter that admits no document → ``empty``;
       4. ``served`` → ``driver`` when a driver copy of the serving
          layout is resident within ``_DRIVER_SERVING_BYTES_MAX``, else
@@ -1189,8 +1192,7 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
          measured candidate size (``_pruned_topk``);
       6. the ``exact`` route, and a ``pruned`` request on fewer ranges
          (pruning only pays at scale — a head term at 10^12 docs touches
-         ~10^8 ranges) → ``exact_gathered`` when the query terms' blocks
-         fit the gather budgets (``_gather_blocks``), else ``exact``.
+         ~10^8 ranges) → ``exact_gathered``.
 
     With ``req.stats`` the planner records the ``tier`` taken and
     registers the ``decoded_blocks`` accumulator (plus ``total_blocks``
@@ -1201,13 +1203,20 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
     n_ranges = max(1, index.n_docs >> index.cfg.index.range_shift)
     pruning = route == "served" or (route == "pruned"
                                     and n_ranges >= min_ranges_to_prune)
-    masked = (pruning or req.boost_docs is None) and req.collect_masks()
+    # the exact tiers read the blocks first: a request over the gather
+    # budgets never collects masks that its Spark plan would not use
+    pdf = None if pruning or req.boost_docs is not None \
+        else _gather_blocks(index, sorted(req.idf), req.stats)
+    masked = (pruning or pdf is not None) and req.collect_masks()
     if route == "pruned" and req.stats is not None:
         req.stats["pruning_engaged"] = pruning and masked
     req.track(spark, total=masked and route == "served")
-    if masked and req.filtered_out:
+    if not masked:
+        return req.answer("exact", _exact_topk(
+            index, req, _query_blocks(spark, index, sorted(req.idf))))
+    if req.filtered_out:
         return req.answer("empty", local_result(spark))
-    if masked and route == "served":
+    if route == "served":
         index.serving_df(spark)  # warms on first use
         # a partial warm never keeps the driver copy (rows is then None)
         rows = index.serving_rows(sorted(req.idf), _DRIVER_SERVING_BYTES_MAX)
@@ -1217,15 +1226,10 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
         return req.answer("executor", _served_scores(
             spark, index, req, block_skip).drop("query_id")
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(req.k))
-    if masked and pruning:
+    if pruning:
         return _pruned_topk(spark, index, req, n_ranges)
-    pdf = _gather_blocks(index, sorted(req.idf), req.stats) if masked \
-        else None
-    if pdf is not None:
-        return req.answer("exact_gathered",
-                          _exact_gathered(spark, index, req, pdf))
-    return req.answer("exact", _exact_topk(
-        index, req, _query_blocks(spark, index, sorted(req.idf))))
+    return req.answer("exact_gathered",
+                      _exact_gathered(spark, index, req, pdf))
 
 
 def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
@@ -1580,11 +1584,12 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     doc-ranges whose summed per-term upper bounds cannot reach the k-th
     best score, and inside the ranges it visits, blocks no doc can use.
     The planner (``_topk``) picks the gathered, distributed or lazy tier
-    by measured candidate size (``_pruned_topk``), and runs the exact
-    tier instead when the corpus has fewer than ``min_ranges_to_prune``
-    doc-ranges (pruning's extra jobs only pay off at scale — a head term
-    at 10^12 docs touches ~10^8 ranges) or a filter/exclude set exceeds
-    ``_MASK_IDS_MAX`` ids. On a never-warmed index, a request the
+    by measured candidate size (``_pruned_topk``). When the corpus has
+    fewer than ``min_ranges_to_prune`` doc-ranges (pruning only pays off
+    at scale — a head term at 10^12 docs touches ~10^8 ranges) it answers
+    as the exact route does (``exact_gathered`` or ``exact``), and a
+    filter/exclude set over ``_MASK_IDS_MAX`` ids sends it to the
+    ``exact`` tier. On a never-warmed index, a request the
     gathered tier answers runs no Spark job: idf and the candidate
     blocks are read straight from Parquet on the driver.
 

@@ -3,11 +3,12 @@
 Every driver-side answer — the served driver tier, the gathered and
 exact_gathered tiers, the distributed/lazy merge and every empty result
 — is a ``_DriverResult``: its rows live in an Arrow table on the driver,
-``collect()`` and ``toPandas()`` read them there, and anything else
-reads ``_jdf``, which builds the LocalRelation on first use. Each of the
-result schemas the engine uses must read the same both ways: rows, field
-names, Python value types, pandas frames (dtypes included) and schema
-equal to what the lazily built JVM relation gives."""
+``collect()``, ``toPandas()`` and ``toArrow()`` read them there, and
+anything else reads ``_jdf``, which builds the LocalRelation on first
+use. Each of the result schemas the engine uses must read the same both
+ways: rows, field names, Python value types, pandas frames (dtypes
+included), Arrow tables and schema equal to what the lazily built JVM
+relation gives."""
 
 import pandas as pd
 import pytest
@@ -55,6 +56,7 @@ def test_driver_result_reads_as_its_jvm_relation(spark, schema, empty):
     assert [r.asDict() for r in rows] == [r.asDict() for r in want]
     assert df.schema == jvm.schema
     assert df.columns == jvm.columns
+    assert df.toArrow().equals(jvm.toArrow())
     old = spark.conf.get(ARROW)
     try:
         for arrow in ("true", "false"):
@@ -68,15 +70,15 @@ def test_driver_result_reads_as_its_jvm_relation(spark, schema, empty):
 
 @pytest.mark.parametrize("schema,empty", CASES)
 def test_driver_result_collect_builds_no_relation(spark, schema, empty):
-    """``collect()`` and ``toPandas()`` alone build no JVM relation and
-    run no Spark job."""
+    """``collect()``, ``toPandas()`` and ``toArrow()`` alone build no JVM
+    relation and run no Spark job."""
     df = _result(spark, schema, empty)
-    (rows, pdf), n_jobs = _jobs_in_group(
+    (rows, pdf, table), n_jobs = _jobs_in_group(
         spark, f"driver-result-{schema}-{empty}",
-        lambda: (df.collect(), df.toPandas()))
+        lambda: (df.collect(), df.toPandas(), df.toArrow()))
     assert n_jobs == 0
     assert df._relation is None
-    assert len(rows) == len(pdf) == (0 if empty else 3)
+    assert len(rows) == len(pdf) == table.num_rows == (0 if empty else 3)
 
 
 @pytest.mark.parametrize("empty", [False, True])

@@ -14,7 +14,7 @@ Two BM25 parameterizations exist on purpose:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 
 @dataclass(frozen=True)
@@ -128,9 +128,6 @@ class EngineConfig:
     bm25: BM25Params = field(default_factory=bm25_north)
     index: IndexConfig = field(default_factory=IndexConfig)
     second_pass: SecondPassConfig = field(default_factory=cli_profile)
-
-    def with_bm25(self, params: BM25Params) -> "EngineConfig":
-        return replace(self, bm25=params)
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -51,12 +51,6 @@ def valid_stars(df: DataFrame, col: str = "stars") -> DataFrame:
             .filter(F.col(col).between(1, 5)))
 
 
-def min_text_length(df: DataFrame, col: str = "text",
-                    min_len: int = 10) -> DataFrame:
-    """P3 — nlp/10:43."""
-    return df.filter(F.length(col) >= min_len)
-
-
 def union_dedup_by_id(dfs: list[DataFrame], id_col: str = "id") -> DataFrame:
     """U1+U2+D1 — unionByName then dropDuplicates(id) (etl/02:128-139)."""
     out = dfs[0]
@@ -206,12 +200,3 @@ def normalize_merge(sources: list[tuple[str, DataFrame]]) -> DataFrame:
     w = Window.partitionBy("id").orderBy(F.asc("__prio"))
     return (uni.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1).drop("__rn", "__prio"))
-
-
-def best_snippet_per_key(df: DataFrame, key: str = "sku",
-                         score_col: str = "__sim") -> DataFrame:
-    """A3 — per-key argmax row with first-max-wins tie-break via original
-    order column (numpy argmax keeps the first max; app/test.py:211-215)."""
-    w = Window.partitionBy(key).orderBy(F.desc(score_col), F.asc("__pos"))
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1).drop("__rn"))

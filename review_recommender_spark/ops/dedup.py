@@ -156,22 +156,3 @@ def minhash_lsh_candidates(sigs: DataFrame, bands: int = 4,
             .select(F.col("l.mh_id").alias("id_a"),
                     F.col("r.mh_id").alias("id_b"))
             .distinct())
-
-
-def embedding_cosine_pairs(df: DataFrame, id_col: str, vec_col: str,
-                           threshold: float) -> DataFrame:
-    """Near-dup by embedding cosine over candidate pairs (bounded sets;
-    for scale, route through ops.similarity LSH buckets first)."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-    dot = F.aggregate(F.zip_with("v_a", "v_b", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.transform("v_a", lambda x: x * x),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(F.transform("v_b", lambda x: x * x),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    cos = dot / F.greatest(na * nb, F.lit(1e-12))
-    return (a.join(b, F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine", F.round(cos, 6))
-            .filter(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine"))

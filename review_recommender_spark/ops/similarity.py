@@ -274,41 +274,6 @@ def ivf_topk(spark: SparkSession, ivf: IvfIndex, probes: DataFrame,
             .filter(F.col("rank") <= k))
 
 
-def ivf_cosine_topk(vectors: DataFrame, probes: DataFrame,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    probe_id_col: str = "probe_id",
-                    probe_vec_col: str = "probe_vec",
-                    k: int = 10, n_clusters: int = 16, nprobe: int = 4,
-                    assigned: DataFrame | None = None,
-                    centroids: np.ndarray | None = None) -> DataFrame:
-    """Ad-hoc (un-persisted) IVF top-k: fits the quantizer when not given
-    one. TEST/EXPLORATION ONLY — the production path is ``ivf_build`` +
-    ``ivf_topk`` (build once, persist partitioned, prune at query time);
-    calling this per query batch refits KMeans over the whole table."""
-    if assigned is None or centroids is None:
-        assigned, centroids = ivf_index(vectors, id_col, vec_col,
-                                        n_clusters)
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
-
-    def cluster_of(vec) -> list[int]:
-        v = np.asarray(vec, dtype=np.float64)
-        v = v / max(float(np.linalg.norm(v)), 1e-12)
-        return [int(c) for c in np.argsort(-(cn @ v))[:nprobe]]
-
-    pc, _ = _probe_cluster_df(probes, probe_id_col, probe_vec_col,
-                              cluster_of)
-    cand = assigned.join(F.broadcast(pc), "ivf_cluster")
-    scored = cand.select(
-        probe_id_col, id_col,
-        F.round(cosine_col(F.col(vec_col), F.col(probe_vec_col)), 6)
-        .alias("cosine"))
-    w = Window.partitionBy(probe_id_col).orderBy(F.desc("cosine"),
-                                                 F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
 def lsh_cosine_topk(vectors: DataFrame, probes: DataFrame,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     probe_id_col: str = "probe_id",

@@ -86,6 +86,7 @@ tokens weight a term by its query multiplicity; unknown terms contribute 0.
 
 from __future__ import annotations
 
+import weakref
 from collections import Counter
 from dataclasses import dataclass
 from functools import cached_property, lru_cache
@@ -449,23 +450,96 @@ def _apply_doc_filter(partials: DataFrame,
                          "left_semi")
 
 
+# filter DataFrame → {cap: (ids, too_big)} for a filter whose rows cannot
+# change (``_rows_fixed``), or None for one collected on every request.
+# Keyed by the caller's object (classic DataFrames hash by identity), so
+# an entry lives exactly as long as the caller keeps the filter.
+_MASKS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# the only plan leaves whose rows are part of the plan itself
+_FIXED_LEAVES = ("Range", "LocalRelation", "OneRowRelation")
+
+
 def _collect_filter_ids(filter_docs: DataFrame | None, cap: int):
-    """Driver-side sorted unique doc_id array for the zero-shuffle served
-    kernels, or None when the filter survivor set exceeds ``cap`` (the
-    caller then falls back to the join-based exact path). The limit-(cap+1)
-    probe bounds driver memory: at the default cap (5M ids = 40 MB int64)
-    this is the same envelope as the warm idf cache."""
+    """``(ids, too_big)``: the driver-side sorted unique doc_id array of
+    ``filter_docs`` for the kernels' masks, or ``(None, True)`` when it
+    holds more than ``cap`` ids (the caller then falls back to the
+    join-based exact path, or raises); ``(None, False)`` for no filter.
+
+    A filter whose rows cannot change (``_rows_fixed``) is collected once
+    per DataFrame object and cap, so a repeated filter costs no Spark
+    job; any other filter (a Parquet or catalog scan, whose files may
+    change between requests) is collected on every call."""
     if filter_docs is None:
         return None, False
+    if filter_docs not in _MASKS:
+        _MASKS[filter_docs] = {} if _rows_fixed(filter_docs) else None
+    memo = _MASKS[filter_docs]
+    if memo is None:
+        return _read_filter_ids(filter_docs, cap)
+    if cap not in memo:
+        memo[cap] = _read_filter_ids(filter_docs, cap)
+    return memo[cap]
+
+
+def _rows_fixed(df: DataFrame) -> bool:
+    """True when ``df`` gives the same rows on every evaluation: a
+    driver-resident result, or an analyzed plan whose leaf plans are all
+    ``_FIXED_LEAVES``, which is deterministic, whose leaf expressions are
+    attributes and literals (``current_timestamp()`` is deterministic to
+    Spark but a leaf of neither kind) and which holds no user-defined
+    function (its deterministic flag is a promise, not a fact) and no
+    subquery. Walks the plan over Py4J, leaves first so that a scan is
+    turned down in a few calls; the caller runs it once per DataFrame
+    object."""
+    if isinstance(df, _DriverResult):
+        return True
+    plan = df._jdf.queryExecution().analyzed()
+
+    def seq(s) -> list:
+        return [s.apply(i) for i in range(s.length())]
+
+    if any(p.nodeName() not in _FIXED_LEAVES
+           for p in seq(plan.collectLeaves())) or not plan.deterministic():
+        return False
+    forbidden = [df.sparkSession._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions." + name)
+        for name in ("UserDefinedExpression", "PlanExpression")]
+
+    def fixed_expr(e) -> bool:
+        if any(c.isInstance(e) for c in forbidden):
+            return False
+        kids = seq(e.children())
+        if not kids:
+            return e.nodeName() in ("AttributeReference", "Literal")
+        return all(fixed_expr(c) for c in kids)
+
+    def fixed_plan(p) -> bool:
+        return (all(fixed_expr(e) for e in seq(p.expressions()))
+                and all(fixed_plan(c) for c in seq(p.children())))
+
+    return fixed_plan(plan)
+
+
+def _read_filter_ids(filter_docs: DataFrame, cap: int):
+    """One collect of ``_collect_filter_ids``. A driver-resident result
+    is read from its Arrow ``doc_id`` column in-process. Any other
+    filter is read as Arrow with at most cap+1 raw rows (bounding driver
+    memory: at the default cap, 5M ids = 40 MB int64, the envelope of
+    the warm idf cache) and deduplicated on the driver; only when the
+    raw rows exceed ``cap`` does a ``distinct`` probe decide whether the
+    unique ids do too."""
     import numpy as np
-    # Arrow toPandas, not collect(): at the default cap (5M ids) Row
-    # objects would cost ~GBs of driver heap; the Arrow path lands the
-    # column as one int64 block (~40 MB)
-    pdf = (filter_docs.select("doc_id").distinct()
-           .limit(cap + 1).toPandas())
-    if len(pdf) > cap:
-        return None, True          # too big to broadcast — fall back
-    ids = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
+    if isinstance(filter_docs, _DriverResult):
+        col = filter_docs._table.column("doc_id")
+    else:
+        ids = filter_docs.select("doc_id")
+        col = ids.limit(cap + 1).toArrow().column("doc_id")
+        if len(col) > cap:
+            col = ids.distinct().limit(cap + 1).toArrow().column("doc_id")
+    ids = np.unique(col.drop_null().to_numpy().astype(np.int64))
+    if len(ids) > cap:
+        return None, True          # too big to ship — fall back
+    ids.flags.writeable = False    # shared by every request of a memo
     return ids, False
 
 
@@ -501,9 +575,11 @@ class _Request:
 
     def collect_masks(self) -> bool:
         """Collect ``filter_docs``/``exclude_docs`` as the kernel's sorted
-        id masks (one JVM-only job each). False as soon as one survivor
-        set exceeds ``_MASK_IDS_MAX`` — the join-based exact plan then
-        answers, so the other set is never collected."""
+        id masks (``_collect_filter_ids``: no Spark job for a
+        driver-resident result or a repeated filter whose rows cannot
+        change, one JVM-only collect otherwise). False as soon as one
+        survivor set exceeds ``_MASK_IDS_MAX`` — the join-based exact
+        plan then answers, so the other set is never collected."""
         self.allowed, too_big = _collect_filter_ids(self.filter_docs,
                                                     _MASK_IDS_MAX)
         if too_big:
@@ -786,9 +862,9 @@ def bm25_topk_exact(spark: SparkSession, index: InvertedIndex, query,
     blocks fit the gather budgets (``_PRUNED_LOCAL_BLOCKS_MAX`` rows,
     ``_PRUNED_LOCAL_BYTES_MAX`` encoded bytes) and no ``boost_docs`` is
     given, the ``exact_gathered`` tier reads them from Parquet and runs
-    the exact plan on the driver — zero Spark jobs without
-    ``filter_docs``/``exclude_docs`` (one JVM-only collect each) — and
-    returns a driver-resident result; otherwise the plan is one Spark
+    the exact plan on the driver — zero Spark jobs unless a
+    ``filter_docs``/``exclude_docs`` mask must be collected (see
+    ``_collect_filter_ids``) — and returns a driver-resident result; otherwise the plan is one Spark
     action (``_exact_topk``). Both tiers give the same rows, bit for
     bit. ``filter_docs`` (optional DataFrame
     with a ``doc_id`` column) restricts ranking to those documents —
@@ -1250,10 +1326,12 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
       (``_served_local_topk``) runs in-process over them, as the
       gathered pruned tier does; the ≤ k rows come back as a
       driver-resident result (``local_result``), whose collect reads
-      them in-process. Zero Spark jobs unless
-      ``filter_docs``/``exclude_docs`` are given (one JVM-only collect
-      each). Measured at local[4], 10k docs: ~5 ms a query, collect
-      included.
+      them in-process. Zero Spark jobs, filtered requests included,
+      except for one JVM-only collect per ``filter_docs``/
+      ``exclude_docs`` set that is neither driver-resident nor already
+      collected — a filter whose rows cannot change is collected once
+      per DataFrame object (``_collect_filter_ids``). Measured at
+      local[4], 10k docs: ~5 ms a query, collect included.
     * EXECUTOR tier — over budget, or under a partial warm: postings
       are resident in executor memory re-sharded by ``range_id``, so
       every document's complete postings live in one shard. The query

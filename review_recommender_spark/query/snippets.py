@@ -49,24 +49,25 @@ from pyspark.sql import functions as F
 from ..functions.tokenize import tokenize_k2_py
 from ..index.build import InvertedIndex
 from ..index.positions import _POS_MULT, decode_positions, positions_blocks
-from .bm25 import local_result
+from .bm25 import _collect_filter_ids, local_result
 
 SNIPPET_SCHEMA = ("doc_id long, snippet_start long, n_distinct long, "
                   "n_hits long, hit_pos string")
 
 
 def _collect_doc_ids(doc_ids, cap: int) -> np.ndarray:
-    """Bounded driver-side sorted unique int64 doc ids (same envelope
-    discipline as bm25._collect_filter_ids — snippets are for RESULT
-    SETS, not corpus sweeps)."""
+    """Bounded driver-side sorted unique int64 doc ids — a DataFrame's
+    through ``bm25._collect_filter_ids``, the filters' collect (no Spark
+    job for a driver-resident result) — raising beyond ``cap``: snippets
+    are for RESULT SETS, not corpus sweeps."""
     if isinstance(doc_ids, DataFrame):
-        pdf = doc_ids.select("doc_id").distinct().limit(cap + 1).toPandas()
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        ids, too_big = _collect_filter_ids(doc_ids, cap)
     else:
         ids = np.asarray(list(doc_ids), dtype=np.int64)
-    if len(ids) > cap:
+        too_big = len(ids) > cap
+    if too_big:
         raise ValueError(
-            f"snippet_spans: {len(ids)} target docs exceeds cap {cap} — "
+            f"snippet_spans: more than cap {cap} target docs — "
             f"snippets serve bounded result sets; raise cap explicitly "
             f"if you really mean a sweep")
     return np.unique(ids)
@@ -145,8 +146,7 @@ def proximity_rerank(spark: SparkSession, index: InvertedIndex, query: str,
     the positional evidence comes from ``snippet_spans`` — no corpus
     re-read, no model. Returns (doc_id, score) re-ordered
     (score desc, doc_id asc), same row count as ``topk``."""
-    spans = snippet_spans(spark, index, query, topk.select("doc_id"),
-                          window=window)
+    spans = snippet_spans(spark, index, query, topk, window=window)
     feats = spans.select("doc_id",
                          (F.col("n_distinct") * float(beta_distinct)
                           + F.col("n_hits") * float(beta_hits))

@@ -13,16 +13,26 @@ Routes gated here:
   * fallback:     survivor set over ``_MASK_IDS_MAX`` → the exact
                   semi-join route (forced here with a cap of 0)
   * partial warm: the cold on-disk union is filtered too
+  * mask memo:    a filter whose rows cannot change is collected once per
+                  DataFrame object; any other filter on every request
 """
 
+import gc
+import weakref
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                  bm25_topk_served,
-                                                 bm25_topk_served_batch)
+                                                 bm25_topk_served_batch,
+                                                 local_result)
+from review_recommender_spark.query.snippets import _collect_doc_ids
+from test_serving_tiers import _jobs_in_group
 
 QUERIES = ["wireless bluetooth headphones", "yellow cat socks"]
 
@@ -189,5 +199,143 @@ def test_block_skip_rank_safe_under_filter(spark, small_pages, small_index):
                                           filter_docs=fd,
                                           block_skip=False).collect())
             assert on == off, q
+    finally:
+        small_index.unwarm()
+
+
+def _range_filter(spark, n_docs, seed=3):
+    """Every 5th doc by hash: a Range → Filter → Project plan, the shape
+    of the benchmark's filter."""
+    return (spark.range(0, n_docs)
+            .where(F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(5)) == 0)
+            .select(F.col("id").alias("doc_id")))
+
+
+def _served(spark, index, group, **kw):
+    """A served request's (rows, jobs it ran, tier taken)."""
+    stats: dict = {}
+    rows, n_jobs = _jobs_in_group(spark, group, lambda: _pairs(
+        bm25_topk_served(spark, index, QUERIES[0], k=10, stats=stats,
+                         **kw).collect()))
+    return rows, n_jobs, stats["tier"]
+
+
+@pytest.mark.parametrize("modifier", ["filter_docs", "exclude_docs"])
+def test_fixed_filter_is_collected_once(spark, small_index, modifier):
+    """A range-backed filter's mask is collected by the first request
+    only: the second runs 0 Spark jobs on the driver tier, and both
+    answer bitwise what ``bm25_topk_exact`` answers."""
+    fd = _range_filter(spark, small_index.n_docs)
+    want = _pairs(bm25_topk_exact(spark, small_index, QUERIES[0], k=10,
+                                  **{modifier: fd}).collect())
+    assert want != _pairs(bm25_topk_exact(spark, small_index, QUERIES[0],
+                                          k=10).collect())
+    small_index.warm(spark)
+    try:
+        fresh = _range_filter(spark, small_index.n_docs)
+        first, n_first, _ = _served(spark, small_index, f"{modifier}-1",
+                                    **{modifier: fresh})
+        again, n_again, tier = _served(spark, small_index, f"{modifier}-2",
+                                       **{modifier: fresh})
+    finally:
+        small_index.unwarm()
+    assert n_first >= 1 and n_again == 0 and tier == "driver"
+    assert first == again == want      # bitwise: == on floats on purpose
+
+
+def test_parquet_filter_is_collected_every_request(spark, small_index,
+                                                   tmp_path):
+    """A Parquet-backed filter is re-collected on every request, so once
+    its file is overwritten in place the answer follows the new rows.
+    (Same-size rewrites: Spark keeps the file listing of a DataFrame.)"""
+    path = tmp_path / "ids.parquet"
+
+    def write(seed):
+        ids = _range_filter(spark, small_index.n_docs, seed).toArrow()
+        pq.write_table(pa.table({"doc_id": ids["doc_id"][:150]}), path,
+                       compression="none", use_dictionary=False,
+                       write_statistics=False)
+        return path.stat().st_size
+
+    size = write(3)
+    fd = spark.read.parquet(str(tmp_path)).select("doc_id")
+    small_index.warm(spark)
+    try:
+        answers = []
+        for seed in (3, 11):
+            assert write(seed) == size
+            want = _pairs(bm25_topk_exact(spark, small_index, QUERIES[0],
+                                          k=10, filter_docs=fd).collect())
+            got, n_jobs, _ = _served(spark, small_index, f"parquet-{seed}",
+                                     filter_docs=fd)
+            assert n_jobs >= 1 and got == want, seed
+            answers.append(got)
+    finally:
+        small_index.unwarm()
+    assert answers[0] != answers[1]
+    assert bm25._MASKS[fd] is None
+
+
+@pytest.mark.parametrize("keep", ["rand", "current_timestamp", "python_udf"])
+def test_changing_filters_are_never_memoized(spark, keep):
+    """``rand()`` is nondeterministic; ``current_timestamp()`` is
+    deterministic to Spark but not a leaf of fixed rows; a Python UDF's
+    deterministic flag is only a promise. Each is collected every time."""
+    pred = {"rand": F.rand(7) < 0.5,
+            "current_timestamp": F.current_timestamp() > F.lit(0).cast(
+                "timestamp"),
+            "python_udf": F.udf(lambda i: i % 5 == 0, "boolean")("id")}[keep]
+    fd = spark.range(0, 200).where(pred).select(F.col("id").alias("doc_id"))
+    for i in range(2):
+        _, n_jobs = _jobs_in_group(spark, f"{keep}-{i}", lambda:
+                                   bm25._collect_filter_ids(fd, 1000))
+        assert n_jobs >= 1, (keep, i)
+    assert bm25._MASKS[fd] is None
+
+
+def test_memo_entry_goes_with_its_dataframe(spark):
+    fd = _range_filter(spark, 1000)
+    ids, too_big = bm25._collect_filter_ids(fd, 1000)
+    assert not too_big and len(ids) and not ids.flags.writeable
+    assert bm25._MASKS[fd] == {1000: (ids, False)}
+    n, ref = len(bm25._MASKS), weakref.ref(fd)
+    del fd
+    gc.collect()
+    assert ref() is None and len(bm25._MASKS) == n - 1
+
+
+def test_driver_result_ids_are_read_in_process(spark):
+    """A driver-resident result as a filter, or as snippet targets, is
+    read from its Arrow column: 0 Spark jobs, even on first use. The
+    snippets keep their raise-on-cap contract."""
+    top = local_result(spark, [9, 4, 9, 2], [3.0, 2.0, 1.0, 0.5])
+    (mask, ids), n_jobs = _jobs_in_group(spark, "driver-result", lambda: (
+        bm25._collect_filter_ids(top, 10), _collect_doc_ids(top, 10)))
+    assert n_jobs == 0
+    assert mask[0].tolist() == ids.tolist() == [2, 4, 9] and not mask[1]
+    assert bm25._collect_filter_ids(top, 2) == (None, True)
+    with pytest.raises(ValueError, match="cap 2"):
+        _collect_doc_ids(top, 2)
+
+
+def test_k_zero_and_empty_fixed_filter_answer_empty(spark, small_index):
+    """``k=0`` answers ``empty`` without collecting the filter; a fixed
+    filter that admits nothing answers ``empty`` on first use and again,
+    from the memo, with 0 jobs."""
+    small_index.warm(spark)
+    try:
+        fd = _range_filter(spark, small_index.n_docs)
+        stats: dict = {}
+        rows, n_jobs = _jobs_in_group(spark, "k-zero", lambda: _pairs(
+            bm25_topk_served(spark, small_index, QUERIES[0], k=0,
+                             filter_docs=fd, stats=stats).collect()))
+        assert (rows, n_jobs, stats["tier"]) == ([], 0, "empty")
+        assert fd not in bm25._MASKS
+        none = spark.range(0).select(F.col("id").alias("doc_id"))
+        for i in range(2):
+            rows, n_jobs, tier = _served(spark, small_index, f"none-{i}",
+                                         filter_docs=none)
+            assert (rows, tier) == ([], "empty"), i
+        assert n_jobs == 0
     finally:
         small_index.unwarm()

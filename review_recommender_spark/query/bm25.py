@@ -532,10 +532,11 @@ def _read_filter_ids(filter_docs: DataFrame, cap: int):
     if isinstance(filter_docs, _DriverResult):
         col = filter_docs._table.column("doc_id")
     else:
-        ids = filter_docs.select("doc_id")
-        col = ids.limit(cap + 1).toArrow().column("doc_id")
+        doc_ids = filter_docs.select("doc_id")
+        col = doc_ids.limit(cap + 1).toArrow().column("doc_id")
         if len(col) > cap:
-            col = ids.distinct().limit(cap + 1).toArrow().column("doc_id")
+            col = (doc_ids.distinct().limit(cap + 1).toArrow()
+                   .column("doc_id"))
     ids = np.unique(col.drop_null().to_numpy().astype(np.int64))
     if len(ids) > cap:
         return None, True          # too big to ship — fall back

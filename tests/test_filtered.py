@@ -211,11 +211,11 @@ def _range_filter(spark, n_docs, seed=3):
             .select(F.col("id").alias("doc_id")))
 
 
-def _served(spark, index, group, **kw):
+def _served(spark, index, group, k=10, **kw):
     """A served request's (rows, jobs it ran, tier taken)."""
     stats: dict = {}
     rows, n_jobs = _jobs_in_group(spark, group, lambda: _pairs(
-        bm25_topk_served(spark, index, QUERIES[0], k=10, stats=stats,
+        bm25_topk_served(spark, index, QUERIES[0], k=k, stats=stats,
                          **kw).collect()))
     return rows, n_jobs, stats["tier"]
 
@@ -325,11 +325,8 @@ def test_k_zero_and_empty_fixed_filter_answer_empty(spark, small_index):
     small_index.warm(spark)
     try:
         fd = _range_filter(spark, small_index.n_docs)
-        stats: dict = {}
-        rows, n_jobs = _jobs_in_group(spark, "k-zero", lambda: _pairs(
-            bm25_topk_served(spark, small_index, QUERIES[0], k=0,
-                             filter_docs=fd, stats=stats).collect()))
-        assert (rows, n_jobs, stats["tier"]) == ([], 0, "empty")
+        assert _served(spark, small_index, "k-zero", k=0,
+                       filter_docs=fd) == ([], 0, "empty")
         assert fd not in bm25._MASKS
         none = spark.range(0).select(F.col("id").alias("doc_id"))
         for i in range(2):

@@ -37,13 +37,9 @@ tests/test_degenerate.py), and the planner names the tier it took in
                 rows and ``_PRUNED_LOCAL_BYTES_MAX`` encoded bytes — the
                 blocks are read straight from the postings Parquet on the
                 driver and the kernel runs there: zero Spark jobs.
-  distributed : pruned, over a gather budget but with range metadata
-                within ``_PRUNED_DRIVER_RANGES_MAX`` — a range-bounds
-                aggregate, then an exact pass over the ``_SEED_RANGES``
-                best-bounded ranges sets θ, and the kernel runs over the
-                surviving ranges (an ``isin`` list).
-  lazy        : pruned beyond that — the same seed → θ → survivors, with
-                the survivors picked by a broadcast join.
+  distributed : pruned, over a gather budget — the blocks re-sharded by
+                range_id into doc-complete tasks, the kernel's local
+                top-k per task, and a k × tasks merge: two Spark jobs.
 
 The pruned tiers are block-max pruning at doc-range granularity:
 per-block upper bounds come from (max_tf, min_dl) metadata — valid for
@@ -62,10 +58,9 @@ Shared by every tier:
             ``after`` cursor.
   plan    : ``_exact_topk`` — blocks → closure scorer → filter/exclude →
             fold in QUERY TOKEN ORDER (bit-deterministic,
-            ``_fold_scores_batch``) → boost → after → top-k. The exact
-            tier and the seed pass of the distributed and lazy tiers;
-            ``exact_gathered`` runs the same steps on the driver, over
-            the same per-posting map (``_posting_partials``).
+            ``_fold_scores_batch``) → boost → after → top-k: the exact
+            tier. ``exact_gathered`` runs the same steps on the driver,
+            over the same per-posting map (``_posting_partials``).
   kernel  : ``_served_local_topk`` — bulk decode, block-max skipping, the
             request's masks and a running top-k; every served and pruned
             tier runs it (and hybrid's served scores, unskipped and
@@ -107,16 +102,10 @@ RESULT_SCHEMA = "doc_id long, score double"
 # the closure scorer's and the kernel's rows carry the query's batch slot
 _BATCH_SCHEMA = "query_id int, " + RESULT_SCHEMA
 
-# bm25_topk_pruned collects per-range bounds driver-side while the
-# query's touched range count stays below this (1M rows ≈ 16 MB — the
-# same envelope class as the warm idf cache); beyond it the lazy
-# broadcast-join plan runs instead (a head term at 10^12 docs touches
-# ~10^8 ranges — that regime must never collect).
-_PRUNED_DRIVER_RANGES_MAX = 1_000_000
-# ... and reads the still-encoded candidate blocks straight from the
-# postings Parquet on the coordinator while they number at most this
-# many rows (~50k blocks ≈ 6.4M postings ≈ 16 MB encoded + ~150 MB of
-# transient decode arrays worst-case — driver-envelope class) ...
+# bm25_topk_pruned reads the still-encoded candidate blocks straight
+# from the postings Parquet on the coordinator while they number at most
+# this many rows (~50k blocks ≈ 6.4M postings ≈ 16 MB encoded + ~150 MB
+# of transient decode arrays worst-case — driver-envelope class) ...
 _PRUNED_LOCAL_BLOCKS_MAX = 50_000
 # ... and their encoded posting bytes (doc_bytes + tf_bytes + dl_bytes)
 # stay within this budget, the ~16 MB the row cap stands for. A query
@@ -125,9 +114,6 @@ _PRUNED_LOCAL_BYTES_MAX = 16 << 20
 # the block columns the kernel reads with fine_prune (the pruned tiers)
 _KERNEL_COLS = ["term", "range_id", "n", "first_doc_id", "last_doc_id",
                 "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
-# The distributed and lazy tiers exact-score this many best-bounded
-# ranges to seed θ before the survivor pass.
-_SEED_RANGES = 8
 # filter_docs/exclude_docs ship to the kernel as sorted id masks while
 # each holds at most this many ids (5M int64 = 40 MB, the envelope class
 # of the warm idf cache); a larger set sends the request to the exact
@@ -647,7 +633,7 @@ def _exact_topk(index: InvertedIndex, req: _Request,
     """The exact plan of a single-query request over posting ``blocks``
     (already filtered to its terms): closure scorer → filter/exclude
     joins → token-order fold with min_match → boost → after → top-k, as
-    one lazy plan ending in TakeOrderedAndProject."""
+    one unexecuted plan ending in TakeOrderedAndProject."""
     partials = _score_blocks_closure_batch(
         blocks, index, [req.idf], acc_blocks=req.acc_decoded)
     partials = _apply_doc_exclude(
@@ -908,15 +894,15 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
                        block_skip: bool,
                        acc_decoded=None, acc_total=None,
                        allowed=None, min_matches=None, blocked=None,
-                       after=None, init_theta=None, fine_prune=False):
+                       after=None, fine_prune=False):
     """The kernel of every served and pruned tier, WITH block-max
     skipping: before decoding anything, every block row's idf-free unit
-    upper bound is computed from the resident (max_tf, min_dl) metadata
-    (the same bound expression as ``_block_upper_bound_col``), ranges are
-    visited in descending summed-bound order per query, and a range whose
-    bound cannot beat the shard-local θ (k-th best score so far, tie-safe
-    ulp slack as in ``_seed_then_survivors``) is never decoded — nor is
-    any range after it, since bounds only fall and θ only rises. This is what
+    upper bound is computed from the resident (max_tf, min_dl) metadata,
+    ranges are visited in descending summed-bound order per query, and a
+    range whose bound cannot beat the task-local θ (the k-th best score
+    so far, once k rows are held, with a tie-safe ulp slack) is never
+    decoded — nor is any range after it, since bounds only fall and θ
+    only rises. This is what
     keeps warm serving honest for head terms at 10^9+ docs: a shard whose
     best possible doc can't crack its own local top-k stops decoding
     after the few hottest ranges instead of walking every posting block.
@@ -971,12 +957,6 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
     Rows come out as (query_id, doc_id, score): each query's ≤ k rows
     in (score DESC, doc_id ASC) order, query_id its slot in
     ``token_seqs``.
-
-    ``init_theta`` (optional float, single-query cold-pruned callers):
-    a GLOBAL θ established by an exact seed pass
-    (``_seed_then_survivors``) — skipping may then engage before the
-    local top-k fills (k results at ≥ θ already exist globally), and θ
-    only ever rises above it.
 
     ``fine_prune`` (the pruned tiers): block-level BMW refinement
     INSIDE each visited range (reads the first/last_doc_id columns):
@@ -1155,15 +1135,17 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
                 order = sorted(rb.items(), key=lambda kv: (-kv[1], kv[0]))
                 run_d = np.empty(0, dtype=np.int64)
                 run_s = np.empty(0)
-                theta = float("-inf") if init_theta is None \
-                    else float(init_theta)
+                theta = float("-inf")   # until k rows are held
                 for rid, bound in order:
-                    if ((len(run_d) >= k or init_theta is not None)
-                            and bound < theta - 1e-9 * abs(theta)
-                            - 1e-12):
+                    # ≥ with an ulp-scale slack, not >: a range whose
+                    # bound TIES θ can hold a doc that ties the k-th
+                    # score and wins the doc_id asc tie-break — and the
+                    # bound arithmetic rounds in a different order than
+                    # the score, so an exact tie can evaluate to θ−ε
+                    # (caught at 800k docs). Keeping ε-border ranges
+                    # costs pruning, never correctness.
+                    if bound < theta - 1e-9 * abs(theta) - 1e-12:
                         # bounds only fall from here and θ only rises
-                        # (with init_theta, k results at ≥ θ already
-                        # exist globally — the seed pass's top-k)
                         break
                     rows_map = (fine_rows_map(rid, qtf, theta)
                                 if fine_prune and theta > float("-inf")
@@ -1178,8 +1160,7 @@ def _served_local_topk(token_seqs: list[list[str]], idf_map: dict,
                     sel = np.lexsort((run_d, -run_s))[:k]
                     run_d, run_s = run_d[sel], run_s[sel]
                     if len(run_d) >= k:
-                        # θ never falls below a caller-provided global θ
-                        theta = max(theta, run_s[-1])
+                        theta = run_s[-1]
             if not len(run_d):
                 continue
             yield pd.DataFrame({
@@ -1265,8 +1246,8 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
          layout is resident within ``_DRIVER_SERVING_BYTES_MAX``, else
          ``executor`` (warming the index on first use);
       5. ``pruned`` on a corpus of at least ``min_ranges_to_prune``
-         doc-ranges → ``gathered``, ``distributed`` or ``lazy``, by
-         measured candidate size (``_pruned_topk``);
+         doc-ranges → ``gathered`` when the candidate blocks fit the
+         gather budgets, else ``distributed`` (``_pruned_topk``);
       6. the ``exact`` route, and a ``pruned`` request on fewer ranges
          (pruning only pays at scale — a head term at 10^12 docs touches
          ~10^8 ranges) → ``exact_gathered``.
@@ -1304,7 +1285,7 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
             spark, index, req, block_skip).drop("query_id")
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(req.k))
     if pruning:
-        return _pruned_topk(spark, index, req, n_ranges)
+        return _pruned_topk(spark, index, req)
     return req.answer("exact_gathered",
                       _exact_gathered(spark, index, req, pdf))
 
@@ -1431,28 +1412,6 @@ def bm25_topk_served_batch(spark: SparkSession, index: InvertedIndex,
             .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
 
 
-def _block_upper_bound_col(weights: dict[str, float], index: InvertedIndex):
-    """Per-block score upper bound as a JVM column expression:
-    w_t · (k1+1)·max_tf / (max_tf + k1·(1 − b + b·min_dl/avgdl)).
-
-    Negative weights (ε-fixup idf can be negative when the vocabulary-mean
-    raw idf is) are clamped to 0: the (max_tf, min_dl) unit maximizes the
-    tf-side, which for a negative weight yields a LOWER bound — pruning on
-    it could drop true top-k docs. 0 dominates any negative contribution,
-    so the clamped expression stays a valid upper bound (pruning just gets
-    looser for such terms); scoring itself never clamps."""
-    k1, b = index.cfg.bm25.k1, index.cfg.bm25.b
-    avgdl = index.avgdl
-    wcol = F.greatest(
-        F.element_at(
-            F.create_map(*[F.lit(x) for kv in weights.items() for x in kv]),
-            F.col("term")),
-        F.lit(0.0))
-    mt = F.col("max_tf").cast("double")
-    denom = mt + k1 * (1 - b + b * F.col("min_dl").cast("double") / avgdl)
-    return wcol * (k1 + 1) * mt / denom
-
-
 def _hot_block_mask(firsts, lasts, ubs, theta):
     """One range's block-level BMW keep-mask (the kernel's
     ``fine_prune``): per range, each term's upper bound as a function of
@@ -1485,39 +1444,6 @@ def _hot_block_mask(firsts, lasts, ubs, theta):
     return (hot_cum[hi] - hot_cum[lo]) > 0
 
 
-def _seed_then_survivors(spark: SparkSession, index: InvertedIndex,
-                         req: _Request, blocks: DataFrame, seed: list,
-                         survivors) -> DataFrame:
-    """The distributed and lazy tiers' shared core: exact-score the
-    ``seed`` ranges (``_exact_topk``, collected), take θ as their k-th
-    score, run the θ-seeded kernel re-sharded by range_id (doc-complete
-    tasks) over the blocks ``survivors(theta_eff)`` picks (None when no
-    range survives), and merge both on the driver in the engine's exact
-    total order (score DESC, doc_id ASC) — ≤ k·(tasks+1) rows, the
-    selection TakeOrderedAndProject would make. The ≤ k rows return as a
-    driver-resident result (``local_result``)."""
-    rows = _exact_topk(
-        index, req, blocks.filter(F.col("range_id").isin(seed))).collect()
-    theta = (rows[req.k - 1]["score"]
-             if len(rows) >= req.k else float("-inf"))
-    # ≥ with an ulp-scale slack, not >: a range/interval whose bound
-    # TIES θ can hold a doc that ties the k-th seed score and wins
-    # the doc_id asc tie-break — and the bound arithmetic rounds in
-    # a different order than the θ computation, so an exact tie can
-    # evaluate to θ−ε. Caught at 800k docs. Keeping ε-border ranges
-    # costs pruning, never correctness.
-    rest = survivors(theta - 1e-9 * abs(theta) - 1e-12)
-    if rest is not None:
-        seeded = theta > float("-inf")
-        kernel = req.kernel(index, init_theta=theta if seeded else None,
-                            fine_prune=seeded)
-        rows += (rest.repartition("range_id")
-                 .mapInPandas(kernel, schema=_BATCH_SCHEMA).collect())
-    top = sorted(((r["doc_id"], r["score"]) for r in rows),
-                 key=lambda t: (-t[1], t[0]))[:req.k]
-    return local_result(spark, [d for d, _ in top], [s for _, s in top])
-
-
 def _gather_blocks(index: InvertedIndex, terms: list[str],
                    stats: dict | None) -> pd.DataFrame | None:
     """The gathered tier's input: the block rows of ``terms`` (the
@@ -1548,13 +1474,14 @@ def _gather_blocks(index: InvertedIndex, terms: list[str],
         .to_pandas()
 
 
-def _pruned_topk(spark: SparkSession, index: InvertedIndex, req: _Request,
-                 n_ranges: int) -> DataFrame:
+def _pruned_topk(spark: SparkSession, index: InvertedIndex,
+                 req: _Request) -> DataFrame:
     """The pruned tiers of an engaged request (the planner's step 5).
-
-    r7 EXECUTION SHAPE (the r6 plan re-scanned parquet for each of its
-    three passes and was 2.5-7× slower than exact at every bench scale —
-    VERDICT weak #1). Three tiers, picked by measured candidate size:
+    Both run the block-max kernel with block-level refinement
+    (``fine_prune``): ranges visited in descending bound order, θ the
+    k-th best score of the ranges visited so far, hot blocks only
+    inside a visited range (``fine_rows_map``), the remaining ranges
+    skipped.
 
       GATHERED — the query's candidate blocks are coordinator-sized
         (≤ ``_PRUNED_LOCAL_BLOCKS_MAX`` rows and
@@ -1562,94 +1489,39 @@ def _pruned_topk(spark: SparkSession, index: InvertedIndex, req: _Request,
         any tail/torso query at scale): the still-encoded blocks are read
         straight from the postings Parquet on the driver
         (``_gather_blocks``, bucket- and term-pruned, stopping as soon as
-        a budget is exceeded), then the SAME block-max kernel the warm
-        serving path runs executes there (``_run_local``, shared with the
-        served driver tier) — global WAND: ranges visited in descending
-        bound order, θ from the best ranges' exact scores, block-level
-        BMW refinement (``fine_rows_map``), remaining ranges skipped.
-        Zero Spark jobs. This is what a search engine's query coordinator
-        does once candidates are pruned to driver size.
-      DISTRIBUTED — candidate blocks over a gather budget (head terms):
-        a range-bounds aggregate collects driver-side bounds (still ≤
-        ``_PRUNED_DRIVER_RANGES_MAX`` rows of metadata) that pick
-        ``_SEED_RANGES`` seed ranges; a distributed seed job sets θ; the
-        survivors run the kernel re-sharded by range_id (doc-complete
-        tasks), survivor ids pushed down as plain filters.
-      LAZY — even the range metadata exceeds the driver envelope (10^8
-        ranges at 10^12 docs): the range bounds stay cached on the
-        executors, the seed ranges are their top ``_SEED_RANGES`` and
-        the survivors a broadcast join — no driver materialization of
-        the metadata anywhere.
+        a budget is exceeded) and the kernel runs there (``_run_local``,
+        shared with the served driver tier). Zero Spark jobs.
+      DISTRIBUTED — over a gather budget (head terms): the blocks are
+        re-sharded by range_id, so every task holds whole ranges, the
+        kernel emits each task's local top-k, and the k × tasks rows are
+        merged in (score DESC, doc_id ASC) order: one shuffle-map job and
+        one result job. This is the served executor tier's shape, and
+        its rank-safety: a doc's postings all live in one range, so a
+        task-local θ only skips docs that cannot enter that task's top-k,
+        and the global top-k is a subset of the union of local top-ks.
 
-    Every tier returns its ≤ k rows as a driver-resident result
+    Both return their ≤ k rows as a driver-resident result
     (``local_result``), so the caller's collect runs no further job.
 
-    Rank-safety under ``filter_docs``/``exclude_docs``/``min_match``/
-    ``after`` requires the constraints INSIDE the θ seeding, not just at
-    the end: θ must be the k-th best QUALIFYING score (an unconstrained
-    θ can exceed every qualifying doc's score and prune ranges holding
-    the true constrained top-k). With θ seeded that way, the range and
-    interval bounds — computed over ALL docs, hence upper bounds for any
-    subset — keep the usual skip argument
-    (tests/test_filtered.py::test_pruned_filtered). A doc's
-    distinct-matched-term count is complete within its range, so
-    applying ``min_match`` separately to the seed and survivor passes is
-    exact."""
-    qtf = _qtf(req.token_seq)
-    # bounds use the FULL per-term weight (idf·qtf: a term's maximum total
-    # contribution incl. query multiplicity); scoring uses single-idf
-    # partials folded in query-token order (see _fold_scores_batch)
-    weights = {t: req.idf[t] * qtf[t] for t in req.idf}
-    if n_ranges <= _PRUNED_DRIVER_RANGES_MAX:
-        pdf = _gather_blocks(index, sorted(weights), req.stats)
-        if pdf is not None:
-            if not len(pdf):
-                return req.answer("empty", local_result(spark))
-            if req.stats is not None:
-                req.stats["touched_ranges"] = int(pdf["range_id"].nunique())
-            return req.answer("gathered", _run_local(
-                spark, req.kernel(index, fine_prune=True), pdf))
-    blocks = _query_blocks(spark, index, sorted(weights)).select(
-        *_KERNEL_COLS)
-    # Per-range upper bound: Σ_t max over t's blocks in the range.
-    range_bounds = (blocks.withColumn("ub",
-                                      _block_upper_bound_col(weights, index))
-                    .groupBy("range_id", "term")
-                    .agg(F.max("ub").alias("tub"))
-                    .groupBy("range_id")
-                    .agg(F.sum("tub").alias("range_ub")))
-    if n_ranges <= _PRUNED_DRIVER_RANGES_MAX:
-        rb_rows = range_bounds.collect()
-        if not rb_rows:
+    ``filter_docs``/``exclude_docs``/``min_match``/``after`` are applied
+    inside the kernel, before the running top-k, so θ is the k-th best
+    QUALIFYING score; range and interval bounds over all docs stay upper
+    bounds for any subset (tests/test_filtered.py::test_pruned_filtered),
+    and a doc's distinct-matched-term count is complete within its
+    range."""
+    terms = sorted(req.idf)
+    kernel = req.kernel(index, fine_prune=True)
+    pdf = _gather_blocks(index, terms, req.stats)
+    if pdf is not None:
+        if not len(pdf):
             return req.answer("empty", local_result(spark))
-        if req.stats is not None:
-            req.stats["touched_ranges"] = len(rb_rows)
-        order = sorted(rb_rows, key=lambda r: (-r["range_ub"], r["range_id"]))
-        seed = [r["range_id"] for r in order[:_SEED_RANGES]]
-
-        def survivors(theta_eff):
-            ids = [r["range_id"] for r in order[len(seed):]
-                   if r["range_ub"] >= theta_eff]
-            return blocks.filter(F.col("range_id").isin(ids)) \
-                if ids else None
-
-        return req.answer("distributed", _seed_then_survivors(
-            spark, index, req, blocks, seed, survivors))
-    range_bounds = range_bounds.cache()
-    try:
-        seed = [r["range_id"] for r in
-                range_bounds.orderBy(F.desc("range_ub"), F.asc("range_id"))
-                .limit(_SEED_RANGES).collect()]
-        if not seed:
-            return req.answer("empty", local_result(spark))
-        return req.answer("lazy", _seed_then_survivors(
-            spark, index, req, blocks, seed,
-            lambda theta_eff: blocks.join(F.broadcast(
-                range_bounds.filter((F.col("range_ub") >= theta_eff)
-                                    & ~F.col("range_id").isin(seed))
-                .select("range_id")), "range_id")))
-    finally:
-        range_bounds.unpersist()
+        return req.answer("gathered", _run_local(spark, kernel, pdf))
+    rows = (_query_blocks(spark, index, terms).select(*_KERNEL_COLS)
+            .repartition("range_id").mapInPandas(kernel, _BATCH_SCHEMA)
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(req.k)
+            .collect())
+    return req.answer("distributed", local_result(
+        spark, [r["doc_id"] for r in rows], [r["score"] for r in rows]))
 
 
 def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
@@ -1662,26 +1534,27 @@ def bm25_topk_pruned(spark: SparkSession, index: InvertedIndex, query: str,
     """Rank- and bitwise-identical to ``bm25_topk_exact``; skips
     doc-ranges whose summed per-term upper bounds cannot reach the k-th
     best score, and inside the ranges it visits, blocks no doc can use.
-    The planner (``_topk``) picks the gathered, distributed or lazy tier
-    by measured candidate size (``_pruned_topk``). When the corpus has
-    fewer than ``min_ranges_to_prune`` doc-ranges (pruning only pays off
-    at scale — a head term at 10^12 docs touches ~10^8 ranges) it answers
-    as the exact route does (``exact_gathered`` or ``exact``), and a
+    The planner (``_topk``) picks the gathered tier when the candidate
+    blocks fit the gather budgets, else the distributed tier
+    (``_pruned_topk``). When the corpus has fewer than
+    ``min_ranges_to_prune`` doc-ranges (pruning only pays off at scale —
+    a head term at 10^12 docs touches ~10^8 ranges) it answers as the
+    exact route does (``exact_gathered`` or ``exact``), and a
     filter/exclude set over ``_MASK_IDS_MAX`` ids sends it to the
     ``exact`` tier. On a never-warmed index, a request the
     gathered tier answers runs no Spark job: idf and the candidate
     blocks are read straight from Parquet on the driver.
 
     ``filter_docs``, ``min_match``, ``exclude_docs`` and ``after`` have
-    the exact route's contract; they are applied inside the θ seeding
-    and both scoring passes, so θ is the k-th best QUALIFYING score (see
+    the exact route's contract; the kernel applies them before its
+    running top-k, so θ is the k-th best QUALIFYING score (see
     ``_pruned_topk`` for the rank-safety argument).
 
     Pass a dict as ``stats`` to receive the ``tier`` taken,
-    ``pruning_engaged``, the ``decoded_blocks`` accumulator, on the
-    gathered and distributed tiers ``touched_ranges``, and, whenever the
-    gather was tried, ``gathered_rows`` and ``gathered_bytes`` (the block
-    rows and encoded bytes read before it finished or stopped)."""
+    ``pruning_engaged``, the ``decoded_blocks`` accumulator and,
+    whenever the gather was tried, ``gathered_rows`` and
+    ``gathered_bytes`` (the block rows and encoded bytes read before it
+    finished or stopped)."""
     return _topk(spark, index, _request(
         spark, index, [query], k, min_match, filter_docs, exclude_docs,
         after=after, stats=stats), "pruned",

@@ -5,31 +5,31 @@ Paths: exact on each of its two tiers — exact_gathered (the exact plan
 carried out on the driver over the gathered blocks; the route's tier is
 printed per query, as a query over the gather budgets takes the Spark
 plan) and exact(spark) (the single-action posting join, gather budget
-forced to 0) — pruned (forced block-max) in
-each of its three tiers — gathered (the kernel on the driver over the
-fetched blocks), distributed (seed job + survivor kernel over an isin
-range list, gather budget forced to 0) and lazy (seed job + survivor
-kernel over a broadcast join, range-metadata budget forced to 0) —
-served on its driver tier (the in-process kernel over the driver copy
-of the serving layout, held here whatever its size) with and WITHOUT
-block-max skipping, served on its executor tier (per-shard kernel over
-the cached shards, driver budget forced to 0), and served-batch (the
-zero-shuffle batch stage hybrid uses — new in round 3). The r2 evidence
-tied exact ≡ the BM25Okapi-formula numpy oracle at 800k docs; this
-script ties every engine path to exact at the same scale, so the whole
-family stays anchored to the oracle.
+forced to 0) — pruned (forced block-max) on each of its two tiers —
+gathered (the kernel on the driver over the fetched blocks) and
+distributed (the kernel's local top-k per range-sharded task, then one
+merge; gather budget forced to 0) — served on its driver tier (the
+in-process kernel over the driver copy of the serving layout, held here
+whatever its size) with and WITHOUT block-max skipping, served on its
+executor tier (per-shard kernel over the cached shards, driver budget
+forced to 0), and served-batch (the zero-shuffle batch stage hybrid
+uses). The r2 evidence tied exact ≡ the BM25Okapi-formula numpy oracle
+at 800k docs; this script ties every engine path to exact at the same
+scale, so the whole family stays anchored to the oracle.
 
 For each golden query it also prints what the gathered tier read on the
 driver: the block rows and encoded bytes it gathered (``stats``
 ``gathered_rows`` / ``gathered_bytes``), and the postings Parquet row
 groups its bucket + term filter keeps, with their compressed bytes in
-the columns read.
+the columns read, and what the distributed tier cost: its median wall
+time over three calls, collect included, and its ``decoded_blocks``.
 
 Usage: python scripts/at_scale_identity.py [n_docs] (default 800000)
 Prints one JSON line: {"n_docs":..., "paths":..., "bitwise_ok":...}
-The corpus and index go to a fresh ``tempfile.mkdtemp()`` directory
-(set ``TMPDIR`` to move it); Spark's scratch space follows the caller's
-``SPARK_LOCAL_DIRS``.
+Spark runs on ``session.default_cores()`` cores (``SPARK_GRAFT_CPUS``,
+else the CPUs this process may run on). The corpus and index go to a
+fresh ``tempfile.mkdtemp()`` directory (set ``TMPDIR`` to move it);
+Spark's scratch space follows the caller's ``SPARK_LOCAL_DIRS``.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ import os
 import shutil
 import sys
 import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -47,7 +48,6 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 800_000
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pyspark.sql import functions as F
 
@@ -62,7 +62,7 @@ def main() -> None:
                                                      bm25_topk_served,
                                                      query_term_idf)
     from review_recommender_spark.query.search import bm25_scores_batch_served
-    from review_recommender_spark.session import get_spark
+    from review_recommender_spark.session import default_cores, get_spark
 
     @contextlib.contextmanager
     def forced(name, value):
@@ -96,6 +96,7 @@ def main() -> None:
     # every full warm below keeps the driver copy, so the served driver
     # tier is checked at this scale too; executor-tier calls force 0
     bm25._DRIVER_SERVING_BYTES_MAX = 1 << 62
+    cpus = default_cores()
     spark = get_spark("at-scale-id", cores=cpus,
                       shuffle_partitions=max(cpus, 8))
     tmp = tempfile.mkdtemp(prefix="rrs_id_")
@@ -145,10 +146,18 @@ def main() -> None:
                   f"gathered_bytes={gathered.get('gathered_bytes')} "
                   f"row_groups={groups} row_group_bytes={group_bytes}",
                   flush=True)
+            walls, dist_runs = [], []
             with forced("_PRUNED_LOCAL_BLOCKS_MAX", 0):
-                pruned_dist = pruned_rows()
-            with forced("_PRUNED_DRIVER_RANGES_MAX", 0):
-                pruned_lazy = pruned_rows()
+                for _ in range(3):
+                    dist: dict = {}
+                    t0 = time.perf_counter()
+                    dist_runs.append(pruned_rows(dist))
+                    walls.append(time.perf_counter() - t0)
+            pruned_dist = dist_runs[0]
+            print(f"q{qi}: distributed tier={dist['tier']} "
+                  f"wall_ms={1000 * sorted(walls)[1]:.1f} "
+                  f"decoded_blocks={dist['decoded_blocks'].value}",
+                  flush=True)
             served = [(r["doc_id"], r["score"]) for r in
                       bm25_topk_served(spark, idx, q, k=k).collect()]
             served_ns = [(r["doc_id"], r["score"]) for r in
@@ -158,8 +167,9 @@ def main() -> None:
                 served_ex = [(r["doc_id"], r["score"]) for r in
                              bm25_topk_served(spark, idx, q, k=k).collect()]
             same = (exact == exact_spark == pruned == pruned_dist
-                    == pruned_lazy == served == served_ns == served_ex
-                    == batch_top[qi])
+                    == served == served_ns == served_ex
+                    == batch_top[qi]
+                    and dist_runs.count(pruned_dist) == len(dist_runs))
             per_query.append(same)
             ok &= same
             print(f"q{qi}: {'BITWISE-IDENTICAL' if same else 'MISMATCH'}",
@@ -169,7 +179,6 @@ def main() -> None:
                 print("  exact(spark):", exact_spark)
                 print("  pruned:", pruned)
                 print("  pruned(distributed):", pruned_dist)
-                print("  pruned(lazy):", pruned_lazy)
                 print("  served:", served)
                 print("  served(executor):", served_ex)
                 print("  batch :", batch_top[qi])
@@ -247,7 +256,7 @@ def main() -> None:
         print(json.dumps({
             "n_docs": n_docs,
             "paths": ["exact", "exact(spark)", "pruned(gathered)",
-                      "pruned(distributed)", "pruned(lazy)",
+                      "pruned(distributed)",
                       "served(block-skip)", "served(no-skip)",
                       "served(executor)", "served_batch",
                       "served(partial-warm)", "boolean(served-vs-exact)",

@@ -15,12 +15,14 @@ Two corpora, because block-max effectiveness is a property of the DATA:
   uniform (default)  — the bench's synthetic pages. Every range contains
       near-max-tf postings of every golden term, so the summed per-term
       range bounds never drop below θ: pruning engages, skips nothing,
-      and the machinery (seed jobs + fine-prune pass) is pure overhead.
+      and the machinery (range bounds + fine-prune pass) is pure
+      overhead.
       This is the honest adversarial case for any WAND-family method.
   skewed (SPARK_GRAFT_CROSSOVER_SKEW=1) — the query term's tf is 10 in
       8 hot ranges and 1 (in short docs) everywhere else: the Zipf-like
-      shape real text has. The seed ranges establish a θ no cold range's
-      bound can reach, so ~99.7% of blocks are never decoded.
+      shape real text has. The hot ranges, visited first, establish a
+      θ no cold range's bound can reach, so ~99.7% of blocks are never
+      decoded.
 
 Usage: python scripts/pruned_crossover.py
 Env: SPARK_GRAFT_BENCH_DOCS (default 800000), SPARK_GRAFT_CPUS (8),

@@ -13,8 +13,9 @@ bitwise:
                   zero-shuffle shard kernel (θ = k-th best QUALIFYING
                   score; block-max skipping stays rank-safe because a
                   range bound over all docs upper-bounds the subset)
-  * pruned path:  θ seeded from qualifying seed scores; counts are
-                  complete per range (a doc's postings live in one range)
+  * pruned path:  the same kernel mask (θ = k-th best QUALIFYING
+                  score); counts are complete per range (a doc's
+                  postings live in one range)
   * partial warm: warm/cold split never splits a doc's range, so each
                   side's count is total
 """
@@ -82,9 +83,7 @@ def test_min_match_validation(spark, small_index):
         bm25_topk_exact(spark, small_index, Q, k=10, min_match=0)
 
 
-def test_served_and_pruned_bitwise_equal_exact(spark, small_index,
-                                               monkeypatch):
-    monkeypatch.setattr(bm25, "_SEED_RANGES", 2)
+def test_served_and_pruned_bitwise_equal_exact(spark, small_index):
     small_index.warm(spark, serving_shards=5)
     try:
         for q in (Q, Q2):

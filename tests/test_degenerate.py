@@ -1,13 +1,14 @@
 """Degenerate top-k requests get ONE defined answer on every BM25 route.
 
 Routes: exact, served on both tiers (driver copy, and executor shards
-with the driver budget forced to 0), pruned in its gathered,
-distributed and lazy tiers, and pruned below ``min_ranges_to_prune``
-(the exact fall-through). Requests: an empty query, an all-stopword
-query, a query of unknown terms only, a duplicated term, a 1,000-term
-query drawn from the index vocabulary, ``k=0``, ``k`` above the corpus
-size, and a search-after cursor at the last result. Every route
-must return the same rows, bit for bit, and none may raise."""
+with the driver budget forced to 0), pruned on both its tiers
+(gathered, and distributed with the gather budget forced to 0), and
+pruned below ``min_ranges_to_prune`` (the exact fall-through).
+Requests: an empty query, an all-stopword query, a query of unknown
+terms only, a duplicated term, a 1,000-term query drawn from the index
+vocabulary, ``k=0``, ``k`` above the corpus size, and a search-after
+cursor at the last result. Every route must return the same rows, bit
+for bit, and none may raise."""
 
 import pytest
 
@@ -101,9 +102,6 @@ def test_degenerate_request_same_on_every_route(spark, warm_index,
         "pruned_gathered": lambda: _pairs(pruned(min_ranges_to_prune=1)),
         "pruned_distributed": lambda: forced(
             "_PRUNED_LOCAL_BLOCKS_MAX", 0,
-            lambda: pruned(min_ranges_to_prune=1)),
-        "pruned_lazy": lambda: forced(
-            "_PRUNED_DRIVER_RANGES_MAX", 0,
             lambda: pruned(min_ranges_to_prune=1)),
         "pruned_fall_through": lambda: _pairs(pruned()),
     }

@@ -1,7 +1,7 @@
 """The driver-resident result (query/bm25.py::local_result).
 
 Every driver-side answer — the served driver tier, the gathered and
-exact_gathered tiers, the distributed/lazy merge and every empty result
+exact_gathered tiers, the distributed tier's merge and every empty result
 — is a ``_DriverResult``: its rows live in an Arrow table on the driver,
 ``collect()``, ``toPandas()`` and ``toArrow()`` read them there, and
 anything else reads ``_jdf``, which builds the LocalRelation on first

@@ -160,14 +160,13 @@ def test_empty_filter_returns_empty(spark, small_pages, small_index):
         small_index.unwarm()
 
 
-def test_pruned_filtered(spark, small_pages, small_index, monkeypatch):
-    """The pruned path with a filter must seed θ from FILTERED scores: the
-    'es' slice (~2%) scores far below the unfiltered seeds, so an
+def test_pruned_filtered(spark, small_pages, small_index):
+    """The pruned path with a filter must take θ from FILTERED scores:
+    the 'es' slice (~2%) scores far below the unfiltered top-k, so an
     unfiltered θ would prune ranges holding the true filtered top-k.
     Bitwise identity with the exact filtered path, with the fine
     block-level prune on (it always is)."""
     from review_recommender_spark.query.bm25 import bm25_topk_pruned
-    monkeypatch.setattr(bm25, "_SEED_RANGES", 2)
     fd = _es_filter(small_pages)
     for q in QUERIES:
         exact = _pairs(bm25_topk_exact(spark, small_index, q, k=10,

@@ -133,10 +133,8 @@ def test_served_exclusion_bitwise_equals_exact(spark, small_index,
         small_index.unwarm()
 
 
-def test_pruned_exclusion_bitwise_equals_exact(spark, small_index,
-                                               monkeypatch):
+def test_pruned_exclusion_bitwise_equals_exact(spark, small_index):
     from review_recommender_spark.query.bm25 import bm25_topk_pruned
-    monkeypatch.setattr(bm25, "_SEED_RANGES", 2)
     ex = term_docs(spark, small_index, "socks")
     q = "wireless bluetooth headphones"
     exact = [(r["doc_id"], r["score"]) for r in bm25_topk_exact(

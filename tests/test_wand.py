@@ -4,7 +4,6 @@ exact scorer for every golden query, plus pruning edge cases."""
 import numpy as np
 import pytest
 
-from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                  bm25_topk_pruned)
 
@@ -19,10 +18,9 @@ QUERIES = [
 ]
 
 
-@pytest.mark.parametrize("query", QUERIES)
+@pytest.mark.parametrize("query", QUERIES + ["wireless sound quality"])
 @pytest.mark.parametrize("k", [1, 10, 50])
-def test_pruned_equals_exact(spark, small_index, monkeypatch, query, k):
-    monkeypatch.setattr(bm25, "_SEED_RANGES", 2)
+def test_pruned_equals_exact(spark, small_index, query, k):
     exact = bm25_topk_exact(spark, small_index, query, k=k).collect()
     pruned = bm25_topk_pruned(spark, small_index, query, k=k,
                               min_ranges_to_prune=1).collect()
@@ -334,7 +332,7 @@ def test_bursty_corpus_skip_and_pruned_identity(spark, tmp_path):
         (st_p["decoded_blocks"].value, st_e["decoded_blocks"].value)
 
 
-def test_negative_idf_pruning_rank_safe(spark, tmp_path, monkeypatch):
+def test_negative_idf_pruning_rank_safe(spark, tmp_path):
     """Degenerate/templated corpus where EVERY term's fixed-up idf is
     negative (df > n/2 for the whole vocabulary → vocabulary-mean raw idf
     < 0 → the BM25Okapi ε-fixup ε·avg_idf is itself negative). With
@@ -373,7 +371,6 @@ def test_negative_idf_pruning_rank_safe(spark, tmp_path, monkeypatch):
 
     query = "alpha beta"
     exact = bm25_topk_exact(spark, idx, query, k=10).collect()
-    monkeypatch.setattr(bm25, "_SEED_RANGES", 2)
     pruned = bm25_topk_pruned(spark, idx, query, k=10,
                               min_ranges_to_prune=1).collect()
     assert [r["doc_id"] for r in pruned] == [r["doc_id"] for r in exact]
@@ -391,17 +388,6 @@ def test_negative_idf_pruning_rank_safe(spark, tmp_path, monkeypatch):
     assert [r["doc_id"] for r in skipped] == [r["doc_id"] for r in plain]
     assert [r["score"] for r in skipped] == [r["score"] for r in plain]
     assert [r["doc_id"] for r in plain] == [r["doc_id"] for r in exact]
-
-
-def test_pruned_small_seed_still_safe(spark, small_index, monkeypatch):
-    """Even a 1-range seed must stay rank-identical (θ only prunes ranges
-    whose upper bound cannot reach it)."""
-    monkeypatch.setattr(bm25, "_SEED_RANGES", 1)
-    exact = bm25_topk_exact(spark, small_index, "wireless sound quality",
-                            k=10).collect()
-    pruned = bm25_topk_pruned(spark, small_index, "wireless sound quality",
-                              k=10, min_ranges_to_prune=1).collect()
-    assert [r["doc_id"] for r in pruned] == [r["doc_id"] for r in exact]
 
 
 def test_block_bounds_dominate_scores(spark, small_index):
@@ -468,8 +454,8 @@ def test_fine_prune_keeps_exactly_hot_blocks():
     assert 0 < len(got) < len(meta)  # pruning actually drops blocks
 
 
-def test_pruned_exact_ties_at_theta(spark, tmp_path, monkeypatch):
-    """Hundreds of identical docs → the k-th seed score TIES the bound of
+def test_pruned_exact_ties_at_theta(spark, tmp_path):
+    """Hundreds of identical docs → the k-th score TIES the bound of
     every other range. Rank-identity then depends on keeping θ-tied
     ranges/intervals (≥ with ulp slack, not >) so tied docs are scored
     exactly and the doc_id tie-break matches the exact path."""
@@ -490,7 +476,6 @@ def test_pruned_exact_ties_at_theta(spark, tmp_path, monkeypatch):
                                        term_buckets=8))
     idx = build_index(spark, docs, TableIO(str(tmp_path / "ties")), cfg)
     exact = bm25_topk_exact(spark, idx, "usb charging cable", k=10).collect()
-    monkeypatch.setattr(bm25, "_SEED_RANGES", 1)
     pruned = bm25_topk_pruned(spark, idx, "usb charging cable", k=10,
                               min_ranges_to_prune=1).collect()
     assert [r["doc_id"] for r in pruned] == [r["doc_id"] for r in exact]

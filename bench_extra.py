@@ -12,6 +12,8 @@ Usage:
     python bench_extra.py [phase,phase,...]      (default: all)
 Phases: build, queries, bursty, hybrid
 Output: one JSON line per phase on stdout.
+Spark runs on ``session.default_cores()`` cores (``SPARK_GRAFT_CPUS``,
+else the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ def _p50(xs):
 
 
 def main() -> None:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000"))
     phases = (sys.argv[1].split(",") if len(sys.argv) > 1
               else ["build", "queries", "bursty", "hybrid"])
@@ -52,8 +53,10 @@ def main() -> None:
                                                      bm25_topk_served_batch)
     from review_recommender_spark.query.encoder import embed_documents
     from review_recommender_spark.query.search import hybrid_search_batch
-    from review_recommender_spark.session import get_spark
+    from review_recommender_spark.session import default_cores, get_spark
     from pyspark.sql import functions as F
+
+    cpus = default_cores()
 
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     if shm:

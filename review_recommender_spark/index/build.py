@@ -69,6 +69,7 @@ import hashlib
 import os
 import zlib
 from dataclasses import dataclass
+from functools import lru_cache
 from typing import Iterator
 
 import numpy as np
@@ -207,6 +208,18 @@ POSITIONS_BLOCKS = BlockSpec(POSITIONS, "cnt", "pos", positional=True)
 BLOCK_SCHEMA = POSTINGS_BLOCKS.block_schema
 # term_stats rows as ``okapi_idf`` writes them
 TERM_STATS_SCHEMA = "term string, df long, idf_raw double, idf double"
+# the block columns every scoring kernel reads, in the serving layouts'
+# order
+_KERNEL_COLS = ["term", "range_id", "n", "first_doc_id", "last_doc_id",
+                "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
+# A FULL warm keeps a driver copy of the serving layout, read straight
+# from the postings Parquet, while its encoded posting bytes stay within
+# this budget (~26M postings at the measured 2.41 B/posting, plus ~30 B
+# per block row of term and metadata); every served request then answers
+# in-process with zero Spark jobs. The envelope class of the warm idf
+# cache (~120 MB at its 2M-term cap). Over budget, warm builds the
+# executor serving layout instead.
+_DRIVER_SERVING_BYTES_MAX = 64 << 20
 # the read schema of each term-bucketed table: its data columns, then the
 # term_bucket partition column, as ``spark.read.parquet`` infers them.
 # Passing it skips Spark's schema-inference job on every read.
@@ -225,15 +238,12 @@ def read_bucketed(spark: SparkSession, io: TableIO, name: str) -> DataFrame:
     return spark.read.schema(_READ_SCHEMAS[name]).parquet(io.path(name))
 
 
-def term_filter(terms, n_buckets: int):
-    """The pyarrow filter selecting the rows of ``terms`` in a
-    term-bucketed table: their ``term_bucket`` partitions, then the
-    terms themselves."""
-    import pyarrow.dataset as pa_ds
-    terms = sorted(set(terms))
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    return (pa_ds.field("term_bucket").isin(buckets)
-            & pa_ds.field("term").isin(terms))
+@lru_cache(maxsize=None)
+def _arrow_schema(ddl: str) -> "pa.Schema":  # noqa: F821
+    """The Arrow schema of the DDL ``ddl``, as Spark converts it."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+    return to_arrow_schema(StructType.fromDDL(ddl))
 
 
 def _slices(arr: np.ndarray, lo, hi) -> list[bytes]:
@@ -529,19 +539,24 @@ def _write_blocks(io: TableIO, spec: BlockSpec, blocks: DataFrame,
              partition_by=["term_bucket"], lineage=lineage, metrics={})
 
 
-def _encoded_bytes():
-    """A block row's encoded posting payload (its three varint
-    columns) — the byte measure warm budgets are stated in."""
-    return (F.octet_length("doc_bytes") + F.octet_length("tf_bytes")
-            + F.octet_length("dl_bytes"))
-
-
 @dataclass(frozen=True)
 class _DriverServing:
     table: "pa.Table"  # noqa: F821 — serving rows sorted by term
     terms: np.ndarray  # the distinct terms, ascending
     bounds: np.ndarray  # term i's rows are [bounds[i], bounds[i + 1])
-    nbytes: int  # encoded posting bytes (``_encoded_bytes`` summed)
+
+    @classmethod
+    def of(cls, table: "pa.Table") -> "_DriverServing":  # noqa: F821
+        """``table``'s rows sorted by (term, range_id, first_doc_id),
+        with the term run boundaries ``InvertedIndex.serving_rows``
+        searches."""
+        import pyarrow.compute as pc
+        table = table.sort_by([("term", "ascending"),
+                               ("range_id", "ascending"),
+                               ("first_doc_id", "ascending")])
+        runs = pc.run_end_encode(table.column("term").combine_chunks())
+        return cls(table, runs.values.to_numpy(zero_copy_only=False),
+                   np.concatenate([[0], runs.run_ends.to_numpy()]))
 
 
 @dataclass
@@ -554,63 +569,102 @@ class InvertedIndex:
     _cached: dict = None  # type: ignore[assignment]
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        if self._cached and POSTINGS in self._cached:
-            return self._cached[POSTINGS]
         return read_bucketed(spark, self.io, POSTINGS)
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
-        if self._cached and TERM_STATS in self._cached:
-            return self._cached[TERM_STATS]
         return read_bucketed(spark, self.io, TERM_STATS)
 
     def scan(self, name: str, terms=None,
              columns: list[str] | None = None) -> "pa_ds.Scanner":  # noqa: F821
         """The driver-side reader of the on-disk POSTINGS or TERM_STATS
-        table: a pyarrow scanner over its hive ``term_bucket`` partitions,
-        restricted to the rows of ``terms`` (``term_filter``; every row
-        when None) and to ``columns``. Zero Spark jobs. The dataset is
-        opened afresh on every call, so a rebuilt or merged root is never
-        read stale."""
+        table: a pyarrow scanner over the files of its hive
+        ``term_bucket`` directories — only those ``terms`` hash to
+        (``term_bucket_py``), restricted to their rows, or every
+        directory and row when ``terms`` is None — projected to
+        ``columns``. A bucket with no directory holds no rows. Zero Spark
+        jobs. The directories are listed afresh on every call, so a
+        rebuilt or merged root is never read stale."""
+        import glob
+
         import pyarrow.dataset as pa_ds
-        ds = pa_ds.dataset(self.io.path(name), format="parquet",
-                           partitioning="hive")
+        root = self.io.path(name)
+        if terms is not None:
+            terms = sorted(set(terms))
+        buckets = ["*"] if terms is None else sorted(
+            {term_bucket_py(t, self.cfg.index.term_buckets) for t in terms})
+        # "*" skips dot-files (Spark's .crc checksums), as pyarrow's own
+        # discovery does
+        files = sorted(f for b in buckets for f in glob.glob(
+            os.path.join(root, f"term_bucket={b}", "*")))
+        ds = pa_ds.dataset(files, schema=_arrow_schema(_READ_SCHEMAS[name]),
+                           format="parquet", partitioning="hive",
+                           partition_base_dir=root)
         return ds.scanner(columns=columns, filter=None if terms is None
-                          else term_filter(terms,
-                                           self.cfg.index.term_buckets))
+                          else pa_ds.field("term").isin(terms))
+
+    def read_blocks(self, terms, max_rows: int | None, max_bytes: int
+                    ) -> tuple["pa.Table | None", int, int]:  # noqa: F821
+        """The ``_KERNEL_COLS`` of the postings block rows of ``terms``
+        (every term when None), read straight from Parquet on the driver
+        (``scan``) — zero Spark jobs — with the block rows and encoded
+        posting bytes read. Batches stream in until the rows exceed
+        ``max_rows`` (None: no row cap) or the encoded bytes exceed
+        ``max_bytes``; then the read stops and the table is None."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        scanner = self.scan(POSTINGS, terms, _KERNEL_COLS)
+        batches, rows, nbytes = [], 0, 0
+        for batch in scanner.to_batches():
+            batches.append(batch)
+            rows += batch.num_rows
+            nbytes += sum(pc.sum(pc.binary_length(batch.column(c))).as_py()
+                          or 0 for c in POSTINGS_BLOCKS.bytes_cols)
+            if nbytes > max_bytes or (max_rows is not None
+                                      and rows > max_rows):
+                return None, rows, nbytes
+        return (pa.Table.from_batches(batches, scanner.projected_schema),
+                rows, nbytes)
 
     def warm(self, spark: SparkSession, serving_shards: int | None = None,
              idf_cache_max: int = 2_000_000,
              ranges=None, max_bytes: int | None = None) -> "InvertedIndex":
-        """Pin postings + term_stats in executor memory for a query-serving
-        session (the moral equivalent of the reference's st.cache_resource
-        artifact memoization, app_product_search.py:53-119).
+        """Build the query-serving state of a session (the moral
+        equivalent of the reference's st.cache_resource artifact
+        memoization, app_product_search.py:53-119). A warm keeps exactly
+        ONE serving layout of the postings, which every served entry
+        point (``query.bm25``: single requests, batches, hybrid's scores)
+        answers from:
 
-        Also builds the low-latency serving state:
-          * ``_serving`` — the postings re-sharded by ``range_id`` (doc
-            ranges) into ``serving_shards`` shards (default: one per
+          * ``_driver_serving`` — a FULL warm whose encoded posting bytes
+            fit ``_DRIVER_SERVING_BYTES_MAX`` keeps a driver copy: the
+            ``_KERNEL_COLS`` block rows read straight from the postings
+            Parquet (``read_blocks``), one Arrow table sorted by term.
+            Served requests slice the query terms' rows out of it and run
+            the kernel in-process. Zero Spark jobs to build, nothing
+            cached in Spark.
+          * ``_serving`` — otherwise (over that budget, or a partial
+            warm): the postings re-sharded by ``range_id`` (doc ranges)
+            into ``serving_shards`` cached shards (default: one per
             executor slot, ``defaultParallelism``), the document-sharded
             layout search engines serve from: every doc's complete
             postings live in ONE shard, so a query is a single map stage
             (each shard computes its exact local top-k) plus a k×shards
             merge — no shuffle, no join.
-          * ``_driver_serving`` — on a FULL warm whose encoded posting
-            bytes fit ``query.bm25._DRIVER_SERVING_BYTES_MAX``, a driver
-            copy of that layout (one Arrow table sorted by term):
-            ``bm25_topk_served`` then slices the query terms' rows and
-            runs the same kernel in-process — zero Spark jobs. Partial
-            warms never keep one; ``unwarm`` releases it.
           * ``_idf`` — driver-side {term: idf} when the vocabulary is
             driver-sized (≤ idf_cache_max), read straight from the
             term_stats Parquet (``scan``), so per-query weights cost no
             lookup at all. Larger vocabularies fall back to a per-batch
             bucket-pruned read of the query terms' rows (also no job).
 
-        MEMORY ENVELOPE (what "warm at 10^12 docs" costs, arithmetic a
-        reader can check): the serving layout caches the ENCODED posting
-        blocks — measured 2.41 bytes/posting (delta+varint, BENCH) plus
-        ~1 byte/posting of block metadata/row overhead at the measured
-        ~1k-posting mean block size. A web corpus averages ~400 postings
-        (distinct K1 terms) per doc, so:
+        The postings and term_stats tables themselves stay on disk:
+        ``postings()`` and ``term_stats()`` read them.
+
+        MEMORY ENVELOPE of the executor layout (what "warm at 10^12 docs"
+        costs, arithmetic a reader can check): it caches the ENCODED
+        posting blocks — measured 2.41 bytes/posting (delta+varint,
+        BENCH) plus ~1 byte/posting of block metadata/row overhead at the
+        measured ~1k-posting mean block size. A web corpus averages ~400
+        postings (distinct K1 terms) per doc, so:
           postings/doc · bytes/posting ≈ 400 · 3.5 ≈ 1.4 KB/doc warm.
           10^9 docs  →  ~1.4 TB  → 47 executors at 30 GiB cache each.
           10^12 docs →  ~1.4 PB  → needs ~47k such executors: warm-ALL is
@@ -624,22 +678,20 @@ class InvertedIndex:
           (``query.bm25._served_local_topk``), so a head-term query at
           10^9 docs decodes only the ranges that can compete, not the
           term's whole resident posting list.
-        The driver idf cache is ~60 B/term (str + float in a dict): the
+        The driver copy is bounded by ``_DRIVER_SERVING_BYTES_MAX``. The
+        driver idf cache is ~60 B/term (str + float in a dict): the
         default ``idf_cache_max`` = 2M terms ≈ 120 MB driver RSS; larger
         vocabularies auto-fall-back to per-batch term reads.
 
         ``ranges`` (optional iterable of range_ids): PARTIAL warm — pin
-        only those doc-ranges' postings in the serving layout (the
+        only those doc-ranges' postings in the executor layout (the
         head-shard strategy the envelope above prescribes at 10^9+ docs:
         warm the hot ranges, leave the tail on disk). Served queries
         stay RESULT-IDENTICAL: every served path unions an exact-scored
         on-disk pass over the cold ranges (``query.bm25``'s
         ``_cold_scores_batch``), so partial warm trades latency on cold
         docs for memory, never correctness
-        (tests/test_wand.py::test_partial_warm_bitwise_identical). With
-        ``ranges`` given, the full postings table is NOT cached (that
-        memory saving is the point); exact/pruned paths read it on disk
-        as usual.
+        (tests/test_wand.py::test_partial_warm_bitwise_identical).
 
         ``max_bytes`` (optional int): BUDGETED partial warm — pick the
         resident range set automatically so its encoded posting payload
@@ -663,9 +715,12 @@ class InvertedIndex:
         if max_bytes is not None:
             if max_bytes < 0:
                 raise ValueError("warm(): max_bytes must be >= 0")
+            # the encoded posting payload, the measure of both budgets
             sizes = (read_bucketed(spark, self.io, POSTINGS)
                      .groupBy("range_id")
-                     .agg(F.sum(_encoded_bytes()).alias("bytes"))
+                     .agg(F.sum(sum(F.octet_length(c) for c in
+                                    POSTINGS_BLOCKS.bytes_cols))
+                          .alias("bytes"))
                      .collect())
             picked, spent = [], 0
             for row in sorted(sizes,
@@ -674,57 +729,52 @@ class InvertedIndex:
                     picked.append(row["range_id"])
                     spent += row["bytes"]
             ranges = picked
-        if self._cached:
-            for df in self._cached.values():
-                if hasattr(df, "unpersist"):
-                    df.unpersist()
-        term_stats = read_bucketed(spark, self.io, TERM_STATS).cache()
-        cached: dict = {TERM_STATS: term_stats}
-        posts_src = read_bucketed(spark, self.io, POSTINGS)
-        if ranges is not None:
-            warm_ranges = frozenset(int(r) for r in ranges)
-            cached["_warm_ranges"] = warm_ranges
-            posts_src = posts_src.filter(
-                F.col("range_id").isin([int(r) for r in warm_ranges])
-                if warm_ranges else F.lit(False))
+        self.unwarm()
+        cached: dict = {}
+        table = None if ranges is not None else self.read_blocks(
+            None, None, _DRIVER_SERVING_BYTES_MAX)[0]
+        if table is not None:
+            cached["_driver_serving"] = _DriverServing.of(table)
         else:
-            posts_src = posts_src.cache()
-            cached[POSTINGS] = posts_src
-        if serving_shards is None:
-            # one shard per executor slot: a served query's per-shard work
-            # is tiny, so every extra wave of Python tasks is pure
-            # scheduling cost (~0.35 s a wave at local[4]); top-k is
-            # bitwise-identical at any shard count
-            serving_shards = spark.sparkContext.defaultParallelism
-        serving = (posts_src.repartition(serving_shards, "range_id")
-                   .select("term", "range_id", "n", "first_doc_id",
-                           "last_doc_id", "max_tf", "min_dl",
-                           "doc_bytes", "tf_bytes", "dl_bytes")
-                   .cache())
-        cached["_serving"] = serving
-        object.__setattr__(self, "_cached", cached)
-        for df in cached.values():
-            if hasattr(df, "count"):
-                df.count()
-        if ranges is None:
-            self._keep_driver_serving(serving)
+            posts = read_bucketed(spark, self.io, POSTINGS)
+            if ranges is not None:
+                warm_ranges = frozenset(int(r) for r in ranges)
+                cached["_warm_ranges"] = warm_ranges
+                posts = posts.filter(F.col("range_id").isin(
+                    sorted(warm_ranges)) if warm_ranges else F.lit(False))
+            if serving_shards is None:
+                # one shard per executor slot: a served query's per-shard
+                # work is tiny, so every extra wave of Python tasks is
+                # pure scheduling cost (~0.35 s a wave at local[4]);
+                # top-k is bitwise-identical at any shard count
+                serving_shards = spark.sparkContext.defaultParallelism
+            cached["_serving"] = (posts.repartition(serving_shards,
+                                                    "range_id")
+                                  .select(*_KERNEL_COLS).cache())
+            cached["_serving"].count()
         if self.vocab_size <= idf_cache_max:
             tbl = self.scan(TERM_STATS, columns=["term", "idf"]).to_table()
             cached["_idf"] = dict(zip(tbl["term"].to_pylist(),
                                       tbl["idf"].to_pylist()))
+        object.__setattr__(self, "_cached", cached)
         return self
 
+    def has_serving_layout(self) -> bool:
+        """True when ``warm`` left a serving layout resident: the driver
+        copy or the executor shards."""
+        return bool(self._cached and ("_driver_serving" in self._cached
+                                      or "_serving" in self._cached))
+
     def is_warm(self) -> bool:
-        """True when the doc-sharded serving layout + driver idf cache are
-        resident (``warm`` ran) — query paths can then skip the term_stats
-        join and shuffle-free their BM25 stage."""
-        return bool(self._cached and "_serving" in self._cached
-                    and "_idf" in self._cached)
+        """True when a serving layout + the driver idf cache are
+        resident (``warm`` ran) — query paths can then skip the
+        term_stats join and answer on a served tier."""
+        return self.has_serving_layout() and "_idf" in self._cached
 
     def unwarm(self) -> None:
-        """Release every warm cache (postings/term_stats/serving layout +
-        driver idf map). Call when a serving session ends so the executor
-        memory returns to the pool — e.g. between bench phases, where a
+        """Release every warm cache (serving layout, positions layout,
+        driver idf map). Call when a serving session ends so the memory
+        returns to the pool — e.g. between bench phases, where a
         lingering 120k-doc serving layout would distort later timings."""
         if self._cached:
             for df in self._cached.values():
@@ -732,38 +782,16 @@ class InvertedIndex:
                     df.unpersist()
         object.__setattr__(self, "_cached", None)
 
-    def serving_df(self, spark: SparkSession) -> DataFrame:
-        if not (self._cached and "_serving" in self._cached):
-            self.warm(spark)
-        return self._cached["_serving"]
+    def serving_df(self) -> DataFrame | None:
+        """The executor serving layout, or None when ``warm`` kept none."""
+        return (self._cached or {}).get("_serving")
 
-    def _keep_driver_serving(self, serving: DataFrame) -> None:
-        """Hold a driver copy of a FULL serving layout when its encoded
-        bytes fit ``query.bm25._DRIVER_SERVING_BYTES_MAX``: one Arrow
-        table sorted by term, plus the term run boundaries
-        ``serving_rows`` searches. Costs two JVM-only jobs over the
-        cached layout (the byte sum, then the Arrow collect)."""
-        from ..query.bm25 import _DRIVER_SERVING_BYTES_MAX
-        nbytes = serving.agg(F.sum(_encoded_bytes())).first()[0] or 0
-        if nbytes > _DRIVER_SERVING_BYTES_MAX:
-            return
-        import pyarrow.compute as pc
-        table = serving.toArrow().sort_by(
-            [("term", "ascending"), ("range_id", "ascending"),
-             ("first_doc_id", "ascending")])
-        runs = pc.run_end_encode(table.column("term").combine_chunks())
-        self._cached["_driver_serving"] = _DriverServing(
-            table, runs.values.to_numpy(zero_copy_only=False),
-            np.concatenate([[0], runs.run_ends.to_numpy()]), nbytes)
-
-    def serving_rows(self, terms: list[str],
-                     max_bytes: int) -> pd.DataFrame | None:
+    def serving_rows(self, terms: list[str]) -> pd.DataFrame | None:
         """The serving-layout block rows of ``terms`` (sorted, unique)
         as ONE pandas frame, sliced from the driver copy a full ``warm``
-        keeps — or None when no driver copy is resident or its encoded
-        bytes exceed ``max_bytes`` (the executor layout then serves)."""
+        keeps — or None when no driver copy is resident."""
         ds = self._cached.get("_driver_serving") if self._cached else None
-        if ds is None or ds.nbytes > max_bytes:
+        if ds is None:
             return None
         pos = np.searchsorted(ds.terms, terms)
         rows = [np.arange(ds.bounds[p], ds.bounds[p + 1])

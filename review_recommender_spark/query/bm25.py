@@ -27,12 +27,15 @@ tests/test_degenerate.py), and the planner names the tier it took in
                 budget or with ``boost_docs``, and any request whose
                 filter/exclude set exceeds ``_MASK_IDS_MAX`` ids (the
                 masks would not fit).
-  driver      : served, full warm within ``_DRIVER_SERVING_BYTES_MAX`` —
-                the kernel in-process over the driver copy of the serving
-                layout, zero Spark jobs.
+  driver      : served, when ``warm`` kept the driver copy of the serving
+                layout (a full warm within ``_DRIVER_SERVING_BYTES_MAX``)
+                — the kernel in-process over the query terms' rows of
+                that copy, zero Spark jobs. Batches
+                (``bm25_topk_served_batch``) and hybrid's served scores
+                answer the same way (``_served_scores``).
   executor    : served otherwise — one map stage over the doc-sharded
                 serving layout and a k×shards merge; a partial warm
-                unions the cold ranges' exact scores (``_with_cold_ranges``).
+                unions the cold ranges' exact scores.
   gathered    : pruned, candidate blocks within ``_PRUNED_LOCAL_BLOCKS_MAX``
                 rows and ``_PRUNED_LOCAL_BYTES_MAX`` encoded bytes — the
                 blocks are read straight from the postings Parquet on the
@@ -47,7 +50,7 @@ any (k1, b) — and ranges whose summed per-term bounds cannot beat the
 k-th score are never decoded; inside a visited range, block-level
 pruning (``_hot_block_mask``) skips blocks no doc can use. The served
 tiers skip ranges the same way (``block_skip``). ``bm25_topk_served_batch``
-answers many queries in one executor stage.
+answers many queries in one pass of the served kernel.
 
 Shared by every tier:
 
@@ -84,7 +87,7 @@ from __future__ import annotations
 import weakref
 from collections import Counter
 from dataclasses import dataclass
-from functools import cached_property, lru_cache
+from functools import cached_property
 from typing import Iterator
 
 import pandas as pd
@@ -95,7 +98,8 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import StructType, _create_row
 
 from ..functions.tokenize import tokenize_k2_py
-from ..index.build import POSTINGS, TERM_STATS, InvertedIndex, term_bucket_py
+from ..index.build import (_KERNEL_COLS, TERM_STATS, InvertedIndex,
+                           _arrow_schema, term_bucket_py)
 from ..index.codec import decode_blocks_bulk
 
 RESULT_SCHEMA = "doc_id long, score double"
@@ -111,21 +115,11 @@ _PRUNED_LOCAL_BLOCKS_MAX = 50_000
 # stay within this budget, the ~16 MB the row cap stands for. A query
 # over either budget (head terms) stays distributed.
 _PRUNED_LOCAL_BYTES_MAX = 16 << 20
-# the block columns the kernel reads with fine_prune (the pruned tiers)
-_KERNEL_COLS = ["term", "range_id", "n", "first_doc_id", "last_doc_id",
-                "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
 # filter_docs/exclude_docs ship to the kernel as sorted id masks while
 # each holds at most this many ids (5M int64 = 40 MB, the envelope class
 # of the warm idf cache); a larger set sends the request to the exact
 # tier's join plan.
 _MASK_IDS_MAX = 5_000_000
-# A FULL warm keeps a driver copy of the serving layout while its encoded
-# posting bytes stay within this budget (~26M postings at the measured
-# 2.41 B/posting, plus ~30 B/block row of term and metadata), and
-# bm25_topk_served then answers in-process with zero Spark jobs. The
-# envelope class of the warm idf cache (~120 MB at its 2M-term cap).
-# Over budget, the executor serving layout answers.
-_DRIVER_SERVING_BYTES_MAX = 64 << 20
 
 # Every public query entry point accepts QueryLike: a search string (run
 # through the K2 query tokenizer, the reference's asymmetric-stoplist
@@ -200,12 +194,6 @@ def local_result(spark: SparkSession, *columns,
     return _DriverResult(spark, pa.table(
         [pa.array(c, f.type) for c, f in
          zip(columns or [()] * len(arrow), arrow)], schema=arrow))
-
-
-@lru_cache(maxsize=None)
-def _arrow_schema(ddl: str) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-    return to_arrow_schema(StructType.fromDDL(ddl))
 
 
 def _tokens(query) -> list[str]:
@@ -730,17 +718,6 @@ def _cold_scores_batch(spark: SparkSession, index: InvertedIndex,
         req.after)
 
 
-def _with_cold_ranges(spark: SparkSession, index: InvertedIndex,
-                      req: _Request, local: DataFrame) -> DataFrame:
-    """``local`` (the served kernel's rows) plus, under a PARTIAL warm,
-    the exact scores of the cold (non-resident) ranges on disk —
-    result-identical to a fully-warm serve."""
-    wr = index.warm_ranges()
-    if wr is None:
-        return local
-    return local.unionByName(_cold_scores_batch(spark, index, req, wr))
-
-
 def term_docs(spark: SparkSession, index: InvertedIndex,
               term: str) -> DataFrame:
     """All doc_ids whose postings contain ``term`` (one bucket+term-pruned
@@ -1199,31 +1176,72 @@ def _apply_masks(uniq, totals, allowed, blocked, after):
     return uniq, totals
 
 
-def _run_local(spark: SparkSession, kernel, pdf: pd.DataFrame) -> DataFrame:
-    """Run a single-query ``_served_local_topk`` kernel in-process over
-    one frame of block rows; its ≤ k rows (already in score DESC,
-    doc_id ASC order) come back as a driver-resident result
-    (``local_result``)."""
-    out = next(kernel(iter([pdf])), None)
-    if out is None:
-        return local_result(spark)
-    return local_result(spark, out["doc_id"], out["score"])
+def _run_local(spark: SparkSession, kernel, pdf: pd.DataFrame,
+               schema: str = RESULT_SCHEMA) -> DataFrame:
+    """Run a ``_served_local_topk`` kernel in-process over one frame of
+    block rows; its rows (each query's already in score DESC, doc_id ASC
+    order) come back as a driver-resident result (``local_result``) of
+    the DDL ``schema``: its fields name (doc_id, score), after query_id
+    when there are three."""
+    frames = list(kernel(iter([pdf])))
+    if not frames:
+        return local_result(spark, schema=schema)
+    out = frames[0] if len(frames) == 1 \
+        else pd.concat(frames, ignore_index=True)
+    cols = ["query_id", "doc_id", "score"][-len(_arrow_schema(schema)):]
+    return local_result(spark, *(out[c] for c in cols), schema=schema)
+
+
+def _per_query_topk(scores: DataFrame, req: _Request) -> DataFrame:
+    """Each query's top ``req.k`` rows of the (query_id, doc_id, score)
+    rows ``scores``, ordered by (query_id, score DESC, doc_id ASC): a
+    TakeOrderedAndProject for one query, a window rank for a batch."""
+    order = [F.desc("score"), F.asc("doc_id")]
+    if len(req.token_seqs) == 1:
+        return scores.orderBy(*order).limit(req.k)
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return (scores.withColumn("__r", F.row_number().over(w))
+            .filter(F.col("__r") <= req.k).drop("__r")
+            .orderBy("query_id", *order))
 
 
 def _served_scores(spark: SparkSession, index: InvertedIndex,
-                   req: _Request, block_skip: bool) -> DataFrame:
-    """The executor serving stage: the query terms' rows of the cached
-    doc-sharded serving layout (``InvertedIndex.serving_df``) → the
-    request's kernel in one map stage → (query_id, doc_id, score), each
-    query's local top-k per shard (every matching doc when ``req.k`` is
-    None) — plus, under a partial warm, the cold ranges' exact scores
-    (``_with_cold_ranges``). The served executor tier,
+                   req: _Request, block_skip: bool,
+                   schema: str = _BATCH_SCHEMA) -> DataFrame:
+    """The one serving stage, which the served tiers,
     ``bm25_topk_served_batch`` and ``search.bm25_scores_batch_served``
-    all run it."""
-    blocks = index.serving_df(spark).filter(
-        F.col("term").isin(sorted(req.idf)))
-    return _with_cold_ranges(spark, index, req, blocks.mapInPandas(
-        req.kernel(index, block_skip), schema=_BATCH_SCHEMA))
+    all run: each query's top ``req.k`` rows (every matching doc when
+    ``req.k`` is None) from the request's kernel over the query terms'
+    rows of the resident serving layout, in the DDL ``schema`` (fields
+    as in ``_run_local``). ``warm`` runs on first use, when no layout is
+    resident. It records the tier as ``stats["tier"]``:
+
+      driver   — the driver copy: the kernel runs in-process over the
+                 rows ``InvertedIndex.serving_rows`` slices out of it,
+                 and the answer is a driver-resident result. Zero Spark
+                 jobs.
+      executor — the executor shards: one map stage of per-shard local
+                 top-ks, plus, under a partial warm, the cold ranges'
+                 exact scores on disk (``_cold_scores_batch``), then the
+                 per-query merge (``_per_query_topk``)."""
+    terms = sorted(req.idf)
+    if not index.has_serving_layout():
+        index.warm(spark)
+    kernel = req.kernel(index, block_skip)
+    rows = index.serving_rows(terms)
+    if rows is not None:
+        return req.answer("driver", _run_local(spark, kernel, rows, schema))
+    scores = (index.serving_df().filter(F.col("term").isin(terms))
+              .mapInPandas(kernel, schema=_BATCH_SCHEMA))
+    wr = index.warm_ranges()
+    if wr is not None:
+        scores = scores.unionByName(_cold_scores_batch(spark, index, req, wr))
+    if req.k is not None:
+        scores = _per_query_topk(scores, req)
+    cols = ["query_id", "doc_id", "score"]
+    names = _arrow_schema(schema).names
+    return req.answer("executor", scores.select(*(
+        F.col(c).alias(n) for c, n in zip(cols[-len(names):], names))))
 
 
 def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
@@ -1242,9 +1260,9 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
          ``exact``, the join-based Spark plan — the honest cost of a
          non-selective filter at scale;
       3. a filter that admits no document → ``empty``;
-      4. ``served`` → ``driver`` when a driver copy of the serving
-         layout is resident within ``_DRIVER_SERVING_BYTES_MAX``, else
-         ``executor`` (warming the index on first use);
+      4. ``served`` → ``driver`` when ``warm`` kept the driver copy of
+         the serving layout, else ``executor`` (``_served_scores``,
+         warming the index on first use);
       5. ``pruned`` on a corpus of at least ``min_ranges_to_prune``
          doc-ranges → ``gathered`` when the candidate blocks fit the
          gather budgets, else ``distributed`` (``_pruned_topk``);
@@ -1275,15 +1293,7 @@ def _topk(spark: SparkSession, index: InvertedIndex, req: _Request,
     if req.filtered_out:
         return req.answer("empty", local_result(spark))
     if route == "served":
-        index.serving_df(spark)  # warms on first use
-        # a partial warm never keeps the driver copy (rows is then None)
-        rows = index.serving_rows(sorted(req.idf), _DRIVER_SERVING_BYTES_MAX)
-        if rows is not None:
-            return req.answer("driver", _run_local(
-                spark, req.kernel(index, block_skip), rows))
-        return req.answer("executor", _served_scores(
-            spark, index, req, block_skip).drop("query_id")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(req.k))
+        return _served_scores(spark, index, req, block_skip, RESULT_SCHEMA)
     if pruning:
         return _pruned_topk(spark, index, req)
     return req.answer("exact_gathered",
@@ -1297,30 +1307,30 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
                      min_match: int | str | None = None,
                      exclude_docs: DataFrame | None = None,
                      after: tuple[float, int] | None = None) -> DataFrame:
-    """Low-latency exact BM25 top-k over the warm DOC-SHARDED serving
-    layout (``InvertedIndex.warm``, run on first use), in one of two
-    tiers (the planner, ``_topk``, picks):
+    """Low-latency exact BM25 top-k over the serving layout that
+    ``InvertedIndex.warm`` (run on first use) keeps, in one of two tiers
+    (``_served_scores``):
 
     * DRIVER tier — a full warm whose encoded posting bytes fit
-      ``_DRIVER_SERVING_BYTES_MAX`` keeps a driver copy of the layout
-      (one Arrow table sorted by term). The query terms' rows are sliced
-      out by binary search and the block-max kernel
-      (``_served_local_topk``) runs in-process over them, as the
-      gathered pruned tier does; the ≤ k rows come back as a
-      driver-resident result (``local_result``), whose collect reads
+      ``_DRIVER_SERVING_BYTES_MAX`` keeps a driver copy of the layout,
+      read straight from the postings Parquet (one Arrow table sorted by
+      term). The query terms' rows are sliced out by binary search and
+      the block-max kernel (``_served_local_topk``) runs in-process over
+      them, as the gathered pruned tier does; the ≤ k rows come back as
+      a driver-resident result (``local_result``), whose collect reads
       them in-process. Zero Spark jobs, filtered requests included,
       except for one JVM-only collect per ``filter_docs``/
       ``exclude_docs`` set that is neither driver-resident nor already
       collected — a filter whose rows cannot change is collected once
       per DataFrame object (``_collect_filter_ids``). Measured at
-      local[4], 10k docs: ~5 ms a query, collect included.
-    * EXECUTOR tier — over budget, or under a partial warm: postings
-      are resident in executor memory re-sharded by ``range_id``, so
-      every document's complete postings live in one shard. The query
-      is then a single map stage — each shard decodes only the query
-      terms' blocks and emits its exact local top-k — followed by a
-      k×shards TakeOrderedAndProject merge. No shuffle, no join;
-      weights come from the warm idf cache (zero extra jobs).
+      local[4], 10k docs: ~3 ms a query, collect included.
+    * EXECUTOR tier — over that budget, or under a partial warm:
+      postings are resident in executor memory re-sharded by
+      ``range_id``, so every document's complete postings live in one
+      shard. The query is then a single map stage — each shard decodes
+      only the query terms' blocks and emits its exact local top-k —
+      followed by a k×shards TakeOrderedAndProject merge. No shuffle, no
+      join; weights come from the warm idf cache (zero extra jobs).
 
     Both tiers are rank- AND bitwise-identical to ``bm25_topk_exact``:
     every doc's full score is computed in exactly one range, so the
@@ -1367,19 +1377,21 @@ def bm25_topk_served_batch(spark: SparkSession, index: InvertedIndex,
                            min_match: int | str | None = None,
                            exclude_docs: DataFrame | None = None
                            ) -> DataFrame:
-    """Batch form of ``bm25_topk_served``: ALL queries answered in ONE map
-    stage over the warm doc-sharded serving layout (``_served_scores``),
-    instead of one Spark action per query (at toy scale each action costs
-    ~0.3s of pure scheduling; a 10-query golden batch pays it once, not
-    10×).
+    """Batch form of ``bm25_topk_served``: ALL queries answered in ONE
+    pass of the served kernel over the resident serving layout
+    (``_served_scores``), instead of one request per query. On the
+    driver copy that pass runs in-process (zero Spark jobs); on the
+    executor shards it is one map stage (at toy scale each Spark action
+    costs ~0.3s of pure scheduling; a 10-query golden batch pays it
+    once, not 10×).
 
-    Each shard decodes the union of the batch's query terms' blocks once,
-    then for every query accumulates full per-doc scores in QUERY TOKEN
-    order and emits its exact local top-k; the global merge is a window
-    rank over Q×k×shards rows. Bitwise-identical per query to
-    ``bm25_topk_served`` (same decode, same fold order, same
-    (score desc, doc_id asc) total order — gated by
-    tests/test_wand.py::test_served_batch_topk_equals_per_query).
+    The kernel decodes the union of the batch's query terms' blocks
+    once, then for every query accumulates full per-doc scores in QUERY
+    TOKEN order and emits its exact top-k (per shard on the executor
+    layout, merged by a window rank over Q×k×shards rows).
+    Bitwise-identical per query to ``bm25_topk_served`` (same decode,
+    same fold order, same (score desc, doc_id asc) total order — gated
+    by tests/test_wand.py::test_served_batch_topk_equals_per_query).
 
     Returns (query_id, doc_id, score), k rows per non-empty query.
 
@@ -1400,16 +1412,11 @@ def bm25_topk_served_batch(spark: SparkSession, index: InvertedIndex,
     if not fits:
         # non-selective filter: exact per-(query, doc) scores over the
         # on-disk blocks (warm_ranges=∅ ⇒ all ranges), semi-joined with
-        # the filter, then the same per-query window top-k
-        local = _cold_scores_batch(spark, index, req, frozenset())
-    else:
-        req.track(spark, total=True)
-        local = _served_scores(spark, index, req, block_skip)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("doc_id"))
-    return (local.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= k).drop("__r")
-            .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
+        # the filter, then the same per-query top-k
+        return _per_query_topk(
+            _cold_scores_batch(spark, index, req, frozenset()), req)
+    req.track(spark, total=True)
+    return _served_scores(spark, index, req, block_skip)
 
 
 def _hot_block_mask(firsts, lasts, ubs, theta):
@@ -1446,32 +1453,18 @@ def _hot_block_mask(firsts, lasts, ubs, theta):
 
 def _gather_blocks(index: InvertedIndex, terms: list[str],
                    stats: dict | None) -> pd.DataFrame | None:
-    """The gathered tier's input: the block rows of ``terms`` (the
-    ``_KERNEL_COLS``) read straight from the postings Parquet on the
-    driver (``InvertedIndex.scan``) — zero Spark jobs. Batches stream in
-    until the rows exceed ``_PRUNED_LOCAL_BLOCKS_MAX`` or their encoded
-    bytes exceed ``_PRUNED_LOCAL_BYTES_MAX``; then the read stops and
-    None says the candidates are not driver-sized. ``stats`` receives the
-    rows and bytes read as ``gathered_rows`` and ``gathered_bytes``."""
-    import pyarrow.compute as pc
-    scanner = index.scan(POSTINGS, terms, _KERNEL_COLS)
-    batches, rows, nbytes = [], 0, 0
-    fits = True
-    for batch in scanner.to_batches():
-        batches.append(batch)
-        rows += batch.num_rows
-        nbytes += sum(pc.sum(pc.binary_length(batch.column(c))).as_py() or 0
-                      for c in ("doc_bytes", "tf_bytes", "dl_bytes"))
-        fits = (rows <= _PRUNED_LOCAL_BLOCKS_MAX
-                and nbytes <= _PRUNED_LOCAL_BYTES_MAX)
-        if not fits:
-            break
+    """The gathered tiers' input: the block rows of ``terms`` read
+    straight from the postings Parquet on the driver
+    (``InvertedIndex.read_blocks``) — zero Spark jobs — or None once
+    they exceed ``_PRUNED_LOCAL_BLOCKS_MAX`` rows or
+    ``_PRUNED_LOCAL_BYTES_MAX`` encoded bytes (the read then stops: the
+    candidates are not driver-sized). ``stats`` receives the rows and
+    bytes read as ``gathered_rows`` and ``gathered_bytes``."""
+    table, rows, nbytes = index.read_blocks(
+        terms, _PRUNED_LOCAL_BLOCKS_MAX, _PRUNED_LOCAL_BYTES_MAX)
     if stats is not None:
         stats["gathered_rows"], stats["gathered_bytes"] = rows, nbytes
-    if not fits:
-        return None
-    return pa.Table.from_batches(batches, scanner.projected_schema) \
-        .to_pandas()
+    return None if table is None else table.to_pandas()
 
 
 def _pruned_topk(spark: SparkSession, index: InvertedIndex,

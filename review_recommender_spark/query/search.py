@@ -11,7 +11,8 @@ Distributed shape (SURVEY.md §3.1 mapped to Spark):
      one pass: per-(query, term) weights closure-captured in the decode
      kernel over the pruned posting blocks, partials folded per
      (query, doc) in query-token order (over a warm index, the served
-     top-k kernel in one map stage, unbounded). A BM25 score depends
+     top-k kernel, unbounded: in-process over the driver copy, or one
+     map stage over the executor shards). A BM25 score depends
      only on the doc itself, so scoring just the union of pools is
      value-identical to the reference's full-corpus get_scores + subset
      (quirk Q2).
@@ -225,31 +226,30 @@ def bm25_scores_batch(spark: SparkSession, index: InvertedIndex,
 
 def bm25_scores_batch_served(spark: SparkSession, index: InvertedIndex,
                              queries: list[str]) -> DataFrame:
-    """(query_id, doc_id, _bm25_raw) over the WARM doc-sharded serving
-    layout — value- and bit-identical to ``bm25_scores_batch`` but with
-    zero shuffle and zero joins: every document's complete postings live
-    in one serving shard (``InvertedIndex.warm``), so per-(query, doc)
-    scores finish inside one map stage; idf comes from the driver cache
-    (no term_stats join). ``hybrid_search_batch`` always calls it. The
-    stage is the served executor stage (``bm25._served_scores``) with
-    the kernel unskipped and without a k cut: each doc's score is
-    accumulated in its own range in QUERY TOKEN ORDER over the same
-    per-posting partials as the exact scorer (``_fold_scores_batch``'
-    addition order), so hybrid results are identical whichever path ran
+    """(query_id, doc_id, _bm25_raw) over the WARM serving layout —
+    value- and bit-identical to ``bm25_scores_batch`` but with zero
+    shuffle and zero joins: every document's complete postings live in
+    one range of the layout (``InvertedIndex.warm``), so per-(query,
+    doc) scores finish in one pass of the served kernel: in-process over
+    the driver copy (zero Spark jobs), or one map stage over the
+    executor shards. ``hybrid_search_batch`` always calls it. The pass
+    is the serving stage (``bm25._served_scores``) with the kernel
+    unskipped and without a k cut: each doc's score is accumulated in
+    its own range in QUERY TOKEN ORDER over the same per-posting
+    partials as the exact scorer (``_fold_scores_batch``' addition
+    order), so hybrid results are identical whichever path ran
     (tests/test_ops.py::test_hybrid_served_bm25_parity). A partial warm
     unions the cold ranges' exact scores."""
-    if index.idf_lookup() is None:
-        # not warm (``warm`` keeps the driver idf cache whenever the
-        # serving layout is resident and the vocabulary fits it): the
-        # shuffle+join scorer — same values, same fold order, so the
-        # answer is identical either way (test_cold_fallback)
+    if not index.has_serving_layout():
+        # never warmed: the shuffle+join scorer — same values, same fold
+        # order, so the answer is identical either way
+        # (test_served_batch_cold_fallback)
         return bm25_scores_batch(spark, index, queries)
+    schema = "query_id int, doc_id long, _bm25_raw double"
     req = _request(spark, index, queries, None)
     if req.empty:
-        return local_result(
-            spark, schema="query_id int, doc_id long, _bm25_raw double")
-    return _served_scores(spark, index, req, block_skip=False) \
-        .withColumnRenamed("score", "_bm25_raw")
+        return local_result(spark, schema=schema)
+    return _served_scores(spark, index, req, False, schema)
 
 
 def hybrid_search_batch(spark: SparkSession, index: InvertedIndex,

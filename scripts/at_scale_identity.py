@@ -11,9 +11,9 @@ distributed (the kernel's local top-k per range-sharded task, then one
 merge; gather budget forced to 0) — served on its driver tier (the
 in-process kernel over the driver copy of the serving layout, held here
 whatever its size) with and WITHOUT block-max skipping, served on its
-executor tier (per-shard kernel over the cached shards, driver budget
-forced to 0), and served-batch (the zero-shuffle batch stage hybrid
-uses). The r2 evidence tied exact ≡ the BM25Okapi-formula numpy oracle
+executor tier (per-shard kernel over the cached shards, on a second
+handle warmed with the driver budget forced to 0), and served-batch (the
+zero-shuffle batch scores hybrid uses). The r2 evidence tied exact ≡ the BM25Okapi-formula numpy oracle
 at 800k docs; this script ties every engine path to exact at the same
 scale, so the whole family stays anchored to the oracle.
 
@@ -35,6 +35,7 @@ Spark's scratch space follows the caller's ``SPARK_LOCAL_DIRS``.
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import json
 import os
 import shutil
@@ -53,8 +54,10 @@ def main() -> None:
 
     from review_recommender_spark.config import EngineConfig, bm25_north
     from review_recommender_spark.corpus.pages import GOLDEN_PHRASES, pages_df
-    from review_recommender_spark.index.build import (POSTINGS, build_index,
-                                                      term_filter)
+    from review_recommender_spark.index import build
+    from review_recommender_spark.index.build import (_KERNEL_COLS, POSTINGS,
+                                                      build_index,
+                                                      term_bucket_py)
     from review_recommender_spark.index.tableio import TableIO
     from review_recommender_spark.query import bm25
     from review_recommender_spark.query.bm25 import (bm25_topk_exact,
@@ -65,27 +68,29 @@ def main() -> None:
     from review_recommender_spark.session import default_cores, get_spark
 
     @contextlib.contextmanager
-    def forced(name, value):
-        """Set one of query.bm25's tier budgets for the block's calls."""
-        old = getattr(bm25, name)
-        setattr(bm25, name, value)
+    def forced(module, name, value):
+        """Set one of ``module``'s tier budgets for the block's calls."""
+        old = getattr(module, name)
+        setattr(module, name, value)
         try:
             yield
         finally:
-            setattr(bm25, name, old)
+            setattr(module, name, old)
 
     def row_groups_read(idx, terms):
         """(row groups, compressed bytes of the gathered columns) that
         the gathered tier's filter keeps in the postings Parquet."""
         import pyarrow.dataset as pa_ds
-        flt = term_filter(terms, idx.cfg.index.term_buckets)
+        flt = (pa_ds.field("term_bucket").isin(sorted(
+            {term_bucket_py(t, idx.cfg.index.term_buckets) for t in terms}))
+            & pa_ds.field("term").isin(terms))
         ds = pa_ds.dataset(idx.io.path(POSTINGS), format="parquet",
                            partitioning="hive")
         groups = nbytes = 0
         for frag in ds.get_fragments(filter=flt):
             md = frag.metadata
             cols = [j for j in range(md.num_columns)
-                    if md.schema.column(j).name in bm25._KERNEL_COLS]
+                    if md.schema.column(j).name in _KERNEL_COLS]
             for part in frag.split_by_row_group(flt, schema=ds.schema):
                 for rg in part.row_groups:
                     groups += 1
@@ -94,8 +99,9 @@ def main() -> None:
         return groups, nbytes
 
     # every full warm below keeps the driver copy, so the served driver
-    # tier is checked at this scale too; executor-tier calls force 0
-    bm25._DRIVER_SERVING_BYTES_MAX = 1 << 62
+    # tier is checked at this scale too; the executor-tier handle is
+    # warmed with the budget forced to 0
+    build._DRIVER_SERVING_BYTES_MAX = 1 << 62
     cpus = default_cores()
     spark = get_spark("at-scale-id", cores=cpus,
                       shuffle_partitions=max(cpus, 8))
@@ -110,6 +116,10 @@ def main() -> None:
         idx = build_index(spark, docs, TableIO(os.path.join(tmp, "idx")),
                           cfg, shuffle_partitions=max(32, cpus * 2))
         idx.warm(spark)
+        ex_idx = dataclasses.replace(idx, _cached=None)
+        with forced(build, "_DRIVER_SERVING_BYTES_MAX", 0):
+            ex_idx.warm(spark)
+        assert ex_idx.serving_df() is not None
 
         # served-batch: one stage for all queries; per-query top-k via the
         # same (score desc, doc_id asc) order as the single-query paths
@@ -128,7 +138,7 @@ def main() -> None:
             exact = [(r["doc_id"], r["score"]) for r in
                      bm25_topk_exact(spark, idx, q, k=k,
                                      stats=exact_stats).collect()]
-            with forced("_PRUNED_LOCAL_BLOCKS_MAX", 0):
+            with forced(bm25, "_PRUNED_LOCAL_BLOCKS_MAX", 0):
                 exact_spark = [(r["doc_id"], r["score"]) for r in
                                bm25_topk_exact(spark, idx, q, k=k).collect()]
 
@@ -147,7 +157,7 @@ def main() -> None:
                   f"row_groups={groups} row_group_bytes={group_bytes}",
                   flush=True)
             walls, dist_runs = [], []
-            with forced("_PRUNED_LOCAL_BLOCKS_MAX", 0):
+            with forced(bm25, "_PRUNED_LOCAL_BLOCKS_MAX", 0):
                 for _ in range(3):
                     dist: dict = {}
                     t0 = time.perf_counter()
@@ -163,9 +173,11 @@ def main() -> None:
             served_ns = [(r["doc_id"], r["score"]) for r in
                          bm25_topk_served(spark, idx, q, k=k,
                                           block_skip=False).collect()]
-            with forced("_DRIVER_SERVING_BYTES_MAX", 0):
-                served_ex = [(r["doc_id"], r["score"]) for r in
-                             bm25_topk_served(spark, idx, q, k=k).collect()]
+            ex_stats: dict = {}
+            served_ex = [(r["doc_id"], r["score"]) for r in
+                         bm25_topk_served(spark, ex_idx, q, k=k,
+                                          stats=ex_stats).collect()]
+            assert ex_stats["tier"] == "executor", ex_stats["tier"]
             same = (exact == exact_spark == pruned == pruned_dist
                     == served == served_ns == served_ex
                     == batch_top[qi]
@@ -187,6 +199,7 @@ def main() -> None:
         # resident, the rest served by the cold on-disk union. The
         # head-shard strategy the memory envelope prescribes at 10^9+
         # docs must stay bitwise at scale, not just in the unit gate.
+        ex_idx.unwarm()
         all_ranges = sorted(r["range_id"] for r in idx.postings(spark)
                             .select("range_id").distinct().collect())
         idx.warm(spark, ranges=all_ranges[::2])

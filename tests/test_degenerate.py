@@ -1,7 +1,7 @@
 """Degenerate top-k requests get ONE defined answer on every BM25 route.
 
 Routes: exact, served on both tiers (driver copy, and executor shards
-with the driver budget forced to 0), pruned on both its tiers
+on a second handle warmed with the driver budget forced to 0), pruned on both its tiers
 (gathered, and distributed with the gather budget forced to 0), and
 pruned below ``min_ranges_to_prune`` (the exact fall-through).
 Requests: an empty query, an all-stopword query, a query of unknown
@@ -10,8 +10,11 @@ vocabulary, ``k=0``, ``k`` above the corpus size, and a search-after
 cursor at the last result. Every route must return the same rows, bit
 for bit, and none may raise."""
 
+import dataclasses
+
 import pytest
 
+from review_recommender_spark.index import build
 from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                  bm25_topk_pruned,
@@ -46,6 +49,19 @@ def warm_index(spark, small_index):
 
 
 @pytest.fixture(scope="module")
+def executor_index(spark, small_index):
+    """A second handle on the index, warmed with the driver budget forced
+    to 0: it keeps the executor serving layout."""
+    idx = dataclasses.replace(small_index, _cached=None)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
+        idx.warm(spark)
+    assert idx.serving_df() is not None
+    yield idx
+    idx.unwarm()
+
+
+@pytest.fixture(scope="module")
 def vocab_1000(spark, warm_index):
     vocab = sorted(r["term"] for r in
                    warm_index.term_stats(spark).select("term").collect())
@@ -75,6 +91,7 @@ def test_empty_request_takes_the_empty_tier(spark, warm_index, case):
 
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_degenerate_request_same_on_every_route(spark, warm_index,
+                                                executor_index,
                                                 full_ranking, vocab_1000,
                                                 monkeypatch, case):
     query, k, after = CASES[case]
@@ -93,12 +110,18 @@ def test_degenerate_request_same_on_every_route(spark, warm_index,
             m.setattr(bm25, attr, value)
             return _pairs(run())
 
+    def served_executor():
+        stats: dict = {}
+        rows = _pairs(bm25_topk_served(spark, executor_index, query, k=k,
+                                       after=after, stats=stats))
+        assert stats["tier"] == ("empty" if case in EMPTY - {
+            "after_last_result"} else "executor"), (case, stats["tier"])
+        return rows
+
     routes = {
         "served_driver": lambda: _pairs(
             bm25_topk_served(spark, idx, query, k=k, after=after)),
-        "served_executor": lambda: forced(
-            "_DRIVER_SERVING_BYTES_MAX", 0,
-            lambda: bm25_topk_served(spark, idx, query, k=k, after=after)),
+        "served_executor": served_executor,
         "pruned_gathered": lambda: _pairs(pruned(min_ranges_to_prune=1)),
         "pruned_distributed": lambda: forced(
             "_PRUNED_LOCAL_BLOCKS_MAX", 0,

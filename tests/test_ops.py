@@ -318,13 +318,17 @@ def test_hybrid_dense_mode_ivf(spark, small_pages, small_index, tmp_path,
     assert overlap >= 0.7, (overlap, sorted(ivf_res["doc_id"]))
 
 
-def test_hybrid_served_bm25_parity(spark, small_pages, small_index):
+def test_hybrid_served_bm25_parity(spark, small_pages, small_index,
+                                   monkeypatch):
     """hybrid_search_batch routes its BM25 stage through the zero-shuffle
     serving layout when the index is warm; results must be BIT-IDENTICAL
-    to the cold (posting-join) path — same docs, ranks, and scores."""
+    to the cold (posting-join) path — same docs, ranks, and scores — on
+    both layouts a warm keeps: the driver copy, and the executor shards
+    (warmed with ``_DRIVER_SERVING_BYTES_MAX`` forced to 0)."""
     import dataclasses
 
     from review_recommender_spark.corpus.pages import page_meta_cols
+    from review_recommender_spark.index import build
     from review_recommender_spark.query.encoder import embed_documents
     from review_recommender_spark.query.search import hybrid_search_batch
 
@@ -335,29 +339,36 @@ def test_hybrid_served_bm25_parity(spark, small_pages, small_index):
             .join(page_meta_cols(small_pages.select("doc_id")), "doc_id"))
     queries = ["wireless bluetooth headphones", "yellow cat socks"]
 
+    def ranked(idx):
+        return (hybrid_search_batch(spark, idx, emb, meta, queries, k=10)
+                .toPandas().sort_values(["query_id", "rank"])
+                .reset_index(drop=True))
+
     spark.catalog.clearCache()
     cold_idx = dataclasses.replace(small_index, _cached=None)
     assert not cold_idx.is_warm()
-    cold = (hybrid_search_batch(spark, cold_idx, emb, meta, queries, k=10)
-            .toPandas().sort_values(["query_id", "rank"])
-            .reset_index(drop=True))
-
-    warm_idx = dataclasses.replace(small_index, _cached=None)
-    warm_idx.warm(spark)
-    assert warm_idx.is_warm()
+    cold = ranked(cold_idx)
     try:
-        warm = (hybrid_search_batch(spark, warm_idx, emb, meta, queries,
-                                    k=10)
-                .toPandas().sort_values(["query_id", "rank"])
-                .reset_index(drop=True))
+        for budget, layout in ((build._DRIVER_SERVING_BYTES_MAX, "driver"),
+                               (0, "executor")):
+            warm_idx = dataclasses.replace(small_index, _cached=None)
+            with monkeypatch.context() as m:
+                m.setattr(build, "_DRIVER_SERVING_BYTES_MAX", budget)
+                warm_idx.warm(spark)
+            assert warm_idx.is_warm()
+            assert (warm_idx.serving_df() is None) == (layout == "driver")
+            try:
+                warm = ranked(warm_idx)
+            finally:
+                warm_idx.unwarm()
+            assert list(cold["doc_id"]) == list(warm["doc_id"]), layout
+            for col in ["_final", "_bm25", "_dense", "_rerank", "_prior",
+                        "_gate"]:
+                assert (cold[col].to_numpy()
+                        == warm[col].to_numpy()).all(), (layout, col)
     finally:
-        warm_idx.unwarm()
         emb.unpersist()
         spark.catalog.clearCache()
-
-    assert list(cold["doc_id"]) == list(warm["doc_id"])
-    for col in ["_final", "_bm25", "_dense", "_rerank", "_prior", "_gate"]:
-        assert (cold[col].to_numpy() == warm[col].to_numpy()).all(), col
 
 
 def test_served_batch_cold_fallback(spark, small_index):

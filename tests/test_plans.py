@@ -116,17 +116,20 @@ def test_head_term_skew_bounded(spark):
     assert solo.max() > 2 * np.median(solo), solo.tolist()
 
 
-def test_served_bm25_stage_is_shuffle_free(spark, small_index):
-    """The warm serving layout's whole point: a served BM25 batch stage is
-    ONE map stage over the cached shards — its physical plan must contain
-    no shuffle exchange (only the reuse of the cached layout) and no
-    join."""
+def test_served_bm25_stage_is_shuffle_free(spark, small_index, monkeypatch):
+    """The executor serving layout's whole point: a served BM25 batch
+    stage is ONE map stage over the cached shards — its physical plan
+    must read them (InMemoryTableScan) and contain no shuffle exchange
+    above them and no join. The index is warmed with the driver budget
+    forced to 0, so the warm keeps the executor layout."""
     import dataclasses
 
+    from review_recommender_spark.index import build
     from review_recommender_spark.query.search import bm25_scores_batch_served
 
     spark.catalog.clearCache()
     idx = dataclasses.replace(small_index, _cached=None)
+    monkeypatch.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
     idx.warm(spark)
     try:
         df = bm25_scores_batch_served(spark, idx,
@@ -135,6 +138,7 @@ def test_served_bm25_stage_is_shuffle_free(spark, small_index):
         # the warm layout itself was built with one repartition; the query
         # plan on top must add NO exchange and NO join. InMemoryTableScan
         # reads the cached shards; everything above it is mapInPandas.
+        assert "InMemoryTableScan" in plan, plan
         above_cache = plan.split("InMemoryTableScan")[0]
         assert "Exchange" not in above_cache, plan
         assert "Join" not in above_cache, plan

@@ -2,17 +2,19 @@
 tier.
 
 Every test corpus fits ``_DRIVER_SERVING_BYTES_MAX``, so in their own
-modules these tests exercise the driver tier of ``bm25_topk_served``
-(the in-process kernel over the driver copy of the serving layout).
-Here the budget is forced to 0 around each of them, so the same
-assertions run over the cached executor shards: one map stage of
-per-shard local top-ks plus the k×shards merge. Together the two runs
-hold both tiers bitwise-identical to ``bm25_topk_exact`` and to each
-other."""
+modules these tests exercise the driver tier of the served routes (the
+in-process kernel over the driver copy of the serving layout). Here the
+budget is forced to 0 around each of them, and each test warms its
+index itself, so every warm builds the cached executor shards instead
+and the same assertions run over them: one map stage of per-shard local
+top-ks plus the merge. The fixture also checks that no served request
+answered from a driver copy. Together the two runs hold both tiers
+bitwise-identical to ``bm25_topk_exact`` and to each other."""
 
 import pytest
 
-from review_recommender_spark.query import bm25
+from review_recommender_spark.index import build
+from review_recommender_spark.index.build import InvertedIndex
 from test_conjunctive import (  # noqa: F401 — collected here again
     test_all_with_unknown_term_returns_empty,
     test_min_match_composes_with_filter,
@@ -32,4 +34,15 @@ from test_wand import (  # noqa: F401
 
 @pytest.fixture(autouse=True)
 def executor_tier(monkeypatch):
-    monkeypatch.setattr(bm25, "_DRIVER_SERVING_BYTES_MAX", 0)
+    monkeypatch.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
+    sliced = []
+    serving_rows = InvertedIndex.serving_rows
+
+    def recorded(index, terms):
+        rows = serving_rows(index, terms)
+        sliced.append(rows is not None)
+        return rows
+
+    monkeypatch.setattr(InvertedIndex, "serving_rows", recorded)
+    yield
+    assert not any(sliced), "a served request read a driver copy"

@@ -1,14 +1,17 @@
-"""The two served tiers (query/bm25.py::bm25_topk_served).
+"""The two served tiers (query/bm25.py::_served_scores).
 
 A full ``warm()`` whose encoded posting bytes fit
-``_DRIVER_SERVING_BYTES_MAX`` keeps a driver copy of the serving layout
-and answers on the DRIVER tier: the query terms' rows are sliced out of
-that copy, the block-max kernel runs in-process, and the ≤ k rows come
-back as a LocalRelation — zero Spark jobs. Partial warms and layouts
-over budget answer on the EXECUTOR tier (one map stage over the cached
-shards). Bitwise identity of the two tiers is gated by the served tests
-themselves, which run once per tier (tests/test_served_executor_tier.py
-re-runs them with the budget forced to 0).
+``_DRIVER_SERVING_BYTES_MAX`` (index/build.py) keeps one serving layout,
+a driver copy read straight from the postings Parquet, and every served
+entry point answers on the DRIVER tier: the query terms' rows are sliced
+out of that copy, the block-max kernel runs in-process, and the rows
+come back as a driver-resident result — zero Spark jobs, for the warm
+too. Partial warms and warms over budget keep the cached executor shards
+instead and answer on the EXECUTOR tier (one map stage). The budget is
+read at warm time, so a test reaches the executor tier by warming with
+it forced to 0. Bitwise identity of the two tiers is gated by the served
+tests themselves, which run once per tier
+(tests/test_served_executor_tier.py re-runs them that way).
 
 The gathered pruned tier answers on the driver the same way: on a
 never-warmed index its idf and candidate blocks are read straight from
@@ -17,6 +20,8 @@ Parquet, so it runs zero Spark jobs too."""
 import pytest
 from pyspark.sql import functions as F
 
+from review_recommender_spark.index import build
+from review_recommender_spark.index.build import _KERNEL_COLS, TERM_STATS
 from review_recommender_spark.query import bm25
 from review_recommender_spark.query.bm25 import (bm25_topk_exact,
                                                  bm25_topk_pruned,
@@ -26,7 +31,6 @@ from review_recommender_spark.query.search import bm25_scores_batch_served
 
 QUERIES = ["wireless bluetooth headphones", "yellow cat socks",
            "usb charging cable long"]
-UNLIMITED = 1 << 62
 
 
 def _pairs(df):
@@ -55,8 +59,8 @@ def test_driver_tier_runs_no_spark_job(spark, small_index, monkeypatch):
     conjunctive request with no qualifying doc — runs 0 Spark jobs from
     the call through the collect, and so does an unknown-term batch
     through ``bm25_topk_served_batch`` or ``bm25_scores_batch_served``.
-    The executor tier, read the same way, runs at least one (the probe
-    is not vacuous)."""
+    The executor tier (a warm with the driver budget forced to 0), read
+    the same way, runs at least one (the probe is not vacuous)."""
     small_index.warm(spark)
     try:
         requests = [(q, None, True) for q in QUERIES + ["zzznope"]] + [
@@ -80,12 +84,14 @@ def test_driver_tier_runs_no_spark_job(spark, small_index, monkeypatch):
             rows, n_jobs = _jobs_in_group(
                 spark, f"driver-tier-{name}", lambda: fn().collect())
             assert n_jobs == 0 and rows == [], (name, n_jobs)
-        monkeypatch.setattr(bm25, "_DRIVER_SERVING_BYTES_MAX", 0)
+        monkeypatch.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
+        small_index.warm(spark)
+        stats: dict = {}
         _, n_jobs = _jobs_in_group(
             spark, "executor-tier",
             lambda: _pairs(bm25_topk_served(spark, small_index, QUERIES[0],
-                                            k=10)))
-        assert n_jobs >= 1
+                                            k=10, stats=stats)))
+        assert stats["tier"] == "executor" and n_jobs >= 1
     finally:
         small_index.unwarm()
 
@@ -110,61 +116,235 @@ def test_driver_tier_and_gathered_results_are_local_relations(
         assert stats.get("pruning_engaged", True), q
 
 
-def test_driver_copy_slices_the_serving_layout(spark, small_index):
-    """``serving_rows`` returns exactly the executor layout's block rows
-    for the requested terms (unknown terms contribute none), and nothing
-    once the budget is below the copy's encoded bytes."""
+def test_driver_copy_slices_the_serving_layout(spark, small_index,
+                                              monkeypatch):
+    """``serving_rows`` returns exactly the on-disk postings block rows
+    (``_KERNEL_COLS``) of the requested terms — unknown terms contribute
+    none — and the same rows as the executor layout that a warm with the
+    driver budget forced to 0 keeps instead of a driver copy."""
+    terms = sorted({"cat", "socks", "wireless", "zzznope"})
+
+    def rows(pdf):
+        assert list(pdf.columns) == _KERNEL_COLS
+        return (pdf.sort_values(["term", "range_id", "first_doc_id"])
+                .reset_index(drop=True).to_dict("list"))
+
     small_index.warm(spark)
     try:
-        terms = sorted({"cat", "socks", "wireless", "zzznope"})
-        got = small_index.serving_rows(terms, UNLIMITED)
-        want = (small_index.serving_df(spark)
-                .filter(F.col("term").isin(terms)).toPandas())
-        key = ["term", "range_id", "first_doc_id"]
-        cols = list(want.columns)
-        assert list(got.columns) == cols
-        got = got.sort_values(key).reset_index(drop=True)
-        want = want.sort_values(key).reset_index(drop=True)
-        assert got.to_dict("list") == want.to_dict("list")
+        got = small_index.serving_rows(terms)
         assert set(got["term"]) == {"cat", "socks", "wireless"}
-        assert small_index.serving_rows(terms, 0) is None
-        assert len(small_index.serving_rows([], UNLIMITED)) == 0
+        assert len(small_index.serving_rows([])) == 0
+        assert rows(got) == rows(
+            small_index.postings(spark).filter(F.col("term").isin(terms))
+            .select(*_KERNEL_COLS).toPandas())
+        monkeypatch.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
+        small_index.warm(spark)
+        assert small_index.serving_rows(terms) is None
+        assert rows(got) == rows(small_index.serving_df()
+                                 .filter(F.col("term").isin(terms))
+                                 .toPandas())
     finally:
         small_index.unwarm()
 
 
 def test_unwarm_and_partial_warm_drop_driver_copy(spark, small_index,
                                                   monkeypatch):
-    """Only a FULL warm within budget keeps the driver copy: a partial
-    ``warm(ranges=...)`` or ``warm(max_bytes=...)`` drops it, ``unwarm``
-    drops it, and a warm over budget never takes one."""
-    def resident():
-        return small_index.serving_rows(["cat"], UNLIMITED) is not None
+    """A warm keeps ONE serving layout. Only a FULL warm within budget
+    keeps the driver copy (and no executor layout): a partial
+    ``warm(ranges=...)`` or ``warm(max_bytes=...)`` keeps the executor
+    layout instead, ``unwarm`` drops either, and a warm over budget
+    keeps the executor layout."""
+    def layout():
+        driver = small_index.serving_rows(["cat"]) is not None
+        executor = small_index.serving_df() is not None
+        assert not (driver and executor)
+        return "driver" if driver else "executor" if executor else None
 
     small_index.warm(spark)
     try:
-        assert resident()
+        assert layout() == "driver"
         small_index.warm(spark, ranges=[0, 1])
-        assert not resident()
+        assert layout() == "executor"
         small_index.warm(spark)
-        assert resident()
-        small_index.warm(spark, max_bytes=UNLIMITED)
-        assert small_index.warm_ranges() is not None and not resident()
+        assert layout() == "driver"
+        small_index.warm(spark, max_bytes=1 << 62)
+        assert small_index.warm_ranges() is not None
+        assert layout() == "executor"
         small_index.warm(spark)
         small_index.unwarm()
-        assert not resident()
-        monkeypatch.setattr(bm25, "_DRIVER_SERVING_BYTES_MAX", 0)
+        assert layout() is None
+        monkeypatch.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
         small_index.warm(spark)
-        assert small_index.is_warm() and not resident()
+        assert small_index.is_warm() and layout() == "executor"
     finally:
         small_index.unwarm()
+
+
+def test_within_budget_warm_is_a_driver_read(spark, small_index,
+                                             monkeypatch):
+    """A full warm within the driver budget runs 0 Spark jobs and caches
+    nothing in Spark: it keeps the driver copy and the idf map only.
+    Forced over budget, the warm builds and caches the executor layout
+    (``_serving``) and keeps no driver copy."""
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        return {s.id() for s in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    try:
+        _, n_jobs = _jobs_in_group(spark, "warm-driver",
+                                   lambda: small_index.warm(spark))
+        assert n_jobs == 0
+        assert cached_rdds() == before
+        assert set(small_index._cached) == {"_driver_serving", "_idf"}
+        monkeypatch.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
+        _, n_jobs = _jobs_in_group(spark, "warm-executor",
+                                   lambda: small_index.warm(spark))
+        assert n_jobs >= 1
+        assert set(small_index._cached) == {"_serving", "_idf"}
+        assert cached_rdds() - before
+    finally:
+        small_index.unwarm()
+    assert cached_rdds() == before
+
+
+def test_driver_batches_run_no_spark_job(spark, small_index, monkeypatch):
+    """On a driver-copy warm, ``bm25_topk_served_batch`` — plain, with a
+    filter, with min_match, and with both — and
+    ``bm25_scores_batch_served`` run 0 Spark jobs from the call through
+    the collect; their answers are bitwise the executor layout's (a warm
+    with the driver budget forced to 0)."""
+    fd = bm25.local_result(spark, list(range(0, 1000, 2)),
+                           schema="doc_id long")
+    cases = [{}, {"filter_docs": fd}, {"min_match": 2},
+             {"filter_docs": fd, "min_match": "all"}]
+
+    def answers(layout):
+        out = []
+        for i, kw in enumerate(cases):
+            out.append(_jobs_in_group(
+                spark, f"{layout}-batch-{i}",
+                lambda: bm25_topk_served_batch(spark, small_index, QUERIES,
+                                               k=10, **kw).collect()))
+        out.append(_jobs_in_group(
+            spark, f"{layout}-scores",
+            lambda: sorted(bm25_scores_batch_served(
+                spark, small_index, QUERIES).collect())))
+        return out
+
+    try:
+        small_index.warm(spark)
+        driver = answers("driver")
+        monkeypatch.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
+        small_index.warm(spark)
+        executor = answers("executor")
+    finally:
+        small_index.unwarm()
+    for case, (rows, n_jobs), (want, _) in zip(cases + ["scores"], driver,
+                                               executor):
+        assert n_jobs == 0, (case, n_jobs)
+        assert rows and rows == want, case
+    assert sum(n for _, n in executor) >= len(executor)
+
+
+def test_no_idf_cache_never_rewarms(spark, small_index):
+    """After ``warm(idf_cache_max=0)`` the driver copy serves without the
+    idf cache (``is_warm()`` is then False): single requests, batches
+    and hybrid's served scores run 0 Spark jobs, single requests answer
+    as the exact route does, and no request warms again — ``_cached``
+    is the same object before and after."""
+    small_index.warm(spark, idf_cache_max=0)
+    try:
+        cached = small_index._cached
+        assert small_index.idf_lookup() is None
+        assert not small_index.is_warm()
+        for i, q in enumerate(QUERIES):
+            rows, n_jobs = _jobs_in_group(
+                spark, f"no-idf-{i}",
+                lambda: _pairs(bm25_topk_served(spark, small_index, q,
+                                                k=10)))
+            assert n_jobs == 0, (q, n_jobs)
+            assert rows == _pairs(bm25_topk_exact(spark, small_index, q,
+                                                  k=10)), q
+        for name, fn in [
+                ("batch", lambda: bm25_topk_served_batch(
+                    spark, small_index, QUERIES, k=10)),
+                ("scores", lambda: bm25_scores_batch_served(
+                    spark, small_index, QUERIES))]:
+            rows, n_jobs = _jobs_in_group(spark, f"no-idf-{name}",
+                                          lambda: fn().collect())
+            assert n_jobs == 0 and rows, (name, n_jobs)
+        assert small_index._cached is cached
+    finally:
+        small_index.unwarm()
+
+
+def test_scan_opens_only_the_terms_buckets(spark, tmp_path):
+    """``InvertedIndex.scan`` opens only the ``term_bucket=`` directories
+    its terms hash to: an unreadable file in any other bucket is never
+    touched, a bucket with no directory gives no rows, and a root
+    rebuilt in place is read afresh (its new rows, and no rows for a
+    term whose bucket directory went away)."""
+    import dataclasses
+    import os
+
+    from review_recommender_spark.config import EngineConfig, bm25_north
+    from review_recommender_spark.index.build import (build_index,
+                                                      term_bucket_py)
+    from review_recommender_spark.index.tableio import TableIO
+    cfg = EngineConfig(bm25=bm25_north())
+    cfg = dataclasses.replace(cfg, index=dataclasses.replace(
+        cfg.index, term_buckets=64))
+    n = cfg.index.term_buckets
+    io = TableIO(str(tmp_path / "idx"))
+
+    def build(texts):
+        return build_index(spark, spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"), io, cfg,
+            resume=False)
+
+    def df_of(idx, term):
+        tbl = idx.scan(TERM_STATS, [term], ["term", "df"]).to_table()
+        return dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
+
+    idx = build(["alpha beta", "alpha gamma", "beta"])
+    root = io.path(TERM_STATS)
+    present = {int(d.split("=")[1]) for d in os.listdir(root)
+               if d.startswith("term_bucket=")}
+    missing = next(t for t in (f"zz{i}" for i in range(1000))
+                   if term_bucket_py(t, n) not in present)
+    assert df_of(idx, missing) == {}
+    assert bm25.query_term_idf(spark, idx, missing) == {}
+    assert df_of(idx, "alpha") == {"alpha": 2}
+    assert df_of(idx, "beta") == {"beta": 2}
+    # an unreadable file in a bucket no scanned term hashes to
+    other = next(b for b in sorted(present)
+                 if b not in {term_bucket_py(t, n) for t in
+                              ("alpha", "beta")})
+    with open(os.path.join(root, f"term_bucket={other}",
+                           "part-junk.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    assert df_of(idx, "alpha") == {"alpha": 2}
+    with pytest.raises(Exception):
+        idx.scan(TERM_STATS, None, ["term"]).to_table()
+    # rebuilt in place, read through the same handle
+    build(["alpha", "alpha delta", "alpha", "delta"])
+    assert df_of(idx, "alpha") == {"alpha": 3}
+    assert df_of(idx, "delta") == {"delta": 2}
+    if term_bucket_py("beta", n) not in {term_bucket_py(t, n)
+                                         for t in ("alpha", "delta")}:
+        assert not os.path.isdir(os.path.join(
+            root, f"term_bucket={term_bucket_py('beta', n)}"))
+    assert df_of(idx, "beta") == {}
 
 
 def test_planner_names_the_tier_taken(spark, small_index, small_pages,
                                       monkeypatch):
     """``stats["tier"]`` names the tier the planner took, and each forced
     path reaches the tier it claims: the served driver tier; the
-    executor tier with ``_DRIVER_SERVING_BYTES_MAX`` at 0; the exact
+    executor tier after a warm with ``_DRIVER_SERVING_BYTES_MAX`` at 0;
+    the exact
     tier for a filtered served request with ``_MASK_IDS_MAX`` at 0; the
     gathered pruned tier; the exact_gathered tier for the exact route and
     a pruned request below ``min_ranges_to_prune``, and the exact tier
@@ -186,8 +366,10 @@ def test_planner_names_the_tier_taken(spark, small_index, small_pages,
         assert tier_of(bm25_topk_served) == "driver"
         assert tier_of(bm25_topk_served, filter_docs=fd) == "driver"
         with monkeypatch.context() as m:
-            m.setattr(bm25, "_DRIVER_SERVING_BYTES_MAX", 0)
-            assert tier_of(bm25_topk_served) == "executor"
+            m.setattr(build, "_DRIVER_SERVING_BYTES_MAX", 0)
+            small_index.warm(spark)
+        assert tier_of(bm25_topk_served) == "executor"
+        small_index.warm(spark)
         with monkeypatch.context() as m:
             m.setattr(bm25, "_MASK_IDS_MAX", 0)
             assert tier_of(bm25_topk_served, filter_docs=fd) == "exact"

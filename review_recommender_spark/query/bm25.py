@@ -1323,7 +1323,7 @@ def bm25_topk_served(spark: SparkSession, index: InvertedIndex, query: str,
       ``exclude_docs`` set that is neither driver-resident nor already
       collected — a filter whose rows cannot change is collected once
       per DataFrame object (``_collect_filter_ids``). Measured at
-      local[4], 10k docs: ~3 ms a query, collect included.
+      local[4], 10k docs: ~3.5 ms a query, collect included.
     * EXECUTOR tier — over that budget, or under a partial warm:
       postings are resident in executor memory re-sharded by
       ``range_id``, so every document's complete postings live in one
